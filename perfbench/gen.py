@@ -6,8 +6,10 @@ ever reads these generated files. Everything is derived from the seed,
 so the same seed always yields byte-identical inputs.
 
 - ``events``: a seeded subset of machine ids (``user_id``), five tags
-  (``event_type``), readings in ``value``; every timestamp lies in
-  January 2024 (the streaming CUSUM baseline splits at 2024-01-16).
+  (``event_type``), readings in ``value``; timestamps are uniform over
+  2024-01-01 to 2024-01-30, stored as parquet TIMESTAMP(MICROS) without a
+  zone, as in the fixture (the streaming CUSUM baseline splits at
+  2024-01-16).
 - ``documents``: texts over the fixture's 30-word vocabulary, plus
   seeded near-duplicates (a copy of an earlier document with a few
   words swapped) at a seeded rate.
@@ -32,14 +34,14 @@ VOCAB = (
 ).split()
 LANGS = ("en", "en", "en", "de", "es", "fr", "zh")
 MONTH_START = datetime(2024, 1, 1)
-MONTH_US = 31 * 86_400 * 1_000_000
+MONTH_US = 30 * 86_400 * 1_000_000  # the fixture covers Jan 1-30
 FLEET = 1500  # machine-id space the subsets are drawn from
 EMBED_DIM = 64
 
 
 def events_table(rng: np.random.Generator, n_machines: int, per_machine: int) -> pa.Table:
     """Events for ``n_machines`` machines, ~``per_machine`` readings each,
-    uniformly spread over January 2024 and sorted by time."""
+    uniformly spread over 2024-01-01 to 2024-01-30 and sorted by time."""
     machines = np.sort(rng.choice(FLEET, size=n_machines, replace=False))
     counts = rng.poisson(per_machine, size=n_machines).clip(min=per_machine // 2)
     user_id = np.repeat(machines, counts).astype(np.int64)

@@ -10,6 +10,8 @@ workload does not exercise reads 0.
 from __future__ import annotations
 
 import importlib
+import json
+import os
 import statistics
 from collections import defaultdict
 
@@ -40,42 +42,11 @@ WRAPS = [
       for c in (*COMMITS, "read_pruned")],
 ]
 
-# (name, unit, better) of the per-layer metrics every traced run prints;
-# counts of work done read "higher", counts of overhead "lower"
-METRICS = [
-    ("session.get_spark_s", "s", "lower"), ("registry.load_all_s", "s", "lower"),
-    ("sources.calls", "count/round", "lower"), ("sources.busy_s", "s/round", "lower"),
-    ("sources.relation_cache_hit_ratio", "ratio", "higher"),
-    ("dataset.get_data_s", "s/round", "lower"), ("dataset.collect_s", "s/round", "lower"),
-    ("dataset.rows_returned", "count/round", "higher"),
-    ("client.predict_date_range_s", "s/round", "lower"),
-    ("ml.islands.train_s", "s/round", "lower"), ("ml.islands.machines_fitted", "count/round", "higher"),
-    ("ml.islands.fit_s_per_machine", "s", "lower"), ("ml.islands.score_s", "s/round", "lower"),
-    ("ml.islands.predict_batch_s", "s/round", "lower"), ("ml.islands.blob_map_bytes", "B", "lower"),
-    ("builder.build_s", "s/round", "lower"), ("workflow.load_config_s", "s/round", "lower"),
-    ("plans.pipeline_compiler.from_definition_s", "s/round", "lower"),
-    ("plans.model_registry.hit_ratio", "ratio", "higher"), ("plans.model_registry.dump_s", "s/round", "lower"),
-    ("streaming.batches", "count/round", "lower"), ("streaming.input_rows", "count/round", "higher"),
-    ("streaming.trigger_s", "s/round", "lower"), ("streaming.add_batch_s", "s/round", "lower"),
-    ("streaming.planning_s", "s/round", "lower"), ("streaming.wal_commit_s", "s/round", "lower"),
-    ("streaming.state_rows", "count/round", "lower"), ("streaming.state_memory_bytes", "B", "lower"),
-    ("streaming.state_commit_s", "s/round", "lower"), ("streaming.job_overhead_s", "s/round", "lower"),
-    ("streaming.batch_latency_p50_s", "s", "lower"),
-    ("caches.materialized_builds", "count/round", "lower"), ("caches.materialized_hits", "count/round", "higher"),
-    ("caches.persists", "count/round", "lower"),
-    *[(f"operators.{q}_s", "s/round", "lower") for q in QUERIES],
-    ("plans.manifest_table.commits", "count/round", "lower"), ("plans.manifest_table.commit_s", "s/round", "lower"),
-    ("plans.manifest_table.read_s", "s/round", "lower"),
-    ("plans.manifest_table.bytes_written_per_row", "B/row", "lower"),
-    ("spark.jobs", "count/round", "lower"), ("spark.stages", "count/round", "lower"), ("spark.tasks", "count/round", "lower"),
-    ("spark.driver_gap_s", "s/round", "lower"), ("spark.executor_run_s", "s/round", "lower"),
-    ("spark.executor_cpu_s", "s/round", "lower"), ("spark.gc_s", "s/round", "lower"),
-    ("spark.shuffle_read_bytes", "B/round", "lower"), ("spark.shuffle_write_bytes", "B/round", "lower"),
-    ("spark.spill_bytes", "B/round", "lower"), ("spark.task_skew", "ratio", "lower"),
-    ("spark.python_bytes_sent", "B/round", "lower"), ("spark.python_bytes_returned", "B/round", "lower"),
-    ("spark.unattributed_task_s", "s/round", "lower"),
-    ("trace.ops_per_s", "1/s", "higher"),
-]
+# (name, unit) of the per-layer metrics a traced run prints, as listed
+# under "per_layer" in BENCHMARK.json
+with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                       "BENCHMARK.json")) as _fh:
+    METRICS = [(m["name"], m["unit"]) for m in json.load(_fh)["per_layer"]]
 
 
 def _resolve(path: str):
@@ -119,10 +90,11 @@ def install(spans) -> list[str]:
     return missing
 
 
-def per_layer(spans: list[dict], rounds: int, ops: int, elapsed_s: float, fold: dict,
-              batches: list[dict], counters: dict) -> dict[str, float]:
-    """Every METRICS value from the timed window's spans, the Spark fold
-    per op span, the streaming progress events and the workload's counters."""
+def per_layer(spans: list[dict], setup: list[dict], rounds: int, ops: int, elapsed_s: float,
+              fold: dict, batches: list[dict], counters: dict) -> dict[str, float]:
+    """Every METRICS value from the timed window's spans, the set-up's
+    spans, the Spark fold per op span, the streaming progress events and
+    the workload's counters."""
     dur: dict[str, float] = defaultdict(float)
     n: dict[str, int] = defaultdict(int)
     by_id = {s["id"]: s for s in spans}
@@ -135,6 +107,7 @@ def per_layer(spans: list[dict], rounds: int, ops: int, elapsed_s: float, fold: 
                 and by_id.get(s["parent"], {}).get("name", "").startswith("sources."))
     checks = [s for s in spans if s["name"] == "plans.model_registry.check_cache"]
     mc = [s for s in spans if s["name"] == "caches.materialized_cache"]
+    setup_mc = [s for s in setup if s["name"] == "caches.materialized_cache"]
     fitted = counters.get("ml.islands.machines_fitted", 0)
     trig = [b["duration_ms"].get("triggerExecution", 0) / 1000 for b in batches]
     bsum = lambda k: sum(b["duration_ms"].get(k, 0) for b in batches) / 1000  # noqa: E731
@@ -176,6 +149,8 @@ def per_layer(spans: list[dict], rounds: int, ops: int, elapsed_s: float, fold: 
         "streaming.batch_latency_p50_s": statistics.median(trig) if trig else 0.0,
         "caches.materialized_builds": per(sum(s["built"] for s in mc)),
         "caches.materialized_hits": per(sum(not s["built"] for s in mc)),
+        "caches.setup_materialized_builds": sum(s["built"] for s in setup_mc),
+        "caches.setup_materialized_s": sum(s["t1"] - s["t0"] for s in setup_mc),
         "caches.persists": per(n["caches.persist_tracked"]),
         **{f"operators.{q}_s": per(dur[f"operators.{q}"]) for q in QUERIES},
         "plans.manifest_table.commits": per(sum(n[c] for c in commits)),
@@ -193,6 +168,39 @@ def per_layer(spans: list[dict], rounds: int, ops: int, elapsed_s: float, fold: 
         "spark.unattributed_task_s": eng("unattributed_task_s"),
         "trace.ops_per_s": ops / elapsed_s,
     }
-    if set(out) != {m for m, _, _ in METRICS}:
-        raise RuntimeError("per_layer() and METRICS disagree")
+    if set(out) != {m for m, _ in METRICS}:
+        raise RuntimeError("per_layer() and BENCHMARK.json per_layer disagree: "
+                           f"{sorted(set(out) ^ {m for m, _ in METRICS})}")
+    return out
+
+
+def shares(spans: list[dict], fold: dict, batches: list[dict], cpus: int) -> dict[str, float]:
+    """Where each part's op wall time goes in a traced run: the Spark
+    driver gap, executor busy time (task run time over wall × cores), and
+    each package call made directly by an op (share of 2 % or more); on a
+    stream part also the micro-batch phases as shares of
+    ``triggerExecution``."""
+    out: dict[str, float] = {}
+    roots = {s["id"]: s for s in spans if s["op"] == s["id"]}
+    wall: dict[str, float] = defaultdict(float)
+    for r in roots.values():
+        wall[r["part"]] += r["t1"] - r["t0"]
+    direct: dict[tuple, float] = defaultdict(float)
+    for s in spans:
+        if s["parent"] in roots:
+            direct[(roots[s["parent"]]["part"], s["name"])] += s["t1"] - s["t0"]
+    for part, w in sorted(wall.items()):
+        ops = [f for sid, f in fold.items() if roots[sid]["part"] == part]
+        out[f"{part}.driver_gap"] = sum(f["driver_gap_s"] for f in ops) / w
+        out[f"{part}.executor_busy"] = sum(f["run_s"] for f in ops) / (w * cpus)
+        for (p, name), d in sorted(direct.items()):
+            if p == part and d / w >= 0.02:
+                out[f"{part}.{name}"] = d / w
+    trig = sum(b["duration_ms"].get("triggerExecution", 0) for b in batches)
+    if trig:
+        for k in ("addBatch", "queryPlanning", "walCommit", "commitOffsets", "latestOffset"):
+            out[f"stream.{k}/trigger"] = sum(b["duration_ms"].get(k, 0) for b in batches) / trig
+        out["stream.state_commit/trigger"] = sum(b["state_commit_ms"] for b in batches) / trig
+        jobs = sum(s["t1"] - s["t0"] for s in spans if s["name"].startswith("streaming.run_"))
+        out["stream.trigger/job_wall"] = trig / 1000 / jobs if jobs else 0.0
     return out

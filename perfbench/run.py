@@ -3,10 +3,10 @@
     python3 perfbench/run.py --workload serve_build --seed 1 --seconds 10 --trace 0
 
 Run from the repository root. The run generates its seeded inputs under
-``.bench_build/perfbench/``, sets the package up three times in one
-process (``get_spark``, ``registry.load_all``, a fresh copy of the inputs,
-the workload's warm-up; the first also pays the imports and the JVM
-launch) and reports the median as ``setup_s``, then runs whole rounds of the
+``.bench_build/perfbench/``, then sets the package up once, cold: the
+imports of pyspark and the package, ``get_spark`` (the JVM launch),
+``registry.load_all`` and the workload's warm-up on a fresh JVM; that is
+``setup_s``. It then runs whole rounds of the
 workload's op mix on ``local[4]`` until ``--seconds`` have passed,
 checks sampled outputs against DuckDB, and prints a capture header, a
 metric table and, as its last stdout line, the result JSON. ``--trace 1``
@@ -31,9 +31,8 @@ import traceback
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".bench_build", "perfbench")
-SETUPS = 3
 CPUS = 4
-END_TO_END = [("setup_s", "s"), ("ops_per_s", "1/s"), ("latency_p50_s", "s")]
+END_TO_END = [("setup_s", "s"), ("cpu_s_per_op", "s")]
 
 
 def configure_env(run_dir: str, trace: bool) -> None:
@@ -102,7 +101,6 @@ class Ctx:
         self.layer: dict[str, float] = {}  # gauges and counters for the per-layer report
         self.spark = None
         self.sf_dir = ""
-        self.setup_no = 0
         self._lock = threading.Lock()
 
     def count(self, name: str, n: float) -> None:
@@ -110,19 +108,9 @@ class Ctx:
             self.layer[name] = self.layer.get(name, 0) + n
 
 
-def fresh_inputs(src: str, run_dir: str, i: int) -> str:
-    """Hard-linked copy of the inputs under a new path: every path-keyed
-    cache of the package misses on it."""
-    dst = os.path.join(run_dir, f"sf-{i}")
-    os.makedirs(dst)
-    for f in os.listdir(src):
-        os.link(os.path.join(src, f), os.path.join(dst, f))
-    return dst
-
-
 def run_round(ops, clients: int, spans) -> None:
     def run(op):
-        with spans.span(f"op.{op.kind}", root=True):
+        with spans.span(f"op.{op.kind}", root=True, part=op.part):
             t = time.perf_counter()
             try:
                 op.items = op.fn()
@@ -152,7 +140,14 @@ def run_round(ops, clients: int, spans) -> None:
         t.join()
 
 
-def capture_header(spark) -> dict:
+def cpu_ticks() -> list[int]:
+    """The machine's summed CPU ticks from /proc/stat: user, nice, system,
+    idle, iowait, irq, softirq, steal."""
+    with open("/proc/stat") as fh:
+        return [int(x) for x in fh.readline().split()[1:9]]
+
+
+def capture_header(spark, window_ticks: list[int]) -> dict:
     import pyspark
 
     t = time.perf_counter()
@@ -170,6 +165,10 @@ def capture_header(spark) -> dict:
     return {
         "cpu_probe_s": round(probe, 4),
         "loadavg": os.getloadavg(),
+        # shares of the machine's CPU time during the timed window: steal
+        # is time the hypervisor gave to other guests
+        "window_busy": round(1 - sum(window_ticks[3:5]) / max(1, sum(window_ticks)), 3),
+        "window_steal": round(window_ticks[7] / max(1, sum(window_ticks)), 4),
         "nproc": len(os.sched_getaffinity(0)),
         "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS"),
         "git_sha": sha,
@@ -250,7 +249,8 @@ def main() -> int:
 def measure(args, trace: bool, run_dir: str, gen, wl) -> int:
     src = os.path.join(run_dir, f"input-s{args.seed}")
     facts = gen.make_inputs(src, args.seed, **wl.inputs)
-    t_first = time.perf_counter()  # set-up 1 also pays the imports below
+    # set-up starts here: pyspark, pandas and the package are not imported yet
+    t_setup = time.perf_counter()
     import layers
     from tracing import Spans
 
@@ -258,45 +258,48 @@ def measure(args, trace: bool, run_dir: str, gen, wl) -> int:
     spans = Spans(trace)
     missing = layers.install(spans) if trace else []
     ctx = Ctx(args.seed, run_dir, spans, facts)
+    ctx.sf_dir = src
     parts = [p(ctx) for p in wl.parts]
-    setups = set_up(ctx, parts, src, t_first)
+    setup = set_up(ctx, parts, t_setup)
     window = run_window(ctx, parts, args.seconds)
     check_error = check(ctx, parts)
-    header = capture_header(ctx.spark)
+    header = capture_header(ctx.spark, window["cpu_ticks"])
     stop_spark(ctx.spark)
-    return report(args, wl, parts, ctx, setups, window, check_error, header, missing)
+    return report(args, wl, parts, ctx, setup, window, check_error, header, missing)
 
 
-def set_up(ctx: Ctx, parts, src: str, t_first: float) -> list[float]:
-    """Set the package up SETUPS times; returns each set-up's seconds."""
+def set_up(ctx: Ctx, parts, t_setup: float) -> dict[str, float]:
+    """The cold set-up, from ``t_setup`` to the first timed op; returns
+    its seconds per phase and in total."""
     from gordo_components_spark import registry
     from gordo_components_spark.session import get_spark
 
-    setups = []
-    for i in range(SETUPS):
-        t0 = t_first if i == 0 else time.perf_counter()
-        t = time.perf_counter()
-        ctx.spark = get_spark(app_name="perfbench")
-        ctx.layer.setdefault("session.get_spark_s", time.perf_counter() - t)
-        ctx.spark.sparkContext.setLogLevel("ERROR")
-        t = time.perf_counter()
-        registry.load_all()
-        ctx.layer.setdefault("registry.load_all_s", time.perf_counter() - t)
-        ctx.sf_dir, ctx.setup_no = fresh_inputs(src, ctx.work, i), i
-        for p in parts:
-            p.setup()
-        setups.append(time.perf_counter() - t0)
-    return setups
+    phases = {}
+    t = time.perf_counter()
+    phases["imports_s"] = t - t_setup
+    ctx.spark = get_spark(app_name="perfbench")
+    ctx.spark.sparkContext.setLogLevel("ERROR")
+    phases["get_spark_s"], t = time.perf_counter() - t, time.perf_counter()
+    registry.load_all()
+    phases["load_all_s"], t = time.perf_counter() - t, time.perf_counter()
+    for p in parts:
+        p.setup()
+        phases[f"{p.name}_warm_up_s"], t = time.perf_counter() - t, time.perf_counter()
+    phases["setup_s"] = time.perf_counter() - t_setup
+    ctx.layer["session.get_spark_s"] = phases["get_spark_s"]
+    ctx.layer["registry.load_all_s"] = phases["load_all_s"]
+    return phases
 
 
 def run_window(ctx: Ctx, parts, seconds: float) -> dict:
     """Whole rounds until ``seconds`` have passed; every part's round runs
     in turn with its own client count."""
-    from tracing import RssSampler, StreamProgress
+    from tracing import RssSampler, StreamProgress, tree_cpu_s
 
     listener = StreamProgress()
     ctx.spark.streams.addListener(listener)
     w = {"t0": time.time(), "ops": [], "rounds": 0, "part_s": dict.fromkeys((p.name for p in parts), 0.0)}
+    cpu0, tree0 = cpu_ticks(), tree_cpu_s(os.getpid())
     with RssSampler() as rss:
         t0 = time.perf_counter()
         while w["rounds"] == 0 or time.perf_counter() - t0 < seconds:
@@ -310,6 +313,8 @@ def run_window(ctx: Ctx, parts, seconds: float) -> dict:
                 w["ops"] += batch
             w["rounds"] += 1
         w["elapsed"] = time.perf_counter() - t0
+    w["cpu_s"] = tree_cpu_s(os.getpid()) - tree0
+    w["cpu_ticks"] = [b - a for a, b in zip(cpu0, cpu_ticks())]
     listener.settle()
     ctx.spark.streams.removeListener(listener)
     w["peak_rss"] = rss.peak
@@ -334,7 +339,7 @@ def check(ctx: Ctx, parts) -> str | None:
     return None
 
 
-def report(args, wl, parts, ctx: Ctx, setups, w: dict, check_error, header, missing) -> int:
+def report(args, wl, parts, ctx: Ctx, setup: dict, w: dict, check_error, header, missing) -> int:
     """Print the capture header, the metric table and the result line, and
     write the full record under WORK/results."""
     ops, elapsed = w["ops"], w["elapsed"]
@@ -343,18 +348,22 @@ def report(args, wl, parts, ctx: Ctx, setups, w: dict, check_error, header, miss
     requests = {p.name for p in parts if p.requests}
     lat = [op.latency_s for op in done if op.part in requests] or [float("nan")]
     trig = [b["duration_ms"].get("triggerExecution", 0) / 1000 for b in w["batches"]]
+    # the guarded metrics: wall-clock set-up, and CPU seconds of the
+    # process tree (driver Python, JVM, Python workers) per completed op,
+    # which CPU time stolen by the hypervisor does not inflate
     e2e = {
-        "setup_s": statistics.median(setups),
-        "ops_per_s": len(done) / elapsed,
-        "latency_p50_s": statistics.median(lat),
+        "setup_s": setup["setup_s"],
+        "cpu_s_per_op": w["cpu_s"] / max(1, len(done)),
     }
-    # printed with the table only: each part's work items per second of its
-    # own phase (rows, models, events, documents); p90 (a run has fewer than
-    # the ten samples beyond it that would make it a steady guard); peak RSS
-    # (when the JVM grows its heap varies run to run); the failure ratio
-    extra = {p.items_name: (sum(op.items for op in done if op.part == p.name) / w["part_s"][p.name], "1/s")
-             for p in parts}
-    extra[f"latency_p90_s (of {len(lat)})"] = (percentile(lat, 90), "s")
+    # printed with the table only: wall-clock throughput and latency (they
+    # move with the hypervisor's steal, see README.md); each part's work
+    # items per second of its own phase (rows, models, events, documents);
+    # peak RSS (when the JVM grows its heap varies run to run); the failure
+    # ratio
+    extra = {"ops_per_s": (len(done) / elapsed, "1/s"), "latency_p50_s": (statistics.median(lat), "s"),
+             f"latency_p90_s (of {len(lat)})": (percentile(lat, 90), "s")}
+    extra.update({p.items_name: (sum(op.items for op in done if op.part == p.name) / w["part_s"][p.name], "1/s")
+                  for p in parts})
     extra["peak_rss_mb"] = (w["peak_rss"] / 2**20, "MB")
     extra["failed_ratio"] = (len(failed) / len(ops), "ratio")
     if trig:
@@ -362,7 +371,7 @@ def report(args, wl, parts, ctx: Ctx, setups, w: dict, check_error, header, miss
     doc = {
         "workload": wl.name, "seed": args.seed, "seconds": args.seconds, "trace": args.trace,
         "header": header, "inputs": ctx.facts, "rounds": w["rounds"], "elapsed_s": elapsed,
-        "part_s": w["part_s"], "setups_s": setups, "check_error": check_error, "end_to_end": e2e,
+        "part_s": w["part_s"], "setup": setup, "check_error": check_error, "end_to_end": e2e,
         "extra": {k: v for k, (v, _) in extra.items()},
         "ops": [{"kind": o.kind, "part": o.part, "latency_s": o.latency_s, "items": o.items,
                  "error": o.error, "checks": o.checks} for o in ops],
@@ -375,13 +384,14 @@ def report(args, wl, parts, ctx: Ctx, setups, w: dict, check_error, header, miss
         rows = [(k, v, units[k]) for k, v in metrics.items()]
         if "tracing_overhead" in doc:
             rows.append(("tracing_overhead", doc["tracing_overhead"], "ratio"))
+        rows += [(f"share {k}", v, "ratio") for k, v in doc["shares"].items()]
     os.makedirs(os.path.join(WORK, "results"), exist_ok=True)
     with open(os.path.join(WORK, "results", f"{wl.name}-s{args.seed}-t{args.trace}.json"), "w") as fh:
         json.dump(doc, fh, default=str)
 
     print("capture " + json.dumps(header))
     print(f"{wl.name}: {len(ops)} ops in {w['rounds']} rounds, {elapsed:.2f} s timed, "
-          f"{len(failed)} failed; setups {', '.join(f'{s:.2f}' for s in setups)} s")
+          f"{len(failed)} failed; set-up " + ", ".join(f"{k} {v:.2f}" for k, v in setup.items()))
     for k, v, u in rows:
         print(f"  {k:<44} {v:>14.6g} {u}")
     for op in failed:
@@ -402,17 +412,20 @@ def trace_report(ctx: Ctx, w: dict, n_done: int, doc: dict, missing: list) -> tu
 
     spans = ctx.spans.records
     window = [s for s in spans if s["t0"] >= w["t0"]]
+    setup = [s for s in spans if s["t0"] < w["t0"]]
     fold = fold_event_log(os.path.join(ctx.work, "eventlog"), window)
-    metrics = layers.per_layer(window, w["rounds"], n_done, w["elapsed"], fold, w["batches"], ctx.layer)
+    metrics = layers.per_layer(window, setup, w["rounds"], n_done, w["elapsed"], fold, w["batches"],
+                               ctx.layer)
     by_id = {s["id"]: s for s in spans}
     for sid, self_s in self_times(spans).items():
         by_id[sid]["self_s"] = self_s
     doc.update(per_layer=metrics, unwrapped=missing, spans=spans,
-               engine_by_op={str(k): v for k, v in fold.items()})
+               engine_by_op={str(k): v for k, v in fold.items()},
+               shares=layers.shares(window, fold, w["batches"], CPUS))
     untraced = _last_untraced(doc["workload"])
     if untraced:
         doc["tracing_overhead"] = 1 - metrics["trace.ops_per_s"] / untraced
-    return metrics, {m: u for m, u, _ in layers.METRICS}
+    return metrics, dict(layers.METRICS)
 
 
 def _last_untraced(name: str) -> float | None:
@@ -427,7 +440,7 @@ def _last_untraced(name: str) -> float | None:
     if best is None:
         return None
     with open(best) as fh:
-        return json.load(fh)["end_to_end"]["ops_per_s"]
+        return json.load(fh)["extra"]["ops_per_s"]
 
 
 if __name__ == "__main__":

@@ -174,12 +174,15 @@ class StreamProgress(StreamingQueryListener):
 # -- RSS sampler ---------------------------------------------------------------
 
 _PAGE = os.sysconf("SC_PAGE_SIZE")
+_TICK = os.sysconf("SC_CLK_TCK")
 
 
-def _proc_table() -> tuple[dict[int, list[int]], dict[int, int]]:
-    """(children by parent pid, RSS bytes by pid) from /proc."""
+def _proc_table() -> tuple[dict[int, list[int]], dict[int, int], dict[int, int]]:
+    """(children by parent pid, RSS bytes by pid, CPU ticks by pid) from
+    /proc; a process's CPU ticks include those of its reaped children."""
     kids: dict[int, list[int]] = defaultdict(list)
     rss: dict[int, int] = {}
+    cpu: dict[int, int] = {}
     for d in os.listdir("/proc"):
         if not d.isdigit():
             continue
@@ -191,11 +194,12 @@ def _proc_table() -> tuple[dict[int, list[int]], dict[int, int]]:
         pid = int(d)
         kids[int(fields[1])].append(pid)
         rss[pid] = int(fields[21]) * _PAGE
-    return kids, rss
+        cpu[pid] = sum(int(f) for f in fields[11:15])  # utime, stime, cutime, cstime
+    return kids, rss, cpu
 
 
 def descendants(root: int) -> list[int]:
-    kids, _ = _proc_table()
+    kids, _, _ = _proc_table()
     out, todo = [], list(kids.get(root, ()))
     while todo:
         pid = todo.pop()
@@ -204,15 +208,26 @@ def descendants(root: int) -> list[int]:
     return out
 
 
-def tree_rss_bytes(root: int) -> int:
-    """Summed RSS of ``root`` and all its descendants."""
-    kids, rss = _proc_table()
+def _tree_sum(root: int, per_pid: dict[int, int], kids: dict[int, list[int]]) -> int:
     total, todo = 0, [root]
     while todo:
         pid = todo.pop()
-        total += rss.get(pid, 0)
+        total += per_pid.get(pid, 0)
         todo.extend(kids.get(pid, ()))
     return total
+
+
+def tree_rss_bytes(root: int) -> int:
+    """Summed RSS of ``root`` and all its descendants."""
+    kids, rss, _ = _proc_table()
+    return _tree_sum(root, rss, kids)
+
+
+def tree_cpu_s(root: int) -> float:
+    """CPU seconds used so far by ``root`` and all its descendants (the
+    driver Python, the JVM and the Python workers)."""
+    kids, _, cpu = _proc_table()
+    return _tree_sum(root, cpu, kids) / _TICK
 
 
 class RssSampler:

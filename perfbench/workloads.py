@@ -92,7 +92,7 @@ class ServeFleet(Part):
     def _dataset_req(self, days: int, resolution: str, n_tags: int, filt: str) -> dict:
         from gen import TAGS
 
-        start = self.rng.randrange(0, 31 - days)
+        start = self.rng.randrange(0, 30 - days)
         tags = self.rng.sample(TAGS, n_tags)
         req = {"start": _naive(start), "end": _naive(start + days), "tags": tags,
                "resolution": resolution, "row_filter": None, "buffer": 0}
@@ -126,7 +126,7 @@ class ServeFleet(Part):
     def _score_op(self, days: int) -> Op:
         from gordo_components_spark import client
 
-        start = self.rng.randrange(0, 31 - days)
+        start = self.rng.randrange(0, 30 - days)
         req = {"start": _naive(start), "end": _naive(start + days)}
 
         def fn():
@@ -141,8 +141,7 @@ class ServeFleet(Part):
         return op
 
     def round(self, r: int) -> list[Op]:
-        # two request batches, so a run has enough requests for a steady median
-        ops = self._batch() + self._batch()
+        ops = self._batch()
         self.rng.shuffle(ops)
         # check the first round's responses plus one seeded op per round
         self.sampled = set(ops) if r == 0 else {self.rng.choice(ops)}
@@ -200,8 +199,9 @@ class BuildFleet(Part):
     def setup(self) -> None:
         from gordo_components_spark.plans.model_registry import ModelRegistry
 
-        self.registry = ModelRegistry(os.path.join(self.ctx.work, f"registry-{self.ctx.setup_no}"))
+        self.registry = ModelRegistry(os.path.join(self.ctx.work, "registry"))
         self.built: list[tuple[dict, str, dict]] = []  # (config, key, metadata) of misses
+        self.sparse: list[tuple[Op, str]] = []  # (op, outcome) of the sparse-window builds
         self.fleet: list[tuple[Op, list]] = []
         self.hits: list[tuple] = []  # (op, stored key, hit key, stored metadata, hit metadata)
 
@@ -211,17 +211,19 @@ class BuildFleet(Part):
         from gen import TAGS
 
         machines = []
-        for kind, ae in (("lin", _LINEAR_AE), ("mlp", _TANH_AE)):
-            days = self.rng.randint(5, 10)
-            start = self.rng.randrange(0, 31 - days)
+        # a linear and a tanh autoencoder over 5-10 days, and a linear one
+        # over 6 hours at 60T: at most 6 aligned rows, below the threshold
+        for kind, ae, days in (("lin", _LINEAR_AE, self.rng.randint(5, 10)),
+                               ("mlp", _TANH_AE, self.rng.randint(5, 10)), ("sparse", _LINEAR_AE, 0.25)):
+            start = self.rng.randrange(0, 30 - math.ceil(days))
             machines.append({
                 "name": f"m{r}-{kind}",
                 "dataset": {
                     "tags": self.rng.sample(TAGS, self.rng.randint(2, 3)),
                     "train_start_date": _iso(start),
                     "train_end_date": _iso(start + days),
-                    "resolution": self.rng.choice(("30T", "60T")),
-                    # a positive threshold turns an empty aligned matrix
+                    "resolution": "60T" if kind == "sparse" else self.rng.choice(("30T", "60T")),
+                    # a positive threshold turns a too-small aligned matrix
                     # into InsufficientDataError instead of a failed fit
                     "n_samples_threshold": 20,
                 },
@@ -231,6 +233,7 @@ class BuildFleet(Part):
 
     def round(self, r: int) -> list[Op]:
         from gordo_components_spark import builder, workflow
+        from gordo_components_spark.dataset import InsufficientDataError
         from gordo_components_spark.ml import islands
 
         text = self._yaml(r)
@@ -243,12 +246,22 @@ class BuildFleet(Part):
         def build(i):
             def fn():
                 b = builder.ModelBuilder(machines[i], self.registry)
-                _, meta = b.build(self.ctx.spark, self.ctx.sf_dir)
+                try:
+                    _, meta = b.build(self.ctx.spark, self.ctx.sf_dir)
+                except InsufficientDataError:  # an expected outcome, not a failure
+                    self.ctx.count("builder.insufficient_data", 1)
+                    if i == 2:
+                        self.sparse.append((op_sparse, "insufficient_data"))
+                    return 0
+                if i == 2:
+                    self.sparse.append((op_sparse, "built"))
                 self.built.append((machines[i], b.model_key, meta))
                 return 1
             return fn
 
         def hit():
+            if not self.built:  # every build so far had too little data
+                return 0
             cfg, key, meta = self.rng.choice(self.built)
             b = builder.ModelBuilder(cfg, self.registry)
             _, got = b.build(self.ctx.spark, self.ctx.sf_dir)
@@ -272,9 +285,9 @@ class BuildFleet(Part):
                 islands.predict_batch(feats, self.blobs).count()
             return 0
 
-        op_hit, op_fleet = Op("build_hit", hit), Op("fleet_train", fleet)
+        op_hit, op_fleet, op_sparse = Op("build_hit", hit), Op("fleet_train", fleet), Op("build_sparse", build(2))
         return [Op("load_config", load), Op("build_linear", build(0)), Op("build_tanh", build(1)),
-                op_hit, op_fleet, Op("predict_batch", predict)]
+                op_sparse, op_hit, op_fleet, Op("predict_batch", predict)]
 
     def check(self, ref: Reference) -> None:
         for op, rows in self.fleet:
@@ -286,6 +299,9 @@ class BuildFleet(Part):
         for op, key, got_key, want, got in self.hits:
             if got_key != key or _canonical(got) != _canonical(want):
                 op.checks.append(f"registry hit for {key[:12]} returned another key or metadata")
+        for op, outcome in self.sparse:
+            if outcome != "insufficient_data":
+                op.checks.append("a 6-hour 60T build passed n_samples_threshold 20")
 
 
 # -- stream_detect ----------------------------------------------------------------
@@ -365,14 +381,14 @@ class CurateCorpus(Part):
         from gordo_components_spark.plans.manifest_table import ManifestTable
         from gordo_components_spark.registry import load_all
 
-        spark, n = self.ctx.spark, self.ctx.setup_no
+        spark = self.ctx.spark
         docs = pq.read_table(os.path.join(self.ctx.sf_dir, "documents.parquet")).to_pylist()
         self.schema = "doc_id bigint, text string, lang string, source string, n_chars bigint"
         self.cols = ("doc_id", "text", "lang", "source", "n_chars")
         self.expected = {d["doc_id"]: tuple(d[c] for c in self.cols) for d in docs}
         self.next_id = max(self.expected) + 1
-        self.table = ManifestTable(os.path.join(self.ctx.work, f"curated-{n}"))
-        self.log = ManifestTable(os.path.join(self.ctx.work, f"log-{n}"))
+        self.table = ManifestTable(os.path.join(self.ctx.work, "curated"))
+        self.log = ManifestTable(os.path.join(self.ctx.work, "log"))
         # the append log starts with one small dir, so each pass's append
         # leaves two for commit_compact to merge
         self.log.commit_append(spark.createDataFrame([(-1, i) for i in range(10)], "pass int, doc_id bigint"))
