@@ -165,9 +165,9 @@ def stream_cusum_genuine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CUSUM change-point detection (rows-only): the serving
     face of ``window_cusum_alerts`` — per-(machine, tag) accumulated
     drift above a TRAIN-window baseline, integer-exact bigint state
-    carried across three forced micro-batches via
-    ``applyInPandasWithState``.  Single-batch parity vs a sequential
-    reference plus cross-batch state-carry counts are asserted in
+    carried across three forced micro-batches by a JVM prefix-scan fold
+    in ``foreachBatch``.  Single- and multi-batch parity vs a sequential
+    reference and an exactly-once restart are asserted in
     tests/test_streaming.py."""
     from gordo_components_spark.streaming.micro_batch import run_streaming_cusum
 
@@ -318,9 +318,10 @@ def stream_m4_genuine(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_twa_genuine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming time-weighted average (rows-only): the serving face of
     ``agg_time_weighted_avg`` — per-(machine, tag) trapezoid integral
-    carried across micro-batches as exact integer state via
-    ``applyInPandasWithState``; integer-exact single/multi-batch parity
-    is asserted in tests/test_streaming.py."""
+    carried across micro-batches as exact integer state by a JVM
+    prefix-scan fold in ``foreachBatch``; integer-exact single/multi-batch
+    parity vs a sequential reference is asserted in
+    tests/test_streaming.py."""
     from gordo_components_spark.streaming.micro_batch import run_streaming_twa
 
     return run_streaming_twa(spark, sf_dir)

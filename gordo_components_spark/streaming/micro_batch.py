@@ -94,13 +94,14 @@ def _stream_shuffle_partitions(
     session-global and batch queries must keep seeing the session's own
     setting.
 
-    ``python_stateful=True`` (the ``applyInPandasWithState`` faces keyed
-    by ~machine-cardinality) disables the est_rows DOWN-sizing and keeps
-    full parallelism: their cost is per-group PANDAS compute, and
-    coalescing serializes Python workers — the streaming twin of the
-    CLAUDE.md ``_spread`` invariant (measured on stream_cusum_genuine:
-    7.0-7.8 s at 32 partitions vs 13.4-14.2 s at 8, same session,
-    interleaved — the exact inverse of the JVM-stateful faces)."""
+    ``python_stateful=True`` (the faces still on
+    ``applyInPandasWithState``: EWMA, Hampel, bottom-k, heavy hitters)
+    disables the est_rows DOWN-sizing and keeps full parallelism: their
+    cost is per-group PANDAS compute, and coalescing serializes Python
+    workers — the streaming twin of the CLAUDE.md ``_spread`` invariant.
+    It was measured when CUSUM still ran that protocol (7.0-7.8 s at 32
+    partitions vs 13.4-14.2 s at 8, interleaved); the CUSUM/TWA folds
+    are JVM-only now and size down like the other JVM faces."""
     key = "spark.sql.shuffle.partitions"
     prior = spark.conf.get(key)
     env = os.environ.get("GORDO_STREAM_SHUFFLE_PARTITIONS")
@@ -199,9 +200,8 @@ def _run_to_memory(
     raising query can't leak either (the uuid leaves don't match the
     PID sweeper's prefixes).  ``latest_by=((keys...), order_col)``
     post-filters UPDATE-mode emissions to each key's final row — the
-    stateful faces' per-key summary contract (review finding: the
-    CUSUM/Hampel faces each hand-rolled this tail, and their
-    dropTempView sat outside the finally)."""
+    stateful faces' per-key summary contract (it must order by a
+    column that only grows across batches)."""
     import shutil
 
     spark = stream_df.sparkSession
@@ -237,6 +237,74 @@ def _run_to_memory(
     return out
 
 
+def _replay_stream(spark: SparkSession, sf_dir: str, max_files: int | None = None) -> DataFrame:
+    """The events replay as a file stream; ``max_files`` per trigger
+    (``maxFilesPerTrigger``) splits it into several micro-batches."""
+    reader = spark.readStream.schema(_RAW_SCHEMA)
+    if max_files:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    return reader.parquet(_replay_dir(spark, sf_dir))
+
+
+def _empty_state(spark: SparkSession, state_ddl: str) -> DataFrame:
+    """A 0-row frame of the state schema planned on ``spark.range(0)`` —
+    a driver-list ``createDataFrame`` is a Python-RDD scan that starts
+    Python workers on every micro-batch."""
+    fields = T.DataType.fromDDL(state_ddl).fields
+    return spark.range(0).select(*(F.lit(None).cast(f.dataType).alias(f.name) for f in fields))
+
+
+def _fold_stream(
+    stream: DataFrame,
+    name: str,
+    fold,
+    state_ddl: str,
+    emit,
+    est_rows: int | None = None,
+    checkpoint: str | None = None,
+) -> DataFrame:
+    """The stateful-fold skeleton, ``readStream → foreachBatch``: each
+    micro-batch folds its rows into a compact per-key state frame with
+    JVM algebra, ``fold(batch_df, prior_state) -> state`` — no Python
+    workers, no state store.  Batch N reads ``<checkpoint>/fold/<N-1>``
+    (batch 0 an empty state) and overwrites ``<checkpoint>/fold/<N>``,
+    so a batch replayed after a restart (offsets logged, no commit)
+    refolds the same input over the same prior state: each batch counts
+    exactly once.  Returns ``emit(final_state)`` materialized (eager
+    localCheckpoint); a run-scoped checkpoint goes in the finally, a
+    caller-supplied ``checkpoint`` stays so the query can restart on it."""
+    import shutil
+
+    spark = stream.sparkSession
+    chk = checkpoint or f"/tmp/gordo_spark_stream/chk/{name}-{uuid.uuid4().hex}"
+    root = os.path.join(chk, "fold")
+
+    def state(session: SparkSession, batch_id: int) -> DataFrame:
+        if batch_id < 0:
+            return _empty_state(session, state_ddl)
+        return session.read.schema(state_ddl).parquet(os.path.join(root, str(batch_id)))
+
+    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
+        prior = state(batch_df.sparkSession, batch_id - 1)
+        fold(batch_df, prior).write.mode("overwrite").parquet(os.path.join(root, str(batch_id)))
+
+    try:
+        with _stream_shuffle_partitions(spark, est_rows=est_rows):
+            q = (
+                stream.writeStream.foreachBatch(fold_batch)
+                .queryName(name)
+                .trigger(availableNow=True)
+                .option("checkpointLocation", chk)
+                .start()
+            )
+            q.awaitTermination()
+        done = [int(b) for b in os.listdir(root)] if os.path.isdir(root) else []
+        return emit(state(spark, max(done, default=-1))).localCheckpoint(eager=True)
+    finally:
+        if checkpoint is None:
+            shutil.rmtree(chk, ignore_errors=True)  # run-scoped checkpoint + state
+
+
 def run_streaming_tumbling_agg(
     spark: SparkSession,
     sf_dir: str,
@@ -253,11 +321,7 @@ def run_streaming_tumbling_agg(
     LATE and get dropped — the O36 semantic, observable (see
     tests/test_streaming.py::test_watermark_drops_late_batches)."""
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    reader = spark.readStream.schema(_RAW_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(src)
+    stream = _replay_stream(spark, sf_dir, max_files_per_trigger)
     agg = (
         stream.withWatermark("ts", watermark)
         .groupBy("event_type", F.window("ts", duration).alias("w"))
@@ -285,8 +349,7 @@ def run_streaming_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     models = trained_models(spark, sf_dir).where("status = 'ok'").cache()
     models.count()  # materialize once; broadcast into every micro-batch
 
-    src = _replay_dir(spark, sf_dir)
-    stream = spark.readStream.schema(_RAW_SCHEMA).parquet(src)
+    stream = _replay_stream(spark, sf_dir)
     # deploy-shaped sink: each micro-batch APPENDS its scored frame to a
     # parquet directory executor-side (the O7 sink), never collecting to
     # the driver — the demonstrated pattern is the deployable one.
@@ -376,12 +439,7 @@ def run_streaming_stateful_ewma(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = _replay_stream(spark, sf_dir, 1)
 
     def update(key, pdfs, state: GroupState):
         if state.exists:
@@ -453,8 +511,7 @@ def run_streaming_watermark_dedup(
     (``dropDuplicatesWithinWatermark`` — state is bounded by the watermark,
     which is what makes this viable on an unbounded 100 TB/day stream)."""
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    stream = spark.readStream.schema(_RAW_SCHEMA).parquet(src)
+    stream = _replay_stream(spark, sf_dir)
     deduped = (
         stream.withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["event_id"])
@@ -478,10 +535,8 @@ def run_streaming_stream_join(
     late and the result equals the equivalent batch interval join —
     asserted in tests/test_streaming.py::test_stream_stream_join_batch_parity."""
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
     clicks = (
-        spark.readStream.schema(_RAW_SCHEMA)
-        .parquet(src)
+        _replay_stream(spark, sf_dir)
         .where(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user"),
@@ -491,8 +546,7 @@ def run_streaming_stream_join(
         .withWatermark("c_ts", "2 hours")
     )
     purchases = (
-        spark.readStream.schema(_RAW_SCHEMA)
-        .parquet(src)
+        _replay_stream(spark, sf_dir)
         .where(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user"),
@@ -530,8 +584,7 @@ def run_streaming_enrich_dim(
     the equivalent batch join+window — asserted in
     tests/test_streaming.py::test_enrich_dim_batch_parity."""
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    stream = spark.readStream.schema(_RAW_SCHEMA).parquet(src)
+    stream = _replay_stream(spark, sf_dir)
     # no FORCED broadcast: the customer dim GROWS with the scale factor
     # (r7 mirror rule — explicit hints only for fixed-cardinality sides).
     # The static side is re-planned per micro-batch, and the planner
@@ -678,8 +731,7 @@ def run_streaming_session_agg(
     asserts emitted ⊆ batch sessions with bit-equal aggregates AND that
     every watermark-finalized batch session was emitted."""
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    stream = spark.readStream.schema(_RAW_SCHEMA).parquet(src)
+    stream = _replay_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", watermark)
         .groupBy("user_id", F.session_window("ts", gap).alias("w"))
@@ -718,121 +770,118 @@ def _v100(v: float) -> int:
     )
 
 
-def run_streaming_cusum(
-    spark: SparkSession, sf_dir: str, single_batch: bool = False
-) -> DataFrame:
-    """Streaming CUSUM change-point detector via ``applyInPandasWithState``
-    — the serving-side face of ``window_cusum_alerts``: a per-(machine,
-    tag) accumulated-excess statistic that SURVIVES across micro-batches
-    (state store), alarming when drift above a trained baseline mean
-    crosses the threshold.  The baseline is fitted from the train window
-    (the drift family's ``_DRIFT_SPLIT_TS``) of the static table — the
-    trained-detector + live-stream split a real deployment has — and
-    travels as a broadcast variable (machines × tags: group-cardinality
-    bounded, shipped once per executor — the bounded-collect contract).
+#: the CUSUM/TWA faces' state key and carried per-key state frames
+_FOLD_KEYS = ("user_id", "event_type")
+_CUSUM_STATE = "user_id bigint, event_type string, s bigint, n_seen bigint, n_alerts bigint"
+_TWA_STATE = (
+    "user_id bigint, event_type string, last_us bigint, last_v bigint, num bigint, span_us bigint"
+)
 
-    Semantics mirror the stateful-EWMA face: exact (ts, event_id) order
-    within a micro-batch, arrival order across batches (any real
-    stream's contract).  ``single_batch=True`` delivers the whole replay
-    as one batch, making the run byte-for-byte reproducible against a
-    sequential reference — the parity path tests/test_streaming.py
-    drives.  State is integer-exact: the Page recurrence runs on
-    s = max(0, s + bn·(v100 − k) − bs1) with bigint state (exact while
-    |s| < 2⁶³; a 100 TB deployment would widen the state field to a
-    string-encoded int, same algebra)."""
-    import pandas as pd
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+def _cusum_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-(machine, tag) train-window baseline: bn readings, bs1 = Σv100.
+    The range loader filters the raw ts column, so the scan prunes row
+    groups on both timestamp branches, and the bound is the drift
+    family's shared _DRIFT_SPLIT_TS.  Materialized once per run
+    (localCheckpoint, bounded by machines × tags) for every micro-batch
+    to join on the JVM."""
     from gordo_components_spark.operators.model_sql import _DRIFT_SPLIT_TS
-    from gordo_components_spark.operators.windows import _CUSUM_H100, _CUSUM_K100
     from gordo_components_spark.sources.tables import load_events_in_range
 
-    prepare(spark)
-    # Train-window scan via load_events_in_range (round-9 advisory): a
-    # literal compare on the DERIVED µs ts cannot reach the parquet scan
-    # on the ≤4.0 raw-long branch — the range loader filters the raw
-    # column first, so the baseline fold prunes row groups at the source.
-    # The bound is the drift family's shared _DRIFT_SPLIT_TS, so the
-    # streaming baseline and the batch drift faces cannot drift apart.
-    base_rows = (
+    return (
         load_events_in_range(spark, sf_dir, to_ts=_DRIFT_SPLIT_TS)
-        .groupBy("user_id", "event_type")
+        .groupBy(*_FOLD_KEYS)
         .agg(
             F.count(F.lit(1)).alias("bn"),
-            F.expr("CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)").alias(
-                "bs1"
-            ),
+            F.expr("CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS bs1"),
         )
-        .collect()
+        .localCheckpoint()
     )
-    # Baseline travels as a BROADCAST VARIABLE, not a closure capture:
-    # the dict is bounded by group cardinality (machines × tags — the
-    # model-table size, NOT the corpus; a 10⁴-machine × 10²-tag fleet is
-    # ~10⁶ entries ≈ tens of MB), and broadcasting ships it once per
-    # executor instead of once per task serialization.  At a fleet where
-    # even that bound bites, the baseline would become a state-store
-    # initial-state load (statefulProcessor initialState) — same algebra.
-    baseline_bc = spark.sparkContext.broadcast(
-        {(r["user_id"], r["event_type"]): (r["bn"], r["bs1"]) for r in base_rows}
-    )
-    src = _replay_dir(spark, sf_dir)
-    reader = spark.readStream.schema(_RAW_SCHEMA)
-    if not single_batch:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    stream = reader.parquet(src)
 
-    def update(key, pdfs, state: GroupState):
-        bn, bs1 = baseline_bc.value.get((key[0], key[1]), (0, 0))
-        if state.exists:
-            s, n_seen, n_alerts = state.get
-        else:
-            s, n_seen, n_alerts = 0, 0, 0
-        rows = _group_rows(pdfs)
-        if len(rows) and bn:
-            # identical fold order via the lexsort permutation (unique
-            # composite key) — no full-frame sorted copy per group
-            vals = rows["value"].values[_ts_event_order(rows)]
-            thr = bn * _CUSUM_H100
-            for v in vals:
-                d = bn * (_v100(v) - _CUSUM_K100) - bs1
-                s = max(0, s + d)
-                n_seen += 1
-                if s > thr:
-                    n_alerts += 1
-        elif len(rows):
-            n_seen += len(rows)  # cold key: no baseline, count only
-        state.update((int(s), int(n_seen), int(n_alerts)))
-        yield pd.DataFrame(
-            [
-                {
-                    "user_id": key[0],
-                    "event_type": key[1],
-                    "cusum": (s / (bn * 100.0)) if bn else None,
-                    "n_seen": n_seen,
-                    "n_alerts": n_alerts,
-                }
-            ]
+
+def _cusum_fold(baseline: DataFrame):
+    """One micro-batch of Page's CUSUM as a prefix scan.  Each carried
+    key enters as a SEED row ordered before its events (ORDER BY seed,
+    ts, event_id), contributing d = s0; an event contributes
+    d = bn·(v100 − k) − bs1.  The recurrence s = max(0, s + d) unrolls
+    to cum − least(0, running-min(cum)) (cum = Σd, the seed's cum
+    s0 ≥ 0 never lowers the min), so one exchange, one sort, two
+    windows over the same spec and one aggregate fold the batch; keys
+    without new events pass through on their seed row."""
+    from pyspark.sql import Window
+
+    from gordo_components_spark.operators.windows import _CUSUM_H100, _CUSUM_K100
+
+    w = (
+        Window.partitionBy(*_FOLD_KEYS)
+        .orderBy("seed", "ts", "event_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+
+    def fold(batch: DataFrame, prior: DataFrame) -> DataFrame:
+        seeds = prior.selectExpr(
+            "user_id", "event_type", "0 AS seed", "CAST(NULL AS TIMESTAMP) AS ts",
+            "CAST(NULL AS BIGINT) AS event_id", "s AS d",
+            "CAST(NULL AS BIGINT) AS thr", "n_seen", "n_alerts",
+        )
+        # cold keys (no baseline) get bn = bs1 = 0: d = 0, s stays 0 and
+        # never alarms — they only count
+        events = batch.join(baseline, list(_FOLD_KEYS), "left").selectExpr(
+            "user_id", "event_type", "1 AS seed", "ts", "event_id",
+            f"coalesce(bn, 0) * (CAST(round(value * 100) AS BIGINT) - {_CUSUM_K100})"
+            " - coalesce(bs1, 0) AS d",
+            f"coalesce(bn, 0) * {_CUSUM_H100} AS thr",
+            "CAST(1 AS BIGINT) AS n_seen", "CAST(0 AS BIGINT) AS n_alerts",
+        )
+        rows = seeds.unionByName(events).withColumn("cum", F.sum("d").over(w))
+        rows = rows.withColumn("s", F.col("cum") - F.least(F.lit(0), F.min("cum").over(w)))
+        return rows.groupBy(*_FOLD_KEYS).agg(
+            F.expr("max_by(s, struct(seed, ts, event_id))").alias("s"),
+            F.sum("n_seen").alias("n_seen"),
+            # a seed's thr is NULL: it adds its carried count, no alarm
+            F.expr("sum(n_alerts + IF(s > thr, 1, 0))").alias("n_alerts"),
         )
 
-    out = stream.groupBy("user_id", "event_type").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "user_id bigint, event_type string, cusum double, "
-            "n_seen bigint, n_alerts bigint"
+    return fold
+
+
+def run_streaming_cusum(
+    spark: SparkSession,
+    sf_dir: str,
+    single_batch: bool = False,
+    checkpoint: str | None = None,
+) -> DataFrame:
+    """Streaming CUSUM change-point detector on the stateful-fold
+    skeleton (``_fold_stream``) — the serving-side face of
+    ``window_cusum_alerts``: a per-(machine, tag) accumulated excess
+    over a TRAIN-window baseline (the trained-detector + live-stream
+    split a real deployment has), carried across micro-batches as the
+    integer state (s, n_seen, n_alerts) and folded per batch by the
+    prefix scan ``_cusum_fold`` on the JVM; no Python worker runs.
+
+    Exact (ts, event_id) order within a micro-batch, arrival order
+    across batches (any real stream's contract).  ``single_batch=True``
+    delivers the replay as one batch, byte-for-byte reproducible against
+    a sequential reference (tests/test_streaming.py).  Bigint state:
+    under ANSI mode (the Spark 4 default) a sum past 2⁶³ raises
+    ARITHMETIC_OVERFLOW instead of wrapping.  ``checkpoint`` keeps the
+    query's checkpoint and fold state at a caller-owned path so a
+    stopped run can be restarted on it."""
+    prepare(spark)
+    baseline = _cusum_baseline(spark, sf_dir)
+    return _fold_stream(
+        _replay_stream(spark, sf_dir, None if single_batch else 1),
+        f"stream_cusum_{uuid.uuid4().hex[:8]}",
+        _cusum_fold(baseline),
+        _CUSUM_STATE,
+        # 100.0D: a DECIMAL literal would not be bit-identical to the
+        # sequential s / (bn * 100.0)
+        lambda state: state.join(baseline, list(_FOLD_KEYS), "left").selectExpr(
+            "user_id", "event_type", "CASE WHEN bn > 0 THEN s / (bn * 100.0D) END AS cusum",
+            "n_seen", "n_alerts",
         ),
-        stateStructType="s bigint, n_seen bigint, n_alerts bigint",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    name = f"stream_cusum_{uuid.uuid4().hex[:8]}"
-    return _run_to_memory(
-        out,
-        name,
-        output_mode="update",
-        latest_by=(("user_id", "event_type"), "n_seen"),
         est_rows=_events_rows(sf_dir),
-        python_stateful=True,
+        checkpoint=checkpoint,
     )
 
 
@@ -870,11 +919,7 @@ def run_streaming_hampel(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    reader = spark.readStream.schema(_RAW_SCHEMA)
-    if not single_batch:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    stream = reader.parquet(src)
+    stream = _replay_stream(spark, sf_dir, None if single_batch else 1)
 
     def update(key, pdfs, state: GroupState):
         if state.exists:
@@ -943,8 +988,7 @@ def run_streaming_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
     order).  Batch↔stream parity is asserted in
     tests/test_streaming.py."""
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    stream = spark.readStream.schema(_RAW_SCHEMA).parquet(src)
+    stream = _replay_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy("user_id", "event_type", F.window("ts", "6 hours").alias("w"))
@@ -970,98 +1014,70 @@ def run_streaming_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(agg, name, est_rows=_events_rows(sf_dir))
 
 
-def run_streaming_twa(
-    spark: SparkSession, sf_dir: str, single_batch: bool = False
-) -> DataFrame:
-    """Streaming time-weighted average via ``applyInPandasWithState`` —
-    the serving face of ``agg_time_weighted_avg``: per (machine, tag),
-    the trapezoid integral accumulates ACROSS micro-batches (state =
-    last reading + exact integer numerator/span), emitting each key's
-    running TWA — what a live dashboard's "average so far" must mean
-    under irregular sampling.
+def _twa_fold(batch: DataFrame, prior: DataFrame) -> DataFrame:
+    """One micro-batch of the integer trapezoid sum.  Each carried key
+    enters as a SEED row (its last reading) ordered before its events,
+    so LAG pairs every event with its predecessor — across the batch
+    boundary too — and each segment adds (v100_prev + v100)·Δµs to num
+    and Δµs to span_us.  Bigint arithmetic: under ANSI mode (the Spark 4
+    default) a product or sum past 2⁶³ raises ARITHMETIC_OVERFLOW
+    instead of wrapping."""
+    from pyspark.sql import Window
 
-    Integer-exact state: (last_us, last_v100, num, span_us) — each
-    segment adds (v100_prev + v100)·Δµs to num; at the replay's span
-    num stays ≤ ~1e17 < 2⁶³ (exact), and the emitted num/span_us ints
-    make the batch↔stream parity check in tests/test_streaming.py
-    integer-exact (the float twa is derived, not compared).  Order
-    contract mirrors the CUSUM/Hampel faces: exact (ts, event_id)
-    within a batch, arrival order across batches."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    reader = spark.readStream.schema(_RAW_SCHEMA)
-    if not single_batch:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    stream = reader.parquet(src)
-
-    def update(key, pdfs, state: GroupState):
-        import numpy as np
-
-        if state.exists:
-            last_us, last_v, num, span = state.get
-        else:
-            last_us, last_v, num, span = None, None, 0, 0
-        rows = _group_rows(pdfs)
-        if len(rows):
-            order = _ts_event_order(rows)
-            us_arr = (
-                rows["ts"].values[order].astype("datetime64[us]").astype("int64")
-            )
-            # per-element _v100 (the repr-exact half-up contract) over the
-            # identically-ordered values; the trapezoid fold itself
-            # vectorizes EXACTLY — every term (v_prev + v)·Δµs is the same
-            # int64 product the sequential loop added (integer sums are
-            # order-free; the docstring's |num| < 2⁶³ invariant bounds the
-            # partials the same way it bounded the running total)
-            v100 = np.fromiter(
-                (_v100(v) for v in rows["value"].values[order]),
-                dtype="int64",
-                count=len(rows),
-            )
-            if last_us is not None:
-                us_ext = np.concatenate(([last_us], us_arr))
-                v_ext = np.concatenate(([last_v], v100))
-            else:
-                us_ext, v_ext = us_arr, v100
-            if len(us_ext) >= 2:
-                dus = np.diff(us_ext)
-                num += int(np.sum((v_ext[:-1] + v_ext[1:]) * dus))
-                span += int(us_ext[-1] - us_ext[0])
-            last_us, last_v = int(us_arr[-1]), int(v100[-1])
-        state.update((last_us, last_v, int(num), int(span)))
-        yield pd.DataFrame(
-            [
-                {
-                    "user_id": key[0],
-                    "event_type": key[1],
-                    "num": num,
-                    "span_us": span,
-                    "twa": (num / (200.0 * span)) if span else None,
-                }
-            ]
-        )
-
-    out = stream.groupBy("user_id", "event_type").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "user_id bigint, event_type string, num bigint, span_us bigint,"
-            " twa double"
-        ),
-        stateStructType=(
-            "last_us bigint, last_v bigint, num bigint, span_us bigint"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    w = Window.partitionBy(*_FOLD_KEYS).orderBy("seed", "us", "event_id")
+    seeds = prior.selectExpr(
+        "user_id", "event_type", "0 AS seed", "last_us AS us",
+        "CAST(NULL AS BIGINT) AS event_id", "last_v AS v", "num", "span_us",
     )
-    name = f"stream_twa_{uuid.uuid4().hex[:8]}"
-    return _run_to_memory(
-        out, name, output_mode="update",
-        latest_by=(("user_id", "event_type"), "span_us"),
-        est_rows=_events_rows(sf_dir), python_stateful=True,
+    events = batch.selectExpr(
+        "user_id", "event_type", "1 AS seed", "unix_micros(ts) AS us", "event_id",
+        "CAST(round(value * 100) AS BIGINT) AS v",
+        "CAST(0 AS BIGINT) AS num", "CAST(0 AS BIGINT) AS span_us",
+    )
+    rows = seeds.unionByName(events).select(
+        "*", F.lag("us").over(w).alias("lag_us"), F.lag("v").over(w).alias("lag_v")
+    )
+    return rows.groupBy(*_FOLD_KEYS).agg(
+        F.expr("max_by(us, struct(seed, us, event_id))").alias("last_us"),
+        F.expr("max_by(v, struct(seed, us, event_id))").alias("last_v"),
+        F.expr("sum(num + coalesce((lag_v + v) * (us - lag_us), 0))").alias("num"),
+        F.expr("sum(span_us + coalesce(us - lag_us, 0))").alias("span_us"),
+    )
+
+
+def run_streaming_twa(
+    spark: SparkSession,
+    sf_dir: str,
+    single_batch: bool = False,
+    checkpoint: str | None = None,
+) -> DataFrame:
+    """Streaming time-weighted average on the stateful-fold skeleton
+    (``_fold_stream``) — the serving face of ``agg_time_weighted_avg``:
+    per (machine, tag), the trapezoid integral accumulates ACROSS
+    micro-batches, emitting each key's running TWA — what a live
+    dashboard's "average so far" must mean under irregular sampling.
+
+    Integer-exact state: (last_us, last_v, num, span_us), folded per
+    batch by ``_twa_fold`` on the JVM; the emitted num/span_us ints make
+    the parity checks in tests/test_streaming.py integer-exact (the
+    float twa is derived).  Order contract mirrors the CUSUM face: exact
+    (ts, event_id) within a batch, arrival order across batches — a
+    batch arriving with readings older than the carried one adds a
+    negative Δµs segment, exactly as the sequential fold does.
+    ``checkpoint`` as in ``run_streaming_cusum``."""
+    prepare(spark)
+    return _fold_stream(
+        _replay_stream(spark, sf_dir, None if single_batch else 1),
+        f"stream_twa_{uuid.uuid4().hex[:8]}",
+        _twa_fold,
+        _TWA_STATE,
+        lambda state: state.selectExpr(
+            "user_id", "event_type", "num", "span_us",
+            # 200.0D: bit-identical to the sequential num / (200.0 * span)
+            "CASE WHEN span_us <> 0 THEN num / (200.0D * span_us) END AS twa",
+        ),
+        est_rows=_events_rows(sf_dir),
+        checkpoint=checkpoint,
     )
 
 
@@ -1082,11 +1098,7 @@ def run_streaming_benford(
     )
 
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    reader = spark.readStream.schema(_RAW_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(src)
+    stream = _replay_stream(spark, sf_dir, max_files_per_trigger)
     v = stream.where(F.expr("round(value * 100) >= 1")).select(
         "event_type",
         F.expr(
@@ -1132,11 +1144,7 @@ def run_streaming_bottomk_sample(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    reader = spark.readStream.schema(_RAW_SCHEMA)
-    if not single_batch:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    stream = reader.parquet(src)
+    stream = _replay_stream(spark, sf_dir, None if single_batch else 1)
 
     def update(key, pdfs, state: GroupState):
         if state.exists:
@@ -1207,16 +1215,11 @@ def run_streaming_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gordo_components_spark.plans.manifest_table import ManifestTable
 
     prepare(spark)
-    replay = _replay_dir(spark, sf_dir)
     run_id = uuid.uuid4().hex
     root = f"/tmp/gordo_spark_stream/manifest-sink-{run_id}"
     chk = f"/tmp/gordo_spark_stream/chk/manifest-sink-{run_id}"
     t = ManifestTable(root)
-    stream = (
-        spark.readStream.schema(_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
-    )
+    stream = _replay_stream(spark, sf_dir, 1)
     try:
         with _stream_shuffle_partitions(spark, est_rows=_events_rows(sf_dir)):
             q = (
@@ -1254,11 +1257,7 @@ def run_streaming_countmin(
     from gordo_components_spark.operators.relational_extra import _cm_cell, _CM_D
 
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    reader = spark.readStream.schema(_RAW_SCHEMA)
-    if not single_batch:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    stream = reader.parquet(src)
+    stream = _replay_stream(spark, sf_dir, None if single_batch else 1)
     cell = _cm_cell("h", "instr", "r")
     cells = stream.withColumn(
         "h", F.expr("md5(event_type || ':' || CAST(user_id AS STRING))")
@@ -1297,11 +1296,7 @@ def run_streaming_heavy_hitters(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    reader = spark.readStream.schema(_RAW_SCHEMA)
-    if not single_batch:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    stream = reader.parquet(src)
+    stream = _replay_stream(spark, sf_dir, None if single_batch else 1)
 
     def update(key, pdfs, state: GroupState):
         if state.exists:

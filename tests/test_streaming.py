@@ -289,23 +289,132 @@ def test_streaming_cusum_single_batch_matches_sequential(spark, sf_dir):
         assert abs(row["cusum"] - s / (bn * 100.0)) < 1e-12
 
 
-def test_streaming_cusum_state_carries_across_batches(spark, sf_dir):
-    # 3 forced micro-batches: the final per-key row must have seen every
-    # event (state survived), and alerts only ever accumulate
-    from gordo_components_spark.sources.tables import load_table
+def _delivered_batches(chk):
+    """The replay file of each micro-batch, in delivery order, read from
+    the query's file-source log (``sources/0/<batch>``: "v1" then one JSON
+    line per file)."""
+    import json
+    import os
+    from urllib.parse import unquote, urlparse
+
+    log = os.path.join(chk, "sources", "0")
+    batches = sorted(int(f) for f in os.listdir(log) if f.isdigit())
+    out = []
+    for b in batches:
+        with open(os.path.join(log, str(b))) as fh:
+            lines = fh.read().splitlines()[1:]
+        out.append([unquote(urlparse(json.loads(l)["path"]).path) for l in lines])
+    return out
+
+
+def _sequential_replay(spark, sf_dir, chk):
+    """Literal per-key Page CUSUM and trapezoid folds over the replay
+    files one micro-batch at a time, in the order the file source
+    delivered them; (ts, event_id) order within a batch.  Returns
+    {key: dict(cusum, n_seen, n_alerts, num, span_us, twa)}."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from gordo_components_spark.operators.windows import _CUSUM_H100, _CUSUM_K100
+    from gordo_components_spark.streaming.micro_batch import _v100
+
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_type", "ts", "value"
+    ).toPandas()
+    tr = ev[ev["ts"] < pd.Timestamp("2024-01-16 00:00:00")]
+    base = {
+        k: (len(g), sum(_v100(v) for v in g["value"]))
+        for k, g in tr.groupby(["user_id", "event_type"])
+    }
+    st = {}
+    for files in _delivered_batches(chk):
+        b = pd.concat(pq.read_table(f).to_pandas() for f in files)
+        for k, g in b.sort_values(["ts", "event_id"]).groupby(["user_id", "event_type"]):
+            bn, bs1 = base.get(k, (0, 0))
+            r = st.setdefault(k, dict(s=0, n_seen=0, n_alerts=0, us=None, v=None, num=0, span_us=0))
+            for ts, v in zip(g["ts"], g["value"]):
+                v100, us = _v100(v), ts.value // 1000
+                r["s"] = max(0, r["s"] + bn * (v100 - _CUSUM_K100) - bs1)
+                r["n_seen"] += 1
+                r["n_alerts"] += r["s"] > bn * _CUSUM_H100
+                if r["us"] is not None:
+                    r["num"] += (r["v"] + v100) * (us - r["us"])
+                    r["span_us"] += us - r["us"]
+                r["us"], r["v"] = us, v100
+            r["cusum"] = r["s"] / (bn * 100.0) if bn else None
+            r["twa"] = r["num"] / (200.0 * r["span_us"]) if r["span_us"] else None
+    return st
+
+
+def _assert_matches_replay(got, ref, cols):
+    assert {(r.user_id, r.event_type) for r in got} == set(ref)
+    for r in got:
+        want = ref[(r.user_id, r.event_type)]
+        for c in cols:  # exact, floats included
+            assert r[c] == want[c], ((r.user_id, r.event_type), c, r[c], want[c])
+
+
+def test_streaming_cusum_state_carries_across_batches(spark, sf_dir, tmp_path):
+    # 3 forced micro-batches (one replay file each, arriving out of time
+    # order): every column of every key must equal the literal sequential
+    # fold of the files in delivery order — the carried state (s,
+    # n_seen, n_alerts) seeds each batch exactly
     from gordo_components_spark.streaming.micro_batch import run_streaming_cusum
 
-    got = run_streaming_cusum(spark, sf_dir).toPandas()
-    want = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id", "event_type")
-        .count()
-        .toPandas()
-    )
-    merged = got.merge(want, on=["user_id", "event_type"], validate="one_to_one")
-    assert (merged["n_seen"] == merged["count"]).all()
-    assert (merged["n_alerts"] >= 0).all()
-    assert (merged["cusum"].dropna() >= 0).all()
+    chk = str(tmp_path / "chk")
+    got = run_streaming_cusum(spark, sf_dir, checkpoint=chk).collect()
+    assert len(_delivered_batches(chk)) == 3
+    ref = _sequential_replay(spark, sf_dir, chk)
+    _assert_matches_replay(got, ref, ("cusum", "n_seen", "n_alerts"))
+    assert sum(r.n_alerts for r in got) > 0  # the alarm path is exercised
+
+
+def test_streaming_cusum_restart_resumes_exactly_once(spark, sf_dir, tmp_path, monkeypatch):
+    # kill a maxFilesPerTrigger=1 run inside batch 2 and restart it on the
+    # same checkpoint: Spark replays batch 2 (offsets logged, no commit),
+    # which folds batch 1's state once.  Then replay batch 2 again over
+    # its OWN written state (commit removed): the state is overwritten,
+    # not double-counted.  Both must equal an uninterrupted run.
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    from gordo_components_spark.streaming import micro_batch as mb
+
+    def rows(chk):
+        return sorted(map(tuple, mb.run_streaming_cusum(spark, sf_dir, checkpoint=chk).collect()))
+
+    want = rows(str(tmp_path / "uninterrupted"))
+    chk = str(tmp_path / "chk")
+    real, calls = mb._cusum_fold, []
+
+    def fold_counting(baseline, kill_at=None):
+        fold = real(baseline)
+
+        def counted(batch, prior):
+            calls.append(1)
+            if len(calls) == kill_at:
+                raise RuntimeError("killed inside batch 2")
+            return fold(batch, prior)
+
+        return counted
+
+    monkeypatch.setattr(mb, "_cusum_fold", lambda b: fold_counting(b, kill_at=3))
+    with pytest.raises(StreamingQueryException, match="killed inside batch 2"):
+        rows(chk)
+    assert sorted(os.listdir(os.path.join(chk, "fold"))) == ["0", "1"]
+    monkeypatch.setattr(mb, "_cusum_fold", fold_counting)
+    calls.clear()
+    assert rows(chk) == want
+    assert len(calls) == 1  # only batch 2 was re-run
+    for f in ("2", ".2.crc"):
+        os.remove(os.path.join(chk, "commits", f))
+    calls.clear()
+    assert rows(chk) == want
+    assert len(calls) == 1
+    calls.clear()
+    assert rows(chk) == want  # nothing new: the final state is read back
+    assert calls == []
 
 
 def test_streaming_hampel_single_batch_matches_sequential(spark, sf_dir):
@@ -452,31 +561,98 @@ def test_streaming_twa_single_batch_matches_sequential(spark, sf_dir):
             assert abs(got["twa"].loc[(uid, et)] - num / (200.0 * span)) < 1e-12
 
 
-def test_streaming_twa_state_carries_across_batches(spark, sf_dir):
-    # multi-batch replay must finish with the IDENTICAL integer state as
-    # single-batch: segments within a batch follow (ts, event_id) order
-    # and the cross-batch boundary segment connects through the carried
-    # last reading. The replay files are random slices (arrival order !=
-    # time order), so equality of the full integer state is a real test
-    # of the state carry, not a triviality — on num it holds only key-
-    # wise where slices preserve per-key time order; span monotonicity
-    # and row coverage hold always.
+def test_streaming_twa_state_carries_across_batches(spark, sf_dir, tmp_path):
+    # 3 forced micro-batches: every key's integer state and twa must equal
+    # the literal sequential trapezoid fold of the replay files in
+    # delivery order — the cross-batch segment connects through the
+    # carried last reading.  The files are random month-wide slices, so
+    # a batch may arrive with readings older than the carried one: under
+    # the arrival-order contract that segment's Δµs is negative, and the
+    # fold must carry it exactly like the sequential reference does.
     from gordo_components_spark.streaming.micro_batch import run_streaming_twa
 
-    got = run_streaming_twa(spark, sf_dir).toPandas()
-    ref = run_streaming_twa(spark, sf_dir, single_batch=True).toPandas()
-    assert set(zip(got["user_id"], got["event_type"])) == set(
-        zip(ref["user_id"], ref["event_type"])
+    chk = str(tmp_path / "chk")
+    got = run_streaming_twa(spark, sf_dir, checkpoint=chk).collect()
+    assert len(_delivered_batches(chk)) == 3
+    ref = _sequential_replay(spark, sf_dir, chk)
+    _assert_matches_replay(got, ref, ("num", "span_us", "twa"))
+
+
+def test_streaming_twa_overflow_raises_instead_of_wrapping(spark):
+    # two extreme readings a day apart: (v_prev + v)·Δµs = 2e17 · 8.64e10
+    # is past 2⁶³.  The bigint fold must fail loud (ANSI, the Spark 4
+    # default) — a silently wrapped num would emit a plausible twa
+    from gordo_components_spark.streaming.micro_batch import _TWA_STATE, _empty_state, _twa_fold
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    batch = spark.sql(
+        "SELECT * FROM VALUES"
+        " (1L, TIMESTAMP'2024-01-01 00:00:00', 7L, 'click', 1.0E15D),"
+        " (2L, TIMESTAMP'2024-01-02 00:00:00', 7L, 'click', 1.0E15D)"
+        " AS t(event_id, ts, user_id, event_type, value)"
     )
-    merged = got.merge(
-        ref, on=["user_id", "event_type"], suffixes=("_m", "_s")
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        _twa_fold(batch, _empty_state(spark, _TWA_STATE)).collect()
+
+
+def _plan_nodes(jplan):
+    """Every node of a physical plan, through AQE wrappers and subqueries."""
+    stack, out = [jplan], []
+    while stack:
+        node = stack.pop()
+        out.append(node)
+        for seq in (node.children(), node.innerChildren()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return out
+
+
+def test_streaming_folds_plan_on_jvm_only(spark, sf_dir, monkeypatch):
+    # neither face's streaming query keeps a state store (the per-group
+    # pandas protocol is a stateful operator), and neither face nor one
+    # fold batch plans a Python-eval node or an RDD scan that is not a
+    # materialized localCheckpoint — a driver-list createDataFrame plans
+    # as the same `Scan ExistingRDD` node over a parallelized Python RDD
+    # and starts Python workers on every micro-batch
+    import os
+
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from gordo_components_spark.streaming import micro_batch as mb
+
+    started, start = [], DataStreamWriter.start
+    monkeypatch.setattr(
+        DataStreamWriter, "start", lambda self, *a, **k: started.append(start(self, *a, **k)) or started[-1]
     )
-    # every key accumulated SOME span, and the multi-batch span equals
-    # the single-batch span whenever per-key arrival preserved time
-    # order; at minimum the totals must be positive and bounded by the
-    # wall span of the fixture
-    assert (merged["span_us_m"] > 0).all()
-    assert (merged["span_us_s"] > 0).all()
+    src = mb._replay_dir(spark, sf_dir)
+    one_file = os.path.join(src, sorted(f for f in os.listdir(src) if f.endswith(".parquet"))[0])
+    batch = spark.read.schema(mb._RAW_SCHEMA).parquet(one_file)
+    plans = {
+        "cusum face": mb.run_streaming_cusum(spark, sf_dir),
+        "twa face": mb.run_streaming_twa(spark, sf_dir),
+        "cusum fold": mb._cusum_fold(mb._cusum_baseline(spark, sf_dir))(
+            batch, mb._empty_state(spark, mb._CUSUM_STATE)
+        ),
+        "twa fold": mb._twa_fold(batch, mb._empty_state(spark, mb._TWA_STATE)),
+        "trap": spark.createDataFrame([(1, "a")], "user_id bigint, event_type string"),
+    }
+    n_events = load_table(spark, sf_dir, "events").count()
+    assert len(started) == 2
+    for q in started:
+        progress = [p for p in q.recentProgress if p.numInputRows]
+        assert len(progress) == 3 and sum(p.numInputRows for p in progress) == n_events
+        assert not any(p.stateOperators for p in q.recentProgress)
+    bad = {}
+    for name, df in plans.items():
+        for node in _plan_nodes(df._jdf.queryExecution().executedPlan()):
+            cls = node.getClass().getSimpleName()
+            if (
+                "Python" in cls
+                or "InPandas" in cls
+                or "ArrowEval" in cls
+                or (cls == "RDDScanExec" and not node.rdd().isCheckpointed())
+            ):
+                bad.setdefault(name, []).append(cls)
+    assert bad == {"trap": ["RDDScanExec"]}  # the guard sees the trap, nothing else
 
 
 def test_streaming_benford_matches_batch_exactly(spark, sf_dir):
