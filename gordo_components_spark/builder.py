@@ -64,9 +64,11 @@ class ModelBuilder:
             aggregation_methods=ds_cfg.get("aggregation_methods", "mean"),
             asset_id=ds_cfg.get("asset_id"),
         )
-        X_df, y_df = dataset.get_data(spark, sf_dir)
+        # one evaluation: the O13 gate reads the collected row count
+        X_df, _ = dataset.frames(spark, sf_dir)
         x_cols = [c for c in X_df.columns if c != "ts"]
         X = np.asarray(X_df.orderBy("ts").drop("ts").collect(), dtype=np.float64)
+        dataset.require_samples(len(X))
 
         model = from_definition(self.machine["model"])
         model.fit(X)

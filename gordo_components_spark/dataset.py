@@ -7,10 +7,10 @@ train_end_date, resolution, row_filter, …)`` and calls ``get_data()``
 for an aligned ``(X, y)`` pair; this class keeps that exact surface but
 returns Spark DataFrames built from one declarative plan:
 
-    pushdown time-range scan (O9) → per-tag resample (O18) → wide
-    alignment pivot + inner dropna (O15) → row-filter DSL + buffer
-    (O10/O11) → known-period blackouts (O12) → n_samples gate (O13) →
-    X/y projection (O14)
+    pushdown time-range scan with known-period blackouts (O9/O12) →
+    per-tag resample and wide alignment as ONE aggregation (O18/O15,
+    one exchange) + inner dropna → row-filter DSL + buffer (O10/O11) →
+    X/y projection (O14) → n_samples gate (O13, only when one is set)
 
 On the fixture, ``asset`` ≈ ``user_id`` (machine) and tag ≈
 ``event_type`` (FIXTURES.md role mapping); a custom ``provider``
@@ -25,7 +25,7 @@ from typing import Callable, NamedTuple
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from gordo_components_spark.functions.filter_dsl import compile_filter
-from gordo_components_spark.functions.timeseries import RESAMPLE_METHODS
+from gordo_components_spark.functions.timeseries import check_methods, pivot_aggs
 from gordo_components_spark.sources.tables import load_events_in_range
 
 
@@ -98,11 +98,15 @@ def _buffered_filter(wide: DataFrame, predicate: str, b: int) -> DataFrame:
     ``MIN(ok) OVER (ORDER BY ts ROWS ±b)`` serializes the whole frame on
     one executor — the scale-killer flagged in round 1.  Instead:
 
-    1. ``repartitionByRange(ts)`` + per-partition ``row_number`` with
-       broadcast cumulative offsets → a DENSE global row index, computed
-       with only per-partition windows (classic distributed row-number).
-    2. Block the index into fixed ``B``-row blocks; copy each block's
-       first/last ``b`` rows to its neighbor blocks (edge overlap).
+    1. ``repartitionByRange(ts)``, sorted within partitions, tags each row
+       with its partition id and partition-local index
+       (``monotonically_increasing_id`` minus the id it keeps in bits
+       33+).  The P per-partition counts come back to the driver and
+       their running sums ride in as a literal ``pid → offset`` map: a
+       DENSE global row index with no join, broadcast or window.
+    2. Block the index into fixed ``B``-row blocks; each block's first
+       and last ``b`` rows are also exploded into the neighbor block
+       (edge overlap).
     3. ``MIN(ok)`` over ``PARTITION BY block ORDER BY rn ROWS ±b`` — a
        partitioned window whose frames are exact because the index is
        dense and the overlap supplies every cross-block neighbor.
@@ -110,58 +114,54 @@ def _buffered_filter(wide: DataFrame, predicate: str, b: int) -> DataFrame:
     Exactness requires only ``b < B`` (``B = max(64, 8·b)``); results are
     bit-identical to the global window at any partition count.
 
-    ``marked`` feeds TWO subtrees (counts→offsets and idx), and the dense
-    index is only correct if both see the SAME ``__pid`` assignment and
-    intra-partition order.  Two guards make that hold on a real cluster
-    (task retry / speculation / nondeterministic upstream order): the
-    range exchange takes an explicit partition count (AQE-exempt, so the
-    two consumers can't be re-planned differently), and ``marked`` is
-    persisted so both subtrees read one materialization instead of
-    re-evaluating the exchange."""
+    The counts and the index must see the SAME partition assignment and
+    intra-partition order, so ``marked`` is materialized once with
+    ``localCheckpoint`` (explicit partition count: AQE-exempt) and both
+    read those blocks.  A local checkpoint lives on the executors and
+    cuts the lineage: a lost block fails the query loud instead of being
+    silently recomputed under freshly sampled range bounds, and nothing
+    stays cached once the frame is dropped."""
     from pyspark.sql import Window
 
     n_parts = wide.sparkSession.sparkContext.defaultParallelism
+    pid = F.spark_partition_id()
     marked = (
         wide.withColumn("__ok", F.when(F.expr(predicate), 1).otherwise(0))
         .repartitionByRange(n_parts, "ts")
         .sortWithinPartitions("ts")
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    from gordo_components_spark.caches import persist_tracked
-
-    marked = persist_tracked(marked)
-    # tiny frame (one row per partition): running offset of each partition
-    # via a metadata-scale self-join (≤ P² pairs), so the plan carries NO
-    # SinglePartition node anywhere — not even on the offsets frame
-    counts = marked.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-    c1, c2 = counts.alias("c1"), counts.alias("c2")
-    offsets = (
-        c1.join(F.broadcast(c2), F.col("c2.__pid") < F.col("c1.__pid"), "left")
-        .groupBy(F.col("c1.__pid").alias("__pid"))
-        .agg(F.coalesce(F.sum("c2.__cnt"), F.lit(0)).alias("__off"))
-    )
-    block = max(64, 8 * b)
-    idx = (
-        marked.join(F.broadcast(offsets), "__pid")
+        .withColumn("__pid", pid)
         .withColumn(
-            "__rn",
-            F.row_number().over(Window.partitionBy("__pid").orderBy("ts"))
-            + F.col("__off")
-            - 1,
+            "__rn", F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
         )
-        .withColumn("__blk", F.floor(F.col("__rn") / block))
+        .localCheckpoint()
     )
-    owned = idx.withColumn("__dest", F.col("__blk"))
-    head = idx.where(F.col("__rn") % block < b).withColumn("__dest", F.col("__blk") - 1)
-    tail = idx.where(F.col("__rn") % block >= block - b).withColumn(
-        "__dest", F.col("__blk") + 1
+    pairs, off = [], 0
+    for p, n in sorted(marked.groupBy("__pid").count().collect()):
+        pairs += [F.lit(p), F.lit(off).cast("long")]
+        off += n
+    if pairs:  # an empty frame has no partition to offset
+        marked = marked.withColumn(
+            "__rn", F.col("__rn") + F.create_map(*pairs)[F.col("__pid")]
+        )
+    block = max(64, 8 * b)
+    blk, pos = F.floor(F.col("__rn") / block), F.col("__rn") % block
+    aug = marked.withColumn("__blk", blk).withColumn(
+        "__dest",
+        F.explode(
+            F.array_compact(
+                F.array(
+                    blk,
+                    F.when(pos < b, blk - 1),
+                    F.when(pos >= block - b, blk + 1),
+                )
+            )
+        ),
     )
-    aug = owned.unionByName(head).unionByName(tail)
     w_keep = Window.partitionBy("__dest").orderBy("__rn").rowsBetween(-b, b)
     return (
         aug.withColumn("__keep", F.min("__ok").over(w_keep))
         .where((F.col("__dest") == F.col("__blk")) & (F.col("__keep") == 1))
-        .drop("__ok", "__pid", "__off", "__rn", "__blk", "__dest", "__keep")
+        .drop("__ok", "__pid", "__rn", "__blk", "__dest", "__keep")
     )
 
 
@@ -196,16 +196,10 @@ class TimeSeriesDataset:
         self.n_samples_threshold = n_samples_threshold
         methods = aggregation_methods if isinstance(aggregation_methods, list) else [aggregation_methods]
         self.aggregation_methods = ["avg" if m == "mean" else m for m in methods]
-        # _wide splices each method name into F.expr(f"{m}(value)") — the
-        # YAML-config path lands HERE, not in functions/timeseries.resample,
-        # so the whitelist must gate this entry point too or arbitrary
-        # config text reaches the SQL parser verbatim.
-        for m in self.aggregation_methods:
-            if m not in RESAMPLE_METHODS:
-                raise ValueError(
-                    f"unsupported aggregation method {m!r}; one of "
-                    f"{sorted(RESAMPLE_METHODS)}"
-                )
+        # the YAML-config path lands HERE, not in functions/timeseries, and
+        # _wide looks each method name up on pyspark.sql.functions — the
+        # whitelist must gate this entry point so config text never does
+        check_methods(self.aggregation_methods)
         self.asset_id = asset_id
         self.provider = provider
 
@@ -234,39 +228,24 @@ class TimeSeriesDataset:
         tags = [t.name for t in {*self.tag_list, *self.target_tag_list}]
         return df.where(F.col("tag").isin(tags))
 
+    def _name(self, tag: str, method: str) -> str:
+        """The MultiIndex (tag, method) flattens to ``tag__method`` when
+        several methods are requested, else to ``tag`` (SURVEY §1.2)."""
+        return f"{tag}__{method}" if len(self.aggregation_methods) > 1 else tag
+
+    def _columns(self, tags) -> list[str]:
+        return [self._name(t, m) for t in tags for m in self.aggregation_methods]
+
     def _wide(self, spark: SparkSession, sf_dir: str) -> DataFrame:
         duration = resolution_to_duration(self.resolution)
-        long_df = self._long_source(spark, sf_dir)
         tags = sorted({t.name for t in {*self.tag_list, *self.target_tag_list}})
-        multi = len(self.aggregation_methods) > 1
-        aggs = []
-        for m in self.aggregation_methods:
-            col = F.expr(f"{m}(value)")
-            if m in ("avg", "mean", "stddev", "stddev_samp"):
-                col = F.round(col, 9)
-            aggs.append(col.alias(m))
-        # resample (O18) then pivot (O15); MultiIndex (tag, method) flattens
-        # to tag__method when multiple methods (SURVEY §1.2)
+        value_cols = self._columns(tags)
+        # resample (O18) and alignment pivot (O15) as ONE aggregation
         wide = (
-            long_df.groupBy(F.window("ts", duration).alias("w"), "tag")
-            .agg(*aggs)
-            .groupBy(F.col("w.start").alias("ts"))
-            .pivot("tag", tags)
-            .agg(
-                *[
-                    F.first(m).alias(m) if multi else F.first(m)
-                    for m in self.aggregation_methods
-                ]
-            )
+            self._long_source(spark, sf_dir)
+            .groupBy(F.window("ts", duration).getField("start").alias("ts"))
+            .agg(*pivot_aggs("tag", tags, self.aggregation_methods, self._name))
         )
-        if multi:
-            cols = [f"`{t}_{m}`" for t in tags for m in self.aggregation_methods]
-            renames = {f"{t}_{m}": f"{t}__{m}" for t in tags for m in self.aggregation_methods}
-            for old, new in renames.items():
-                wide = wide.withColumnRenamed(old, new)
-            value_cols = list(renames.values())
-        else:
-            value_cols = tags
         # inner alignment: drop any bucket missing a tag (O15 dropna)
         wide = wide.dropna(subset=value_cols)
         # row-filter DSL + buffer (O10/O11)
@@ -278,21 +257,27 @@ class TimeSeriesDataset:
                 wide = wide.where(F.expr(predicate))
         return wide.orderBy("ts")
 
-    def get_data(self, spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-        """(X, y) aligned wide frames (O14 projection + O13 gate)."""
-        wide = self._wide(spark, sf_dir)
-        n = wide.count()
+    def require_samples(self, n: int) -> None:
+        """O13 gate on ``n`` aligned, filtered rows."""
         if n < self.n_samples_threshold:
             raise InsufficientDataError(
                 f"{n} rows after filtering < n_samples_threshold={self.n_samples_threshold}"
             )
-        multi = len(self.aggregation_methods) > 1
 
-        def cols_for(tag_list):
-            if multi:
-                return [f"{t.name}__{m}" for t in tag_list for m in self.aggregation_methods]
-            return [t.name for t in tag_list]
+    def frames(self, spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+        """Lazy (X, y) aligned wide frames (O14 projection), ungated: a
+        caller that collects them applies :meth:`require_samples` to the
+        row count it collected instead of paying a second evaluation."""
+        wide = self._wide(spark, sf_dir)
+        X = wide.select("ts", *self._columns(t.name for t in self.tag_list))
+        y = wide.select("ts", *self._columns(t.name for t in self.target_tag_list))
+        return X, y
 
-        X = wide.select("ts", *cols_for(self.tag_list))
-        y = wide.select("ts", *cols_for(self.target_tag_list))
+    def get_data(self, spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+        """(X, y) aligned wide frames with the O13 gate.  Counting is the
+        gate's only cost, so it runs only for a positive threshold: at
+        the default 0 nothing is evaluated here."""
+        X, y = self.frames(spark, sf_dir)
+        if self.n_samples_threshold > 0:
+            self.require_samples(X.count())
         return X, y

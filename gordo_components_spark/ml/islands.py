@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import base64
 import pickle
+import threading
 from collections.abc import Iterator
 
 import numpy as np
@@ -132,6 +133,23 @@ def train_models(features: DataFrame, definition: dict | None = None) -> DataFra
 #: ``plans/model_registry.py``.  Cached as collected rows (a few KB per
 #: machine — blobs are linear-AE weights), session-independent.
 _TRAIN_CACHE: dict[tuple, list] = {}
+_TRAIN_LOCKS: dict[tuple, threading.Lock] = {}
+_TRAIN_GUARD = threading.Lock()
+
+
+def _train_cached(key: tuple, build) -> list:
+    """Single-flight memo over ``_TRAIN_CACHE``: concurrent cold callers
+    of one key (the serve path's client threads) wait on that key's lock
+    while exactly one of them runs ``build()``; other keys fit freely."""
+    rows = _TRAIN_CACHE.get(key)
+    if rows is not None:
+        return rows
+    with _TRAIN_GUARD:
+        lock = _TRAIN_LOCKS.setdefault(key, threading.Lock())
+    with lock:
+        if key not in _TRAIN_CACHE:
+            _TRAIN_CACHE[key] = build()
+        return _TRAIN_CACHE[key]
 
 
 def _trained_rows(
@@ -153,10 +171,9 @@ def _trained_rows(
         duration,
         json.dumps(definition, sort_keys=True, default=str),
     )
-    if key not in _TRAIN_CACHE:
-        feats = machine_features(spark, sf_dir, duration)
-        _TRAIN_CACHE[key] = train_models(feats, definition).collect()
-    return _TRAIN_CACHE[key]
+    return _train_cached(
+        key, lambda: train_models(machine_features(spark, sf_dir, duration), definition).collect()
+    )
 
 
 def island_rows_cached(
@@ -171,7 +188,13 @@ def island_rows_cached(
     new process (each bench/oracle invocation) retrains from the parquet
     inputs at least once; a regenerated fixture under the same basename
     retrains.  ``build()`` returns the island DataFrame; collected rows
-    (the per-machine model cards) are what a registry stores."""
+    (the per-machine model cards) are what a registry stores.
+
+    Row bound: the collect brings ONE row per machine to the driver and
+    keeps it for the process — a model card of a few KB (the fitted
+    weights), so a key costs about machines × card size of driver memory
+    and nothing grows with the number of readings.  An island whose
+    output is per reading rather than per machine does not belong here."""
     import json
 
     from gordo_components_spark.caches import _parquet_rows, source_stat
@@ -183,9 +206,7 @@ def island_rows_cached(
         json.dumps(source_stat(sf_dir, "events")),
         params,
     )
-    if key not in _TRAIN_CACHE:
-        _TRAIN_CACHE[key] = build().collect()
-    return _TRAIN_CACHE[key]
+    return _train_cached(key, lambda: build().collect())
 
 
 def trained_models(

@@ -14,6 +14,7 @@ layout with identical code — only the path changes.
 from __future__ import annotations
 
 import os
+import threading
 import weakref
 from datetime import datetime, timedelta, timezone
 
@@ -66,6 +67,8 @@ def _normalize_events_ts(df: DataFrame, ts_type: str | None) -> DataFrame:
 # same-shape fixture preserves).  Session identity is a weakref-checked
 # object id: a stopped/replaced SparkSession never serves a stale plan.
 _RELATION_CACHE: dict[tuple, tuple] = {}
+#: guards eviction + insert: client threads share the module-level dict
+_RELATION_LOCK = threading.Lock()
 
 
 def _path_fingerprint(path: str):
@@ -87,27 +90,28 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     if hit is not None and hit[0]() is spark:
         return hit[1]
     df = spark.read.parquet(path)
-    if len(_RELATION_CACHE) > 256:
-        # Evict selectively (round-9 advisory: a full clear dropped hot
-        # live-session plans along with dead ones): first drop entries
-        # whose session weakref is dead, then stale fingerprints of
-        # still-live (session, path) pairs superseded by a regenerated
-        # fixture; fall back to a full clear only if both sweeps free
-        # nothing (256 genuinely-live relations in one session).
-        dead = [k for k, v in _RELATION_CACHE.items() if v[0]() is None]
-        live_keys = {
-            (k[0], k[1]) for k in _RELATION_CACHE if k not in set(dead)
-        }
-        for k in dead:
-            del _RELATION_CACHE[k]
+    with _RELATION_LOCK:
         if len(_RELATION_CACHE) > 256:
-            for sess_path in live_keys:
-                dups = [k for k in _RELATION_CACHE if (k[0], k[1]) == sess_path]
-                for k in dups[:-1]:  # keep the most recent insertion
-                    del _RELATION_CACHE[k]
-        if len(_RELATION_CACHE) > 256:
-            _RELATION_CACHE.clear()
-    _RELATION_CACHE[key] = (weakref.ref(spark), df)
+            # Evict selectively (round-9 advisory: a full clear dropped hot
+            # live-session plans along with dead ones): first drop entries
+            # whose session weakref is dead, then stale fingerprints of
+            # still-live (session, path) pairs superseded by a regenerated
+            # fixture; fall back to a full clear only if both sweeps free
+            # nothing (256 genuinely-live relations in one session).
+            dead = [k for k, v in _RELATION_CACHE.items() if v[0]() is None]
+            live_keys = {
+                (k[0], k[1]) for k in _RELATION_CACHE if k not in set(dead)
+            }
+            for k in dead:
+                del _RELATION_CACHE[k]
+            if len(_RELATION_CACHE) > 256:
+                for sess_path in live_keys:
+                    dups = [k for k in _RELATION_CACHE if (k[0], k[1]) == sess_path]
+                    for k in dups[:-1]:  # keep the most recent insertion
+                        del _RELATION_CACHE[k]
+            if len(_RELATION_CACHE) > 256:
+                _RELATION_CACHE.clear()
+        _RELATION_CACHE[key] = (weakref.ref(spark), df)
     return df
 
 
@@ -131,10 +135,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "embeddings":
         df = df.withColumn("embedding", F.col("embedding").cast("array<double>"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)
 
 
 def spread_scan(df: DataFrame) -> DataFrame:

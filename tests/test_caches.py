@@ -51,3 +51,38 @@ def test_cache_rebuilds_on_missing_marker(tmp_path, sf_dir):
     os.remove(os.path.join(out, "_FP.json"))  # e.g. a killed half-write
     materialized_cache(sf_dir, root, "leg", "events", _builds(counter))
     assert counter["n"] == 2
+
+
+def test_trained_blob_map_single_flight(monkeypatch, sf_dir):
+    """8 threads cold-calling one key run exactly one fit and all see its
+    rows (the serve path's client threads share ``_TRAIN_CACHE``)."""
+    import threading
+    import time
+
+    from gordo_components_spark.ml import islands
+
+    fits = []
+
+    class _Fit:
+        def collect(self):
+            fits.append(1)
+            time.sleep(0.2)  # hold the build open while the others arrive
+            return [{"machine": 7, "model_pkl_b64": "blob", "status": "ok"}]
+
+    monkeypatch.setattr(islands, "_TRAIN_CACHE", {})
+    monkeypatch.setattr(islands, "machine_features", lambda *a: None)
+    monkeypatch.setattr(islands, "train_models", lambda *a: _Fit())
+    start = threading.Barrier(8)
+    maps = []
+
+    def call():
+        start.wait()
+        maps.append(islands.trained_blob_map(None, sf_dir, "single-flight"))
+
+    threads = [threading.Thread(target=call) for _ in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert len(fits) == 1
+    assert maps == [{7: "blob"}] * 8

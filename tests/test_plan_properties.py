@@ -203,6 +203,26 @@ def test_dataset_buffer_window_partitioned(spark, sf_dir):
     assert "SinglePartition" not in buf.getvalue()
 
 
+def test_dataset_wide_one_aggregate_exchange(spark, sf_dir):
+    # resample (O18) and the alignment pivot (O15) are ONE conditional
+    # aggregation: a single hash exchange below the final sort, and no
+    # two-phase PivotFirst (SURVEY P8)
+    from gordo_components_spark.dataset import TimeSeriesDataset
+
+    ds = TimeSeriesDataset(
+        "2024-01-01T00:00:00Z", "2024-02-20T00:00:00Z",
+        ["click", "purchase", "view"], resolution="1H",
+        aggregation_methods=["mean", "count", "first"],
+    )
+    wide = ds._wide(spark, sf_dir)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        wide.explain("formatted")
+    plan = buf.getvalue()
+    assert plan.count("Arguments: hashpartitioning(") == 1, plan
+    assert "pivotfirst" not in plan.lower()
+
+
 def test_minhash_single_scan_no_corpus_broadcast(spark, sf_dir):
     # the banded corpus must never be a broadcast build side, the shingle
     # arrays must not ride through the band self-join, and the corpus
