@@ -21,7 +21,9 @@ things:
 
 from __future__ import annotations
 
+import json
 import os
+import threading
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -108,6 +110,17 @@ def source_stat(sf_dir: str, table: str):
     return [st.st_mtime_ns, st.st_size]
 
 
+_INSTALL_LOCK = threading.Lock()
+
+
+def _fp_matches(marker: str, fp: dict) -> bool:
+    try:
+        with open(marker) as fh:
+            return json.load(fh) == fp
+    except (OSError, ValueError):
+        return False
+
+
 def materialized_cache(sf_dir: str, scratch_root: str, name: str, table: str, build) -> str:
     """Fingerprinted, atomically-installed /tmp materialization cache —
     ONE definition of the discipline the streaming replay dir pioneered,
@@ -121,13 +134,14 @@ def materialized_cache(sf_dir: str, scratch_root: str, name: str, table: str, bu
       the new parquet, Spark reads the old scratch copy: silent
       cross-round mismatch), and a same-shape regeneration that
       preserves row counts is caught by the mtime/size stat;
-    - built into a pid-suffixed temp dir and ``os.replace``'d: two
-      concurrent cold-cache sessions (pytest + bench) never see a
-      half-written dir, and a killed build leaves no visible state.
+    - built into a pid+thread-suffixed temp dir and renamed into place:
+      two concurrent cold-cache sessions (pytest + bench) never see a
+      half-written dir, and a killed build leaves no visible state;
+    - never deletes a fingerprint-valid dir: a builder that loses the
+      race adopts the winner's dir and drops its own build.
 
     ``build(tmp_dir)`` writes the payload; the ``_FP.json`` marker is
     ignored by Spark's readers (underscore-prefixed = metadata)."""
-    import json as _json
     import shutil
 
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
@@ -139,38 +153,39 @@ def materialized_cache(sf_dir: str, scratch_root: str, name: str, table: str, bu
         "src": source_stat(sf_dir, table),
         "v": 2,
     }
-    if os.path.isfile(marker):
-        try:
-            with open(marker) as fh:
-                if _json.load(fh) == fp:
-                    return out
-        except (OSError, ValueError):
-            pass
-    # pid + thread token: concurrent cold builds from two PROCESSES were
-    # already safe (distinct pids), but two THREADS of one process (the
-    # r15 concurrent streaming legs) would share a pid-only tmp dir and
-    # interleave their writes — the thread ident separates them, and the
-    # atomic replace below still elects exactly one winner.
-    import threading
-
+    if _fp_matches(marker, fp):
+        return out
+    # pid + thread token: two THREADS of one process (the concurrent
+    # streaming legs) would otherwise share a tmp dir and interleave
+    # their writes
     tmp = f"{out}.tmp-{os.getpid()}-t{threading.get_ident()}"
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(os.path.dirname(tmp), exist_ok=True)
     build(tmp)
     with open(os.path.join(tmp, "_FP.json"), "w") as fh:
-        _json.dump(fp, fh)
-    shutil.rmtree(out, ignore_errors=True)
-    try:
-        os.replace(tmp, out)
-    except OSError:
-        # concurrent builder won the swap; adopt its dir if fingerprints
-        # match (content is deterministic), else surface the failure
-        try:
-            with open(marker) as fh:
-                ok = _json.load(fh) == fp
-        except (OSError, ValueError):
-            ok = False
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not ok:
-            raise
-    return out
+        json.dump(fp, fh)
+    # Install without ever deleting a fingerprint-valid ``out``: another
+    # builder may have installed it while this one built, and a running
+    # query may be reading it.  The lock makes re-check + install one step
+    # for this process's threads.  Across processes, ``os.rename`` onto a
+    # non-empty dir fails, so a colliding install is re-checked (and
+    # adopted) instead of overwritten.  Only a missing or stale dir is
+    # replaced, and a stale one is renamed aside before it is deleted.
+    with _INSTALL_LOCK:
+        for _ in range(8):
+            if _fp_matches(marker, fp):
+                shutil.rmtree(tmp, ignore_errors=True)
+                return out
+            aside = f"{tmp}.stale"
+            try:
+                os.rename(out, aside)
+            except FileNotFoundError:
+                pass
+            shutil.rmtree(aside, ignore_errors=True)
+            try:
+                os.rename(tmp, out)
+                return out
+            except OSError:
+                continue  # another process installed first: re-check it
+    shutil.rmtree(tmp, ignore_errors=True)
+    raise RuntimeError(f"materialized_cache: could not install {out}")

@@ -86,3 +86,36 @@ def test_trained_blob_map_single_flight(monkeypatch, sf_dir):
         t.join()
     assert len(fits) == 1
     assert maps == [{7: "blob"}] * 8
+
+
+def test_concurrent_builds_never_delete_a_served_dir(tmp_path, sf_dir):
+    """8 cold builders with staggered build times: a builder that finishes
+    after another has installed must adopt that dir, never replace it —
+    every file a caller saw when its call returned must still exist."""
+    import threading
+    import time
+
+    root = str(tmp_path / "scratch")
+    start = threading.Barrier(8)
+    seen: list[str] = []
+
+    def call(i):
+        def build(tmp):
+            os.makedirs(tmp, exist_ok=True)
+            time.sleep(0.05 * i)
+            with open(os.path.join(tmp, f"part-{i}.txt"), "w") as fh:
+                fh.write(str(i))
+
+        start.wait()
+        out = materialized_cache(sf_dir, root, "leg", "events", build)
+        seen.extend(os.path.join(out, f) for f in os.listdir(out))
+
+    threads = [threading.Thread(target=call, args=(i,)) for i in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert len(seen) == 16  # each caller saw one part file plus the marker
+    assert [p for p in seen if not os.path.exists(p)] == []
+    # the losers' tmp builds are gone; only the installed dir remains
+    assert os.listdir(os.path.dirname(os.path.dirname(seen[0]))) == ["leg"]

@@ -2,7 +2,9 @@
 
 Prints per-query best-of-N wall seconds on one long-lived session, with
 a warm-up pass first (same methodology as bench.py, minus the artifact
-plumbing) so ad-hoc optimization iterations measure the PLAN.
+plumbing) so ad-hoc optimization iterations measure the PLAN.  Each
+query also reports its compile cost (JIT seconds, Janino compiles) for
+the warm-up run and for the timed runs together.
 
 Usage:
     python tools/micro_time.py [-n RUNS] name [name...]
@@ -19,7 +21,11 @@ HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
 from gordo_components_spark.registry import load_all  # noqa: E402
-from gordo_components_spark.session import get_spark  # noqa: E402
+from gordo_components_spark.session import (  # noqa: E402
+    compile_counters,
+    compile_delta,
+    get_spark,
+)
 
 
 def main() -> None:
@@ -36,7 +42,9 @@ def main() -> None:
     for name in names:
         spec = registry[name]
         spark.sparkContext.setJobDescription(f"warmup:{name}")
+        c0 = compile_counters(spark)
         spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        c1 = compile_counters(spark)
         samples = []
         for i in range(runs):
             spark.catalog.clearCache()
@@ -49,6 +57,11 @@ def main() -> None:
             "min": round(samples[0], 4),
             "median": round(samples[len(samples) // 2], 4),
             "max": round(samples[-1], 4),
+            # JIT seconds and Janino compiles, warm-up vs all timed runs
+            "compile": {
+                "warmup": compile_delta(c0, c1),
+                "timed": compile_delta(c1, compile_counters(spark)),
+            },
         }
         print(name, json.dumps(out[name]), flush=True)
     print(json.dumps({"load1": round(os.getloadavg()[0], 2), "times": out}))
