@@ -1,28 +1,36 @@
-"""Operator-intermediate cache registry (round-3 advisory + verdict #7).
+"""The one cache layer: every fixture-derived cache is keyed, installed
+and shared here.
 
-Several operators persist an intermediate frame that IS their index —
-the MinHash shingle set, the TF-IDF postings, the buffered-filter mask.
-Each ``persist()`` lives for the session unless released, so a long-
-lived driver that calls these operators repeatedly would accumulate
-executor cache indefinitely.  This module gives those persists two
-things:
+- ``footer_rows`` and ``stat_fingerprint`` are the only fixture
+  fingerprints.  The footer row count sizes operators (block counts,
+  shuffle widths) and, together with the stat fingerprint, keys every
+  cache: a driver-regenerated fixture under the same basename changes
+  the stat even when it keeps the row count.
+- ``materialized_cache`` is the only on-disk install of a
+  ``/tmp/gordo_spark_*`` scratch dir: fingerprinted, built in a private
+  temp dir, renamed into place, single-flight per dir within a process,
+  and never deleting a valid dir.  Constants that define an artifact
+  (a format version, a seed, a bucket count) go into its ``name``.
+- ``memo`` is the only process-local memo keyed on a fixture (the
+  trained-model rows): single-flight per key.
+- ``persist_tracked`` persists an operator's intermediate frame (the
+  MinHash shingle set, the TF-IDF postings) at the configured storage
+  level and registers it for ``release_caches()``.  The level is
+  ``SPARK_GRAFT_CACHE_LEVEL`` (default ``MEMORY_AND_DISK``); at 100 TB
+  big-corpus deployments set ``MEMORY_AND_DISK_SER`` or ``DISK_ONLY`` so
+  the index spills instead of evicting the executors (docs/SCALE.md
+  §caches).  Releasing early never breaks correctness — downstream plans
+  recompute from lineage — it only forfeits the reuse.
 
-- a CONFIGURABLE STORAGE LEVEL: ``SPARK_GRAFT_CACHE_LEVEL`` (default
-  ``MEMORY_AND_DISK``).  At 100 TB the shingled corpus is ~10× the raw
-  text — big-corpus deployments set ``MEMORY_AND_DISK_SER`` or
-  ``DISK_ONLY`` so the index spills instead of evicting the executors
-  (docs/SCALE.md §caches);
-- a CLEANUP HOOK: ``release_caches()`` unpersists every tracked frame.
-  Call it when the consuming action is done (bench.py's
-  ``clearCache()`` between runs is the blunter equivalent).  Releasing
-  early never breaks correctness — downstream plans recompute from
-  lineage — it only forfeits the reuse.
+The relation cache in ``sources/tables.py`` stays there: it is
+session-scoped and bounded, and keys on ``stat_fingerprint``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import threading
 
 from pyspark import StorageLevel
@@ -58,9 +66,9 @@ def operator_storage_level() -> StorageLevel:
     return _LEVELS.get(name, _LEVELS[default])
 
 
-def persist_tracked(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
+def persist_tracked(df: DataFrame) -> DataFrame:
     """Persist at the configured level and register for release."""
-    out = df.persist(level or operator_storage_level())
+    out = df.persist(operator_storage_level())
     _LIVE.append(out)
     return out
 
@@ -77,9 +85,10 @@ def release_caches() -> int:
     return n
 
 
-def _parquet_rows(sf_dir: str, table: str) -> int:
-    # footer-metadata row count (driver-side, no Spark job); duplicated
-    # from extensions_corpus._table_rows to keep this module import-leaf
+def footer_rows(sf_dir: str, table: str) -> int:
+    """Row count of a fixture table from its parquet FOOTER metadata
+    (driver-side, no Spark job); a Spark-written directory sums its
+    part files."""
     import pyarrow.parquet as pq
 
     path = os.path.join(sf_dir, f"{table}.parquet")
@@ -92,17 +101,13 @@ def _parquet_rows(sf_dir: str, table: str) -> int:
     return pq.read_metadata(path).num_rows
 
 
-def source_stat(sf_dir: str, table: str):
-    """Stat fingerprint of a fixture table: (mtime_ns, size) for a file,
-    the sorted child listing for a directory.  Strictly stronger than the
-    footer row count (which a regenerated same-shape fixture preserves —
-    the tables.py relation-cache rationale); round-8 review upgraded the
-    scratch caches to carry BOTH."""
-    path = os.path.join(sf_dir, f"{table}.parquet")
+def stat_fingerprint(path: str) -> list:
+    """(mtime_ns, size) of a file, or (mtime_ns, sorted child listing) of
+    a directory.  Strictly stronger than the footer row count, which a
+    regenerated same-shape fixture preserves.  Lists, not tuples: the
+    fingerprint is compared against its JSON round-trip."""
     st = os.stat(path)
     if os.path.isdir(path):
-        # lists, not tuples: the fingerprint is compared against its
-        # JSON round-trip, which has no tuple type
         kids = sorted(
             [e.name, e.stat().st_size, e.stat().st_mtime_ns] for e in os.scandir(path)
         )
@@ -110,70 +115,89 @@ def source_stat(sf_dir: str, table: str):
     return [st.st_mtime_ns, st.st_size]
 
 
-_INSTALL_LOCK = threading.Lock()
+# One lock per cache key, so concurrent cold callers of one key run one
+# build while other keys build freely; ``_GUARD`` only covers the lookup.
+_LOCKS: dict = {}
+_GUARD = threading.Lock()
 
 
-def _fp_matches(marker: str, fp: dict) -> bool:
+def _lock_for(key) -> threading.Lock:
+    with _GUARD:
+        return _LOCKS.setdefault(key, threading.Lock())
+
+
+_MEMO: dict = {}
+
+
+def memo(key, build):
+    """Process-local single-flight memo: the first caller of ``key`` runs
+    ``build()``; concurrent callers of the same key wait for it and share
+    its result.  ``key`` must carry the fixture fingerprint (footer rows
+    and stat) of whatever ``build`` reads."""
     try:
-        with open(marker) as fh:
-            return json.load(fh) == fp
-    except (OSError, ValueError):
+        return _MEMO[key]
+    except KeyError:
+        pass
+    with _lock_for(("memo", key)):
+        if key not in _MEMO:
+            _MEMO[key] = build()
+        return _MEMO[key]
+
+
+def _valid(out: str, fp: dict) -> bool:
+    """``out`` carries a marker for ``fp`` and every payload entry the
+    marker recorded still exists (a dir deleted in parts is stale)."""
+    try:
+        with open(os.path.join(out, "_FP.json")) as fh:
+            have = json.load(fh)
+        entries = have.pop("entries")
+        return have == fp and set(entries) <= set(os.listdir(out))
+    except (OSError, ValueError, KeyError, TypeError, AttributeError):
         return False
 
 
 def materialized_cache(sf_dir: str, scratch_root: str, name: str, table: str, build) -> str:
-    """Fingerprinted, atomically-installed /tmp materialization cache —
-    ONE definition of the discipline the streaming replay dir pioneered,
-    now shared by every scan leg that round-trips the fixture through a
-    scratch format (CSV/JSONL/ORC, date-partitioned, schema-evolution):
+    """Fingerprinted, atomically installed scratch dir
+    ``{scratch_root}/{sf basename}/{name}`` derived from fixture
+    ``table``; returns its path.
 
-    - keyed by {sf_dir, parquet-footer row count, source stat}: a
-      REGENERATED fixture under the same basename (the driver rebuilds
-      testdata between rounds) can never serve stale data — the
-      _SUCCESS-marker-only check this replaces would have (oracle reads
-      the new parquet, Spark reads the old scratch copy: silent
-      cross-round mismatch), and a same-shape regeneration that
-      preserves row counts is caught by the mtime/size stat;
-    - built into a pid+thread-suffixed temp dir and renamed into place:
-      two concurrent cold-cache sessions (pytest + bench) never see a
-      half-written dir, and a killed build leaves no visible state;
-    - never deletes a fingerprint-valid dir: a builder that loses the
-      race adopts the winner's dir and drops its own build.
-
-    ``build(tmp_dir)`` writes the payload; the ``_FP.json`` marker is
-    ignored by Spark's readers (underscore-prefixed = metadata)."""
-    import shutil
-
+    - The ``_FP.json`` marker records {sf_dir, footer rows, stat
+      fingerprint, format version} and the payload's top-level entry
+      names.  A regenerated fixture, a marker from an older format, or a
+      payload entry deleted under a kept marker all read as stale, so
+      the dir is rebuilt instead of served.  Spark's readers ignore the
+      underscore-prefixed marker.
+    - Single-flight: concurrent cold callers in one process run
+      ``build`` once, under that dir's lock; the others wait and adopt.
+    - ``build(tmp)`` writes the payload into a temp dir private to its
+      process and thread, which is then renamed into place, so no reader
+      ever sees a half-written dir and a killed build leaves nothing
+      visible.
+    - A valid dir is never deleted: across processes ``os.rename`` onto
+      a non-empty dir fails, so a colliding install is re-checked and
+      adopted.  Only a missing or stale dir is replaced, and a stale one
+      is renamed aside before it is deleted."""
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     out = f"{scratch_root}/{sf_tag}/{name}"
-    marker = os.path.join(out, "_FP.json")
     fp = {
         "sf_dir": sf_dir,
-        "n_rows": _parquet_rows(sf_dir, table),
-        "src": source_stat(sf_dir, table),
-        "v": 2,
+        "n_rows": footer_rows(sf_dir, table),
+        "src": stat_fingerprint(os.path.join(sf_dir, f"{table}.parquet")),
+        "v": 3,
     }
-    if _fp_matches(marker, fp):
+    if _valid(out, fp):
         return out
-    # pid + thread token: two THREADS of one process (the concurrent
-    # streaming legs) would otherwise share a tmp dir and interleave
-    # their writes
-    tmp = f"{out}.tmp-{os.getpid()}-t{threading.get_ident()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(os.path.dirname(tmp), exist_ok=True)
-    build(tmp)
-    with open(os.path.join(tmp, "_FP.json"), "w") as fh:
-        json.dump(fp, fh)
-    # Install without ever deleting a fingerprint-valid ``out``: another
-    # builder may have installed it while this one built, and a running
-    # query may be reading it.  The lock makes re-check + install one step
-    # for this process's threads.  Across processes, ``os.rename`` onto a
-    # non-empty dir fails, so a colliding install is re-checked (and
-    # adopted) instead of overwritten.  Only a missing or stale dir is
-    # replaced, and a stale one is renamed aside before it is deleted.
-    with _INSTALL_LOCK:
+    with _lock_for(out):
+        if _valid(out, fp):
+            return out
+        tmp = f"{out}.tmp-{os.getpid()}-t{threading.get_ident()}"
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(os.path.dirname(tmp), exist_ok=True)
+        build(tmp)
+        with open(os.path.join(tmp, "_FP.json"), "w") as fh:
+            json.dump({**fp, "entries": sorted(os.listdir(tmp))}, fh)
         for _ in range(8):
-            if _fp_matches(marker, fp):
+            if _valid(out, fp):
                 shutil.rmtree(tmp, ignore_errors=True)
                 return out
             aside = f"{tmp}.stale"
@@ -187,5 +211,5 @@ def materialized_cache(sf_dir: str, scratch_root: str, name: str, table: str, bu
                 return out
             except OSError:
                 continue  # another process installed first: re-check it
-    shutil.rmtree(tmp, ignore_errors=True)
+        shutil.rmtree(tmp, ignore_errors=True)
     raise RuntimeError(f"materialized_cache: could not install {out}")

@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import base64
 import pickle
-import threading
 from collections.abc import Iterator
 
 import numpy as np
@@ -127,51 +126,40 @@ def train_models(features: DataFrame, definition: dict | None = None) -> DataFra
     return _spread(features).groupBy("user_id").applyInPandas(fn, TRAIN_META_SCHEMA)
 
 
-#: O39 model-cache restated (reference ``builder/build_model.py::check_cache``):
-#: same (data window, config) ⇒ reuse the trained models instead of
-#: rebuilding.  Keyed process-locally; the durable form is
-#: ``plans/model_registry.py``.  Cached as collected rows (a few KB per
-#: machine — blobs are linear-AE weights), session-independent.
-_TRAIN_CACHE: dict[tuple, list] = {}
-_TRAIN_LOCKS: dict[tuple, threading.Lock] = {}
-_TRAIN_GUARD = threading.Lock()
+def _events_key(sf_dir: str) -> tuple:
+    """The events fixture's fingerprint for a ``caches.memo`` key: the
+    footer row count and stat key the cache to the fixture CONTENTS, not
+    just its path, so a regenerated same-basename fixture retrains."""
+    import json
+    import os
 
+    from gordo_components_spark.caches import footer_rows, stat_fingerprint
 
-def _train_cached(key: tuple, build) -> list:
-    """Single-flight memo over ``_TRAIN_CACHE``: concurrent cold callers
-    of one key (the serve path's client threads) wait on that key's lock
-    while exactly one of them runs ``build()``; other keys fit freely."""
-    rows = _TRAIN_CACHE.get(key)
-    if rows is not None:
-        return rows
-    with _TRAIN_GUARD:
-        lock = _TRAIN_LOCKS.setdefault(key, threading.Lock())
-    with lock:
-        if key not in _TRAIN_CACHE:
-            _TRAIN_CACHE[key] = build()
-        return _TRAIN_CACHE[key]
+    return (
+        sf_dir,
+        footer_rows(sf_dir, "events"),
+        json.dumps(stat_fingerprint(os.path.join(sf_dir, "events.parquet"))),
+    )
 
 
 def _trained_rows(
     spark: SparkSession, sf_dir: str, duration: str = "60 minutes", definition: dict | None = None
 ) -> list:
+    """O39 model-cache restated (reference ``builder/build_model.py::
+    check_cache``): same (data window, config) ⇒ reuse the trained models
+    instead of rebuilding.  Memoized process-locally as collected rows (a
+    few KB per machine — blobs are linear-AE weights), session-independent;
+    the durable form is ``plans/model_registry.py``."""
     import json
 
-    from gordo_components_spark.caches import _parquet_rows, source_stat
+    from gordo_components_spark.caches import memo
 
-    # the footer row count + stat fingerprint key the cache to the
-    # fixture CONTENTS, not just its path — a regenerated same-basename
-    # fixture retrains instead of serving stale models, even when the
-    # regeneration preserves the row count (same discipline as
-    # caches.materialized_cache, reviews r7/r8)
     key = (
-        sf_dir,
-        _parquet_rows(sf_dir, "events"),
-        json.dumps(source_stat(sf_dir, "events")),
+        *_events_key(sf_dir),
         duration,
         json.dumps(definition, sort_keys=True, default=str),
     )
-    return _train_cached(
+    return memo(
         key, lambda: train_models(machine_features(spark, sf_dir, duration), definition).collect()
     )
 
@@ -183,30 +171,21 @@ def island_rows_cached(
     islands (r14 verdict item 5: ``ml_lifecycle`` re-ran the recurrent
     and AR fits its standalone faces had already paid — two fits per
     process for identical model cards).  Same fingerprint contract as
-    ``_trained_rows``: keyed on (sf_dir, parquet-footer row count,
-    source stat, island tag, hyperparams), process-local only — every
-    new process (each bench/oracle invocation) retrains from the parquet
-    inputs at least once; a regenerated fixture under the same basename
-    retrains.  ``build()`` returns the island DataFrame; collected rows
-    (the per-machine model cards) are what a registry stores.
+    ``_trained_rows``: keyed on (island tag, events fingerprint,
+    hyperparams), process-local only — every new process (each
+    bench/oracle invocation) retrains from the parquet inputs at least
+    once; a regenerated fixture under the same basename retrains.
+    ``build()`` returns the island DataFrame; collected rows (the
+    per-machine model cards) are what a registry stores.
 
     Row bound: the collect brings ONE row per machine to the driver and
     keeps it for the process — a model card of a few KB (the fitted
     weights), so a key costs about machines × card size of driver memory
     and nothing grows with the number of readings.  An island whose
     output is per reading rather than per machine does not belong here."""
-    import json
+    from gordo_components_spark.caches import memo
 
-    from gordo_components_spark.caches import _parquet_rows, source_stat
-
-    key = (
-        tag,
-        sf_dir,
-        _parquet_rows(sf_dir, "events"),
-        json.dumps(source_stat(sf_dir, "events")),
-        params,
-    )
-    return _train_cached(key, lambda: build().collect())
+    return memo((tag, *_events_key(sf_dir), params), lambda: build().collect())
 
 
 def trained_models(

@@ -20,6 +20,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from gordo_components_spark.caches import footer_rows
 from gordo_components_spark.registry import register
 from gordo_components_spark.sources.tables import load_table, spread_scan
 
@@ -30,114 +31,50 @@ from gordo_components_spark.sources.tables import load_table, spread_scan
 _DEDUP_IDX_ROOT = "/tmp/gordo_spark_dedupidx"
 
 
-def _table_rows(sf_dir: str, table: str) -> int:
-    """Row count from parquet FOOTER metadata (driver-side, no Spark
-    job) — handles both a single file and a Spark-written directory."""
-    import pyarrow.parquet as pq
+def _json_artifact(sf_dir: str, name: str, table: str, compute):
+    """A JSON-serializable offline trainer output (BPE merge table,
+    KMeans centroids) computed once per fixture ``table`` and stored
+    through ``caches.materialized_cache``."""
+    from gordo_components_spark.caches import materialized_cache
 
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(path):
-        return sum(
-            pq.read_metadata(os.path.join(path, f)).num_rows
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-    return pq.read_metadata(path).num_rows
+    def build(tmp: str) -> None:
+        os.makedirs(tmp)
+        with open(os.path.join(tmp, "payload.json"), "w") as fh:
+            json.dump(compute(), fh)
 
-
-def _artifact_cache(name: str, sf_dir: str, fingerprint: dict, compute):
-    """Fingerprinted JSON artifact cache for offline trainer outputs
-    (BPE merge table, KMeans centroids): computed once per corpus,
-    reused across calls and sessions; atomic tmp-file + rename so a
-    concurrent writer can never expose a torn artifact.  Same cache
-    discipline as ``build_ivf_index`` / ``build_dedup_index``."""
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = f"/tmp/gordo_spark_{name}_{base}.json"
-    if os.path.isfile(path):
-        try:
-            with open(path) as fh:
-                doc = json.load(fh)
-            if doc.get("fp") == fingerprint:
-                return doc["payload"]
-        except (OSError, ValueError):
-            pass
-    payload = compute()
-    tmp = f"{path}.tmp.{os.getpid()}"
-    with open(tmp, "w") as fh:
-        json.dump({"fp": fingerprint, "payload": payload}, fh)
-    os.replace(tmp, path)
-    return payload
+    out = materialized_cache(sf_dir, "/tmp/gordo_spark_artifacts", name, table, build)
+    with open(os.path.join(out, "payload.json")) as fh:
+        return json.load(fh)
 
 
-def build_dedup_index(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
+def build_dedup_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the historical digest index ONCE per corpus: the
-    md5(text) set of the historical split, written as parquet partitioned
-    by ``hp=`` (first hex nibble, 16 partitions).
+    md5(text) set of the historical split, written under ``hist/`` as
+    parquet partitioned by ``hp=`` (first hex nibble, 16 partitions).
 
     At 100 TB this is the whole point of *incremental* dedup: history is
     scanned exactly once ever; every nightly delta batch joins against
     this (much smaller) digest index instead of re-reading the corpus.
     The ``hp=`` layout keeps the index droppable/compactable per shard
-    and gives the anti-join a pre-bucketed build side.
+    and gives the anti-join a pre-bucketed build side.  Installed through
+    ``caches.materialized_cache``, so a concurrent builder never exposes
+    a half-index and a deleted ``hist/`` is rebuilt."""
+    from gordo_components_spark.caches import materialized_cache
 
-    Same cache discipline as ``build_ivf_index`` (advisory-hardened):
-    fingerprint marker + payload-dir existence check, temp-dir build +
-    atomic rename so a concurrent builder can never expose a half-index.
-    """
-    base = os.path.basename(os.path.normpath(sf_dir))
-    root = f"{_DEDUP_IDX_ROOT}_{base}"
-    marker = os.path.join(root, "_BUILT.json")
-    payload = os.path.join(root, "hist")
-    from gordo_components_spark.caches import source_stat
+    def build(tmp: str) -> None:
+        (
+            load_table(spark, sf_dir, "documents")
+            .where(F.col("doc_id") % 5 != 0)
+            .select(F.md5("text").alias("text_hash"))
+            .distinct()
+            .withColumn("hp", F.substring("text_hash", 1, 1))
+            .repartition("hp")
+            .write.mode("overwrite")
+            .partitionBy("hp")
+            .parquet(os.path.join(tmp, "hist"))
+        )
 
-    fp = {
-        "sf_dir": sf_dir,
-        "n_rows": _table_rows(sf_dir, "documents"),
-        "src": source_stat(sf_dir, "documents"),
-        "v": 2,  # r8: + stat fingerprint (same-shape regeneration guard)
-    }
-    if not force and os.path.isfile(marker) and os.path.isdir(payload):
-        try:
-            with open(marker) as fh:
-                if json.load(fh) == fp:
-                    return root
-        except (OSError, ValueError):
-            pass
-    docs = load_table(spark, sf_dir, "documents")
-    hist = (
-        docs.where(F.col("doc_id") % 5 != 0)
-        .select(F.md5("text").alias("text_hash"))
-        .distinct()
-        .withColumn("hp", F.substring("text_hash", 1, 1))
-    )
-    tmp = f"{root}.tmp.{os.getpid()}"
-    hist.repartition("hp").write.mode("overwrite").partitionBy("hp").parquet(
-        os.path.join(tmp, "hist")
-    )
-    with open(os.path.join(tmp, "_BUILT.json"), "w") as fh:
-        json.dump(fp, fh)
-    if os.path.isdir(root):
-        import shutil
-
-        shutil.rmtree(root, ignore_errors=True)
-    try:
-        os.replace(tmp, root)
-    except OSError:
-        # a concurrent builder won the swap: if its index carries the
-        # same fingerprint, use it and discard ours (the rmtree→replace
-        # window is not atomic for DIRECTORIES, unlike the JSON artifact
-        # cache's single-file replace)
-        import shutil
-
-        try:
-            with open(marker) as fh:
-                ok = json.load(fh) == fp
-        except (OSError, ValueError):
-            ok = False
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not ok:
-            raise
-    return root
+    return materialized_cache(sf_dir, _DEDUP_IDX_ROOT, "index", "documents", build)
 
 
 def _delta_batch(docs: DataFrame) -> DataFrame:
@@ -600,11 +537,10 @@ def pipe_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exactly, token list and all."""
     from gordo_components_spark.ml.islands import _spread
     from gordo_components_spark.operators.extensions_pipeline import (
+        _BPE_ITERS,
         _BPE_SEP,
         pipe_bpe_merges,
     )
-
-    from gordo_components_spark.operators.extensions_pipeline import _BPE_ITERS
 
     def induce() -> list:
         rows = (
@@ -612,16 +548,7 @@ def pipe_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return [[r["lhs"], r["rhs"]] for r in rows]
 
-    from gordo_components_spark.caches import source_stat
-
-    fp = {
-        "sf_dir": sf_dir,
-        "n_docs": _table_rows(sf_dir, "documents"),
-        "src": source_stat(sf_dir, "documents"),
-        "iters": _BPE_ITERS,
-        "v": 2,  # r8: + stat fingerprint (same-shape regeneration guard)
-    }
-    pairs = _artifact_cache("bpemerges", sf_dir, fp, induce)
+    pairs = _json_artifact(sf_dir, f"bpemerges_i{_BPE_ITERS}", "documents", induce)
     merges = [(lhs, rhs, f"{lhs}{_BPE_SEP}{rhs}") for lhs, rhs in pairs]
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return _spread(docs, ("doc_id",)).mapInPandas(
@@ -902,25 +829,15 @@ def ext_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
-    n_vecs = _table_rows(sf_dir, "embeddings")
+    n_vecs = footer_rows(sf_dir, "embeddings")
     k = _sem_k_for(n_vecs)
     n_coarse = max(2, math.isqrt(k - 1) + 1)  # ceil(sqrt(k))
 
-    from gordo_components_spark.caches import source_stat
-
-    fp = {
-        "sf_dir": sf_dir,
-        "n": n_vecs,
-        "src": source_stat(sf_dir, "embeddings"),
-        "k": k,
-        "c": n_coarse,
-        "seed": 7,
-        "v": 4,  # r8: island routing + sampled coarse fit + stat guard
-    }
-    art = _artifact_cache(
-        "semcent",
+    # k and c follow from the footer row count the cache already keys on
+    art = _json_artifact(
         sf_dir,
-        fp,
+        "semcent_s7_v4",
+        "embeddings",
         lambda: _sem_fit_hierarchical(spark, sf_dir, n_vecs, k, n_coarse),
     )
     fine = spark.createDataFrame(

@@ -118,45 +118,14 @@ def _with_commit_plan_sidecar(build):
 
 
 def _manifest_fixture(sf_dir: str, name: str, kind: str, build) -> str:
-    """Resolve a manifest fixture with SELF-HEALING for pre-sidecar
-    caches: the materialized-cache fingerprint keys on {sf_dir, footer
-    rows} and cannot see a fixture-FORMAT change, so a warm cache built
-    before the commit-plan sidecar existed would serve forever and the
-    audit getter could only fail with a delete-this-dir instruction
-    (r13 review finding).  A missing sidecar invalidates the cached dir
-    and rebuilds once."""
-    import os
-    import shutil
-
+    """Resolve a manifest fixture through ``materialized_cache`` and
+    remember its root for ``manifest_commit_plans``."""
     from gordo_components_spark.caches import materialized_cache
 
     root = materialized_cache(
         sf_dir, "/tmp/gordo_spark_manifest", name, "events",
         _with_commit_plan_sidecar(build),
     )
-    if not os.path.exists(os.path.join(root, "_commit_plans.json")):
-        # invalidate BEFORE deleting (ADVICE r13): an in-place rmtree of
-        # the installed dir is non-atomic visible state — a concurrent
-        # session could observe a half-deleted dir whose surviving
-        # _FP.json still validates it.  Unlinking the fingerprint first
-        # guarantees a partial delete can never be served as a warm
-        # cache; the rename-aside then makes the delete itself invisible
-        # (a same-pid name collision from a prior heal is pre-cleared).
-        try:
-            os.unlink(os.path.join(root, "_FP.json"))
-        except OSError:
-            pass
-        stale = f"{root}.stale-{os.getpid()}"
-        shutil.rmtree(stale, ignore_errors=True)
-        try:
-            os.replace(root, stale)
-        except OSError:
-            pass  # another session already healed/removed it
-        shutil.rmtree(stale, ignore_errors=True)
-        root = materialized_cache(
-            sf_dir, "/tmp/gordo_spark_manifest", name, "events",
-            _with_commit_plan_sidecar(build),
-        )
     _MANIFEST_PLAN_ROOTS[kind] = root
     return root
 
@@ -1429,9 +1398,9 @@ def _pack_shard_docs(spark: SparkSession, sf_dir: str) -> int:
     keeps 64 tasks per core.  Output is shard-invariant (the prefix sum
     decomposition never changes cum_excl), so the oracle face is
     unaffected by the width."""
-    from gordo_components_spark.operators.extensions_corpus import _table_rows
+    from gordo_components_spark.caches import footer_rows
 
-    n_docs = _table_rows(sf_dir, "documents")
+    n_docs = footer_rows(sf_dir, "documents")
     slots = spark.sparkContext.defaultParallelism * _PACK_SHARDS_PER_SLOT
     return max(_PACK_SHARD_DOCS, -(-n_docs // max(1, slots)))
 

@@ -18,7 +18,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from gordo_components_spark.caches import persist_tracked
+from gordo_components_spark.caches import footer_rows, persist_tracked
 from gordo_components_spark.registry import register
 from gordo_components_spark.sources.tables import load_table
 
@@ -244,9 +244,7 @@ def _tfidf_similarity(
     # second documents scan plus a broadcast-exchange stage barrier ahead
     # of the idf join, the round-5→6 bench regression's constant cost;
     # footer metadata folds n_docs as a literal with neither.
-    from gordo_components_spark.operators.extensions_corpus import _table_rows
-
-    n_docs = _table_rows(sf_dir, "documents")
+    n_docs = footer_rows(sf_dir, "documents")
     if big_corpus is None:
         big_corpus = n_docs >= _TFIDF_INDEX_THRESHOLD
     idf_base = (
@@ -393,12 +391,12 @@ def ext_tfidf_similar_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NPROBE = 3
 _IVF_QUERY = 7
 
-# Per-SF IVF index cache (CLAUDE.md: /tmp/gordo_spark_* dirs are
-# materialization caches — safe to delete, rebuilt on demand).
+# IVF index cache root: /tmp/gordo_spark_* dirs are materialization
+# caches, safe to delete and rebuilt on demand.
 _IVF_ROOT = "/tmp/gordo_spark_ivf"
 
 
-def build_ivf_index(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
+def build_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     """Offline IVF index build — the once-per-corpus step every real ANN
     system separates from the query path.  Writes two artifacts under a
     per-SF cache dir:
@@ -409,78 +407,34 @@ def build_ivf_index(spark: SparkSession, sf_dir: str, force: bool = False) -> st
       (the centroid id), so an nprobe query reads nprobe/ncells of the
       data via static partition pruning.
 
-    A fingerprint of the source parquet (size + mtime) guards staleness:
-    same corpus ⇒ the build is a no-op, changed corpus ⇒ rebuild.  The
-    marker is only trusted when ``centroids/`` and ``corpus/`` actually
-    exist (the cache dir is deletable in parts), the build lands in a
-    temp dir renamed into place, and an flock serializes concurrent
-    builders — two sessions can race without one scanning a half-written
-    corpus.  At 100 TB this is the offline index job writing to object
-    storage; the query path never rescans the raw corpus.
+    Installed through ``caches.materialized_cache``: same corpus ⇒ the
+    build is a no-op, changed corpus or a deleted artifact ⇒ rebuild, and
+    concurrent builders never expose a half-written corpus.  At 100 TB
+    this is the offline index job writing to object storage; the query
+    path never rescans the raw corpus.
     """
-    import fcntl
-    import json
     import os
-    import shutil
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(_IVF_ROOT, sf_tag)
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    fingerprint = {"size": st.st_size, "mtime_ns": st.st_mtime_ns}
-    marker = os.path.join(root, "_BUILT.json")
+    from gordo_components_spark.caches import materialized_cache
 
-    def _index_valid() -> bool:
-        try:
-            with open(marker) as fh:
-                if json.load(fh) != fingerprint:
-                    return False
-        except (OSError, ValueError):
-            return False
-        return os.path.isdir(os.path.join(root, "centroids")) and os.path.isdir(
-            os.path.join(root, "corpus")
+    def build(tmp: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "label", F.col("embedding").alias("v")
+        )
+        cent = (
+            emb.select("label", F.posexplode("v").alias("pos", "cval"))
+            .groupBy("label", "pos")
+            .agg(F.round(F.avg("cval"), 9).alias("c"))
+        )
+        cent.coalesce(1).write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
+        (
+            emb.withColumn("cell", F.col("label"))
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(os.path.join(tmp, "corpus"))
         )
 
-    if not force and _index_valid():
-        return root
-
-    os.makedirs(_IVF_ROOT, exist_ok=True)
-    with open(os.path.join(_IVF_ROOT, f".{sf_tag}.lock"), "w") as lock_fh:
-        fcntl.flock(lock_fh, fcntl.LOCK_EX)
-        try:
-            if not force and _index_valid():
-                return root
-            # sweep orphans: builds are flock-serialized, so any
-            # sibling {root}.tmp-* here belongs to a crashed builder
-            root_dir, root_base = os.path.split(root)
-            for leaf in os.listdir(root_dir):
-                if leaf.startswith(f"{root_base}.tmp-"):
-                    shutil.rmtree(os.path.join(root_dir, leaf), ignore_errors=True)
-            tmp = f"{root}.tmp-{os.getpid()}"
-            emb = load_table(spark, sf_dir, "embeddings").select(
-                "vec_id", "label", F.col("embedding").alias("v")
-            )
-            cent = (
-                emb.select("label", F.posexplode("v").alias("pos", "cval"))
-                .groupBy("label", "pos")
-                .agg(F.round(F.avg("cval"), 9).alias("c"))
-            )
-            cent.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(tmp, "centroids")
-            )
-            (
-                emb.withColumn("cell", F.col("label"))
-                .write.mode("overwrite")
-                .partitionBy("cell")
-                .parquet(os.path.join(tmp, "corpus"))
-            )
-            with open(os.path.join(tmp, "_BUILT.json"), "w") as fh:
-                json.dump(fingerprint, fh)
-            shutil.rmtree(root, ignore_errors=True)
-            os.rename(tmp, root)
-        finally:
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
-    return root
+    return materialized_cache(sf_dir, _IVF_ROOT, "index", "embeddings", build)
 
 
 @register(
@@ -589,15 +543,6 @@ def _rp_k_for(n_rows: int) -> int:
     return max(4, min(20, math.ceil(math.log2(max(2.0, n_rows / _RP_TARGET_BUCKET)))))
 
 
-def _corpus_rows(sf_dir: str) -> int:
-    """Corpus-count estimate from parquet FOOTER metadata (driver-side,
-    no Spark job) — the index-time statistic that sizes K.  Delegates to
-    the generalized ``extensions_corpus._table_rows``."""
-    from gordo_components_spark.operators.extensions_corpus import _table_rows
-
-    return _table_rows(sf_dir, "embeddings")
-
-
 def _rp_planes(k: int):
     """Deterministic hyperplanes (fixed-seed PCG64 — stable across runs
     and platforms); shape (L, K, dim)."""
@@ -669,7 +614,7 @@ def ext_ann_rplsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from gordo_components_spark.ml.islands import _spread  # AQE-exempt repartition
 
-    k = _rp_k_for(_corpus_rows(sf_dir))
+    k = _rp_k_for(footer_rows(sf_dir, "embeddings"))
     # persist: the query-probe extraction and the corpus candidate join
     # are independent consumers — unpersisted, the full corpus LSH pass
     # (repartition + numpy matmul island) would run TWICE per query

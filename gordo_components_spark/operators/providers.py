@@ -319,109 +319,70 @@ def _bucket_n_for(sf_dir: str) -> int:
     GC-thrashing single-bucket sorts).  Derived from the LARGER side
     (lineitem) so buckets stay ~`_BUCKET_ROWS` rows at any SF; both
     tables must use the SAME count or co-location breaks."""
-    from gordo_components_spark.caches import _parquet_rows
+    from gordo_components_spark.caches import footer_rows
 
-    return max(8, -(-_parquet_rows(sf_dir, "lineitem") // _BUCKET_ROWS))
+    return max(8, -(-footer_rows(sf_dir, "lineitem") // _BUCKET_ROWS))
 
 
 def _bucketed_table(
     spark: SparkSession, sf_dir: str, table: str, key: str
 ) -> str:
     """Materialize a fixture table as a Spark BUCKETED+SORTED table
-    (``bucketBy(key)``/``sortBy(key)``, external parquet under the
-    session warehouse dir) and return the registered table name.
+    (``bucketBy(key)``/``sortBy(key)``) and return its registered name.
 
-    Discipline mirrors ``materialized_cache``: the table NAME carries
-    the fixture fingerprint ({footer rows, source stat} hashed), so a
-    driver-regenerated fixture can never serve a stale bucketed copy —
-    it simply materializes a new table; orphans die with /tmp.  The
-    catalog check handles the warm-/tmp-new-session case by
-    re-registering nothing: if the name is in the catalog the data and
-    metadata both exist; if not, saveAsTable writes both."""
+    The files are a ``materialized_cache`` dir, and the table is an
+    EXTERNAL table over it: the driver's vanilla session has no warehouse
+    conf (a builder-time static), so a managed table would land in
+    ./spark-warehouse inside the repo and a later session would hit
+    LOCATION_ALREADY_EXISTS after its in-memory catalog forgot the name.
+    The table NAME is a hash of the dir's ``_FP.json`` marker (fixture
+    fingerprint plus the payload's file names), so a regenerated fixture
+    or a rebuilt dir gets a new table and a registered name is never
+    re-pointed at replaced files.  Registration uses explicit CLUSTERED
+    BY/SORTED BY DDL, which carries the exact layout metadata bucketBy
+    wrote (bucket ids are encoded in the file names, so the spec
+    round-trips)."""
     import hashlib
-    import json as _json
+    import re
 
-    from gordo_components_spark.caches import _parquet_rows, source_stat
+    from gordo_components_spark.caches import materialized_cache
 
     n_buckets = _bucket_n_for(sf_dir)
-    fp = _json.dumps(
-        {
-            "sf": sf_dir,
-            "rows": _parquet_rows(sf_dir, table),
-            "src": source_stat(sf_dir, table),
-            "nb": n_buckets,  # layout-defining: a count change = new table
-            "v": 2,
-        },
-        sort_keys=True,
-    )
-    tag = hashlib.md5(fp.encode()).hexdigest()[:10]
-    name = f"bkt_{table}_{tag}"
-    # EXTERNAL table under /tmp: the driver's vanilla session has no
-    # warehouse conf (a builder-time static), so a managed table would
-    # land in ./spark-warehouse inside the repo and a later session
-    # would hit LOCATION_ALREADY_EXISTS after its in-memory catalog
-    # forgot the name.  Round-10 (r9 advisory): the scratch write now
-    # follows the materialized_cache discipline — built into a
-    # pid-unique temp location, atomically os.replace'd under an flock
-    # (two concurrent cold-catalog sessions can never overwrite a copy
-    # the other is reading), and a dangling in-session catalog entry
-    # (user deleted /tmp/gordo_spark_* mid-session — documented as
-    # always safe) is detected via the _SUCCESS marker and rebuilt
-    # instead of failing.  Re-registration over existing files is done
-    # with explicit CLUSTERED BY/SORTED BY DDL, which carries the exact
-    # layout metadata bucketBy wrote (bucket ids are encoded in the
-    # file names, so the spec round-trips).
-    import fcntl
-    import shutil
+    src = load_table(spark, sf_dir, table)
 
-    root = "/tmp/gordo_spark_warehouse"
-    loc = f"{root}/{name}"
-    os.makedirs(root, exist_ok=True)
-    have_files = os.path.exists(os.path.join(loc, "_SUCCESS"))
-    if spark.catalog.tableExists(name) and have_files:
-        return name
-    with open(f"{root}/.{name}.lock", "w") as lk:
-        fcntl.flock(lk, fcntl.LOCK_EX)
-        try:
-            have_files = os.path.exists(os.path.join(loc, "_SUCCESS"))
-            if spark.catalog.tableExists(name):
-                if have_files:
-                    return name
-                spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-            src = load_table(spark, sf_dir, table)
-            if not have_files:
-                tmp_name = f"{name}_w{os.getpid()}"
-                tmp_loc = f"{loc}.tmp-{os.getpid()}"
-                shutil.rmtree(tmp_loc, ignore_errors=True)
-                spark.sql(f"DROP TABLE IF EXISTS `{tmp_name}`")
-                (
-                    src
-                    # one write task per bucket => ONE file per bucket:
-                    # Spark only trusts the sortBy metadata (skipping
-                    # the join-side Sort) when a bucket is a single file
-                    .repartition(n_buckets, F.col(key))
-                    .write.bucketBy(n_buckets, key)
-                    .sortBy(key)
-                    .mode("overwrite")
-                    .format("parquet")
-                    .option("path", tmp_loc)
-                    .saveAsTable(tmp_name)
-                )
-                # external table: DROP removes metadata only, files stay
-                spark.sql(f"DROP TABLE IF EXISTS `{tmp_name}`")
-                shutil.rmtree(loc, ignore_errors=True)
-                os.replace(tmp_loc, loc)
-            cols = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}"
-                for f in src.schema.fields
-            )
-            spark.sql(
-                f"CREATE TABLE `{name}` ({cols}) USING parquet"
-                f" CLUSTERED BY (`{key}`) SORTED BY (`{key}`)"
-                f" INTO {n_buckets} BUCKETS LOCATION '{loc}'"
-            )
-        finally:
-            fcntl.flock(lk, fcntl.LOCK_UN)
+    def build(tmp: str) -> None:
+        # bucketBy needs saveAsTable: write through a throwaway external
+        # table (DROP removes metadata only, the files stay)
+        writer = "bkt_w_" + re.sub(r"\W", "_", os.path.basename(tmp))
+        (
+            src
+            # one write task per bucket => ONE file per bucket: Spark
+            # only trusts the sortBy metadata (skipping the join-side
+            # Sort) when a bucket is a single file
+            .repartition(n_buckets, F.col(key))
+            .write.bucketBy(n_buckets, key)
+            .sortBy(key)
+            .mode("overwrite")
+            .format("parquet")
+            .option("path", tmp)
+            .saveAsTable(writer)
+        )
+        spark.sql(f"DROP TABLE IF EXISTS `{writer}`")
+
+    loc = materialized_cache(
+        sf_dir, "/tmp/gordo_spark_warehouse", f"{table}_b{n_buckets}", table, build
+    )
+    with open(os.path.join(loc, "_FP.json"), "rb") as fh:
+        name = f"bkt_{table}_{hashlib.md5(fh.read()).hexdigest()[:10]}"
+    if not spark.catalog.tableExists(name):
+        cols = ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}" for f in src.schema.fields
+        )
+        spark.sql(
+            f"CREATE TABLE IF NOT EXISTS `{name}` ({cols}) USING parquet"
+            f" CLUSTERED BY (`{key}`) SORTED BY (`{key}`)"
+            f" INTO {n_buckets} BUCKETS LOCATION '{loc}'"
+        )
     return name
 
 

@@ -13,13 +13,13 @@ layout with identical code — only the path changes.
 
 from __future__ import annotations
 
-import os
 import threading
 import weakref
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from gordo_components_spark.caches import stat_fingerprint
 from gordo_components_spark.session import prepare
 
 TABLES = (
@@ -55,63 +55,36 @@ def _normalize_events_ts(df: DataFrame, ts_type: str | None) -> DataFrame:
     return df
 
 
-# Relation cache: (session identity, path, file fingerprint) → logical
-# plan.  Every ``spark.read.parquet`` pays ~0.1 s of driver-side py4j +
-# file-listing + schema-read latency, repeated for every query that
-# touches the table — the same reason Spark's catalog caches resolved
-# relations for named tables.  The fingerprint is the file's (mtime_ns,
-# size) — or the child listing for a partitioned directory — so a
-# driver-regenerated fixture under the same basename invalidates the
-# entry (the CLAUDE.md stale-replica rule: a stat fingerprint is
-# strictly stronger than footer row counts, which a regenerated
-# same-shape fixture preserves).  Session identity is a weakref-checked
-# object id: a stopped/replaced SparkSession never serves a stale plan.
+# Relation cache: (session identity, path) → (session weakref, stat
+# fingerprint, JVM plan).  Every ``spark.read.parquet`` pays ~0.1 s of
+# driver-side py4j + file-listing + schema-read latency, repeated for
+# every query that touches the table — the same reason Spark's catalog
+# caches resolved relations for named tables.  A driver-regenerated
+# fixture under the same basename changes ``caches.stat_fingerprint``
+# and overwrites its own entry.  The entry holds the JVM plan, not the
+# Python DataFrame (which pins its session), so a dropped session can be
+# collected; its entries go at the next eviction.  Session identity is
+# the weakref-checked object id: a replaced SparkSession never serves a
+# stale plan.  Session-scoped and bounded, so it is not a ``caches.memo``.
 _RELATION_CACHE: dict[tuple, tuple] = {}
 #: guards eviction + insert: client threads share the module-level dict
 _RELATION_LOCK = threading.Lock()
 
 
-def _path_fingerprint(path: str):
-    st = os.stat(path)
-    if os.path.isdir(path):
-        kids = tuple(
-            sorted(
-                (e.name, e.stat().st_size, e.stat().st_mtime_ns)
-                for e in os.scandir(path)
-            )
-        )
-        return (st.st_mtime_ns, kids)
-    return (st.st_mtime_ns, st.st_size)
-
-
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    key = (id(spark), path, _path_fingerprint(path))
+    key = (id(spark), path)
+    fp = stat_fingerprint(path)
     hit = _RELATION_CACHE.get(key)
-    if hit is not None and hit[0]() is spark:
-        return hit[1]
+    if hit is not None and hit[0]() is spark and hit[1] == fp:
+        return DataFrame(hit[2], spark)
     df = spark.read.parquet(path)
     with _RELATION_LOCK:
         if len(_RELATION_CACHE) > 256:
-            # Evict selectively (round-9 advisory: a full clear dropped hot
-            # live-session plans along with dead ones): first drop entries
-            # whose session weakref is dead, then stale fingerprints of
-            # still-live (session, path) pairs superseded by a regenerated
-            # fixture; fall back to a full clear only if both sweeps free
-            # nothing (256 genuinely-live relations in one session).
-            dead = [k for k, v in _RELATION_CACHE.items() if v[0]() is None]
-            live_keys = {
-                (k[0], k[1]) for k in _RELATION_CACHE if k not in set(dead)
-            }
-            for k in dead:
+            for k in [k for k, v in _RELATION_CACHE.items() if v[0]() is None]:
                 del _RELATION_CACHE[k]
             if len(_RELATION_CACHE) > 256:
-                for sess_path in live_keys:
-                    dups = [k for k in _RELATION_CACHE if (k[0], k[1]) == sess_path]
-                    for k in dups[:-1]:  # keep the most recent insertion
-                        del _RELATION_CACHE[k]
-            if len(_RELATION_CACHE) > 256:
                 _RELATION_CACHE.clear()
-        _RELATION_CACHE[key] = (weakref.ref(spark), df)
+        _RELATION_CACHE[key] = (weakref.ref(spark), fp, df._jdf)
     return df
 
 

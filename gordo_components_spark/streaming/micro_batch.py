@@ -22,6 +22,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from gordo_components_spark.caches import footer_rows
 from gordo_components_spark.session import prepare
 from gordo_components_spark.sources.tables import load_table
 
@@ -146,31 +147,11 @@ def _ts_event_order(rows):
     return np.lexsort((rows["event_id"].values, rows["ts"].values))
 
 
-def _events_rows(sf_dir: str) -> int | None:
-    """Exact replay-source row count from the events parquet footer."""
-    try:
-        from gordo_components_spark.caches import _parquet_rows
-
-        return _parquet_rows(sf_dir, "events")
-    except Exception:
-        return None
-
-
-def _replay_cache(spark: SparkSession, sf_dir: str, name: str, table: str, build):
-    """Fingerprinted, atomically-installed replay cache — the discipline
-    now lives in ``caches.materialized_cache`` (review r7: the scan legs
-    in operators/providers.py shared the same stale-fixture hazard, so
-    the one definition moved to the shared module; this wrapper keeps
-    the streaming scratch root)."""
-    from gordo_components_spark.caches import materialized_cache
-
-    return materialized_cache(sf_dir, "/tmp/gordo_spark_stream", name, table, build)
-
-
 def _replay_dir(spark: SparkSession, sf_dir: str, n_files: int = 3) -> str:
     """Materialize events as an n-file parquet directory (micro-batch
     replay source, FIXTURES B5).  Timestamps land as µs TimestampType so
     the streaming source needs no ns workaround."""
+    from gordo_components_spark.caches import materialized_cache
 
     def build(tmp: str) -> None:
         (
@@ -181,7 +162,7 @@ def _replay_dir(spark: SparkSession, sf_dir: str, n_files: int = 3) -> str:
             .parquet(tmp)
         )
 
-    return _replay_cache(spark, sf_dir, "events_replay", "events", build)
+    return materialized_cache(sf_dir, "/tmp/gordo_spark_stream", "events_replay", "events", build)
 
 
 def _run_to_memory(
@@ -329,7 +310,7 @@ def run_streaming_tumbling_agg(
         .select("event_type", F.col("w.start").alias("window_start"), "n", "avg_value")
     )
     name = f"stream_agg_{uuid.uuid4().hex[:8]}"
-    return _run_to_memory(agg, name, est_rows=_events_rows(sf_dir))
+    return _run_to_memory(agg, name, est_rows=footer_rows(sf_dir, "events"))
 
 
 def run_streaming_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -410,7 +391,7 @@ def run_streaming_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.createDataFrame([], SCORE_SCHEMA).write.mode("append").parquet(sink_dir)
 
-    with _stream_shuffle_partitions(spark, est_rows=_events_rows(sf_dir)):
+    with _stream_shuffle_partitions(spark, est_rows=footer_rows(sf_dir, "events")):
         q = (
             stream.writeStream.foreachBatch(score_batch)
             .trigger(availableNow=True)
@@ -481,7 +462,7 @@ def run_streaming_stateful_ewma(
     name = f"stream_ewma_{uuid.uuid4().hex[:8]}"
     chk = f"/tmp/gordo_spark_stream/chk/{name}"
     with _stream_shuffle_partitions(
-        spark, est_rows=_events_rows(sf_dir), python_stateful=True
+        spark, est_rows=footer_rows(sf_dir, "events"), python_stateful=True
     ):
         q = (
             out.writeStream.format("memory")
@@ -518,7 +499,7 @@ def run_streaming_watermark_dedup(
         .select("event_id", "user_id", "ts", "event_type", "value")
     )
     name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    return _run_to_memory(deduped, name, est_rows=_events_rows(sf_dir))
+    return _run_to_memory(deduped, name, est_rows=footer_rows(sf_dir, "events"))
 
 
 def run_streaming_stream_join(
@@ -565,7 +546,7 @@ def run_streaming_stream_join(
         F.col("p_user").alias("user_id"), "purchase_id", "click_id", "p_ts", "c_ts"
     )
     name = f"stream_join_{uuid.uuid4().hex[:8]}"
-    return _run_to_memory(joined, name, est_rows=_events_rows(sf_dir))
+    return _run_to_memory(joined, name, est_rows=footer_rows(sf_dir, "events"))
 
 
 def run_streaming_enrich_dim(
@@ -605,7 +586,7 @@ def run_streaming_enrich_dim(
         .select("c_mktsegment", F.col("w.start").alias("window_start"), "n", "total_value")
     )
     name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    return _run_to_memory(enriched, name, est_rows=_events_rows(sf_dir))
+    return _run_to_memory(enriched, name, est_rows=footer_rows(sf_dir, "events"))
 
 
 def run_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -634,6 +615,7 @@ def run_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFra
     # definition with the batch faces, so parity can't silently drift)
     # as a 3-file parquet dir with a synthetic crawl timestamp for the
     # watermark, installed through the fingerprinted atomic cache
+    from gordo_components_spark.caches import materialized_cache
     from gordo_components_spark.operators.extensions_corpus import _delta_batch
 
     def build(tmp: str) -> None:
@@ -646,7 +628,9 @@ def run_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFra
         )
         batch.repartition(3).write.mode("overwrite").parquet(tmp)
 
-    src = _replay_cache(spark, sf_dir, "docs_delta_replay", "documents", build)
+    src = materialized_cache(
+        sf_dir, "/tmp/gordo_spark_stream", "docs_delta_replay", "documents", build
+    )
 
     schema = "doc_id bigint, text_hash string, source string, crawl_ts timestamp"
     stream = spark.readStream.schema(schema).parquet(src)
@@ -696,11 +680,7 @@ def run_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFra
         ).parquet(sink_dir)
 
     spark.createDataFrame([], schema).write.mode("append").parquet(sink_dir)
-    from gordo_components_spark.caches import _parquet_rows
-
-    with _stream_shuffle_partitions(
-        spark, est_rows=_parquet_rows(sf_dir, "documents")
-    ):
+    with _stream_shuffle_partitions(spark, est_rows=footer_rows(sf_dir, "documents")):
         q = (
             deduped.writeStream.foreachBatch(probe_history)
             .trigger(availableNow=True)
@@ -750,7 +730,7 @@ def run_streaming_session_agg(
         )
     )
     name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    return _run_to_memory(agg, name, est_rows=_events_rows(sf_dir))
+    return _run_to_memory(agg, name, est_rows=footer_rows(sf_dir, "events"))
 
 
 def _v100(v: float) -> int:
@@ -880,7 +860,7 @@ def run_streaming_cusum(
             "user_id", "event_type", "CASE WHEN bn > 0 THEN s / (bn * 100.0D) END AS cusum",
             "n_seen", "n_alerts",
         ),
-        est_rows=_events_rows(sf_dir),
+        est_rows=footer_rows(sf_dir, "events"),
         checkpoint=checkpoint,
     )
 
@@ -974,7 +954,7 @@ def run_streaming_hampel(
     name = f"stream_hampel_{uuid.uuid4().hex[:8]}"
     return _run_to_memory(
         out, name, output_mode="update", latest_by=(("user_id",), "n_seen"),
-        est_rows=_events_rows(sf_dir), python_stateful=True,
+        est_rows=footer_rows(sf_dir, "events"), python_stateful=True,
     )
 
 
@@ -1011,7 +991,7 @@ def run_streaming_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = f"stream_m4_{uuid.uuid4().hex[:8]}"
-    return _run_to_memory(agg, name, est_rows=_events_rows(sf_dir))
+    return _run_to_memory(agg, name, est_rows=footer_rows(sf_dir, "events"))
 
 
 def _twa_fold(batch: DataFrame, prior: DataFrame) -> DataFrame:
@@ -1076,7 +1056,7 @@ def run_streaming_twa(
             # 200.0D: bit-identical to the sequential num / (200.0 * span)
             "CASE WHEN span_us <> 0 THEN num / (200.0D * span_us) END AS twa",
         ),
-        est_rows=_events_rows(sf_dir),
+        est_rows=footer_rows(sf_dir, "events"),
         checkpoint=checkpoint,
     )
 
@@ -1120,7 +1100,7 @@ def run_streaming_benford(
     name = f"stream_benford_{uuid.uuid4().hex[:8]}"
     return _run_to_memory(
         out, name, output_mode="update", latest_by=(("event_type",), "n"),
-        est_rows=_events_rows(sf_dir),
+        est_rows=footer_rows(sf_dir, "events"),
     )
 
 
@@ -1193,7 +1173,7 @@ def run_streaming_bottomk_sample(
         name,
         output_mode="update",
         latest_by=(("event_type", "rk"), "n_seen"),
-        est_rows=_events_rows(sf_dir),
+        est_rows=footer_rows(sf_dir, "events"),
     ).select("event_type", "rk", "event_id", "hid")
 
 
@@ -1221,7 +1201,7 @@ def run_streaming_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = ManifestTable(root)
     stream = _replay_stream(spark, sf_dir, 1)
     try:
-        with _stream_shuffle_partitions(spark, est_rows=_events_rows(sf_dir)):
+        with _stream_shuffle_partitions(spark, est_rows=footer_rows(sf_dir, "events")):
             q = (
                 stream.writeStream.foreachBatch(
                     lambda bdf, bid: t.commit_append(bdf, txn_id=f"replay-{bid}")
@@ -1274,7 +1254,7 @@ def run_streaming_countmin(
     )
     name = f"stream_cm_{uuid.uuid4().hex[:8]}"
     return _run_to_memory(
-        sketch, name, output_mode="complete", est_rows=_events_rows(sf_dir)
+        sketch, name, output_mode="complete", est_rows=footer_rows(sf_dir, "events")
     )
 
 
@@ -1349,7 +1329,7 @@ def run_streaming_heavy_hitters(
     )
     name = f"stream_mg_{uuid.uuid4().hex[:8]}"
     res = _run_to_memory(
-        out, name, output_mode="update", est_rows=_events_rows(sf_dir)
+        out, name, output_mode="update", est_rows=footer_rows(sf_dir, "events")
     )
     # the FINAL sketch is exactly the last emission per tag (every yield
     # carries the full current sketch stamped with that batch's n_seen);

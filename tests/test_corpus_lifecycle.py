@@ -87,14 +87,14 @@ def test_dedup_index_rebuilds_after_partial_deletion(spark):
     assert os.path.isdir(os.path.join(root, "hist"))
     # simulate partial deletion: payload gone, marker kept
     shutil.rmtree(os.path.join(root, "hist"))
-    assert os.path.isfile(os.path.join(root, "_BUILT.json"))
+    assert os.path.isfile(os.path.join(root, "_FP.json"))
     root2 = build_dedup_index(spark, SF_SMALL)
     assert os.path.isdir(os.path.join(root2, "hist"))
     # stale fingerprint: marker content mismatch also rebuilds
-    with open(os.path.join(root2, "_BUILT.json"), "w") as fh:
+    with open(os.path.join(root2, "_FP.json"), "w") as fh:
         json.dump({"stale": True}, fh)
     root3 = build_dedup_index(spark, SF_SMALL)
-    with open(os.path.join(root3, "_BUILT.json")) as fh:
+    with open(os.path.join(root3, "_FP.json")) as fh:
         assert json.load(fh) != {"stale": True}
     assert pipe_dedup_incremental(spark, SF_SMALL).count() > 0
 
@@ -250,25 +250,6 @@ def test_semantic_dedup_recall_vs_exact(spark):
     assert got <= exact  # no false positives: within-cluster pairs are exact
     recall = len(got) / len(exact)
     assert recall >= 0.75, f"semantic recall {recall:.2f} too low"
-
-
-def test_artifact_cache_fingerprint_staleness(tmp_path):
-    """A fingerprint mismatch (corpus changed) must recompute and
-    overwrite; a matching fingerprint must reuse without recompute."""
-    from gordo_components_spark.operators.extensions_corpus import _artifact_cache
-
-    calls = []
-
-    def compute():
-        calls.append(1)
-        return {"x": len(calls)}
-
-    sf = str(tmp_path / "sfX")
-    first = _artifact_cache("pytest_probe", sf, {"n": 1}, compute)
-    again = _artifact_cache("pytest_probe", sf, {"n": 1}, compute)
-    stale = _artifact_cache("pytest_probe", sf, {"n": 2}, compute)
-    assert first == {"x": 1} and again == {"x": 1}  # cache hit, no recompute
-    assert stale == {"x": 2} and len(calls) == 2  # fingerprint change recomputes
 
 
 def test_canonical_rank_matches_numpy_power_iteration(spark):

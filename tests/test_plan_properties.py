@@ -1124,3 +1124,30 @@ def test_manifest_commit_plans_audited_and_no_scaling_broadcast(spark, sf_dir):
         f"fixture kinds missing from plan_audit._EAGER_PLANS: "
         f"{set(ep._MANIFEST_PLAN_ROOTS) - audited_kinds}"
     )
+
+
+@pytest.mark.parametrize(
+    "name,col", [("sink_predictions_parquet", "is_anomaly"), ("pipe_curation_write", "split")]
+)
+def test_partitioned_sinks_rebalance_before_write(spark, sf_dir, monkeypatch, name, col):
+    # the rebalance hint before each partitioned write keeps the sink
+    # from writing a sliver per upstream task into every partition dir
+    # (the small-files anti-pattern): the frame handed to the write must
+    # plan a RebalancePartitions exchange on the partition column
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans = []
+    orig = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        qe = self._df._jdf.queryExecution()
+        plans.append((qe.optimizedPlan().toString(), qe.executedPlan().toString()))
+        return orig(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    load_all()[name].fn(spark, sf_dir)
+    assert len(plans) == 1, name
+    logical, physical = plans[0]
+    rebalance = [line for line in logical.splitlines() if "RebalancePartitions" in line]
+    assert len(rebalance) == 1 and f"[{col}#" in rebalance[0], logical
+    assert "REBALANCE_PARTITIONS_BY_COL" in physical

@@ -140,13 +140,13 @@ def main() -> None:
     # would compare a fresh denominator to a stale numerator)
     import json
 
-    from gordo_components_spark.caches import _parquet_rows
+    from gordo_components_spark.caches import footer_rows
 
     fp = {
         "src": src,
         "factor": factor,
         "distinct_content": distinct,
-        "rows": {t: _parquet_rows(src, t) for t in ("events", "documents", "lineitem")},
+        "rows": {t: footer_rows(src, t) for t in ("events", "documents", "lineitem")},
     }
     with open(os.path.join(out, "_SRC_FP.json"), "w") as fh:
         json.dump(fp, fh)

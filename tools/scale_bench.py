@@ -406,9 +406,9 @@ DECADE2 = (
 
 def _check_fp(sf_dir: str) -> None:
     fp_path = os.path.join(sf_dir, "_SRC_FP.json")
-    from gordo_components_spark.caches import _parquet_rows
+    from gordo_components_spark.caches import footer_rows
 
-    want = {t: _parquet_rows(SF01, t) for t in ("events", "documents", "lineitem")}
+    want = {t: footer_rows(SF01, t) for t in ("events", "documents", "lineitem")}
     try:
         with open(fp_path) as fh:
             have = json.load(fh).get("rows")
@@ -598,10 +598,10 @@ def main() -> None:
     # a mismatched replica makes every ratio compare different data)
     import json
 
-    from gordo_components_spark.caches import _parquet_rows
+    from gordo_components_spark.caches import footer_rows
 
     fp_path = os.path.join(SF10X, "_SRC_FP.json")
-    want = {t: _parquet_rows(SF01, t) for t in ("events", "documents", "lineitem")}
+    want = {t: footer_rows(SF01, t) for t in ("events", "documents", "lineitem")}
     try:
         with open(fp_path) as fh:
             have = json.load(fh).get("rows")
