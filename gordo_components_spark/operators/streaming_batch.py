@@ -151,10 +151,11 @@ def stream_watermark_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("stream_stateful_ewma", oracle=None)
 def stream_stateful_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O35/O25 custom stateful streaming operator (rows-only):
-    ``applyInPandasWithState`` EWMA per machine with state carried across
-    three forced micro-batches; count/total parity vs batch is asserted
-    in tests/test_streaming.py."""
+    """O35/O25 custom stateful streaming operator (rows-only): EWMA per
+    machine with state carried across three forced micro-batches by a
+    JVM ``aggregate`` fold in ``foreachBatch``; exact single- and
+    multi-batch parity vs a sequential reference is asserted in
+    tests/test_streaming.py."""
     from gordo_components_spark.streaming.micro_batch import run_streaming_stateful_ewma
 
     return run_streaming_stateful_ewma(spark, sf_dir)
@@ -192,7 +193,7 @@ def stream_genuine(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``watermark_agg``   (O36): 1h event-time watermark tumbling agg
     - ``foreachbatch``    (O33): micro-batch model scoring via foreachBatch
     - ``watermark_dedup`` (O37): dropDuplicatesWithinWatermark
-    - ``stateful_ewma``   (O35): applyInPandasWithState across batches
+    - ``stateful_ewma``   (O35): JVM fold across batches (foreachBatch)
     - ``enrich_dim``      (r5): stream-static broadcast dim enrichment
 
     Batch↔stream parity for every stage is asserted in
@@ -205,13 +206,14 @@ def stream_genuine(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential because driver code calls them sequentially; each query's
     micro-batch tail back-fills executors the others free).  Each leg
     runs on its OWN ``spark.newSession()`` — same SparkContext, separate
-    SQLConf — so the per-run ``_stream_shuffle_partitions`` pin (a
-    session-global conf) cannot race between legs that want different
-    widths (the pandas-stateful EWMA keeps full parallelism, the
-    JVM-stateful legs size down).  The replay dir is pre-warmed once in
-    the calling thread so the cold-cache build is not raced five ways.
-    Results are identical: each leg's one summary row is computed
-    exactly as before, and the union keeps the fixed stage order."""
+    SQLConf — because the per-run ``_stream_shuffle_partitions`` pin sets
+    a session-global conf and restores the value it saved: on one shared
+    session overlapping legs would save each other's pins as "prior" and
+    could leave the caller's session at a streaming width.  The replay
+    dir is pre-warmed once in the calling thread so the cold-cache build
+    is not raced five ways.  Results are identical: each leg's one
+    summary row is computed exactly as before, and the union keeps the
+    fixed stage order."""
     from concurrent.futures import ThreadPoolExecutor
 
     from gordo_components_spark.streaming.micro_batch import (
@@ -294,10 +296,9 @@ def stream_hampel_genuine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming trailing-Hampel despiker (rows-only): the serving face
     of ``window_hampel_outlier`` — per-machine robust outlier flags over
     the trailing 21-sample window, integer-exact bigint-array state
-    carried across three forced micro-batches via
-    ``applyInPandasWithState``.  Single-batch parity vs a sequential
-    reference and multi-batch state-carry equality are asserted in
-    tests/test_streaming.py."""
+    carried across three forced micro-batches by a JVM sliding-window
+    fold in ``foreachBatch``.  Single- and multi-batch parity vs a
+    sequential reference are asserted in tests/test_streaming.py."""
     from gordo_components_spark.streaming.micro_batch import run_streaming_hampel
 
     return run_streaming_hampel(spark, sf_dir)
@@ -362,7 +363,7 @@ def stream_sample_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bottom-k(A ∪ B) = bottom-k(bottom-k(A) ∪ bottom-k(B)), so shards,
     micro-batches, and replays all converge to the IDENTICAL sample.
     This is the batch face; ``stream_sample_bottomk_genuine`` maintains
-    the same sketch across micro-batches in a state store and lands
+    the same sketch across micro-batches as fold state and lands
     bit-exactly on this result regardless of arrival order (parity
     pytest).
 
@@ -397,8 +398,8 @@ def stream_sample_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("stream_sample_bottomk_genuine", oracle=None)
 def stream_sample_bottomk_genuine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Genuine Structured-Streaming face of ``stream_sample_bottomk``:
-    ``applyInPandasWithState`` keeps each tag's bottom-10 (hash, id)
+    """Genuine Structured-Streaming face of ``stream_sample_bottomk``: a
+    JVM fold in ``foreachBatch`` keeps each tag's bottom-10 (hash, id)
     sketch across micro-batches; mergeability makes the final state
     independent of replay slicing — asserted bit-exact against the
     batch face in tests/test_streaming.py."""
@@ -438,8 +439,9 @@ def stream_countmin_genuine(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("stream_heavyhitters_genuine", oracle=None)
 def stream_heavyhitters_genuine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Genuine Structured-Streaming Misra–Gries heavy-hitter summary per
-    event_type (rows-only): fixed k-counter state in
-    ``applyInPandasWithState``; the MG guarantee (every key with true
+    event_type (rows-only): fixed k-counter state merged per micro-batch
+    by a JVM fold in ``foreachBatch`` (the mergeable-summary merge); the
+    MG guarantee (every key with true
     frequency > N/k survives; counts understate by ≤ total decrements)
     is pinned against exact batch counts in tests/test_streaming.py —
     the streaming companion of ``agg_heavy_hitters``'s sketch pass."""

@@ -54,6 +54,35 @@ def _pid_alive(pid: int) -> bool:
     return True
 
 
+def _pid_scoped_dirs(sf_dir: str, prefix: str) -> tuple[str, str]:
+    """This process's (sink, checkpoint) dir pair for a foreachBatch face
+    whose leaves are ``<prefix><sf_tag>-p<pid>``: deterministic per SF
+    per PROCESS, so reruns in one process do not accrete /tmp litter
+    while two concurrent sessions on the same SF (e.g. pytest and
+    bench.py) never rmtree each other's in-flight sink mid-query.
+    Siblings left by dead processes are swept; this process's own leaf
+    is cleared up front (the checkpoint must go with the sink or a rerun
+    would replay nothing)."""
+    import shutil
+
+    sf_tag = os.path.basename(sf_dir.rstrip("/"))
+    bases = ("/tmp/gordo_spark_stream/sink", "/tmp/gordo_spark_stream/chk")
+    for base in bases:
+        try:
+            for leaf in os.listdir(base):
+                if leaf.startswith(f"{prefix}{sf_tag}-p"):
+                    pid = leaf.rsplit("-p", 1)[-1]
+                    if pid.isdigit() and not _pid_alive(int(pid)):
+                        shutil.rmtree(os.path.join(base, leaf), ignore_errors=True)
+        except OSError:
+            pass
+    leaf = f"{prefix}{sf_tag}-p{os.getpid()}"
+    sink_dir, chk_dir = (os.path.join(base, leaf) for base in bases)
+    for d in (sink_dir, chk_dir):
+        shutil.rmtree(d, ignore_errors=True)
+    return sink_dir, chk_dir
+
+
 #: rows of stream input one state-store task should own before another
 #: task pays off.  A state task's FIXED cost per micro-batch (store
 #: init, checkpoint delta write + fsync, maintenance) is ~100-300 ms
@@ -64,11 +93,7 @@ _STREAM_ROWS_PER_TASK = 50_000
 
 
 @contextlib.contextmanager
-def _stream_shuffle_partitions(
-    spark: SparkSession,
-    est_rows: int | None = None,
-    python_stateful: bool = False,
-):
+def _stream_shuffle_partitions(spark: SparkSession, est_rows: int | None = None):
     """Pin ``spark.sql.shuffle.partitions`` for the lifetime of ONE
     streaming run to a scale-derived value (guide §2: partitioning must
     be scale-adaptive, not a constant tuned for local mode or one
@@ -78,7 +103,9 @@ def _stream_shuffle_partitions(
     200-partition default, every stateful face runs 200 state-store
     tasks (and writes 200 checkpoint delta files) per micro-batch over
     fixture-sized data: measured 168-215 s for stream_stateful_ewma on a
-    vanilla local[32] session vs ~9 s at 32 partitions.
+    vanilla local[32] session vs ~9 s at 32 partitions.  The
+    ``_fold_stream`` faces keep no state store, but every fold batch
+    still shuffles at this width.
 
     ``est_rows`` (parquet-footer row count of the replay source — the
     same zero-cost exact statistic the footer-adaptive joins use) sizes
@@ -93,16 +120,7 @@ def _stream_shuffle_partitions(
     here are run-scoped (uuid / pid-token dirs), so no prior checkpoint
     can disagree with the pin.  Restore in finally: the conf is
     session-global and batch queries must keep seeing the session's own
-    setting.
-
-    ``python_stateful=True`` (the faces still on
-    ``applyInPandasWithState``: EWMA, Hampel, bottom-k, heavy hitters)
-    disables the est_rows DOWN-sizing and keeps full parallelism: their
-    cost is per-group PANDAS compute, and coalescing serializes Python
-    workers — the streaming twin of the CLAUDE.md ``_spread`` invariant.
-    It was measured when CUSUM still ran that protocol (7.0-7.8 s at 32
-    partitions vs 13.4-14.2 s at 8, interleaved); the CUSUM/TWA folds
-    are JVM-only now and size down like the other JVM faces."""
+    setting."""
     key = "spark.sql.shuffle.partitions"
     prior = spark.conf.get(key)
     env = os.environ.get("GORDO_STREAM_SHUFFLE_PARTITIONS")
@@ -110,7 +128,7 @@ def _stream_shuffle_partitions(
         target = int(env)
     else:
         target = max(8, spark.sparkContext.defaultParallelism)
-        if est_rows is not None and not python_stateful:
+        if est_rows is not None:
             sized = max(8, -(-est_rows // _STREAM_ROWS_PER_TASK))
             target = min(target, sized)
     spark.conf.set(key, str(target))
@@ -118,33 +136,6 @@ def _stream_shuffle_partitions(
         yield
     finally:
         spark.conf.set(key, prior)
-
-
-def _group_rows(pdfs):
-    """Concatenate one group's Arrow chunks into a single pandas frame,
-    skipping the ``pd.concat`` copy in the (dominant) single-chunk case —
-    measured ~60 µs per group, and the stateful faces pay it once per
-    group per micro-batch (guide §4.2: the per-group Python constant IS
-    the scale term at real group cardinality)."""
-    import pandas as pd
-
-    chunks = list(pdfs)
-    if not chunks:
-        return pd.DataFrame()
-    if len(chunks) == 1:
-        return chunks[0]
-    return pd.concat(chunks)
-
-
-def _ts_event_order(rows):
-    """Exact (ts, event_id) sort permutation via ``np.lexsort`` — the
-    composite key is globally unique (event_id is), so this is the
-    identical permutation ``rows.sort_values(["ts", "event_id"])``
-    produces, at ~7 µs per group instead of ~400 µs (measured on
-    10-row groups; the faces run it once per group per micro-batch)."""
-    import numpy as np
-
-    return np.lexsort((rows["event_id"].values, rows["ts"].values))
 
 
 def _replay_dir(spark: SparkSession, sf_dir: str, n_files: int = 3) -> str:
@@ -169,9 +160,7 @@ def _run_to_memory(
     stream_df: DataFrame,
     query_name: str,
     output_mode: str = "append",
-    latest_by: tuple[tuple[str, ...], str] | None = None,
     est_rows: int | None = None,
-    python_stateful: bool = False,
 ) -> DataFrame:
     """Execute an availableNow streaming query into a memory sink and
     return the MATERIALIZED result (eager localCheckpoint), then drop
@@ -179,18 +168,13 @@ def _run_to_memory(
     result sets in driver memory for the session lifetime.  Both the
     checkpoint dir AND the temp view are released in the finally so a
     raising query can't leak either (the uuid leaves don't match the
-    PID sweeper's prefixes).  ``latest_by=((keys...), order_col)``
-    post-filters UPDATE-mode emissions to each key's final row — the
-    stateful faces' per-key summary contract (it must order by a
-    column that only grows across batches)."""
+    PID sweeper's prefixes)."""
     import shutil
 
     spark = stream_df.sparkSession
     chk = f"/tmp/gordo_spark_stream/chk/{query_name}-{uuid.uuid4().hex}"
     try:
-        with _stream_shuffle_partitions(
-            spark, est_rows=est_rows, python_stateful=python_stateful
-        ):
+        with _stream_shuffle_partitions(spark, est_rows=est_rows):
             q = (
                 stream_df.writeStream.format("memory")
                 .queryName(query_name)
@@ -200,22 +184,13 @@ def _run_to_memory(
                 .start()
             )
             q.awaitTermination()
-        out = spark.table(query_name).localCheckpoint(eager=True)
+        return spark.table(query_name).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(chk, ignore_errors=True)  # run-scoped checkpoint
         try:
             spark.catalog.dropTempView(query_name)
         except Exception:
             pass
-    if latest_by is not None:
-        keys, order_col = latest_by
-        w = f"PARTITION BY {', '.join(keys)} ORDER BY {order_col} DESC"
-        out = (
-            out.withColumn("rn", F.expr(f"ROW_NUMBER() OVER ({w})"))
-            .where("rn = 1")
-            .drop("rn")
-        )
-    return out
 
 
 def _replay_stream(spark: SparkSession, sf_dir: str, max_files: int | None = None) -> DataFrame:
@@ -322,8 +297,6 @@ def run_streaming_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     model and emits the anomaly frame.  The scoring expressions are the
     SAME code as batch (``ml/islands.py::score_models``) — that reuse is
     the point of building scoring as column algebra."""
-    import shutil
-
     from gordo_components_spark.ml.islands import score_models, trained_models
 
     prepare(spark)
@@ -334,28 +307,7 @@ def run_streaming_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deploy-shaped sink: each micro-batch APPENDS its scored frame to a
     # parquet directory executor-side (the O7 sink), never collecting to
     # the driver — the demonstrated pattern is the deployable one.
-    # Deterministic per-SF-per-PROCESS dirs: the sf_tag keeps reruns in
-    # one process from accreting /tmp litter (the leaf is cleared up
-    # front — the checkpoint must go with the sink or a rerun would
-    # replay nothing), while the PID token keeps two concurrent sessions
-    # on the same SF (e.g. pytest and bench.py) from rmtree'ing each
-    # other's in-flight sink mid-query.  Stale siblings from dead
-    # processes are swept instead of the live path.
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    for base in ("/tmp/gordo_spark_stream/sink", "/tmp/gordo_spark_stream/chk"):
-        try:
-            for leaf in os.listdir(base):
-                if leaf.startswith(f"score-{sf_tag}-p"):
-                    pid = leaf.rsplit("-p", 1)[-1]
-                    if pid.isdigit() and not _pid_alive(int(pid)):
-                        shutil.rmtree(os.path.join(base, leaf), ignore_errors=True)
-        except OSError:
-            pass
-    leaf = f"score-{sf_tag}-p{os.getpid()}"
-    sink_dir = f"/tmp/gordo_spark_stream/sink/{leaf}"
-    chk_dir = f"/tmp/gordo_spark_stream/chk/{leaf}"
-    for d in (sink_dir, chk_dir):
-        shutil.rmtree(d, ignore_errors=True)
+    sink_dir, chk_dir = _pid_scoped_dirs(sf_dir, "score-")
 
     def score_batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import functions as FF
@@ -403,85 +355,54 @@ def run_streaming_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(sink_dir)
 
 
+_EWMA_STATE = "user_id bigint, ewma double, n bigint, total double"
+
+
+def _ewma_fold(alpha: float):
+    """One micro-batch of the per-machine EWMA: each key's batch readings
+    in (ts, event_id) order folded by ``aggregate`` over the carried
+    ewma (NULL for a new key), n and total added to the carried sums.
+    The weights are DOUBLE literals (``…D``): a DECIMAL literal would not
+    be bit-identical to the sequential alpha * v + (1 - alpha) * ewma."""
+
+    def fold(batch: DataFrame, prior: DataFrame) -> DataFrame:
+        per_key = batch.groupBy("user_id").agg(
+            F.expr("array_sort(collect_list(struct(ts, event_id, value)))").alias("xs"),
+            F.count(F.lit(1)).alias("bn"),
+            F.sum("value").alias("bt"),
+        )
+        return per_key.join(prior, "user_id", "full_outer").selectExpr(
+            "user_id",
+            f"aggregate(coalesce(xs, array()), ewma, (acc, x) -> IF(acc IS NULL, x.value,"
+            f" {alpha!r}D * x.value + {1 - alpha!r}D * acc)) AS ewma",
+            "coalesce(n, 0) + coalesce(bn, 0) AS n",
+            "coalesce(total, 0.0D) + coalesce(bt, 0.0D) AS total",
+        )
+
+    return fold
+
+
 def run_streaming_stateful_ewma(
     spark: SparkSession, sf_dir: str, alpha: float = 0.2
 ) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState`` (the
-    Structured Streaming escape hatch for per-key state Spark's built-ins
-    can't express): a per-machine EWMA + running count that SURVIVES
-    across micro-batches (state store).  ``maxFilesPerTrigger=1`` forces
-    3 micro-batches over the replay files, so state carry is actually
+    """Per-machine EWMA + running count carried across micro-batches on
+    the stateful-fold skeleton (``_fold_stream``, folded per batch by
+    ``_ewma_fold`` on the JVM).  ``maxFilesPerTrigger=1`` forces 3
+    micro-batches over the replay files, so state carry is actually
     exercised — each machine's final row aggregates all three.
 
     State is (ewma, n, total); n/total are order-independent and testable
-    against batch; the EWMA is the serving-side smoothing (O25) face."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    against batch; the EWMA is the serving-side smoothing (O25) face.
+    Order contract as the CUSUM face: exact (ts, event_id) within a
+    micro-batch, arrival order across batches."""
     prepare(spark)
-    stream = _replay_stream(spark, sf_dir, 1)
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            ewma, n, total = state.get
-        else:
-            ewma, n, total = None, 0, 0.0
-        # concatenate ALL Arrow chunks before sorting: a per-chunk sort
-        # only orders within one ~10k-row chunk, so a key spilling over
-        # the Arrow batch size would fold the EWMA out of time order
-        # while LOOKING sorted.  (Cross-BATCH order still follows file
-        # arrival, as in any real stream — the EWMA contract is
-        # arrival-order within the watermark, exact time-order within a
-        # batch.)  r15: the full-frame ``sort_values("ts")`` copy is
-        # replaced by the IDENTICAL argsort permutation (pandas nargsort
-        # on a no-null datetime column is values.argsort(kind=
-        # "quicksort")) applied to just the value column — same float64
-        # fold order, ~400 µs less per group per batch.
-        rows = _group_rows(pdfs)
-        if len(rows):
-            order = rows["ts"].values.argsort(kind="quicksort")
-            for v in rows["value"].values[order]:
-                ewma = v if ewma is None else alpha * v + (1 - alpha) * ewma
-                n += 1
-                total += v
-        state.update((float(ewma) if ewma is not None else 0.0, int(n), float(total)))
-        yield pd.DataFrame(
-            [{"user_id": key[0], "ewma": ewma, "n": n, "total": total}]
-        )
-
-    out = stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id bigint, ewma double, n bigint, total double",
-        stateStructType="ewma double, n bigint, total double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    import shutil
-
-    name = f"stream_ewma_{uuid.uuid4().hex[:8]}"
-    chk = f"/tmp/gordo_spark_stream/chk/{name}"
-    with _stream_shuffle_partitions(
-        spark, est_rows=footer_rows(sf_dir, "events"), python_stateful=True
-    ):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", chk)
-            .start()
-        )
-        q.awaitTermination()
-    shutil.rmtree(chk, ignore_errors=True)  # memory sink: checkpoint is run-scoped
-    # update-mode memory sink holds one row per (key, batch); the final
-    # state per machine is the last emitted row
-    full = spark.table(name)
-    w = "PARTITION BY user_id ORDER BY n DESC"
-    return (
-        full.withColumn("rn", F.expr(f"ROW_NUMBER() OVER ({w})"))
-        .where("rn = 1")
-        .drop("rn")
+    return _fold_stream(
+        _replay_stream(spark, sf_dir, 1),
+        f"stream_ewma_{uuid.uuid4().hex[:8]}",
+        _ewma_fold(alpha),
+        _EWMA_STATE,
+        lambda state: state,
+        est_rows=footer_rows(sf_dir, "events"),
     )
 
 
@@ -603,13 +524,10 @@ def run_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFra
     Batch parity (the surviving digest SET equals the batch face's —
     keep_id depends on arrival order, so the set is the contract) is
     asserted in tests/test_streaming.py."""
-    import shutil
-
     from gordo_components_spark.operators.extensions_corpus import build_dedup_index
 
     prepare(spark)
     root = build_dedup_index(spark, sf_dir)
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
 
     # replay source: the SHARED crawl-batch fixture (_delta_batch — one
     # definition with the batch faces, so parity can't silently drift)
@@ -638,20 +556,7 @@ def run_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFra
         ["text_hash"]
     )
 
-    for base in ("/tmp/gordo_spark_stream/sink", "/tmp/gordo_spark_stream/chk"):
-        try:
-            for leaf in os.listdir(base):
-                if leaf.startswith(f"incdedup-{sf_tag}-p"):
-                    pid = leaf.rsplit("-p", 1)[-1]
-                    if pid.isdigit() and not _pid_alive(int(pid)):
-                        shutil.rmtree(os.path.join(base, leaf), ignore_errors=True)
-        except OSError:
-            pass
-    leaf = f"incdedup-{sf_tag}-p{os.getpid()}"
-    sink_dir = f"/tmp/gordo_spark_stream/sink/{leaf}"
-    chk_dir = f"/tmp/gordo_spark_stream/chk/{leaf}"
-    for d in (sink_dir, chk_dir):
-        shutil.rmtree(d, ignore_errors=True)
+    sink_dir, chk_dir = _pid_scoped_dirs(sf_dir, "incdedup-")
 
     hist_path = os.path.join(root, "hist")
 
@@ -865,21 +770,85 @@ def run_streaming_cusum(
     )
 
 
-def _med2(sorted_win: list[int]) -> int:
-    """Doubled median of a sorted int window — ALWAYS an exact int
-    (selection for odd counts, midpoint sum for even), matching
-    2 x percentile(..., 0.5) on the batch face; property-ringed in
-    tests/test_streaming.py."""
-    m = len(sorted_win)
-    if m % 2:
-        return 2 * sorted_win[m // 2]
-    return sorted_win[m // 2 - 1] + sorted_win[m // 2]
+def _doubled_median(sorted_arr: str) -> str:
+    """SQL doubled median of a sorted non-empty int array — ALWAYS an
+    exact int: a[(m-1) DIV 2] + a[m DIV 2] is 2·a[mid] for odd m and the
+    midpoint sum for even m, matching 2 x percentile(..., 0.5) on the
+    batch face; property-ringed in tests/test_streaming.py."""
+    a = sorted_arr
+    return f"({a}[(size({a}) - 1) DIV 2] + {a}[size({a}) DIV 2])"
+
+
+#: carried trailing window (last ≤ 20 readings as v100 and dev200, oldest
+#: first) plus the per-machine counters and the last reading's med200
+_HAMPEL_STATE = (
+    "user_id bigint, hv array<bigint>, hd array<bigint>, n_seen bigint,"
+    " n_flagged bigint, med200_last bigint"
+)
+
+
+def _hampel_fold(batch: DataFrame, prior: DataFrame) -> DataFrame:
+    """One micro-batch of the trailing Hampel filter.  The carried window
+    enters as ≤ 20 SEED rows (pos, v100, dev200) ordered before the
+    batch's events; over the 21-row frame ``ROWS BETWEEN 20 PRECEDING AND
+    CURRENT ROW`` one sliding window yields each event's med200, its
+    dev200 = |2·v100 − med200|, and a second one over dev200 yields
+    mad400.  An event flags only with ≥ 20 readings before it (a full
+    frame).  The last 20 rows become the next window; a key without
+    events passes through on its seeds."""
+    from pyspark.sql import Window
+
+    order = ("seed", "pos", "ts", "event_id")
+    w = Window.partitionBy("user_id").orderBy(*order)
+    frame = w.rowsBetween(-20, Window.currentRow)
+    seeds = prior.selectExpr(
+        "user_id", "n_seen", "n_flagged", "med200_last",
+        "posexplode(arrays_zip(hv, hd)) AS (pos, x)",
+    ).selectExpr(
+        "user_id", "0 AS seed", "pos", "CAST(NULL AS TIMESTAMP) AS ts",
+        "CAST(NULL AS BIGINT) AS event_id", "x.hv AS v100", "x.hd AS dev_c",
+        # the counters ride on the first seed only
+        "IF(pos = 0, n_seen, 0) AS n_seen", "IF(pos = 0, n_flagged, 0) AS n_flagged",
+        "med200_last AS med_c",
+    )
+    events = batch.selectExpr(
+        "user_id", "1 AS seed", "CAST(NULL AS INT) AS pos", "ts", "event_id",
+        "CAST(round(value * 100) AS BIGINT) AS v100", "CAST(NULL AS BIGINT) AS dev_c",
+        "CAST(1 AS BIGINT) AS n_seen", "CAST(0 AS BIGINT) AS n_flagged",
+        "CAST(NULL AS BIGINT) AS med_c",
+    )
+    rows = seeds.unionByName(events)
+    rows = rows.withColumn("win", F.array_sort(F.collect_list("v100").over(frame)))
+    rows = rows.selectExpr(
+        "*", f"coalesce(med_c, {_doubled_median('win')}) AS med200"
+    ).withColumn("dev200", F.expr("coalesce(dev_c, abs(2 * v100 - med200))"))
+    rows = rows.withColumn("dwin", F.array_sort(F.collect_list("dev200").over(frame))).select(
+        "*",
+        F.row_number().over(w).alias("rn"),
+        F.count(F.lit(1)).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        ).alias("cnt"),
+    )
+    flag = f"seed = 1 AND size(win) > 20 AND 10000 * dev200 > 22239 * {_doubled_median('dwin')}"
+    return rows.groupBy("user_id").agg(
+        F.expr("array_sort(collect_list(IF(rn > cnt - 20, struct(rn, v100, dev200), NULL)))")
+        .alias("tail"),
+        F.sum("n_seen").alias("n_seen"),
+        F.expr(f"sum(n_flagged + IF({flag}, 1, 0))").alias("n_flagged"),
+        F.expr("max_by(med200, rn)").alias("med200_last"),
+    ).selectExpr(
+        "user_id",
+        "transform(tail, x -> x.v100) AS hv",
+        "transform(tail, x -> x.dev200) AS hd",
+        "n_seen", "n_flagged", "med200_last",
+    )
 
 
 def run_streaming_hampel(
     spark: SparkSession, sf_dir: str, single_batch: bool = False
 ) -> DataFrame:
-    """Streaming TRAILING-Hampel despiker via ``applyInPandasWithState``
+    """Streaming TRAILING-Hampel despiker on the stateful-fold skeleton
+    (``_fold_stream``, folded per batch by ``_hampel_fold`` on the JVM)
     — the serving-side sibling of ``window_hampel_outlier``: per machine,
     each reading is tested against the median of its trailing 21-sample
     window with a MAD-robust 3σ fence, state (the last 20 readings and
@@ -893,68 +862,20 @@ def run_streaming_hampel(
     bigint fence 10000·dev200 > 22239·mad400 with IDENTICAL constants.
     Flags fire only once the trailing window is full (21 samples), so a
     cold key warms up silently.  State is two ≤20-element bigint arrays
-    per machine — bounded regardless of stream length."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    per machine — bounded regardless of stream length.  Order contract
+    as the CUSUM face."""
     prepare(spark)
-    stream = _replay_stream(spark, sf_dir, None if single_batch else 1)
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            hv, hd, n_seen, n_flagged = state.get
-            hv, hd = list(hv), list(hd)
-        else:
-            hv, hd, n_seen, n_flagged = [], [], 0, 0
-        last_med = None
-        last_dev = None
-        rows = _group_rows(pdfs)
-        if len(rows):
-            for v in rows["value"].values[_ts_event_order(rows)]:
-                v100 = _v100(v)
-                med200 = _med2(sorted(hv + [v100]))
-                dev200 = abs(2 * v100 - med200)
-                mad400 = _med2(sorted(hd + [dev200]))
-                if len(hv) >= 20 and 10000 * dev200 > 22239 * mad400:
-                    n_flagged += 1
-                n_seen += 1
-                hv.append(v100)
-                hd.append(dev200)
-                del hv[:-20], hd[:-20]
-                last_med = med200 / 200.0
-                last_dev = dev200 / 200.0
-        state.update(
-            ([int(x) for x in hv], [int(x) for x in hd], int(n_seen), int(n_flagged))
-        )
-        yield pd.DataFrame(
-            [
-                {
-                    "user_id": key[0],
-                    "n_seen": n_seen,
-                    "n_flagged": n_flagged,
-                    "last_med": last_med,
-                    "last_dev": last_dev,
-                }
-            ]
-        )
-
-    out = stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "user_id bigint, n_seen bigint, n_flagged bigint, "
-            "last_med double, last_dev double"
+    return _fold_stream(
+        _replay_stream(spark, sf_dir, None if single_batch else 1),
+        f"stream_hampel_{uuid.uuid4().hex[:8]}",
+        _hampel_fold,
+        _HAMPEL_STATE,
+        # 200.0D: bit-identical to the sequential med200 / 200.0
+        lambda state: state.selectExpr(
+            "user_id", "n_seen", "n_flagged", "med200_last / 200.0D AS last_med",
+            "element_at(hd, -1) / 200.0D AS last_dev",
         ),
-        stateStructType=(
-            "hv array<bigint>, hd array<bigint>, n_seen bigint, n_flagged bigint"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    name = f"stream_hampel_{uuid.uuid4().hex[:8]}"
-    return _run_to_memory(
-        out, name, output_mode="update", latest_by=(("user_id",), "n_seen"),
-        est_rows=footer_rows(sf_dir, "events"), python_stateful=True,
+        est_rows=footer_rows(sf_dir, "events"),
     )
 
 
@@ -1066,8 +987,9 @@ def run_streaming_benford(
 ) -> DataFrame:
     """Streaming Benford first-digit screen — the live data-quality face
     of ``agg_benford_screen``: per-tag first-significant-digit counts
-    maintained as a genuine Structured Streaming aggregation (update
-    mode; counts are ORDER-INDEPENDENT, so the multi-batch final state
+    maintained as a genuine Structured Streaming aggregation (complete
+    mode: the memory sink holds only the final per-tag rows; counts are
+    ORDER-INDEPENDENT, so the multi-batch final state
     equals the batch face EXACTLY — the strongest batch↔stream parity
     in the repo, asserted in tests/test_streaming.py), with the χ²
     conformance verdict recomputed per emission from the same
@@ -1099,82 +1021,55 @@ def run_streaming_benford(
     )
     name = f"stream_benford_{uuid.uuid4().hex[:8]}"
     return _run_to_memory(
-        out, name, output_mode="update", latest_by=(("event_type",), "n"),
-        est_rows=footer_rows(sf_dir, "events"),
+        out, name, output_mode="complete", est_rows=footer_rows(sf_dir, "events")
     )
+
+
+#: the carried sketch is the face's output: each tag's k smallest
+#: (hid, event_id) ranked by that order
+_BOTTOMK_STATE = "event_type string, rk int, event_id bigint, hid string"
+
+
+def _bottomk_fold(k: int):
+    """One micro-batch of the bottom-k sketch: the carried ≤ k rows per
+    tag unioned with the batch's (md5(id), id) pairs, re-ranked and
+    re-truncated to the k smallest by the unique total order
+    (hid, event_id)."""
+
+    def fold(batch: DataFrame, prior: DataFrame) -> DataFrame:
+        rows = prior.select("event_type", "event_id", "hid").unionByName(
+            batch.select(
+                "event_type", "event_id", F.md5(F.col("event_id").cast("string")).alias("hid")
+            )
+        )
+        rk = "CAST(row_number() OVER (PARTITION BY event_type ORDER BY hid, event_id) AS INT)"
+        return rows.selectExpr("event_type", f"{rk} AS rk", "event_id", "hid").where(f"rk <= {k}")
+
+    return fold
 
 
 def run_streaming_bottomk_sample(
     spark: SparkSession, sf_dir: str, k: int = 10, single_batch: bool = False
 ) -> DataFrame:
-    """Streaming uniform sampling via a per-key BOTTOM-K hash sketch in
-    ``applyInPandasWithState`` — the mergeable alternative to reservoir
-    sampling: state is each tag's k smallest (md5(id), id) pairs, each
-    micro-batch folds its rows in and re-truncates to k, and because
-    bottom-k(A ∪ B) = bottom-k(bottom-k(A) ∪ bottom-k(B)) the final
-    state is INDEPENDENT of replay slicing and arrival order — the
+    """Streaming uniform sampling via a per-key BOTTOM-K hash sketch on
+    the stateful-fold skeleton (``_fold_stream``, folded per batch by
+    ``_bottomk_fold`` on the JVM) — the mergeable alternative to
+    reservoir sampling: state is each tag's k smallest (md5(id), id)
+    pairs, each micro-batch folds its rows in and re-truncates to k, and
+    because bottom-k(A ∪ B) = bottom-k(bottom-k(A) ∪ bottom-k(B)) the
+    final state is INDEPENDENT of replay slicing and arrival order — the
     batch face ``stream_sample_bottomk`` is reproduced bit-exactly
     (tests/test_streaming.py asserts it).  State is k hex digests + k
-    ids per key — fixed-size, the state-store contract at any corpus
-    scale."""
-    import hashlib
-
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    ids per key — fixed-size at any corpus scale."""
     prepare(spark)
-    stream = _replay_stream(spark, sf_dir, None if single_batch else 1)
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            hs, ids, n_seen = state.get
-            sketch = list(zip(hs, ids))
-        else:
-            sketch, n_seen = [], 0
-        chunks = list(pdfs)
-        rows = pd.concat(chunks) if chunks else pd.DataFrame()
-        if len(rows):
-            n_seen += len(rows)
-            for eid in rows["event_id"]:
-                sketch.append(
-                    (hashlib.md5(str(int(eid)).encode()).hexdigest(), int(eid))
-                )
-            sketch = sorted(sketch)[:k]
-        state.update(
-            ([h for h, _ in sketch], [i for _, i in sketch], int(n_seen))
-        )
-        yield pd.DataFrame(
-            [
-                {
-                    "event_type": key[0],
-                    "rk": r + 1,
-                    "event_id": i,
-                    "hid": h,
-                    "n_seen": n_seen,
-                }
-                for r, (h, i) in enumerate(sketch)
-            ]
-        )
-
-    out = stream.groupBy("event_type").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "event_type string, rk int, event_id bigint, hid string, "
-            "n_seen bigint"
-        ),
-        stateStructType="hs array<string>, ids array<bigint>, n_seen bigint",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    name = f"stream_bottomk_{uuid.uuid4().hex[:8]}"
-    return _run_to_memory(
-        out,
-        name,
-        output_mode="update",
-        latest_by=(("event_type", "rk"), "n_seen"),
+    return _fold_stream(
+        _replay_stream(spark, sf_dir, None if single_batch else 1),
+        f"stream_bottomk_{uuid.uuid4().hex[:8]}",
+        _bottomk_fold(k),
+        _BOTTOMK_STATE,
+        lambda state: state,
         est_rows=footer_rows(sf_dir, "events"),
-    ).select("event_type", "rk", "event_id", "hid")
+    )
 
 
 def run_streaming_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1258,87 +1153,76 @@ def run_streaming_countmin(
     )
 
 
+_MG_STATE = (
+    "event_type string, users array<bigint>, counts array<bigint>, n_seen bigint, decr bigint"
+)
+
+
+def _mg_fold(k: int):
+    """One micro-batch merged into the Misra–Gries summary the mergeable
+    way (Agarwal et al., "Mergeable Summaries", PODS 2012): the batch's
+    exact (tag, user) counts are added to the carried counters, the
+    tag's (k+1)-th largest count c (0 with ≤ k counters) is subtracted
+    from every counter, only counters left > 0 stay, and c joins the
+    decrement mass.  One state row per tag, so a tag whose counters all
+    cancel keeps its n_seen."""
+
+    def fold(batch: DataFrame, prior: DataFrame) -> DataFrame:
+        carried = prior.selectExpr(
+            "event_type", "explode(arrays_zip(users, counts)) AS x"
+        ).selectExpr("event_type", "x.users AS user_id", "x.counts AS c", "0L AS n")
+        fresh = batch.groupBy("event_type", "user_id").agg(
+            F.count(F.lit(1)).alias("c")
+        ).withColumn("n", F.col("c"))
+        per_tag = (
+            carried.unionByName(fresh)
+            .groupBy("event_type", "user_id")
+            .agg(F.sum("c").alias("c"), F.sum("n").alias("n"))
+            .groupBy("event_type")
+            .agg(
+                # descending by (c, user_id): a unique, deterministic order
+                F.expr("sort_array(collect_list(struct(c, user_id)), false)").alias("cs"),
+                F.sum("n").alias("bn"),
+            )
+            .selectExpr("*", f"IF(size(cs) > {k}, cs[{k}].c, 0L) AS cut")
+        )
+        return per_tag.join(prior, "event_type", "full_outer").selectExpr(
+            "event_type",
+            "transform(filter(coalesce(cs, array()), x -> x.c > cut), x -> x.user_id) AS users",
+            "transform(filter(coalesce(cs, array()), x -> x.c > cut), x -> x.c - cut) AS counts",
+            "coalesce(n_seen, 0L) + coalesce(bn, 0L) AS n_seen",
+            "coalesce(decr, 0L) + coalesce(cut, 0L) AS decr",
+        )
+
+    return fold
+
+
 def run_streaming_heavy_hitters(
     spark: SparkSession, sf_dir: str, k: int = 8, single_batch: bool = False
 ) -> DataFrame:
     """Genuine-streaming Misra–Gries heavy hitters: per event_type, a
-    fixed-size k-counter summary of user activity maintained in
-    ``applyInPandasWithState`` across micro-batches — the streaming face
+    fixed-size k-counter summary of user activity carried across
+    micro-batches on the stateful-fold skeleton (``_fold_stream``,
+    merged per batch by ``_mg_fold`` on the JVM) — the streaming face
     of the two-pass batch miner (``agg_heavy_hitters``'s sketch pass).
     The MG invariant survives merging/slicing: any user whose true count
     exceeds N/k is guaranteed present in the final candidate set, and
     each kept counter understates the true count by at most the total
-    decrement mass D (tests/test_streaming.py pins both bounds against
-    exact batch counts).  State is ≤ k (user, count) pairs per tag —
+    decrement mass D = Σ c (tests/test_streaming.py pins both bounds
+    against exact batch counts).  The summary is deterministic for a
+    given delivery order.  State is ≤ k (user, count) pairs per tag —
     fixed-size at any corpus scale."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     prepare(spark)
-    stream = _replay_stream(spark, sf_dir, None if single_batch else 1)
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            users, counts, n_seen, decr = state.get
-            mg = dict(zip(users, counts))
-        else:
-            mg, n_seen, decr = {}, 0, 0
-        chunks = list(pdfs)
-        rows = pd.concat(chunks) if chunks else pd.DataFrame()
-        if len(rows):
-            n_seen += len(rows)
-            for uid in rows["user_id"]:
-                uid = int(uid)
-                if uid in mg:
-                    mg[uid] += 1
-                elif len(mg) < k:
-                    mg[uid] = 1
-                else:
-                    # decrement-all step: every counter drops by 1
-                    decr += 1
-                    mg = {u: c - 1 for u, c in mg.items() if c > 1}
-        state.update(
-            (list(mg.keys()), list(mg.values()), int(n_seen), int(decr))
-        )
-        yield pd.DataFrame(
-            [
-                {
-                    "event_type": key[0],
-                    "user_id": u,
-                    "mg_count": c,
-                    "n_seen": n_seen,
-                    "n_decrements": decr,
-                }
-                for u, c in sorted(mg.items())
-            ]
-        )
-
-    out = stream.groupBy("event_type").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "event_type string, user_id bigint, mg_count bigint, "
-            "n_seen bigint, n_decrements bigint"
+    return _fold_stream(
+        _replay_stream(spark, sf_dir, None if single_batch else 1),
+        f"stream_mg_{uuid.uuid4().hex[:8]}",
+        _mg_fold(k),
+        _MG_STATE,
+        lambda state: state.selectExpr(
+            "event_type", "inline(arrays_zip(users, counts))", "n_seen", "decr"
+        ).selectExpr(
+            "event_type", "users AS user_id", "counts AS mg_count", "n_seen",
+            "decr AS n_decrements",
         ),
-        stateStructType=(
-            "users array<bigint>, counts array<bigint>, "
-            "n_seen bigint, decr bigint"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    name = f"stream_mg_{uuid.uuid4().hex[:8]}"
-    res = _run_to_memory(
-        out, name, output_mode="update", est_rows=footer_rows(sf_dir, "events")
-    )
-    # the FINAL sketch is exactly the last emission per tag (every yield
-    # carries the full current sketch stamped with that batch's n_seen);
-    # a per-(tag, user) latest filter would resurrect users evicted in
-    # later batches, so filter to the max-n_seen emission per tag instead
-    return (
-        res.withColumn(
-            "_mx", F.expr("max(n_seen) OVER (PARTITION BY event_type)")
-        )
-        .where(F.col("n_seen") == F.col("_mx"))
-        .select("event_type", "user_id", "mg_count", "n_seen", "n_decrements")
+        est_rows=footer_rows(sf_dir, "events"),
     )

@@ -99,6 +99,55 @@ def test_stateful_ewma_state_carries_across_batches(spark, sf_dir):
     assert out["ewma"].notna().all()
 
 
+def test_stateful_ewma_leaves_no_table_or_checkpoint(spark, sf_dir):
+    # a run must release what it created: no uuid-named memory table in
+    # the session catalog, no run-scoped checkpoint dir on disk
+    import glob
+
+    from gordo_components_spark.streaming.micro_batch import run_streaming_stateful_ewma
+
+    run_streaming_stateful_ewma(spark, sf_dir).collect()
+    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("stream_ewma_")]
+    assert not glob.glob("/tmp/gordo_spark_stream/chk/stream_ewma_*")
+
+
+@pytest.fixture
+def fold_chk(tmp_path, monkeypatch):
+    """Run every ``_fold_stream`` face on a kept checkpoint, so the test
+    can read back the file source's delivery log and the fold state."""
+    from gordo_components_spark.streaming import micro_batch as mb
+
+    chk = str(tmp_path / "chk")
+    real = mb._fold_stream
+    monkeypatch.setattr(mb, "_fold_stream", lambda *a, **k: real(*a, **{**k, "checkpoint": chk}))
+    return chk
+
+
+@pytest.mark.parametrize("n_batches", [1, 3])
+def test_streaming_ewma_matches_sequential_replay(spark, sf_dir, fold_chk, monkeypatch, n_batches):
+    # ewma and n must equal the literal sequential fold of the replay
+    # files in delivery order, (ts, event_id) order within a batch —
+    # bit-exact; total only up to summation order
+    from gordo_components_spark.streaming import micro_batch as mb
+
+    if n_batches == 1:
+        real = mb._replay_stream
+        # one micro-batch: drop the face's maxFilesPerTrigger
+        monkeypatch.setattr(mb, "_replay_stream", lambda spark, sf_dir, _max=None: real(spark, sf_dir))
+    got = mb.run_streaming_stateful_ewma(spark, sf_dir, alpha=0.2).collect()
+    assert len(_delivered_batches(fold_chk)) == n_batches
+    ref = {}
+    for b in _delivered_frames(fold_chk):
+        for uid, v in zip(b["user_id"], b["value"]):
+            e, n, t = ref.get(uid, (None, 0, 0.0))
+            ref[uid] = (v if e is None else 0.2 * v + (1 - 0.2) * e, n + 1, t + v)
+    assert {r.user_id for r in got} == set(ref)
+    for r in got:
+        e, n, t = ref[r.user_id]
+        assert (r.ewma, r.n) == (e, n), r.user_id
+        assert abs(r.total - t) < 1e-9
+
+
 def test_stream_dedup_complete(spark, sf_dir):
     deduped = run_streaming_watermark_dedup(spark, sf_dir)
     n_events = load_table(spark, sf_dir, "events").count()
@@ -307,13 +356,22 @@ def _delivered_batches(chk):
     return out
 
 
+def _delivered_frames(chk):
+    """Each micro-batch's rows as one pandas frame in (ts, event_id)
+    order, in delivery order."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    for files in _delivered_batches(chk):
+        yield pd.concat(pq.read_table(f).to_pandas() for f in files).sort_values(["ts", "event_id"])
+
+
 def _sequential_replay(spark, sf_dir, chk):
     """Literal per-key Page CUSUM and trapezoid folds over the replay
     files one micro-batch at a time, in the order the file source
     delivered them; (ts, event_id) order within a batch.  Returns
     {key: dict(cusum, n_seen, n_alerts, num, span_us, twa)}."""
     import pandas as pd
-    import pyarrow.parquet as pq
 
     from gordo_components_spark.operators.windows import _CUSUM_H100, _CUSUM_K100
     from gordo_components_spark.streaming.micro_batch import _v100
@@ -327,9 +385,8 @@ def _sequential_replay(spark, sf_dir, chk):
         for k, g in tr.groupby(["user_id", "event_type"])
     }
     st = {}
-    for files in _delivered_batches(chk):
-        b = pd.concat(pq.read_table(f).to_pandas() for f in files)
-        for k, g in b.sort_values(["ts", "event_id"]).groupby(["user_id", "event_type"]):
+    for b in _delivered_frames(chk):
+        for k, g in b.groupby(["user_id", "event_type"]):
             bn, bs1 = base.get(k, (0, 0))
             r = st.setdefault(k, dict(s=0, n_seen=0, n_alerts=0, us=None, v=None, num=0, span_us=0))
             for ts, v in zip(g["ts"], g["value"]):
@@ -471,24 +528,64 @@ def test_streaming_hampel_state_carries_across_batches(spark, sf_dir):
     assert (merged["n_flagged"] <= merged["n_seen"]).all()
 
 
-def test_streaming_hampel_med2_matches_statistics_median():
-    # property ring for the doubled-median integer algebra: _med2 over a
-    # sorted window must equal 2x statistics.median exactly (selection
-    # for odd counts, midpoint sum for even) — the invariant that keeps
-    # the streaming fence bit-compatible with the batch face's
-    # percentile(…, 0.5) semantics
+def test_streaming_hampel_matches_sequential_replay(spark, sf_dir, fold_chk):
+    # 3 forced micro-batches: counts, last_med, last_dev AND the carried
+    # trailing window must equal the literal sequential trailing-Hampel
+    # fold of the replay files in delivery order — exact, floats included
+    import os
     import statistics
 
-    from hypothesis import given, strategies as st
+    from gordo_components_spark.streaming.micro_batch import _v100, run_streaming_hampel
 
-    from gordo_components_spark.streaming.micro_batch import _med2
+    got = run_streaming_hampel(spark, sf_dir).collect()
+    delivered = len(_delivered_batches(fold_chk))
+    assert delivered == 3
+    ref = {}
+    for b in _delivered_frames(fold_chk):
+        for uid, v in zip(b["user_id"], b["value"]):
+            r = ref.setdefault(uid, dict(hv=[], hd=[], n_seen=0, n_flagged=0))
+            v100 = _v100(v)
+            med = statistics.median(r["hv"][-20:] + [v100])
+            dev200 = round(abs(v100 - med) * 2)
+            mad400 = round(statistics.median(r["hd"][-20:] + [dev200]) * 2)
+            if len(r["hv"]) >= 20 and 10000 * dev200 > 22239 * mad400:
+                r["n_flagged"] += 1
+            r["n_seen"] += 1
+            r["hv"].append(v100)
+            r["hd"].append(dev200)
+            r["last_med"], r["last_dev"] = float(med) / 100.0, dev200 / 200.0
+    assert {r.user_id for r in got} == set(ref)
+    for r in got:
+        want = ref[r.user_id]
+        for c in ("n_seen", "n_flagged", "last_med", "last_dev"):
+            assert r[c] == want[c], (r.user_id, c, r[c], want[c])
+    assert sum(r.n_flagged for r in got) > 0  # the fence is exercised
+    state = spark.read.parquet(os.path.join(fold_chk, "fold", str(delivered - 1))).collect()
+    assert {r.user_id: (r.hv, r.hd) for r in state} == {
+        uid: (r["hv"][-20:], r["hd"][-20:]) for uid, r in ref.items()
+    }
 
-    @given(st.lists(st.integers(min_value=0, max_value=10**6), min_size=1, max_size=41))
-    def check(vals):
-        w = sorted(vals)
-        assert _med2(w) == round(2 * statistics.median(w))
 
-    check()
+def test_streaming_hampel_med2_matches_statistics_median(spark):
+    # property ring for the doubled-median SQL the Hampel fold evaluates:
+    # over a sorted array it must equal 2x statistics.median exactly
+    # (selection for odd counts, midpoint sum for even) — the invariant
+    # that keeps the streaming fence bit-compatible with the batch face's
+    # percentile(…, 0.5) semantics.  Narrow value ranges force ties.
+    import random
+    import statistics
+
+    from gordo_components_spark.streaming.micro_batch import _doubled_median
+
+    rng = random.Random(20240116)
+    lists = [
+        [rng.randint(0, rng.choice((3, 10**6))) for _ in range(rng.randint(1, 41))]
+        for _ in range(400)
+    ]
+    df = spark.createDataFrame(list(enumerate(lists)), "i int, vals array<bigint>")
+    got = dict(df.selectExpr("i", f"{_doubled_median('array_sort(vals)')} AS m2").collect())
+    for i, vals in enumerate(lists):
+        assert got[i] == round(2 * statistics.median(vals)), vals
 
 
 def test_streaming_m4_matches_batch_face(spark, sf_dir):
@@ -607,9 +704,8 @@ def _plan_nodes(jplan):
 
 
 def test_streaming_folds_plan_on_jvm_only(spark, sf_dir, monkeypatch):
-    # neither face's streaming query keeps a state store (the per-group
-    # pandas protocol is a stateful operator), and neither face nor one
-    # fold batch plans a Python-eval node or an RDD scan that is not a
+    # no fold face's streaming query keeps a state store, and no face
+    # nor one fold batch plans a Python-eval node or an RDD scan that is not a
     # materialized localCheckpoint — a driver-list createDataFrame plans
     # as the same `Scan ExistingRDD` node over a parallelized Python RDD
     # and starts Python workers on every micro-batch
@@ -626,17 +722,29 @@ def test_streaming_folds_plan_on_jvm_only(spark, sf_dir, monkeypatch):
     src = mb._replay_dir(spark, sf_dir)
     one_file = os.path.join(src, sorted(f for f in os.listdir(src) if f.endswith(".parquet"))[0])
     batch = spark.read.schema(mb._RAW_SCHEMA).parquet(one_file)
+    folds = {
+        "cusum": (mb._cusum_fold(mb._cusum_baseline(spark, sf_dir)), mb._CUSUM_STATE),
+        "twa": (mb._twa_fold, mb._TWA_STATE),
+        "ewma": (mb._ewma_fold(0.2), mb._EWMA_STATE),
+        "hampel": (mb._hampel_fold, mb._HAMPEL_STATE),
+        "bottomk": (mb._bottomk_fold(10), mb._BOTTOMK_STATE),
+        "mg": (mb._mg_fold(8), mb._MG_STATE),
+    }
     plans = {
         "cusum face": mb.run_streaming_cusum(spark, sf_dir),
         "twa face": mb.run_streaming_twa(spark, sf_dir),
-        "cusum fold": mb._cusum_fold(mb._cusum_baseline(spark, sf_dir))(
-            batch, mb._empty_state(spark, mb._CUSUM_STATE)
-        ),
-        "twa fold": mb._twa_fold(batch, mb._empty_state(spark, mb._TWA_STATE)),
+        "ewma face": mb.run_streaming_stateful_ewma(spark, sf_dir),
+        "hampel face": mb.run_streaming_hampel(spark, sf_dir),
+        "bottomk face": mb.run_streaming_bottomk_sample(spark, sf_dir),
+        "mg face": mb.run_streaming_heavy_hitters(spark, sf_dir),
+        **{
+            f"{name} fold": fold(batch, mb._empty_state(spark, ddl))
+            for name, (fold, ddl) in folds.items()
+        },
         "trap": spark.createDataFrame([(1, "a")], "user_id bigint, event_type string"),
     }
     n_events = load_table(spark, sf_dir, "events").count()
-    assert len(started) == 2
+    assert len(started) == 6
     for q in started:
         progress = [p for p in q.recentProgress if p.numInputRows]
         assert len(progress) == 3 and sum(p.numInputRows for p in progress) == n_events
@@ -807,3 +915,6 @@ def test_heavy_hitters_stream_mg_bounds(spark, sf_dir):
         for (t, uid), c in exact.items():
             if t == tag and c * k > n_seen:
                 assert uid in cand
+    # the merged summary is deterministic for a given delivery order
+    again = run_streaming_heavy_hitters(spark, sf_dir, k=k).collect()
+    assert sorted(map(tuple, again)) == sorted(map(tuple, rows))
