@@ -13,6 +13,10 @@ and shared here.
   (a format version, a seed, a bucket count) go into its ``name``.
 - ``memo`` is the only process-local memo keyed on a fixture (the
   trained-model rows): single-flight per key.
+- ``rename_into_place`` is the install step of ``materialized_cache``
+  and of the JVM's class-data-sharing archive (``session.py``), whose
+  key is not a fixture: a finished ``tmp`` (a dir or a file) replaces a
+  stale ``out`` but never a valid one another process installed first.
 - ``persist_tracked`` persists an operator's intermediate frame (the
   MinHash shingle set, the TF-IDF postings) at the configured storage
   level and registers it for ``release_caches()``.  The level is
@@ -196,20 +200,42 @@ def materialized_cache(sf_dir: str, scratch_root: str, name: str, table: str, bu
         build(tmp)
         with open(os.path.join(tmp, "_FP.json"), "w") as fh:
             json.dump({**fp, "entries": sorted(os.listdir(tmp))}, fh)
-        for _ in range(8):
-            if _valid(out, fp):
-                shutil.rmtree(tmp, ignore_errors=True)
-                return out
-            aside = f"{tmp}.stale"
-            try:
-                os.rename(out, aside)
-            except FileNotFoundError:
-                pass
-            shutil.rmtree(aside, ignore_errors=True)
-            try:
-                os.rename(tmp, out)
-                return out
-            except OSError:
-                continue  # another process installed first: re-check it
-        shutil.rmtree(tmp, ignore_errors=True)
+        if rename_into_place(tmp, out, lambda: _valid(out, fp)):
+            return out
     raise RuntimeError(f"materialized_cache: could not install {out}")
+
+
+def _remove(path: str) -> None:
+    if os.path.isdir(path) and not os.path.islink(path):
+        shutil.rmtree(path, ignore_errors=True)
+        return
+    try:
+        os.remove(path)
+    except FileNotFoundError:
+        pass
+
+
+def rename_into_place(tmp: str, out: str, valid) -> bool:
+    """Install ``tmp`` (a dir or a file) as ``out`` unless ``valid()``
+    already holds for ``out``, in which case ``tmp`` is dropped and the
+    valid ``out`` is adopted.  A stale ``out`` is renamed aside before it
+    is deleted.  ``os.rename`` onto a non-empty dir fails, so a
+    collision with another process's install is re-checked, never
+    overwritten.  Returns whether a valid ``out`` is in place."""
+    for _ in range(8):
+        if valid():
+            _remove(tmp)
+            return True
+        aside = f"{tmp}.stale"
+        try:
+            os.rename(out, aside)
+        except FileNotFoundError:
+            pass
+        _remove(aside)
+        try:
+            os.rename(tmp, out)
+            return True
+        except OSError:
+            continue  # another process installed first: re-check it
+    _remove(tmp)
+    return False

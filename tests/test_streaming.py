@@ -532,16 +532,25 @@ def test_streaming_hampel_matches_sequential_replay(spark, sf_dir, fold_chk):
     # 3 forced micro-batches: counts, last_med, last_dev AND the carried
     # trailing window must equal the literal sequential trailing-Hampel
     # fold of the replay files in delivery order — exact, floats included
+    from gordo_components_spark.streaming.micro_batch import run_streaming_hampel
+
+    got = run_streaming_hampel(spark, sf_dir).collect()
+    assert len(_delivered_batches(fold_chk)) == 3
+    _assert_hampel_matches_replay(spark, got, fold_chk)
+
+
+def _assert_hampel_matches_replay(spark, got, chk):
+    """Counts, last_med, last_dev and the carried trailing window of the
+    fold on ``chk`` must equal the literal sequential trailing-Hampel fold
+    of the replay files in delivery order — exact, floats included."""
     import os
     import statistics
 
-    from gordo_components_spark.streaming.micro_batch import _v100, run_streaming_hampel
+    from gordo_components_spark.streaming.micro_batch import _v100
 
-    got = run_streaming_hampel(spark, sf_dir).collect()
-    delivered = len(_delivered_batches(fold_chk))
-    assert delivered == 3
+    delivered = len(_delivered_batches(chk))
     ref = {}
-    for b in _delivered_frames(fold_chk):
+    for b in _delivered_frames(chk):
         for uid, v in zip(b["user_id"], b["value"]):
             r = ref.setdefault(uid, dict(hv=[], hd=[], n_seen=0, n_flagged=0))
             v100 = _v100(v)
@@ -560,10 +569,57 @@ def test_streaming_hampel_matches_sequential_replay(spark, sf_dir, fold_chk):
         for c in ("n_seen", "n_flagged", "last_med", "last_dev"):
             assert r[c] == want[c], (r.user_id, c, r[c], want[c])
     assert sum(r.n_flagged for r in got) > 0  # the fence is exercised
-    state = spark.read.parquet(os.path.join(fold_chk, "fold", str(delivered - 1))).collect()
+    state = spark.read.parquet(os.path.join(chk, "fold", str(delivered - 1))).collect()
     assert {r.user_id: (r.hv, r.hd) for r in state} == {
         uid: (r["hv"][-20:], r["hd"][-20:]) for uid, r in ref.items()
     }
+
+
+def test_streaming_hampel_restart_resumes_exactly_once(spark, sf_dir, fold_chk, monkeypatch):
+    # the CUSUM restart contract on the Hampel fold, whose carried state
+    # is a window, not a sum: kill the run inside batch 2 and restart it
+    # on the same checkpoint (Spark replays batch 2 once over batch 1's
+    # state), then replay batch 2 over its OWN written state (commit
+    # removed).  Every time, counts, last readings and the carried window
+    # must equal the sequential replay of the delivered batches.
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    from gordo_components_spark.streaming import micro_batch as mb
+
+    real, calls = mb._hampel_fold, []
+
+    def fold_counting(kill_at=None):
+        def counted(batch, prior):
+            calls.append(1)
+            if len(calls) == kill_at:
+                raise RuntimeError("killed inside batch 2")
+            return real(batch, prior)
+
+        return counted
+
+    def run():
+        got = mb.run_streaming_hampel(spark, sf_dir).collect()
+        _assert_hampel_matches_replay(spark, got, fold_chk)
+
+    monkeypatch.setattr(mb, "_hampel_fold", fold_counting(kill_at=3))
+    with pytest.raises(StreamingQueryException, match="killed inside batch 2"):
+        mb.run_streaming_hampel(spark, sf_dir).collect()
+    assert sorted(os.listdir(os.path.join(fold_chk, "fold"))) == ["0", "1"]
+    monkeypatch.setattr(mb, "_hampel_fold", fold_counting())
+    calls.clear()
+    run()
+    assert len(calls) == 1  # only batch 2 was re-run
+    assert len(_delivered_batches(fold_chk)) == 3
+    for f in ("2", ".2.crc"):
+        os.remove(os.path.join(fold_chk, "commits", f))
+    calls.clear()
+    run()
+    assert len(calls) == 1
+    calls.clear()
+    run()  # nothing new: the final state is read back
+    assert calls == []
 
 
 def test_streaming_hampel_med2_matches_statistics_median(spark):

@@ -4,7 +4,8 @@ Prints per-query best-of-N wall seconds on one long-lived session, with
 a warm-up pass first (same methodology as bench.py, minus the artifact
 plumbing) so ad-hoc optimization iterations measure the PLAN.  Each
 query also reports its compile cost (JIT seconds, Janino compiles) for
-the warm-up run and for the timed runs together.
+the warm-up run and for the timed runs together; the last line also
+carries the JVM's class-data-sharing state (``session.cds_state``).
 
 Usage:
     python tools/micro_time.py [-n RUNS] name [name...]
@@ -22,6 +23,7 @@ sys.path.insert(0, HERE)
 
 from gordo_components_spark.registry import load_all  # noqa: E402
 from gordo_components_spark.session import (  # noqa: E402
+    cds_state,
     compile_counters,
     compile_delta,
     get_spark,
@@ -64,7 +66,7 @@ def main() -> None:
             },
         }
         print(name, json.dumps(out[name]), flush=True)
-    print(json.dumps({"load1": round(os.getloadavg()[0], 2), "times": out}))
+    print(json.dumps({"load1": round(os.getloadavg()[0], 2), "cds": cds_state(), "times": out}))
 
 
 if __name__ == "__main__":
