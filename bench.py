@@ -1,13 +1,36 @@
-"""Benchmark harness: runs headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""The one query timer: times registry queries at $SPARK_GRAFT_SF_DIR
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] with the noop
+sink and prints ONE JSON line {"metric", "value", "unit", "sf", "load1",
+"load1_end", "gated", "queries"}.
+
+Protocol, the same for every query and every run:
+
+1. wait for the 1-minute load average to fall below ``LOAD_THRESHOLD``
+   (at most ``LOAD_TIMEOUT_S``; ``gated`` says whether it did);
+2. one pass over all queries, each timed as ``rep1``: the cold first
+   run, which pays the JIT, codegen, Python-worker forks and one-time
+   caches (the trained models of ``ml_predict_batch``);
+3. ``RUNS`` timed repetitions per query, each on a cleared Spark cache
+   so a persisted intermediate is paid every time.
+
+``value`` is the sum of the per-query minima.  The sidecar
+``BENCH_spread.json`` holds per query ``rep1``, ``min``, ``median``,
+``max``, ``n_runs`` and ``compile`` (JIT seconds and Janino compiles of
+the ``rep1`` run and of the timed runs together), plus the JVM's
+class-data-sharing state (``session.cds_state``).
+
+Usage:
+    python bench.py [-n RUNS] [name ...]
+
+Names default to the headline set, the queries tagged ``bench``.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -16,271 +39,89 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from gordo_components_spark.registry import load_all
 from gordo_components_spark.session import cds_state, compile_counters, compile_delta, get_spark
 
-# Headline set: flagship + one representative per heavy category.
 HEADLINE_TAG = "bench"
-
-# Round-12 promotions (r11 verdict item 6): the r9-r11 operator waves
-# were invisible to the headline total, so four anchors joined —
-# pipe_manifest_upsert (mutation family), agg_countmin_estimate
-# (sketches), ext_media_phash_neardup (multimodal near-dup),
-# ext_eval_retrieval (retrieval eval).  The one-round `subtotal_r11_set`
-# comparability bridge those promotions carried was retired in round 13
-# per the r6/r9 convention: BENCH_r12 and BENCH_r13 share the full
-# 26-query membership, so the headline totals compare directly.
-#
-# Round-15 promotions (r14 verdict item 2): the headline set was
-# overhead-bound at sf0.1 (8 cores beat 32; every PERF scaling ratio
-# ≈ 1) and contained NONE of the registry's real tail — the queries the
-# optimization rounds actually move.  Six tail anchors joined:
-# stream_genuine / stream_cusum_genuine / stream_twa_genuine (the
-# genuine-streaming block, 4 of the top-6 tail seconds),
-# pipe_bpe_merges (iterative corpus rebuild), ml_lifecycle (model
-# plane end-to-end), ext_dedup_canonical_rank (graph-iteration family).
-# Additions-only: every r14 query keeps its name, and the one-round
-# `subtotal_r14_set` bridge below makes the old 26-query total directly
-# comparable until BENCH_r16 shares the full membership.
-_R14_SET = (
-    "agg_countmin_estimate", "agg_groupby_sum", "agg_resample_mean",
-    "agg_seasonal_profile", "agg_time_weighted_avg", "ext_cosine_topk",
-    "ext_dedup_minhash", "ext_dedup_ngram_jaccard", "ext_eval_retrieval",
-    "ext_media_phash_neardup", "ext_tfidf_similar", "flagship_anomaly",
-    "join_align_inner", "join_broadcast_dim", "join_equi_inner",
-    "join_interval_overlap", "ml_drift_ks", "ml_predict_batch",
-    "pipe_manifest_upsert", "scan_bucketed_join", "stream_tumbling_agg",
-    "tpch_q10", "tpch_q3", "tpch_q5", "window_cusum_alerts",
-    "window_rolling_avg",
-)
+RUNS = 3
+LOAD_THRESHOLD = 0.8
+LOAD_TIMEOUT_S = 900.0
+SIDECAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_spread.json")
 
 
-def _prior_round_mins() -> dict[str, float]:
-    """Per-query min times from the newest committed BENCH_r*.json —
-    the reference for the noise-rejection retry (round-8 verdict item 1:
-    the committed r8 artifact was captured on a loaded box and
-    misrecorded the round; a >20%-over-prior min now triggers one extra
-    timed run, keeping the better)."""
-    import glob
-    import re
-    import subprocess
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    # COMMITTED artifacts only (round-9 advisory): the current round's
-    # freshly written BENCH_r{N}.json may already sit in the repo root
-    # when bench.py re-runs within a round — comparing against it (plus
-    # keep-the-better retries) would bias mins downward instead of
-    # comparing against the last committed round.  git ls-files gives
-    # exactly the tracked set; glob is the no-git fallback.
-    try:
-        tracked = subprocess.run(
-            ["git", "-C", here, "ls-files", "BENCH_r*.json"],
-            capture_output=True,
-            text=True,
-            timeout=10,
-        ).stdout.split()
-        paths = [os.path.join(here, p) for p in tracked]
-    except Exception:
-        paths = []
-    if not paths:
-        paths = glob.glob(os.path.join(here, "BENCH_r*.json"))
-    rounds = sorted(
-        paths,
-        key=lambda p: int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
-    )
-    for path in reversed(rounds):
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-            qs = data.get("queries") or (data.get("parsed") or {}).get("queries")
-            if qs:
-                return {k: float(v) for k, v in qs.items()}
-        except Exception:
-            continue
-    return {}
-
-
-def _registry_tail(n: int = 10) -> dict[str, float]:
-    """Top-N slowest registry queries at the bench SF, lifted from the
-    newest COMMITTED full-registry replica artifact (ORACLE_r*_sf01.json
-    already times all ~260 queries; r10 verdict item 7: the headline
-    set's slowest member is ~2 s while the registry's real tail is
-    10-30 s and was invisible round-over-round).  Zero new measurement
-    cost; the tail travels in BENCH_r{N}.json so the judge can diff."""
-    import re
-    import subprocess
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        tracked = subprocess.run(
-            ["git", "-C", here, "ls-files", "ORACLE_r*_sf01.json"],
-            capture_output=True,
-            text=True,
-            timeout=10,
-        ).stdout.split()
-    except Exception:
-        tracked = []
-    rounds = sorted(
-        tracked, key=lambda p: int(re.search(r"r(\d+)", p).group(1))
-    )
-    for path in reversed(rounds):
-        try:
-            with open(os.path.join(here, path)) as fh:
-                results = json.load(fh)["results"]
-            timed = [
-                (r["name"], r["t_spark"]) for r in results if r.get("t_spark")
-            ]
-            timed.sort(key=lambda kv: -kv[1])
-            return {k: v for k, v in timed[:n]}
-        except Exception:
-            continue
-    return {}
-
-
-def _gate_on_load(threshold: float = 0.8, timeout_s: float = 900.0) -> float:
-    """Refuse to capture on a loaded box (round-9 verdict item 3,
-    completing the r8 hygiene item: load1 was *recorded* but capture was
-    not *gated* on it, and the r9 artifact was again taken at load1 =
-    4.22 and overstated every hot query).  Wait — before Spark starts,
-    so the measurement is EXTERNAL load — until the 1-minute load
-    average decays below the threshold, bounded by ``timeout_s`` so an
-    unattended driver run can never hang; if the box never quiets the
-    bench proceeds and the recorded load1 lets the judge discount it.
-
-    Round 12 (r11 verdict what's-wrong #3): threshold tightened 2.0 →
-    0.8 — the r10 and r11 committed artifacts were both captured at
-    load1 ≈ 1.5 and carried phantom +8–17% deltas that judge reruns on
-    a quiet box disproved; 0.8 on a 32-core box is genuinely idle."""
+def _gate_on_load() -> tuple[float, bool]:
+    """Wait, before Spark starts, until external load falls below the
+    threshold or the timeout passes.  Returns load1 and whether it fell."""
     t0 = time.time()
     load = os.getloadavg()[0]
-    while load > threshold and time.time() - t0 < timeout_s:
-        print(
-            f"bench: load1={load:.2f} > {threshold} — waiting for a quiet box",
-            file=sys.stderr,
-        )
+    while load > LOAD_THRESHOLD and time.time() - t0 < LOAD_TIMEOUT_S:
+        print(f"bench: load1={load:.2f} > {LOAD_THRESHOLD}, waiting for a quiet box", file=sys.stderr)
         time.sleep(20)
         load = os.getloadavg()[0]
-    return load
+    return load, load <= LOAD_THRESHOLD
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    load1_start = _gate_on_load()
-    registry = load_all()
-    names = sorted(n for n, s in registry.items() if HEADLINE_TAG in s.tags)
-    # the r14 bridge must not shrink silently: a renamed or dropped member
-    # would read as a phantom speedup against BENCH_r14
-    missing = sorted(set(_R14_SET) - set(names))
-    if missing:
-        raise SystemExit(f"bench: subtotal_r14_set members missing from the headline set: {missing}")
-    spark = get_spark("gordo-spark-bench")
-    # warm-up pass over every headline query: JVM/codegen, Python-worker
-    # fork, and the train cache (ml_predict_batch) are all one-time
-    # process costs — paying them here means the timed spread measures
-    # the PLAN (r3 verdict item 2: predict_batch max/min was 5.7×, all
-    # of it island cold start + first-run training)
-    compiled = {"launch": compile_counters(spark)}
-    for name in names:
-        registry[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+def _run(spark, name: str, fn, sf_dir: str, label: str) -> float:
+    spark.catalog.clearCache()
+    spark.sparkContext.setJobDescription(f"{label}:{name}")
+    t0 = time.time()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.time() - t0
 
-    # best-of-3 with per-query spread (r2 verdict item 4): min is the
-    # headline (measures the plan, not GC/JIT noise); median and max make
-    # round-over-round deltas distinguishable from run variance
-    compiled["warmup"] = compile_counters(spark)
-    times: dict[str, float] = {}
-    spread: dict[str, dict[str, float]] = {}
-    prior = _prior_round_mins()
-    for name in names:
-        def timed_run() -> float:
-            # cold Spark cache each run: operators that persist an
-            # intermediate (minhash signatures, tfidf postings) must pay
-            # their materialization every time, so min measures the PLAN,
-            # not a leftover cache from the previous repetition
-            spark.catalog.clearCache()
-            t0 = time.time()
-            registry[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            return time.time() - t0
 
-        runs = sorted(timed_run() for _ in range(3))
-        # sub-400 ms queries: scheduler/GC jitter is a visible fraction of
-        # the runtime, so 3 samples can misorder rounds (r4 verdict item
-        # 5: stream_tumbling_agg's +11% was within its own spread) — take
-        # two extra samples so min is a stable plan measurement
-        #
-        # round-6 addition: the same misordering bit the ~1 s pair-join
-        # queries (r5's ext_tfidf_similar "+50%" reproduced on the r4
-        # tree — cross-process spread, not code); when max/min exceeds
-        # 1.5x the min is not yet a stable plan measurement either
-        if runs[0] < 0.4 or runs[-1] > 1.5 * runs[0]:
-            runs = sorted(runs + [timed_run() for _ in range(2)])
-        # noise-rejection retry vs the previous committed round (round-8
-        # verdict item 1): a min >20% above the prior round's min on an
-        # UNCHANGED plan is load noise more often than regression — one
-        # extra run, keep the better, so a loaded box cannot misrecord
-        # the round.  Genuine regressions survive (two independent runs
-        # both >20% slower is a real signal).
-        prior_min = prior.get(name)
-        if prior_min is not None and runs[0] > 1.2 * prior_min:
-            runs = sorted(runs + [timed_run()])
-        times[name] = round(runs[0], 4)
-        spread[name] = {
-            "min": round(runs[0], 4),
-            "median": round(runs[len(runs) // 2], 4),
-            "max": round(runs[-1], 4),
-            "n_runs": len(runs),
-        }
-
-    compiled["timed"] = compile_counters(spark)
-
+def bench(spark, fns: dict, sf_dir: str, runs: int, load1: float, gated: bool) -> tuple[dict, dict]:
+    """Time ``fns`` ({name: query fn}) under the protocol above; return
+    the JSON line (``load1`` and ``gated`` come from the gate) and the
+    sidecar."""
+    rows: dict[str, dict] = {}
+    for name, fn in fns.items():
+        c0 = compile_counters(spark)
+        rows[name] = {"rep1": round(_run(spark, name, fn, sf_dir, "rep1"), 4)}
+        rows[name]["compile"] = {"rep1": compile_delta(c0, compile_counters(spark))}
+    for name, fn in fns.items():
+        c0 = compile_counters(spark)
+        samples = sorted(_run(spark, name, fn, sf_dir, f"timed#{i}") for i in range(runs))
+        rows[name].update(
+            min=round(samples[0], 4),
+            median=round(statistics.median(samples), 4),
+            max=round(samples[-1], 4),
+            n_runs=runs,
+        )
+        rows[name]["compile"]["timed"] = compile_delta(c0, compile_counters(spark))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # The one-line output must stay inside the driver's tail-capture
-    # window (round-7 lesson: the per-query spread dict doubled the line
-    # once the set reached 18 queries and BENCH_r07.json recorded
-    # "parsed": null).  Headline fields come FIRST and the spread detail
-    # goes to a sidecar file next to this script — the driver artifact
-    # needs metric/value/queries; the spread is round-bookkeeping.
-    # (The r6-set subtotal was a one-round comparability bridge for the
-    # r7 set change; the r8 set is identical to r7's, so totals are
-    # directly comparable again and the subtotal is retired.)
-    sidecar = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_spread.json"
-    )
-    # compile cost per phase (JIT seconds, Janino compiles): on a local
-    # JVM it is most of a short query's CPU, and it stays off the line
-    compile_phases = {
-        "warmup": compile_delta(compiled["launch"], compiled["warmup"]),
-        "timed": compile_delta(compiled["warmup"], compiled["timed"]),
+    sf = float(sf) if sf.replace(".", "").isdigit() else sf
+    line = {
+        "metric": "headline_queries_total_time",
+        "value": round(sum(r["min"] for r in rows.values()), 4),
+        "unit": "sec",
+        "sf": sf,
+        # load1 is the external load after the gate, before Spark starts;
+        # load1_end includes the bench's own tail
+        "load1": round(load1, 2),
+        "load1_end": round(os.getloadavg()[0], 2),
+        "gated": gated,
+        "queries": {name: r["min"] for name, r in rows.items()},
     }
-    # cds: whether the JVM launched from its class-data-sharing archive
-    # (session.cds_state), without which a cold-start number means little
-    with open(sidecar, "w") as fh:
-        json.dump(
-            {"sf": sf, "spread": spread, "compile": compile_phases, "cds": cds_state()}, fh, indent=1
-        )
-    # 1-minute load average recorded at capture time so a judge can
-    # discount an artifact recorded on a loaded box.
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total_time",
-                "value": round(sum(times.values()), 4),
-                "unit": "sec",
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                # load1 = EXTERNAL load at capture start (post-gate,
-                # pre-Spark); load1_end includes the bench's own tail
-                "load1": round(load1_start, 2),
-                "load1_end": round(os.getloadavg()[0], 2),
-                # one-round comparability bridge for the r15 tail
-                # promotions: the sum over the unchanged r14 26-query
-                # membership, directly comparable to BENCH_r14's value
-                "subtotal_r14_set": round(sum(times[n] for n in _R14_SET), 4),
-                # registry heavy tail (top-10 slowest from the newest
-                # committed full-registry replica) — see _registry_tail
-                "tail_sf01_top10": _registry_tail(),
-                "queries": times,
-            }
-        )
-    )
+    return line, {"sf": sf, "cds": cds_state(), "spread": rows}
+
+
+def main(argv: list[str]) -> None:
+    ap = argparse.ArgumentParser(description="Time registry queries; print one JSON line.")
+    ap.add_argument("-n", dest="runs", type=int, default=RUNS, help=f"timed runs per query after rep1 (default {RUNS})")
+    ap.add_argument("names", nargs="*", help="queries to time (default: the headline set)")
+    args = ap.parse_args(argv)
+    registry = load_all()
+    unknown = sorted(set(args.names) - set(registry))
+    if unknown:
+        ap.error(f"unknown queries: {unknown}")
+    if args.runs < 1:
+        ap.error("-n must be at least 1")
+    names = args.names or sorted(n for n, s in registry.items() if HEADLINE_TAG in s.tags)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    load1, gated = _gate_on_load()
+    spark = get_spark("gordo-spark-bench")
+    line, sidecar = bench(spark, {n: registry[n].fn for n in names}, sf_dir, args.runs, load1, gated)
+    with open(SIDECAR, "w") as fh:
+        json.dump(sidecar, fh, indent=1)
+    print(json.dumps(line))
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -17,6 +17,9 @@ and shared here.
   and of the JVM's class-data-sharing archive (``session.py``), whose
   key is not a fixture: a finished ``tmp`` (a dir or a file) replaces a
   stale ``out`` but never a valid one another process installed first.
+- ``_pid_alive`` is the one liveness probe for a pid that owns a
+  cross-process claim or scratch dir (the archive's dump claim, a
+  stream face's per-process sink).
 - ``persist_tracked`` persists an operator's intermediate frame (the
   MinHash shingle set, the TF-IDF postings) at the configured storage
   level and registers it for ``release_caches()``.  The level is
@@ -213,6 +216,20 @@ def _remove(path: str) -> None:
         os.remove(path)
     except FileNotFoundError:
         pass
+
+
+def _pid_alive(pid: int) -> bool:
+    """``os.kill(pid, 0)``, portable where ``/proc`` is not.  Only "no
+    such process" means dead: EPERM (another user's pid) or any other
+    error answers alive, so a probe that cannot tell never lets a caller
+    delete a live process's files."""
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except OSError:
+        pass
+    return True
 
 
 def rename_into_place(tmp: str, out: str, valid) -> bool:

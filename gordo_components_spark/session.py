@@ -271,7 +271,7 @@ def _claim(path: str) -> bool:
 def _alive(claim: str) -> bool:
     try:
         with open(claim) as fh:
-            return _pid_alive(int(fh.read()))
+            return caches._pid_alive(int(fh.read()))
     except FileNotFoundError:
         return False
     except ValueError:  # not yet written by its creator, or cut short
@@ -279,16 +279,6 @@ def _alive(claim: str) -> bool:
             return time.time() - os.path.getmtime(claim) < 60
         except OSError:
             return False
-
-
-def _pid_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        pass
-    return True
 
 
 def _sweep(keep: str = "") -> None:
@@ -299,7 +289,7 @@ def _sweep(keep: str = "") -> None:
         path = os.path.join(_CDS_DIR, f)
         pid = f.partition(".jsa.tmp-")[2]
         if pid.isdigit():
-            if not _pid_alive(int(pid)):
+            if not caches._pid_alive(int(pid)):
                 _rm(path)
         elif keep and f.endswith(".jsa") and path != keep:
             _rm(path)
@@ -384,8 +374,8 @@ def compile_counters(spark: SparkSession) -> dict[str, float]:
     """Cumulative compile cost of the driver JVM so far: JIT seconds (all
     compiler threads, ``CompilationMXBean``) and the number of Janino
     compiles of generated code (a codegen-cache hit adds none).  Diff two
-    snapshots to charge a phase; bench.py and tools/micro_time.py report
-    warm-up and timed phases this way."""
+    snapshots to charge a phase; bench.py reports each query's rep1 run
+    and its timed runs this way."""
     jvm = spark._jvm
     jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
     janino = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()

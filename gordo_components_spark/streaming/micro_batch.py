@@ -22,7 +22,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from gordo_components_spark.caches import footer_rows
+from gordo_components_spark.caches import _pid_alive, footer_rows
 from gordo_components_spark.session import prepare
 from gordo_components_spark.sources.tables import load_table
 
@@ -35,23 +35,6 @@ _RAW_SCHEMA = T.StructType(
         T.StructField("value", T.DoubleType()),
     ]
 )
-
-
-def _pid_alive(pid: int) -> bool:
-    """Portable liveness probe: ``os.kill(pid, 0)`` works wherever Python
-    does (``/proc`` probing only works on Linux and on other hosts would
-    make every sibling look dead — exactly the concurrent-rmtree race the
-    PID token exists to prevent).  EPERM means the pid exists but belongs
-    to another user — still alive."""
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True
-    except OSError:
-        return True
-    return True
 
 
 def _pid_scoped_dirs(sf_dir: str, prefix: str) -> tuple[str, str]:

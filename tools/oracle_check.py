@@ -95,7 +95,7 @@ def main():
         help="also write per-query results (name, status, rows, t_spark) "
         "as a JSON artifact — the committed in-repo evidence for the "
         "queries outside the driver's 50-slot witness window "
-        "(e.g. ORACLE_r05.json)",
+        "(e.g. ORACLE_r15.json)",
     )
     args = ap.parse_args()
 
