@@ -13,11 +13,13 @@ Protocol, the same for every query and every run:
 3. ``RUNS`` timed repetitions per query, each on a cleared Spark cache
    so a persisted intermediate is paid every time.
 
-``value`` is the sum of the per-query minima.  The sidecar
-``BENCH_spread.json`` holds per query ``rep1``, ``min``, ``median``,
-``max``, ``n_runs`` and ``compile`` (JIT seconds and Janino compiles of
-the ``rep1`` run and of the timed runs together), plus the JVM's
-class-data-sharing state (``session.cds_state``).
+``value`` is the sum of the per-query minima.  A headline run (no
+names given) also writes the tracked sidecar ``BENCH_spread.json``; a
+run of chosen queries prints its line only.  The sidecar holds per
+query ``rep1``, ``min``, ``median``, ``max``, ``n_runs`` and
+``compile`` (JIT seconds and Janino compiles of the ``rep1`` run and of
+the timed runs together), plus the JVM's class-data-sharing state
+(``session.cds_state``).
 
 Usage:
     python bench.py [-n RUNS] [name ...]
@@ -118,8 +120,9 @@ def main(argv: list[str]) -> None:
     load1, gated = _gate_on_load()
     spark = get_spark("gordo-spark-bench")
     line, sidecar = bench(spark, {n: registry[n].fn for n in names}, sf_dir, args.runs, load1, gated)
-    with open(SIDECAR, "w") as fh:
-        json.dump(sidecar, fh, indent=1)
+    if not args.names:  # the tracked sidecar is the headline run's; a chosen set leaves it
+        with open(SIDECAR, "w") as fh:
+            json.dump(sidecar, fh, indent=1)
     print(json.dumps(line))
 
 

@@ -14,10 +14,9 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta, timezone
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from gordo_components_spark.ml.islands import FEATURES, score_models, trained_models
-from gordo_components_spark.sources.tables import load_events_in_range
+from gordo_components_spark.ml.islands import machine_features, score_models, trained_blob_map
 
 
 def make_date_ranges(
@@ -50,22 +49,13 @@ def predict_date_range(
     end: str,
     duration: str = "60 minutes",
 ) -> DataFrame:
-    """Score every machine over [start, end): pushdown range scan →
-    resample features → broadcast batch-trained models → anomaly frame.
-    The write step is the caller's ``df.write.parquet`` (O7)."""
-    ev = load_events_in_range(spark, sf_dir, start, end)
-    feats = (
-        ev.groupBy("user_id", F.window("ts", duration).alias("w"))
-        .agg(
-            F.round(F.avg("value"), 9).alias("value__avg"),
-            F.max("value").alias("value__max"),
-            F.min("value").alias("value__min"),
-            F.count("value").cast("double").alias("value__count"),
-        )
-        .select("user_id", F.col("w.start").alias("bucket"), *FEATURES)
-    )
-    models = trained_models(spark, sf_dir, duration)
-    return score_models(feats, models)
+    """Score every machine over [start, end): the machine features of the
+    pushdown range scan (one SQL text) → broadcast batch-trained models →
+    anomaly frame.  No Spark job runs before the caller's action once the
+    trained models are cached.  The write step is the caller's
+    ``df.write.parquet`` (O7)."""
+    feats = machine_features(spark, sf_dir, duration, start, end)
+    return score_models(feats, trained_blob_map(spark, sf_dir, duration))
 
 
 def watchman_status(registry) -> list[dict]:

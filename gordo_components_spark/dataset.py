@@ -12,6 +12,10 @@ returns Spark DataFrames built from one declarative plan:
     one exchange) + inner dropna → row-filter DSL + buffer (O10/O11) →
     X/y projection (O14) → n_samples gate (O13, only when one is set)
 
+The scan and the matrix are each one SQL text (a buffered filter adds
+the sides of its checkpoint); config text enters only as quoted
+identifiers and escaped literals.
+
 On the fixture, ``asset`` ≈ ``user_id`` (machine) and tag ≈
 ``event_type`` (FIXTURES.md role mapping); a custom ``provider``
 callable swaps in any long-format source with (ts, tag, value) columns.
@@ -22,10 +26,17 @@ from __future__ import annotations
 from datetime import datetime
 from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from gordo_components_spark.functions.filter_dsl import compile_filter
-from gordo_components_spark.functions.timeseries import check_methods, pivot_aggs
+from gordo_components_spark.functions.timeseries import (
+    bucket_sql,
+    check_methods,
+    sql_ident,
+    sql_over,
+    sql_string,
+    window_start,
+)
 from gordo_components_spark.sources.tables import load_events_in_range
 
 
@@ -92,14 +103,14 @@ def _require_tz_aware(name: str, value: datetime | str) -> datetime:
 def _buffered_filter(wide: DataFrame, predicate: str, b: int) -> DataFrame:
     """O11 buffer dilation over the aligned matrix WITHOUT a global
     single-partition window: a row is kept iff no failing row lies within
-    ±``b`` rows of it in timestamp order.
+    ±``b`` rows of it in timestamp order.  Rows come out ordered by ``ts``.
 
     The single-machine matrix has no partition key, so a plain
     ``MIN(ok) OVER (ORDER BY ts ROWS ±b)`` serializes the whole frame on
-    one executor — the scale-killer flagged in round 1.  Instead:
+    one executor.  Instead:
 
-    1. ``repartitionByRange(ts)``, sorted within partitions, tags each row
-       with its partition id and partition-local index
+    1. ``REPARTITION_BY_RANGE(ts)``, sorted within partitions, tags each
+       row with its partition id and partition-local index
        (``monotonically_increasing_id`` minus the id it keeps in bits
        33+).  The P per-partition counts come back to the driver and
        their running sums ride in as a literal ``pid → offset`` map: a
@@ -120,49 +131,33 @@ def _buffered_filter(wide: DataFrame, predicate: str, b: int) -> DataFrame:
     read those blocks.  A local checkpoint lives on the executors and
     cuts the lineage: a lost block fails the query loud instead of being
     silently recomputed under freshly sampled range bounds, and nothing
-    stays cached once the frame is dropped."""
-    from pyspark.sql import Window
-
+    stays cached once the frame is dropped.  Each side of the checkpoint
+    is one SQL text."""
     n_parts = wide.sparkSession.sparkContext.defaultParallelism
-    pid = F.spark_partition_id()
-    marked = (
-        wide.withColumn("__ok", F.when(F.expr(predicate), 1).otherwise(0))
-        .repartitionByRange(n_parts, "ts")
-        .sortWithinPartitions("ts")
-        .withColumn("__pid", pid)
-        .withColumn(
-            "__rn", F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
-        )
-        .localCheckpoint()
-    )
+    cols = ", ".join(sql_ident(c) for c in wide.columns)
+    marked = sql_over(wide, lambda v: f"""
+        SELECT *, spark_partition_id() AS __pid,
+               monotonically_increasing_id() - (CAST(spark_partition_id() AS BIGINT) << 33) AS __lrn
+        FROM (SELECT /*+ REPARTITION_BY_RANGE({n_parts}, ts) */ *,
+                     CASE WHEN {predicate} THEN 1 ELSE 0 END AS __ok FROM {v} SORT BY ts)""")
+    marked = marked.localCheckpoint()
+    counts = sql_over(marked, lambda v: f"SELECT __pid, count(*) FROM {v} GROUP BY __pid")
     pairs, off = [], 0
-    for p, n in sorted(marked.groupBy("__pid").count().collect()):
-        pairs += [F.lit(p), F.lit(off).cast("long")]
+    for p, n in sorted(counts.collect()):
+        pairs.append(f"{p}, {off}L")
         off += n
-    if pairs:  # an empty frame has no partition to offset
-        marked = marked.withColumn(
-            "__rn", F.col("__rn") + F.create_map(*pairs)[F.col("__pid")]
-        )
+    rn = f"__lrn + map({', '.join(pairs)})[__pid]" if pairs else "__lrn"  # empty: no partition
     block = max(64, 8 * b)
-    blk, pos = F.floor(F.col("__rn") / block), F.col("__rn") % block
-    aug = marked.withColumn("__blk", blk).withColumn(
-        "__dest",
-        F.explode(
-            F.array_compact(
-                F.array(
-                    blk,
-                    F.when(pos < b, blk - 1),
-                    F.when(pos >= block - b, blk + 1),
-                )
-            )
-        ),
-    )
-    w_keep = Window.partitionBy("__dest").orderBy("__rn").rowsBetween(-b, b)
-    return (
-        aug.withColumn("__keep", F.min("__ok").over(w_keep))
-        .where((F.col("__dest") == F.col("__blk")) & (F.col("__keep") == 1))
-        .drop("__ok", "__pid", "__rn", "__blk", "__dest", "__keep")
-    )
+    blk = f"floor(__rn / {block})"
+    return sql_over(marked, lambda v: f"""
+        SELECT {cols} FROM (
+          SELECT *, min(__ok) OVER (PARTITION BY __dest ORDER BY __rn
+                                    ROWS BETWEEN {b} PRECEDING AND {b} FOLLOWING) AS __keep
+          FROM (SELECT *, {blk} AS __blk, explode(array_compact(array({blk},
+                         CASE WHEN __rn % {block} < {b} THEN {blk} - 1 END,
+                         CASE WHEN __rn % {block} >= {block - b} THEN {blk} + 1 END))) AS __dest
+                FROM (SELECT *, {rn} AS __rn FROM {v})))
+        WHERE __dest = __blk AND __keep = 1 ORDER BY ts""")
 
 
 class TimeSeriesDataset:
@@ -197,36 +192,13 @@ class TimeSeriesDataset:
         methods = aggregation_methods if isinstance(aggregation_methods, list) else [aggregation_methods]
         self.aggregation_methods = ["avg" if m == "mean" else m for m in methods]
         # the YAML-config path lands HERE, not in functions/timeseries, and
-        # _wide looks each method name up on pyspark.sql.functions — the
-        # whitelist must gate this entry point so config text never does
+        # _wide splices each method name into its SQL text — the whitelist
+        # must gate this entry point so config text never does
         check_methods(self.aggregation_methods)
         self.asset_id = asset_id
         self.provider = provider
 
     # -- plan construction -------------------------------------------------
-
-    def _long_source(self, spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Long-format (ts, tag, value) scan with O9/O12 pushdown."""
-        if self.provider is not None:
-            df = self.provider(spark)
-        else:
-            # pass the aware datetimes straight through: strftime used to
-            # drop a non-UTC offset's information (a +02:00 bound silently
-            # shifted the whole training window two hours); the loader now
-            # normalizes aware datetimes to UTC itself
-            df = load_events_in_range(
-                spark,
-                sf_dir,
-                self.train_start_date,
-                self.train_end_date,
-                exclude=tuple(self.known_filter_periods),
-            ).select(
-                "ts", F.col("event_type").alias("tag"), "value", F.col("user_id").alias("asset")
-            )
-            if self.asset_id is not None:
-                df = df.where(F.col("asset") == self.asset_id)
-        tags = [t.name for t in {*self.tag_list, *self.target_tag_list}]
-        return df.where(F.col("tag").isin(tags))
 
     def _name(self, tag: str, method: str) -> str:
         """The MultiIndex (tag, method) flattens to ``tag__method`` when
@@ -236,26 +208,45 @@ class TimeSeriesDataset:
     def _columns(self, tags) -> list[str]:
         return [self._name(t, m) for t in tags for m in self.aggregation_methods]
 
+    def _tags(self) -> list[str]:
+        """Every requested tag once: X's tags in order, then target-only ones."""
+        return list(dict.fromkeys(t.name for t in (*self.tag_list, *self.target_tag_list)))
+
     def _wide(self, spark: SparkSession, sf_dir: str) -> DataFrame:
-        duration = resolution_to_duration(self.resolution)
-        tags = sorted({t.name for t in {*self.tag_list, *self.target_tag_list}})
+        """The aligned matrix as one SQL text over the long-format source:
+        resample (O18) and alignment pivot (O15) as ONE aggregation, inner
+        dropna, then the row-filter DSL and buffer (O10/O11), by ``ts``;
+        columns ``ts`` and :meth:`_tags`' cells in order."""
+        tags = self._tags()
+        if self.provider is not None:
+            src, tag, where = self.provider(spark), "tag", []
+        else:
+            # aware bounds pass straight through and the loader converts
+            # them to UTC (strftime dropped a +02:00 offset: a 2 h shift)
+            src = load_events_in_range(
+                spark, sf_dir, self.train_start_date, self.train_end_date,
+                exclude=tuple(self.known_filter_periods),
+            )
+            tag = "event_type"
+            where = [] if self.asset_id is None else [f"user_id = {int(self.asset_id)}"]
+        where.append(f"{tag} IN ({', '.join(map(sql_string, tags))})")
         value_cols = self._columns(tags)
-        # resample (O18) and alignment pivot (O15) as ONE aggregation
-        wide = (
-            self._long_source(spark, sf_dir)
-            .groupBy(F.window("ts", duration).getField("start").alias("ts"))
-            .agg(*pivot_aggs("tag", tags, self.aggregation_methods, self._name))
-        )
-        # inner alignment: drop any bucket missing a tag (O15 dropna)
-        wide = wide.dropna(subset=value_cols)
-        # row-filter DSL + buffer (O10/O11)
-        if self.row_filter:
-            predicate = compile_filter(self.row_filter, columns=value_cols + ["ts"])
-            if self.row_filter_buffer_size > 0:
-                wide = _buffered_filter(wide, predicate, self.row_filter_buffer_size)
-            else:
-                wide = wide.where(F.expr(predicate))
-        return wide.orderBy("ts")
+        keep = [f"{sql_ident(c)} IS NOT NULL" for c in value_cols]
+        predicate = self.row_filter and compile_filter(self.row_filter, columns=value_cols + ["ts"])
+        buffered = predicate and self.row_filter_buffer_size > 0
+        if predicate and not buffered:
+            keep.append(f"({predicate})")
+        bucket = window_start(resolution_to_duration(self.resolution))
+        order = "" if buffered else " ORDER BY ts"
+
+        def text(v: str) -> str:
+            cells = bucket_sql(v, bucket, self.aggregation_methods, label="ts", pivot=(tag, tags),
+                               name=lambda t, m: sql_ident(self._name(t, m)),
+                               where=" AND ".join(where))
+            return f"SELECT * FROM ({cells}) WHERE {' AND '.join(keep)}{order}"
+
+        wide = sql_over(src, text)
+        return _buffered_filter(wide, predicate, self.row_filter_buffer_size) if buffered else wide
 
     def require_samples(self, n: int) -> None:
         """O13 gate on ``n`` aligned, filtered rows."""
@@ -269,9 +260,13 @@ class TimeSeriesDataset:
         caller that collects them applies :meth:`require_samples` to the
         row count it collected instead of paying a second evaluation."""
         wide = self._wide(spark, sf_dir)
-        X = wide.select("ts", *self._columns(t.name for t in self.tag_list))
-        y = wide.select("ts", *self._columns(t.name for t in self.target_tag_list))
-        return X, y
+        every = self._columns(self._tags())
+
+        def project(tags) -> DataFrame:
+            cols = self._columns(t.name for t in tags)
+            return wide if cols == every else wide.selectExpr("ts", *map(sql_ident, cols))
+
+        return project(self.tag_list), project(self.target_tag_list)
 
     def get_data(self, spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         """(X, y) aligned wide frames with the O13 gate.  Counting is the

@@ -33,6 +33,8 @@ from __future__ import annotations
 
 import re
 
+from gordo_components_spark.functions.timeseries import sql_ident, sql_string
+
 
 class FilterDSLError(ValueError):
     """Invalid or disallowed filter expression."""
@@ -167,11 +169,10 @@ class _Parser:
             # Spark SQL interprets C-style backslash escapes in string
             # literals (escapedStringLiterals=false default), so a DSL
             # string carrying a literal backslash would silently change
-            # meaning ('a\nb' matched the NEWLINE row — review r6);
-            # pandas eval treats the characters literally, so escape
+            # meaning ('a\nb' matched the NEWLINE row); pandas eval
+            # treats the characters literally, so sql_string escapes
             # both the backslash and the quote
-            body = val[1:-1].replace("\\", "\\\\").replace("'", "''")
-            return "'" + body + "'"
+            return sql_string(val[1:-1])
         if kind == "name":
             if val in _BOOL_LITERALS:
                 return _BOOL_LITERALS[val]
@@ -184,7 +185,7 @@ class _Parser:
         if self.allowed is not None and name not in self.allowed:
             raise FilterDSLError(f"unknown column {name!r}")
         self.columns.append(name)
-        return "`" + name.replace("`", "``") + "`"
+        return sql_ident(name)
 
 
 def compile_filter(expr: str, columns: list[str] | None = None) -> str:

@@ -15,7 +15,9 @@ same bytes).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+import uuid
+
+from pyspark.sql import DataFrame
 
 #: closed vocabulary of the fixture's "tags"; a real deployment derives
 #: this from the tag dimension table (O17) — pivot with an explicit value
@@ -24,8 +26,8 @@ EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
 #: aggregation methods the resampler accepts — YAML configs route method
 #: names here (dataset.py aggregation_methods), and the name is spliced
-#: into F.expr, so an unvalidated string would reach the SQL parser
-#: verbatim (review r6: whitelist instead of trusting config text)
+#: into the SQL text, so an unvalidated string would reach the SQL parser
+#: verbatim (whitelist instead of trusting config text)
 RESAMPLE_METHODS = frozenset(
     {"avg", "mean", "max", "min", "count", "sum", "first", "last",
      "stddev", "stddev_samp", "stddev_pop", "median"}
@@ -44,11 +46,86 @@ def check_methods(methods) -> None:
             )
 
 
-def resample(
-    events: DataFrame,
-    duration: str = "10 minutes",
-    methods: tuple[str, ...] = ("avg",),
-) -> DataFrame:
+def sql_string(value) -> str:
+    """A SQL string literal for ``value``: quotes doubled and backslashes
+    doubled, the way the filter DSL escapes its strings (Spark reads C-style
+    escapes in literals; a value without backslashes renders the same for
+    DuckDB).  Config text therefore never ends the literal."""
+    return "'" + str(value).replace("\\", "\\\\").replace("'", "''") + "'"
+
+
+def sql_ident(name: str) -> str:
+    """A backtick-quoted Spark identifier, backticks doubled (as the filter
+    DSL quotes columns): a tag-derived column name never leaves it."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def window_start(duration: str) -> str:
+    """Spark's bucket expression: the start of ``ts``'s tumbling window."""
+    return f"window(ts, {sql_string(duration)}).start"
+
+
+def bucket_sql(src: str, bucket: str, methods=("avg",), *, keys=(), label="bucket", pivot=None,
+               name=lambda v, m: f"value__{m}", double=False, where="TRUE") -> str:
+    """The bucket aggregate, one text for every face: ``SELECT keys,
+    <bucket> AS label, cells FROM src WHERE where GROUP BY ALL``.
+
+    - **resample** (O18): one ``m(value)`` cell per method;
+    - **pivot** (O15 fused with O18): with ``pivot=(column, values)`` one
+      ``m(CASE WHEN column = v THEN value END)`` cell per (value, method)
+      — a single aggregation and one exchange, where resample-then-pivot
+      pays a second aggregation and the two-phase ``PivotFirst``.  Each
+      cell sees exactly the rows a per-(bucket, value) group would, with
+      two adjustments that keep "value absent from the bucket" NULL as a
+      pivot cell was: ``count`` is NULL (not 0) when no row carries ``v``,
+      and ``first``/``last`` skip the other values' NULLs;
+    - **machine features**: ``double=True`` casts every cell to DOUBLE.
+
+    ``bucket`` is the engine's bucket expression (:func:`window_start`
+    for Spark, ``time_bucket`` for the DuckDB twin :func:`pivot_wide_sql`),
+    so a Spark plan and its oracle render from this one function.
+    ``name(v, m)`` returns the cell's SQL identifier (``v`` is None
+    without ``pivot``); pivot values enter as :func:`sql_string` literals
+    and ``methods`` pass :func:`check_methods`, so config text never
+    changes the statement.  ``first``/``last`` render Spark's
+    ``ignoreNulls`` argument.
+    """
+    check_methods(methods)
+    column, values = pivot or (None, [None])
+    cells = []
+    for v in values:
+        hit = None if v is None else f"{column} = {sql_string(v)}"
+        x = "value" if hit is None else f"CASE WHEN {hit} THEN value END"
+        for m in methods:
+            agg = f"{m}({x}, true)" if hit and m in ("first", "last") else f"{m}({x})"
+            if hit and m == "count":
+                agg = f"CASE WHEN count(CASE WHEN {hit} THEN 1 END) > 0 THEN {agg} END"
+            elif m in _ROUNDED:
+                agg = f"round({agg}, 9)"
+            if double:
+                agg = f"CAST({agg} AS DOUBLE)"
+            cells.append(f"{agg} AS {name(v, m)}")
+    select = ", ".join([*keys, f"{bucket} AS {label}", *cells])
+    return f"SELECT {select} FROM {src} WHERE {where} GROUP BY ALL"
+
+
+def sql_over(src: DataFrame, render) -> DataFrame:
+    """``spark.sql(render(view))`` over a temp view of ``src`` that lives
+    only while the statement is analyzed: the one way a request's SQL
+    text reads a frame.  The view is dropped from the session catalog
+    directly — ``spark.catalog.dropTempView`` (and ``spark.sql(text,
+    src=df)``, which calls it) also uncaches every cached plan equal to
+    the view's, so a caller's persisted ``src`` would lose its cache."""
+    spark = src.sparkSession
+    view = f"__src_{uuid.uuid4().hex}"
+    src.createOrReplaceTempView(view)
+    try:
+        return spark.sql(render(view))
+    finally:
+        spark._jsparkSession.sessionState().catalog().dropTempView(view)
+
+
+def resample(events: DataFrame, duration: str = "10 minutes", methods=("avg",)) -> DataFrame:
     """O18 resample-aggregate: bucket each (machine, tag) series into fixed
     windows, one column per aggregation method (``value__<method>``).
 
@@ -56,49 +133,13 @@ def resample(
     MultiIndex ``(tag, method)`` columns flatten to ``value__method``
     (SURVEY §1.2 type mapping).
     """
-    check_methods(methods)
-    aggs = []
-    for m in methods:
-        col = F.expr(f"{m}(value)")
-        if m in _ROUNDED:
-            col = F.round(col, 9)
-        aggs.append(col.alias(f"value__{m}"))
-    return (
-        events.groupBy("user_id", "event_type", F.window("ts", duration).alias("w"))
-        .agg(*aggs)
-        .select("user_id", "event_type", F.col("w.start").alias("bucket"), *[f"value__{m}" for m in methods])
-    )
+    keys = ("user_id", "event_type")
+    return sql_over(events, lambda v: bucket_sql(v, window_start(duration), methods, keys=keys))
 
 
-def pivot_aggs(key: str, values, methods, name) -> list[Column]:
-    """O18 resample fused with the O15 pivot as conditional aggregation:
-    one ``m(CASE WHEN key = v THEN value END)`` per (pivot value, method),
-    for a single ``groupBy(<bucket>).agg(...)`` — one exchange, where a
-    resample-then-``pivot`` plan pays a second aggregation and the
-    two-phase ``PivotFirst``.  Each aggregate sees exactly the rows a
-    per-(bucket, key) group would, so the cell is the same, with two
-    adjustments to keep "value absent from the bucket" NULL as a pivot
-    cell was: ``count`` is NULL (not 0) when no row carries ``v``, and
-    ``first``/``last`` skip the other values' NULLs (``ignorenulls``).
-
-    ``name(v, m)`` names the output column.
-    """
-    check_methods(methods)
-    out = []
-    for v in values:
-        hit = F.col(key) == F.lit(v)
-        for m in methods:
-            cell = F.when(hit, F.col("value"))
-            if m in ("first", "last"):
-                agg = getattr(F, m)(cell, ignorenulls=True)
-            else:
-                agg = getattr(F, m)(cell)
-            if m == "count":
-                agg = F.when(F.count(F.when(hit, 1)) > 0, agg)
-            elif m in _ROUNDED:
-                agg = F.round(agg, 9)
-            out.append(agg.alias(name(v, m)))
-    return out
+def _pivot_sql(src: str, bucket: str) -> str:
+    return bucket_sql(src, bucket, keys=("user_id",), pivot=("event_type", EVENT_TYPES),
+                      name=lambda t, m: f"evt_{t}")
 
 
 def pivot_wide(events: DataFrame, duration: str = "60 minutes") -> DataFrame:
@@ -106,28 +147,17 @@ def pivot_wide(events: DataFrame, duration: str = "60 minutes") -> DataFrame:
     per tag (``evt_<tag>``), NULL where the tag has no points in-bucket.
 
     Reference: ``_join_timeseries`` inner-joins per-tag resampled series;
-    here one conditional aggregation (:func:`pivot_aggs`, the shape of the
-    DuckDB twin) produces the outer-aligned frame and the caller picks
-    inner (dropna) or as-of (ffill) semantics — same decomposition, one
-    shuffle.  With >1k tags prefer staying long-format until the model
-    boundary (SURVEY §7 hard-part a).
+    here one conditional aggregation (:func:`bucket_sql`, rendered for
+    the DuckDB twin by :func:`pivot_wide_sql`) produces the outer-aligned
+    frame and the caller picks inner (dropna) or as-of (ffill) semantics
+    — same decomposition, one shuffle.  With >1k tags prefer staying
+    long-format until the model boundary (SURVEY §7 hard-part a).
     """
-    return events.groupBy(
-        "user_id", F.window("ts", duration).getField("start").alias("bucket")
-    ).agg(*pivot_aggs("event_type", EVENT_TYPES, ["avg"], lambda t, m: f"evt_{t}"))
+    return sql_over(events, lambda v: _pivot_sql(v, window_start(duration)))
 
 
 def pivot_wide_sql(duration_min: int = 60, alias: str = "wide") -> str:
-    """DuckDB oracle twin of :func:`pivot_wide` as a CTE body."""
-    cases = ",\n           ".join(
-        f"round(avg(CASE WHEN event_type = '{t}' THEN value END), 9) AS evt_{t}"
-        for t in EVENT_TYPES
-    )
-    return f"""
-    {alias} AS (
-      SELECT user_id,
-             time_bucket(INTERVAL '{duration_min} minutes', CAST(ts AS TIMESTAMP)) AS bucket,
-             {cases}
-      FROM events
-      GROUP BY user_id, time_bucket(INTERVAL '{duration_min} minutes', CAST(ts AS TIMESTAMP))
-    )"""
+    """DuckDB oracle twin of :func:`pivot_wide` as a CTE body: the same
+    text with DuckDB's epoch-aligned ``time_bucket`` as the bucket."""
+    bucket = f"time_bucket(INTERVAL '{int(duration_min)} minutes', CAST(ts AS TIMESTAMP))"
+    return f"\n    {alias} AS ({_pivot_sql('events', bucket)})"

@@ -22,12 +22,11 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from gordo_components_spark.functions.timeseries import resample
+from gordo_components_spark.functions.timeseries import bucket_sql, sql_over, window_start
 from gordo_components_spark.plans.pipeline_compiler import from_definition
-from gordo_components_spark.session import prepare
-from gordo_components_spark.sources.tables import load_table
+from gordo_components_spark.sources.tables import load_events_in_range
 
 #: default machine-config model definition (FIXTURES B3 shape)
 DEFAULT_MODEL_DEFINITION = {
@@ -54,22 +53,23 @@ TRAIN_META_SCHEMA = (
 )
 
 
-def machine_features(spark: SparkSession, sf_dir: str, duration: str = "60 minutes") -> DataFrame:
-    """Per-machine feature matrix: O18 multi-agg resample of the machine's
-    stream (one row per active hour, 4 feature columns)."""
-    prepare(spark)
-    ev = load_table(spark, sf_dir, "events")
-    feats = (
-        ev.groupBy("user_id", F.window("ts", duration).alias("w"))
-        .agg(
-            F.round(F.avg("value"), 9).alias("value__avg"),
-            F.max("value").alias("value__max"),
-            F.min("value").alias("value__min"),
-            F.count("value").cast("double").alias("value__count"),
-        )
-        .select("user_id", F.col("w.start").alias("bucket"), *FEATURES)
+def _features_sql(src: str, duration: str = "60 minutes") -> str:
+    """The machine-feature aggregate: O18 multi-agg resample of each
+    machine's stream, one row per active bucket, the :data:`FEATURES`
+    columns as DOUBLE."""
+    return bucket_sql(
+        src, window_start(duration), ("avg", "max", "min", "count"), keys=("user_id",), double=True
     )
-    return feats
+
+
+def machine_features(
+    spark: SparkSession, sf_dir: str, duration: str = "60 minutes", start=None, end=None
+) -> DataFrame:
+    """Per-machine feature matrix over the events in ``[start, end)``
+    (unbounded sides read the whole stream): one SQL text over the
+    pushdown range scan."""
+    ev = load_events_in_range(spark, sf_dir, start, end)
+    return sql_over(ev, lambda v: _features_sql(v, duration))
 
 
 def _spread(df: DataFrame, cols: tuple[str, ...] = ("user_id",)) -> DataFrame:
@@ -154,11 +154,7 @@ def _trained_rows(
 
     from gordo_components_spark.caches import memo
 
-    key = (
-        *_events_key(sf_dir),
-        duration,
-        json.dumps(definition, sort_keys=True, default=str),
-    )
+    key = (*_events_key(sf_dir), duration, json.dumps(definition, sort_keys=True, default=str))
     return memo(
         key, lambda: train_models(machine_features(spark, sf_dir, duration), definition).collect()
     )
@@ -168,15 +164,13 @@ def island_rows_cached(
     spark: SparkSession, sf_dir: str, tag: str, params: str, build
 ) -> list:
     """O39 model-cache discipline for the OTHER per-machine training
-    islands (r14 verdict item 5: ``ml_lifecycle`` re-ran the recurrent
-    and AR fits its standalone faces had already paid — two fits per
-    process for identical model cards).  Same fingerprint contract as
-    ``_trained_rows``: keyed on (island tag, events fingerprint,
-    hyperparams), process-local only — every new process (each
-    bench/oracle invocation) retrains from the parquet inputs at least
-    once; a regenerated fixture under the same basename retrains.
-    ``build()`` returns the island DataFrame; collected rows (the
-    per-machine model cards) are what a registry stores.
+    islands (so ``ml_lifecycle`` does not refit the recurrent and AR
+    model cards its standalone faces already paid for).  Same
+    fingerprint contract as ``_trained_rows``: keyed on (island tag,
+    events fingerprint, hyperparams), process-local only; a regenerated
+    fixture under the same basename retrains.  ``build()`` returns the
+    island DataFrame; collected rows (the per-machine model cards) are
+    what a registry stores.
 
     Row bound: the collect brings ONE row per machine to the driver and
     keeps it for the process — a model card of a few KB (the fitted
@@ -199,10 +193,10 @@ def trained_models(
 def trained_blob_map(
     spark: SparkSession, sf_dir: str, duration: str = "60 minutes", definition: dict | None = None
 ) -> dict:
-    """machine → model blob straight from the train cache — the scoring
-    islands only ever need this dict, and routing it through
-    ``trained_models`` re-ships the cached rows to the executors just to
-    ``collect()`` them back (two extra Spark jobs per scoring query)."""
+    """machine → model blob straight from the train cache: the map every
+    scoring island takes.  Reading it starts no Spark job once the models
+    are cached (collecting it back out of ``trained_models`` started one
+    per scoring request)."""
     return {
         r["machine"]: r["model_pkl_b64"]
         for r in _trained_rows(spark, sf_dir, duration, definition)
@@ -216,25 +210,6 @@ SCORE_SCHEMA = (
 )
 
 
-def _blob_broadcast(features: DataFrame, models):
-    """Ship the machine→model map as a Spark broadcast variable: one copy
-    per executor.  Joining blobs onto the feature stream instead would
-    duplicate each model onto every row — hundreds of MB through the
-    shuffle and Arrow boundary for what is a few MB of weights.  Accepts
-    either a models DataFrame or the prebuilt dict from
-    ``trained_blob_map`` (the cache-hot path with no driver roundtrip)."""
-    if isinstance(models, dict):
-        blob_map = models
-    else:
-        blob_map = {
-            r["machine"]: r["model_pkl_b64"]
-            for r in models.where(F.col("status") == "ok")
-            .select("machine", "model_pkl_b64")
-            .collect()
-        }
-    return features.sparkSession.sparkContext.broadcast(blob_map)
-
-
 _EMPTY_SCORE = pd.DataFrame(
     {
         "machine": pd.Series(dtype="object"),
@@ -246,11 +221,17 @@ _EMPTY_SCORE = pd.DataFrame(
 )
 
 
-def score_models(features: DataFrame, models: "DataFrame | dict") -> DataFrame:
+def score_models(features: DataFrame, models: dict) -> DataFrame:
     """O43/O44: batch inference + anomaly frame.  One grouped island per
     machine unpickles its model (from the executor-local broadcast) once
-    and scores the whole group vectorized."""
-    bc = _blob_broadcast(features, models)
+    and scores the whole group vectorized.
+
+    ``models`` is the machine→blob map (``trained_blob_map``), shipped as
+    a broadcast variable: one copy per executor.  Joining blobs onto the
+    feature stream instead would duplicate each model onto every row —
+    hundreds of MB through the shuffle and Arrow boundary for what is a
+    few MB of weights."""
+    bc = features.sparkSession.sparkContext.broadcast(models)
 
     def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         machine = str(key[0])
@@ -274,13 +255,13 @@ def score_models(features: DataFrame, models: "DataFrame | dict") -> DataFrame:
     return _spread(features).groupBy("user_id").applyInPandas(fn, SCORE_SCHEMA)
 
 
-def predict_batch(features: DataFrame, models: "DataFrame | dict") -> DataFrame:
+def predict_batch(features: DataFrame, models: dict) -> DataFrame:
     """O43 pure inference via ``mapInPandas``: reconstruction columns only
     (the ``model-output`` group of the D6 frame).  Streams Arrow batches
     of *features only* — models come from the executor-local broadcast
     with a per-task unpickle cache (the long-lived-service pattern the
     reference gets from its hot Flask process, §4 P10)."""
-    bc = _blob_broadcast(features, models)
+    bc = features.sparkSession.sparkContext.broadcast(models)
     out_schema = "machine string, bucket timestamp, " + ", ".join(
         f"model_output__{f} double" for f in FEATURES
     )

@@ -384,7 +384,7 @@ def ml_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         # row — ml_train_recurrent itself is registered past the pinned
         # 50-slot window, so the lifecycle face carries its proof of life
         ("recurrent", lambda: ml_train_recurrent(spark, sf_dir), all_ok),
-        ("predict", lambda: predict_batch(feats, trained), produced),
+        ("predict", lambda: predict_batch(feats, trained_blob_map(spark, sf_dir)), produced),
         ("sink", lambda: sink_predictions_parquet(spark, sf_dir), produced),
         (
             "codec",

@@ -20,6 +20,7 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from gordo_components_spark.caches import stat_fingerprint
+from gordo_components_spark.functions.timeseries import sql_ident, sql_over
 from gordo_components_spark.session import prepare
 
 TABLES = (
@@ -39,20 +40,13 @@ TABLES = (
 # FLOOR division.  Plain `div` truncates toward zero, which diverges for
 # pre-1970 (negative) nanos; exact integer floor-div, never ns/1000.0
 # (epoch-ns magnitudes exceed 2^53 and would lose precision in a double).
-_NS_TO_US = "(ts div 1000) - CASE WHEN ts % 1000 < 0 THEN 1 ELSE 0 END"
-
-
-def _normalize_events_ts(df: DataFrame, ts_type: str | None) -> DataFrame:
-    """One definition of the events ts normalization for BOTH loader
-    paths (review-factored: the two copies were the exact class of
-    ns-handling drift CLAUDE.md warns about): raw-long (Spark ≤4.0
-    ``nanosAsLong``) floor-truncates ns→µs; ntz (4.1+ native nanos read)
-    casts to session-TZ timestamp (pinned UTC by ``prepare``)."""
-    if ts_type == "bigint":
-        return df.withColumn("ts", F.timestamp_micros(F.expr(_NS_TO_US)))
-    if ts_type == "timestamp_ntz":
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+# The one events ts normalization, by scan type: raw long (Spark ≤4.0
+# ``nanosAsLong``) floor-truncates ns→µs; ntz (4.1+ native nanos read)
+# casts to session-TZ timestamp (pinned UTC by ``prepare``).
+_TS_SQL = {
+    "bigint": "timestamp_micros((ts div 1000) - CASE WHEN ts % 1000 < 0 THEN 1 ELSE 0 END)",
+    "timestamp_ntz": "CAST(ts AS TIMESTAMP)",
+}
 
 
 # Relation cache: (session identity, path) → (session weakref, stat
@@ -101,10 +95,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     - ``embeddings.embedding`` is ``array<float>``; cast to
       ``array<double>`` once here so all downstream math is double.
     """
+    if name == "events":
+        return load_events_in_range(spark, sf_dir)
     prepare(spark)
     df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        df = _normalize_events_ts(df, dict(df.dtypes).get("ts"))
     if name == "embeddings":
         df = df.withColumn("embedding", F.col("embedding").cast("array<double>"))
     return df
@@ -174,6 +168,8 @@ def load_events_in_range(
     ``[from_us·1000, to_us·1000)`` on the raw long — filter raw first
     (PushedFilters + row-group min/max skipping), convert after.  At
     100 TB this is the difference between a pruned scan and a full one.
+    The scan is one SQL text over the cached relation; ``load_table``
+    serves ``events`` from here with no bounds.
 
     Bounds accept ISO strings or datetimes (YAML configs resolve
     unquoted timestamps to datetime objects — ``known_filter_periods``
@@ -181,29 +177,29 @@ def load_events_in_range(
     offset-bearing ones are converted.
     """
     prepare(spark)
-    df = _read_parquet(spark, f"{sf_dir}/events.parquet")
-    ts_type = dict(df.dtypes).get("ts")
-    raw_is_long = ts_type == "bigint"
+    raw = _read_parquet(spark, f"{sf_dir}/events.parquet")
+    dtypes = raw.dtypes
+    ts_type = dict(dtypes).get("ts")
 
-    def bound(ts_in: str | datetime) -> "F.Column":
+    def bound(ts_in: str | datetime) -> str:
         # the filter literal must match the SCAN's column type, or the
         # comparison casts the column and the predicate never reaches the
         # parquet reader (PushedFilters + row-group min/max skipping):
         # raw epoch-ns long on ≤4.0's nanosAsLong read, a timestamp_ntz
         # literal on 4.1+'s native nanos read (truncation is monotonic,
         # so the µs bound is exact in every representation)
-        if raw_is_long:
-            return F.lit(_epoch_us(ts_in) * 1000)
+        if ts_type == "bigint":
+            return f"{_epoch_us(ts_in) * 1000}L"
         utc_str = _as_utc(ts_in).replace(tzinfo=None).isoformat(sep=" ")
-        if ts_type == "timestamp_ntz":
-            return F.lit(utc_str).cast("timestamp_ntz")
-        return F.lit(utc_str).cast("timestamp")
+        return f"{'TIMESTAMP_NTZ' if ts_type == 'timestamp_ntz' else 'TIMESTAMP'} '{utc_str}'"
 
-    cond = F.lit(True)
+    cond = ["TRUE"]
     if from_ts is not None:
-        cond = cond & (F.col("ts") >= bound(from_ts))
+        cond.append(f"ts >= {bound(from_ts)}")
     if to_ts is not None:
-        cond = cond & (F.col("ts") < bound(to_ts))
-    for lo, hi in exclude:
-        cond = cond & ~((F.col("ts") >= bound(lo)) & (F.col("ts") < bound(hi)))
-    return _normalize_events_ts(df.where(cond), ts_type)
+        cond.append(f"ts < {bound(to_ts)}")
+    cond += [f"NOT (ts >= {bound(lo)} AND ts < {bound(hi)})" for lo, hi in exclude]
+    cols = ", ".join(
+        f"{_TS_SQL.get(ts_type, 'ts')} AS ts" if c == "ts" else sql_ident(c) for c, _ in dtypes
+    )
+    return sql_over(raw, lambda v: f"SELECT {cols} FROM {v} WHERE {' AND '.join(cond)}")

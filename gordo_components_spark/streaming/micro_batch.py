@@ -275,16 +275,15 @@ def run_streaming_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§3.2 restated: the reference's ``POST /anomaly/prediction`` serving
     loop as micro-batch scoring — ``readStream → foreachBatch(score)``.
 
-    Models train once in batch (the builder path), broadcast via their
-    blob frame; each micro-batch joins the stream slice to its machine's
-    model and emits the anomaly frame.  The scoring expressions are the
-    SAME code as batch (``ml/islands.py::score_models``) — that reuse is
-    the point of building scoring as column algebra."""
-    from gordo_components_spark.ml.islands import score_models, trained_models
+    Models train once in batch (the builder path) and ship as the
+    machine→blob map; each micro-batch resamples its stream slice with the
+    batch feature aggregate and scores it with the SAME code as batch
+    (``ml/islands.py::score_models``) — that reuse is the point."""
+    from gordo_components_spark.functions.timeseries import sql_over
+    from gordo_components_spark.ml.islands import _features_sql, score_models, trained_blob_map
 
     prepare(spark)
-    models = trained_models(spark, sf_dir).where("status = 'ok'").cache()
-    models.count()  # materialize once; broadcast into every micro-batch
+    models = trained_blob_map(spark, sf_dir)  # broadcast into every micro-batch
 
     stream = _replay_stream(spark, sf_dir)
     # deploy-shaped sink: each micro-batch APPENDS its scored frame to a
@@ -293,8 +292,6 @@ def run_streaming_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink_dir, chk_dir = _pid_scoped_dirs(sf_dir, "score-")
 
     def score_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as FF
-
         # the per-batch window aggregate is only correct when availableNow
         # delivers the replay as ONE batch (no maxFilesPerTrigger set): a
         # window spanning two batches would emit conflicting partial
@@ -304,24 +301,14 @@ def run_streaming_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "run_streaming_scoring requires single-batch delivery; "
                 f"got micro-batch {batch_id} — windowed features would be partial"
             )
-        feats = (
-            batch_df.groupBy("user_id", FF.window("ts", "60 minutes").alias("w"))
-            .agg(
-                FF.round(FF.avg("value"), 9).alias("value__avg"),
-                FF.max("value").alias("value__max"),
-                FF.min("value").alias("value__min"),
-                FF.count("value").cast("double").alias("value__count"),
-            )
-            .select("user_id", FF.col("w.start").alias("bucket"),
-                    "value__avg", "value__max", "value__min", "value__count")
-        )
+        feats = sql_over(batch_df, _features_sql)
         score_models(feats, models).write.mode("append").parquet(sink_dir)
 
     # seed the sink with a 0-row frame carrying the score schema: a replay
     # source that yields zero micro-batches otherwise never creates the
     # directory and the read below would raise PATH_NOT_FOUND.  Seed from
-    # the static SCORE_SCHEMA — scoring an empty frame would collect and
-    # broadcast every model blob just to materialize a schema.
+    # the static SCORE_SCHEMA — scoring an empty frame would broadcast
+    # every model blob just to materialize a schema.
     from gordo_components_spark.ml.islands import SCORE_SCHEMA
 
     spark.createDataFrame([], SCORE_SCHEMA).write.mode("append").parquet(sink_dir)
@@ -334,7 +321,6 @@ def run_streaming_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    models.unpersist()  # sink is durable parquet; the cache has served its batches
     return spark.read.parquet(sink_dir)
 
 

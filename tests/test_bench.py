@@ -48,3 +48,24 @@ def test_protocol_runs_each_query_rep1_plus_n_times(spark):
     assert line["queries"] == {"join_broadcast_dim": row["min"]} and line["value"] == row["min"]
     assert line["sf"] == 0.01 and line["gated"] is False
     assert (os.stat(bench.SIDECAR).st_mtime_ns if os.path.exists(bench.SIDECAR) else None) == mtime
+
+
+def test_chosen_queries_leave_the_headline_sidecar(monkeypatch, capsys):
+    """``bench.py -n N name…`` prints its line but does not rewrite the
+    tracked ``BENCH_spread.json``: the sidecar is the headline run's."""
+    import json
+
+    calls = []
+
+    def fake_bench(spark, fns, sf_dir, runs, load1, gated):
+        calls.append((sorted(fns), runs))
+        return {"value": 1.0}, {"spread": {}}
+
+    monkeypatch.setattr(bench, "bench", fake_bench)
+    monkeypatch.setattr(bench, "get_spark", lambda *a, **k: None)
+    monkeypatch.setattr(bench, "_gate_on_load", lambda: (0.0, True))
+    mtime = os.stat(bench.SIDECAR).st_mtime_ns if os.path.exists(bench.SIDECAR) else None
+    bench.main(["-n", "1", "join_broadcast_dim"])
+    assert calls == [(["join_broadcast_dim"], 1)]
+    assert json.loads(capsys.readouterr().out) == {"value": 1.0}
+    assert (os.stat(bench.SIDECAR).st_mtime_ns if os.path.exists(bench.SIDECAR) else None) == mtime

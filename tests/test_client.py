@@ -25,6 +25,19 @@ def test_predict_date_range_scores_window_only(spark, sf_dir):
     assert pdf["bucket"].max().isoformat() < "2024-01-15"
 
 
+def test_predict_date_range_runs_no_job_before_collect(spark, sf_dir):
+    """Scoring reads the trained models as the cached machine→blob map:
+    building the request starts no Spark job (collecting them back from a
+    models frame started one)."""
+    start, end = "2024-01-08T00:00:00", "2024-01-15T00:00:00"
+    predict_date_range(spark, sf_dir, start, end).collect()  # warm the model cache
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.numTotalJobs()
+    scored = predict_date_range(spark, sf_dir, start, end)
+    assert dag.numTotalJobs() == before
+    assert scored.count() > 0
+
+
 def test_watchman_status_lists_registry(spark, sf_dir, tmp_path):
     from gordo_components_spark.builder import ModelBuilder
     from gordo_components_spark.plans.model_registry import ModelRegistry

@@ -23,7 +23,9 @@ def test_streaming_scoring_matches_batch(spark, sf_dir):
 
     streamed = run_streaming_scoring(spark, sf_dir).toPandas()
     feats = machine_features(spark, sf_dir)
-    batch = score_models(feats, train_models(feats)).toPandas()
+    blobs = {r["machine"]: r["model_pkl_b64"] for r in train_models(feats).collect()
+             if r["status"] == "ok"}
+    batch = score_models(feats, blobs).toPandas()
     # micro-batches may split a machine's buckets across file boundaries;
     # with the fixture replay (3 files of a month each covering the whole
     # range randomly, processed in one availableNow batch) counts match.

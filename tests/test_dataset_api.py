@@ -153,7 +153,9 @@ def test_buffered_filter_empty_partitions(spark):
 def _long(spark):
     """Hourly buckets 0-5 over long-format readings: ``a`` twice per
     bucket, ``b`` once (plus a NULL reading in bucket 5), ``c`` in even
-    buckets only, ``d`` a NULL reading in bucket 1 and a value in 3."""
+    buckets only, ``d`` a NULL reading in bucket 1 and a value in 3.
+    Tags that SQL text must quote: ``it's`` and ``p q`` once per bucket,
+    ``x-y`` in even buckets, ``a`b`` and ``e\\f`` in odd ones."""
     from datetime import datetime, timedelta, timezone
 
     t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
@@ -161,8 +163,12 @@ def _long(spark):
     for h in range(6):
         at = lambda m: t0 + timedelta(hours=h, minutes=m)  # noqa: E731
         rows += [(at(5), "a", h + 0.25), (at(35), "a", h + 0.75), (at(10), "b", 2.0 * h)]
+        rows += [(at(15), "it's", h + 0.5), (at(45), "p q", 3.0 * h)]
         if h % 2 == 0:
             rows.append((at(20), "c", -1.0 * h))
+            rows.append((at(25), "x-y", 10.0 + h))
+        else:
+            rows += [(at(30), "a`b", -2.0 * h), (at(40), "e\\f", 0.5 * h)]
     rows += [(t0 + timedelta(hours=5, minutes=40), "b", None),
              (t0 + timedelta(hours=1, minutes=50), "d", None),
              (t0 + timedelta(hours=3, minutes=50), "d", 1.0)]
@@ -177,6 +183,8 @@ def _long(spark):
         (["b", "c"], ["last"]),
         (["a", "b", "c"], ["mean", "count"]),
         (["b", "c"], ["first", "last", "max", "median"]),
+        (["a", "it's", "p q", "x-y"], ["mean", "count"]),
+        (["a`b", "e\\f", "it's"], ["last", "max"]),
     ],
 )
 def test_fused_wide_matches_pivot_reference(spark, tags, methods):
@@ -200,8 +208,10 @@ def test_fused_wide_matches_pivot_reference(spark, tags, methods):
         .groupBy(F.col("w.start").alias("ts"))
         .pivot("tag", sorted(tags))
         .agg(*[F.first(m).alias(m) for m in methods])
-        .dropna()
     )
+    # dropna by position: name-based dropna parses each pivoted column
+    # name as an attribute name and rejects one like ``a`b``
+    ref = ref.toDF(*(f"c{i}" for i in range(len(ref.columns)))).dropna()
     got = ds._wide(spark, "")
     assert len(got.columns) == len(ref.columns)
     want = sorted(tuple(r) for r in ref.collect())

@@ -84,7 +84,8 @@ def test_golden_anomaly_pipeline(spark, synthetic_events):
     assert all(m["status"] == "ok" for m in meta.values())
     assert all(m["total_threshold"] > 0 for m in meta.values())
 
-    scored = score_models(feats, models).toPandas()
+    blobs = {m: r["model_pkl_b64"] for m, r in meta.items()}
+    scored = score_models(feats, blobs).toPandas()
     scored["hour"] = (
         (scored["bucket"] - pd.Timestamp("2024-01-01")).dt.total_seconds() // 3600
     ).astype(int)

@@ -223,6 +223,71 @@ def test_dataset_wide_one_aggregate_exchange(spark, sf_dir):
     assert "pivotfirst" not in plan.lower()
 
 
+def _sent_commands(spark, request):
+    """(py4j commands, Spark jobs) that ``request()`` sends and starts
+    before its result is collected.  py4j's memory commands are left out:
+    they release proxies of EARLIER calls whenever Python drops them, so
+    they time the garbage collector, not the request."""
+    import gc
+
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, []
+
+    def counting(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = dag.numTotalJobs()
+    gc.collect()
+    client.send_command = counting
+    try:
+        df = request()
+    finally:
+        del client.send_command
+    n_jobs = dag.numTotalJobs() - jobs
+    assert df.collect()  # non-vacuous: the request returns rows
+    return sum(not c.startswith(MEMORY_COMMAND_NAME) for c in sent), n_jobs
+
+
+@pytest.mark.parametrize(
+    "request_kind, commands, jobs",
+    [("plain", 30, 0), ("filtered", 30, 0), ("buffered", 80, None), ("score", 100, 0)],
+)
+def test_serve_requests_py4j_budget(spark, request_kind, commands, jobs):
+    """A serve request is one SQL text (a buffered filter: one per side of
+    its checkpoint, plus its one offsets job), so its py4j traffic before
+    the caller's collect is a small constant — the Column-API build sent
+    ~550-660 commands per dataset request, ~1130-1280 buffered and
+    ~490-570 plus one Spark job per scoring request (warm session,
+    sf0.01)."""
+    import os
+
+    from gordo_components_spark.client import predict_date_range
+    from gordo_components_spark.dataset import TimeSeriesDataset
+    from tests.conftest import SF_SMALL
+
+    sf = os.path.join(os.path.dirname(SF_SMALL), "sf0.01")
+    kw = {"filtered": dict(row_filter="click > 20"),
+          "buffered": dict(row_filter="click > 20", row_filter_buffer_size=2)}.get(request_kind, {})
+
+    def request():
+        if request_kind == "score":
+            return predict_date_range(spark, sf, "2024-01-03 00:00:00", "2024-01-07 00:00:00")
+        return TimeSeriesDataset(
+            "2024-01-03T00:00:00+00:00", "2024-01-10T00:00:00+00:00",
+            ["view", "click", "purchase"], resolution="30T", **kw,
+        ).get_data(spark, sf)[0]
+
+    _sent_commands(spark, request)  # warm: relation cache, trained models
+    n, n_jobs = _sent_commands(spark, request)
+    assert n <= commands, n
+    if jobs is not None:
+        assert n_jobs == jobs
+
+
 def test_minhash_single_scan_no_corpus_broadcast(spark, sf_dir):
     # the banded corpus must never be a broadcast build side, the shingle
     # arrays must not ride through the band self-join, and the corpus
