@@ -16,6 +16,7 @@ same bytes).
 from __future__ import annotations
 
 import uuid
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame
 
@@ -109,20 +110,28 @@ def bucket_sql(src: str, bucket: str, methods=("avg",), *, keys=(), label="bucke
     return f"SELECT {select} FROM {src} WHERE {where} GROUP BY ALL"
 
 
-def sql_over(src: DataFrame, render) -> DataFrame:
+def sql_over(src: DataFrame | Mapping[str, DataFrame], render) -> DataFrame:
     """``spark.sql(render(view))`` over a temp view of ``src`` that lives
-    only while the statement is analyzed: the one way a request's SQL
-    text reads a frame.  The view is dropped from the session catalog
+    only while the statement is analyzed: the one way a SQL text reads a
+    frame.  ``src`` is one frame (``render`` gets its view name) or a
+    name→frame mapping (``render`` gets the name→view mapping).  View
+    names are unique per call, so threads sharing a session never see
+    each other's frames.  The views are dropped from the session catalog
     directly — ``spark.catalog.dropTempView`` (and ``spark.sql(text,
     src=df)``, which calls it) also uncaches every cached plan equal to
     the view's, so a caller's persisted ``src`` would lose its cache."""
-    spark = src.sparkSession
-    view = f"__src_{uuid.uuid4().hex}"
-    src.createOrReplaceTempView(view)
+    single = not isinstance(src, Mapping)
+    frames = {"": src} if single else src
+    views = {name: f"__src_{uuid.uuid4().hex}" for name in frames}
+    for name, df in frames.items():
+        df.createOrReplaceTempView(views[name])
+    spark = next(iter(frames.values())).sparkSession
     try:
-        return spark.sql(render(view))
+        return spark.sql(render(views[""] if single else views))
     finally:
-        spark._jsparkSession.sessionState().catalog().dropTempView(view)
+        catalog = spark._jsparkSession.sessionState().catalog()
+        for view in views.values():
+            catalog.dropTempView(view)
 
 
 def resample(events: DataFrame, duration: str = "10 minutes", methods=("avg",)) -> DataFrame:

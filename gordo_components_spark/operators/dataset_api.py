@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gordo_components_spark.functions.timeseries import sql_over
 from gordo_components_spark.registry import register
 
 _START, _END = "2024-01-01T00:00:00Z", "2024-01-20T00:00:00Z"
@@ -187,7 +188,6 @@ def udtf_workflow_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(n, _wf_config_yaml(n)) for n in sorted(_WF_MACHINES)],
         "name string, cfg string",
     )
-    configs.createOrReplaceTempView("wf_configs")
-    return spark.sql(
-        "SELECT f.* FROM wf_configs c, LATERAL workflow_expand(c.name, c.cfg) f"
+    return sql_over(
+        configs, lambda v: f"SELECT f.* FROM {v} c, LATERAL workflow_expand(c.name, c.cfg) f"
     )

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from gordo_components_spark.functions.timeseries import sql_over
 from gordo_components_spark.operators.relational import _fshift, _fshift_col
 from gordo_components_spark.registry import register
 from gordo_components_spark.sources.tables import load_table
@@ -2171,9 +2172,9 @@ def pipe_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: digest shuffle + Expand×3 partial aggregation — both
     combinable, no skew (digest keys are uniform), no driver-side
     anything."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents_card_v")
-    return spark.sql(
-        _dataset_card_sql("documents_card_v", "size(split(text, ' '))")
+    return sql_over(
+        load_table(spark, sf_dir, "documents"),
+        lambda v: _dataset_card_sql(v, "size(split(text, ' '))"),
     )
 
 
@@ -2997,13 +2998,11 @@ def pipe_span_corruption_masks(spark: SparkSession, sf_dir: str) -> DataFrame:
     rendered from one template for both engines (clamped at doc end
     with LEAST — partial trailing windows draw shorter spans, never
     out-of-range ones)."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents_span_v"
-    )
-    return spark.sql(
-        _span_mask_sql("div", "instr", "STRING").format(
-            docs="documents_span_v",
+    return sql_over(
+        load_table(spark, sf_dir, "documents"),
+        lambda v: _span_mask_sql("div", "instr", "STRING").format(
+            docs=v,
             ntok="size(split(text, ' '))",
             wids=f"explode(sequence(0, CAST((n_tok - 1) div {_SPAN_WIN} AS INT)))",
-        )
+        ),
     )

@@ -2,19 +2,21 @@
 
 The reference's only join family is time-index alignment (``alignment.py``);
 the harness additionally requires general relational coverage over the
-TPC-H-ish fixtures.  Everything here is a Spark built-in — the work is in
-oracle parity (decimal-exact sums, deterministic LIMIT tiebreaks).
+TPC-H-ish fixtures.  Each query is one SQL text that Spark runs and
+DuckDB checks (``register_sql``) — the work is in oracle parity
+(decimal-exact sums, deterministic LIMIT tiebreaks).
 
-Scale notes: dimension joins broadcast explicitly; fact-fact joins are
-left to AQE (sort-merge w/ skew split); aggregates rely on partial
-(map-side) aggregation, which Catalyst applies automatically.
+Scale notes: fixed-cardinality dimension joins (nation, region)
+broadcast through a hint in the text; fact-fact joins are left to AQE
+(sort-merge w/ skew split); aggregates rely on partial (map-side)
+aggregation, which Catalyst applies automatically.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from gordo_components_spark.registry import register
+from gordo_components_spark.registry import register, register_sql
 from gordo_components_spark.sources.tables import load_table
 
 
@@ -26,16 +28,12 @@ _URGENT = "1-URGENT"  # o_orderpriority (anti join)
 _THETA_DAYS = 30  # range-theta join interval
 
 
-def _dsum(expr: str, alias: str, scale: int = 8) -> "F.Column":
+def _osum(expr: str, alias: str, scale: int = 8) -> str:
     """Exact cross-engine SUM: per-row double arithmetic is bit-identical
     across engines; route the accumulation through DECIMAL so summation
     order can't change the result, then back to DOUBLE.  Safe while the
-    decimal's numerator fits ~2^53; beyond that use :func:`_dsum_cents`
+    decimal's numerator fits ~2^53; beyond that use :func:`_osum_cents`
     (engines' DECIMAL→DOUBLE conversions diverge by 1 ulp)."""
-    return F.expr(f"CAST(SUM(CAST({expr} AS DECIMAL(30,{scale}))) AS DOUBLE)").alias(alias)
-
-
-def _osum(expr: str, alias: str, scale: int = 8) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(30,{scale}))) AS DOUBLE) AS {alias}"
 
 
@@ -47,14 +45,10 @@ def _sum_cents_expr(expr: str) -> str:
     return f"CAST(round(SUM(CAST({expr} AS DECIMAL(30,8))), 2) * 100 AS BIGINT)"
 
 
-def _dsum_cents(expr: str, alias: str) -> "F.Column":
+def _osum_cents(expr: str, alias: str) -> str:
     """Money aggregate as exact integer cents: immune to DECIMAL→DOUBLE
     conversion ulp at any magnitude (found at sf0.1: 7.5e9 sums differed
     in the last ulp between engines)."""
-    return F.expr(_sum_cents_expr(expr)).alias(alias)
-
-
-def _osum_cents(expr: str, alias: str) -> str:
     return f"{_sum_cents_expr(expr)} AS {alias}"
 
 
@@ -78,9 +72,11 @@ def _fshift_col(col: "F.Column") -> "F.Column":
 
 # --- 2.4 aggregations ------------------------------------------------------
 
-@register(
+# sum_qty at scale 0 (here and in agg_rollup): l_quantity is integral, and
+# scale 8's numerator would cross the ~2^53 DECIMAL→DOUBLE ulp cliff near sf1
+register_sql(
     "agg_groupby_sum",
-    oracle=f"""
+    f"""
     SELECT l_returnflag, l_linestatus,
            {_osum('l_quantity', 'sum_qty', scale=0)},
            {_osum_cents('l_extendedprice', 'sum_base_price_cents')},
@@ -89,24 +85,15 @@ def _fshift_col(col: "F.Column") -> "F.Column":
     FROM lineitem
     GROUP BY l_returnflag, l_linestatus
     """,
+    tables=("lineitem",),
     tags=("bench",),
+    doc="""TPC-H Q1-style hash aggregate (map-side partial agg, one shuffle).""",
 )
-def agg_groupby_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-style hash aggregate (map-side partial agg, one shuffle)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag", "l_linestatus").agg(
-        # scale 0: l_quantity is integral; scale 8's numerator would
-        # cross the ~2^53 DECIMAL→DOUBLE ulp cliff near sf1
-        _dsum("l_quantity", "sum_qty", scale=0),
-        _dsum_cents("l_extendedprice", "sum_base_price_cents"),
-        _dsum_cents("l_extendedprice * (1 - l_discount)", "sum_disc_price_cents"),
-        F.count(F.lit(1)).alias("count_order"),
-    )
 
 
-@register(
+register_sql(
     "agg_distinct",
-    oracle="""
+    """
     SELECT 'orders:' || o_orderstatus AS grp,
            COUNT(DISTINCT o_custkey) AS n_d1,
            CAST(0 AS BIGINT) AS n_d2,
@@ -119,58 +106,34 @@ def agg_groupby_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS n_rows
     FROM lineitem GROUP BY l_returnflag
     """,
-)
-def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact distinct aggregation (expand + two-phase agg under AQE),
+    tables=("orders", "lineitem"),
+    doc="""Exact distinct aggregation (expand + two-phase agg under AQE),
     consolidated SURVEY §2.4 face: the orders leg is the plain exact
     COUNT(DISTINCT); the lineitem leg is the cardinality-estimation
     surface declared exact on both engines (the 100 TB path swaps in
     approx_count_distinct(rsd) — same plan shape; the per-variant
-    ``agg_approx_cd`` form stays registered past the witness window)."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    orders_leg = o.groupBy("o_orderstatus").agg(
-        F.countDistinct("o_custkey").alias("n_d1"),
-        F.lit(0).cast("long").alias("n_d2"),
-        F.count(F.lit(1)).alias("n_rows"),
-    ).select(
-        F.concat(F.lit("orders:"), F.col("o_orderstatus")).alias("grp"),
-        "n_d1", "n_d2", "n_rows",
-    )
-    lineitem_leg = li.groupBy("l_returnflag").agg(
-        F.countDistinct("l_partkey").alias("n_d1"),
-        F.countDistinct("l_suppkey").alias("n_d2"),
-        F.count(F.lit(1)).alias("n_rows"),
-    ).select(
-        F.concat(F.lit("lineitem:"), F.col("l_returnflag")).alias("grp"),
-        "n_d1", "n_d2", "n_rows",
-    )
-    return orders_leg.unionByName(lineitem_leg)
+    ``agg_approx_cd`` form stays registered past the witness window).""",
+)
 
 
-@register(
+register_sql(
     "agg_approx_cd",
-    oracle="""
+    """
     SELECT l_returnflag,
            COUNT(DISTINCT l_partkey) AS n_parts,
            COUNT(DISTINCT l_suppkey) AS n_supps
     FROM lineitem GROUP BY l_returnflag
     """,
-)
-def agg_approx_cd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cardinality estimation surface; declared with *exact* distinct on
+    tables=("lineitem",),
+    doc="""Cardinality estimation surface; declared with *exact* distinct on
     both sides per SURVEY §2.4 (approx_count_distinct isn't oracle-stable).
-    The 100 TB path swaps in approx_count_distinct(rsd) — same plan shape."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.countDistinct("l_partkey").alias("n_parts"),
-        F.countDistinct("l_suppkey").alias("n_supps"),
-    )
+    The 100 TB path swaps in approx_count_distinct(rsd) — same plan shape.""",
+)
 
 
-@register(
+register_sql(
     "agg_rollup",
-    oracle=f"""
+    f"""
     SELECT l_returnflag, l_linestatus,
            CAST(GROUPING(l_returnflag) AS INT) AS g_flag,
            CAST(GROUPING(l_linestatus) AS INT) AS g_status,
@@ -179,20 +142,12 @@ def agg_approx_cd(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
+    tables=("lineitem",),
+    doc="""Hierarchical subtotals via ROLLUP (Expand operator; single shuffle).""",
 )
-def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical subtotals via ROLLUP (Expand operator; single shuffle)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        F.grouping("l_returnflag").cast("int").alias("g_flag"),
-        F.grouping("l_linestatus").cast("int").alias("g_status"),
-        # scale 0: l_quantity is integral; scale 8's numerator would
-        # cross the ~2^53 DECIMAL→DOUBLE ulp cliff near sf1
-        _dsum("l_quantity", "sum_qty", scale=0),
-        F.count(F.lit(1)).alias("n"),
-    )
 
 
+# Two bodies: salting is a physical rewrite of the oracle's plain aggregate.
 @register(
     "agg_salted_skew",
     oracle="""
@@ -222,129 +177,94 @@ def agg_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- 2.3 joins -------------------------------------------------------------
 
-@register(
+register_sql(
     "join_equi_inner",
-    oracle=f"""
+    f"""
     SELECT c_mktsegment,
            COUNT(*) AS n_orders,
            {_osum_cents('o_totalprice', 'revenue_cents')}
     FROM orders JOIN customer ON o_custkey = c_custkey
     GROUP BY c_mktsegment
     """,
+    tables=("customer", "orders"),
     tags=("bench",),
-)
-def join_equi_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fact⋈dim equi join; the dim side broadcasts via AQE's size
+    doc="""Fact⋈dim equi join; the dim side broadcasts via AQE's size
     threshold (no fact shuffle at bench SF) — customer GROWS with the
     scale factor, so the hint is deliberately NOT forced: at 100 TB the
     same plan degrades to a shuffle join instead of a multi-GB
-    broadcast (tpch.py broadcast policy)."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    return (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n_orders"), _dsum_cents("o_totalprice", "revenue_cents"))
-    )
+    broadcast (tpch.py broadcast policy).""",
+)
 
 
-@register(
+register_sql(
     "join_left_outer",
-    oracle="""
+    """
     SELECT c_custkey, c_name, COUNT(o_orderkey) AS n_orders
     FROM customer LEFT JOIN orders ON o_custkey = c_custkey
     GROUP BY c_custkey, c_name
     """,
+    tables=("customer", "orders"),
+    doc="""Left outer join preserving customers with zero orders.""",
 )
-def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left outer join preserving customers with zero orders."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey", "c_name")
-        .agg(F.count("o_orderkey").alias("n_orders"))
-    )
 
 
-@register(
+register_sql(
     "join_semi",
-    oracle=f"""
+    f"""
     SELECT c_custkey, c_name FROM customer
     WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > {_BIG_ORDER})
     """,
+    tables=("customer", "orders"),
+    doc="""Left-semi join (EXISTS): customers with any big order.""",
 )
-def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-semi join (EXISTS): customers with any big order."""
-    o = load_table(spark, sf_dir, "orders").where(F.col("o_totalprice") > _BIG_ORDER)
-    c = load_table(spark, sf_dir, "customer")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey", "c_name")
 
 
-@register(
+register_sql(
     "join_anti",
-    oracle=f"""
+    f"""
     SELECT c_custkey, c_name FROM customer
     WHERE NOT EXISTS (SELECT 1 FROM orders
                       WHERE o_custkey = c_custkey AND o_orderpriority = '{_URGENT}')
     """,
+    tables=("customer", "orders"),
+    doc="""Left-anti join (NOT EXISTS): customers with no urgent orders.""",
 )
-def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-anti join (NOT EXISTS): customers with no urgent orders."""
-    o = load_table(spark, sf_dir, "orders").where(F.col("o_orderpriority") == _URGENT)
-    c = load_table(spark, sf_dir, "customer")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey", "c_name")
 
 
-@register(
+register_sql(
     "join_range_theta",
-    oracle=f"""
+    f"""
     SELECT o_orderkey, COUNT(*) AS n_late
     FROM orders JOIN lineitem
       ON l_orderkey = o_orderkey
      AND l_shipdate > o_orderdate + INTERVAL {_THETA_DAYS} DAY
     GROUP BY o_orderkey
     """,
+    tables=("orders", "lineitem"),
+    doc="""Equi key + non-equi range residual (ship >30 days after order).
+    The equi conjunct keeps it a hash/sort-merge join — never a cartesian.""",
 )
-def join_range_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi key + non-equi range residual (ship >30 days after order).
-    The equi conjunct keeps it a hash/sort-merge join — never a cartesian."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    cond = (li.l_orderkey == o.o_orderkey) & (
-        li.l_shipdate > o.o_orderdate + F.expr(f"INTERVAL {_THETA_DAYS} DAYS")
-    )
-    return o.join(li, cond).groupBy("o_orderkey").agg(F.count(F.lit(1)).alias("n_late"))
 
 
-@register(
+register_sql(
     "join_broadcast_dim",
-    oracle="""
-    SELECT r_name, n_name, COUNT(*) AS n_cust
+    """
+    SELECT /*+ BROADCAST(nation, region) */ r_name, n_name, COUNT(*) AS n_cust
     FROM customer
     JOIN nation ON c_nationkey = n_nationkey
     JOIN region ON n_regionkey = r_regionkey
     GROUP BY r_name, n_name
     """,
+    tables=("region", "nation", "customer"),
     tags=("bench",),
+    doc="""O17 tag→asset dimension lookup restated: snowflake dims broadcast
+    (reference ``dataset/sensor_tag.py::normalize_sensor_tags``).""",
 )
-def join_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O17 tag→asset dimension lookup restated: snowflake dims broadcast
-    (reference ``dataset/sensor_tag.py::normalize_sensor_tags``)."""
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region")
-    return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("r_name", "n_name")
-        .agg(F.count(F.lit(1)).alias("n_cust"))
-    )
 
 
-@register(
+register_sql(
     "join_variants",
-    oracle=f"""
+    f"""
     SELECT 'equi_inner' AS variant, c_mktsegment AS grp,
            COUNT(*) AS n, {_osum_cents('o_totalprice', 'cents')}
     FROM orders JOIN customer ON o_custkey = c_custkey
@@ -378,163 +298,89 @@ def join_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND l_shipdate > o_orderdate + INTERVAL {_THETA_DAYS} DAY
     GROUP BY o_orderpriority
     """,
-)
-def join_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Consolidated SURVEY §2.3 addendum face: one witnessed query per
+    tables=("customer", "orders", "lineitem"),
+    doc="""Consolidated SURVEY §2.3 addendum face: one witnessed query per
     join strategy — broadcast-hash equi inner, null-preserving left
     outer, left-semi (EXISTS), left-anti (NOT EXISTS), and equi+range
     theta residual.  Each leg aggregates to a compact (variant, grp, n,
     cents) row set so every join's row-routing is value-witnessed.  The
     per-variant queries (``join_equi_inner`` …) stay registered for the
     replica; plan shapes (broadcast, no-cartesian) are guarded in
-    tests/test_plan_properties.py."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    li = load_table(spark, sf_dir, "lineitem")
-    zero = F.lit(0).cast("long").alias("cents")
-
-    equi = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy(F.col("c_mktsegment").alias("grp"))
-        .agg(F.count(F.lit(1)).alias("n"), _dsum_cents("o_totalprice", "cents"))
-        .select(F.lit("equi_inner").alias("variant"), "grp", "n", "cents")
-    )
-    left = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("n_orders"))
-        .groupBy(
-            F.when(F.col("n_orders") == 0, F.lit("zero_orders"))
-            .otherwise(F.lit("has_orders"))
-            .alias("grp")
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.lit("left_outer").alias("variant"), "grp", "n", zero)
-    )
-    big = o.where(F.col("o_totalprice") > _BIG_ORDER)
-    semi = (
-        c.join(big, c.c_custkey == big.o_custkey, "left_semi")
-        .groupBy(F.col("c_mktsegment").alias("grp"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.lit("semi").alias("variant"), "grp", "n", zero)
-    )
-    urgent = o.where(F.col("o_orderpriority") == _URGENT)
-    anti = (
-        c.join(urgent, c.c_custkey == urgent.o_custkey, "left_anti")
-        .groupBy(F.col("c_mktsegment").alias("grp"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.lit("anti").alias("variant"), "grp", "n", zero)
-    )
-    theta_cond = (li.l_orderkey == o.o_orderkey) & (
-        li.l_shipdate > o.o_orderdate + F.expr(f"INTERVAL {_THETA_DAYS} DAYS")
-    )
-    theta = (
-        o.join(li, theta_cond)
-        .groupBy(F.col("o_orderpriority").alias("grp"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.lit("range_theta").alias("variant"), "grp", "n", zero)
-    )
-    return equi.unionByName(left).unionByName(semi).unionByName(anti).unionByName(theta)
+    tests/test_plan_properties.py.""",
+)
 
 
 # --- 2.6 sorts / limits ----------------------------------------------------
 
-@register(
+register_sql(
     "sort_by_ts",
-    oracle="""
+    """
     SELECT event_id, user_id, ts,
            CAST(ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS seq
     FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events)
     """,
-)
-def sort_by_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O26 timestamp-ordered sequencing. Partitioned by machine (user_id)
+    tables=("events",),
+    doc="""O26 timestamp-ordered sequencing. Partitioned by machine (user_id)
     so the sort is shuffle-parallel — a single global ORDER BY would
-    serialize on one partition at 100 TB."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.expr(
-            "CAST(ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT)"
-        ).alias("seq"),
-    )
+    serialize on one partition at 100 TB.""",
+)
 
 
-@register(
+register_sql(
     "sort_limit_topk",
-    oracle="""
+    """
     SELECT o_orderkey, o_custkey, o_totalprice
     FROM orders
     ORDER BY o_totalprice DESC, o_orderkey
     LIMIT 25
     """,
+    tables=("orders",),
+    doc="""O27 top-k: TakeOrderedAndProject (per-partition heap + driver merge,
+    no full sort). Unique o_orderkey tiebreak makes the k-set deterministic.""",
 )
-def sort_limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O27 top-k: TakeOrderedAndProject (per-partition heap + driver merge,
-    no full sort). Unique o_orderkey tiebreak makes the k-set deterministic."""
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.select("o_orderkey", "o_custkey", "o_totalprice")
-        .orderBy(F.col("o_totalprice").desc(), "o_orderkey")
-        .limit(25)
-    )
 
 
 # --- 2.7 set operations ----------------------------------------------------
 
-@register(
+register_sql(
     "set_union",
-    oracle="""
+    """
     SELECT c_nationkey AS nationkey, 'customer' AS side FROM customer
     UNION ALL
     SELECT s_nationkey AS nationkey, 'supplier' AS side FROM supplier
     """,
+    tables=("customer", "supplier"),
+    doc="""UNION ALL (no shuffle — pure concatenation).""",
 )
-def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION ALL via unionByName (no shuffle — pure concatenation)."""
-    c = load_table(spark, sf_dir, "customer")
-    s = load_table(spark, sf_dir, "supplier")
-    return c.select(F.col("c_nationkey").alias("nationkey"), F.lit("customer").alias("side")).unionByName(
-        s.select(F.col("s_nationkey").alias("nationkey"), F.lit("supplier").alias("side"))
-    )
 
 
-@register(
+register_sql(
     "set_intersect",
-    oracle="""
+    """
     SELECT c_nationkey AS nationkey FROM customer
     INTERSECT
     SELECT s_nationkey AS nationkey FROM supplier
     """,
+    tables=("customer", "supplier"),
+    doc="""INTERSECT (distinct semantics on both engines).""",
 )
-def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT (distinct semantics on both engines)."""
-    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return c.intersect(s)
 
 
-@register(
+register_sql(
     "set_except",
-    oracle="""
+    """
     SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
     EXCEPT
     SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
     """,
+    tables=("orders",),
+    doc="""EXCEPT (distinct): customers with open but no finished orders.""",
 )
-def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT (distinct): customers with open but no finished orders."""
-    o = load_table(spark, sf_dir, "orders")
-    open_ = o.where(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("custkey"))
-    fin = o.where(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("custkey"))
-    return open_.subtract(fin)
 
 
-@register(
+register_sql(
     "set_ops",
-    oracle="""
+    """
     SELECT 'union:customer' AS variant, c_nationkey AS key FROM customer
     UNION ALL
     SELECT 'union:supplier' AS variant, s_nationkey AS key FROM supplier
@@ -549,23 +395,10 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
       EXCEPT
       SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F')
     """,
-)
-def set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Consolidated SURVEY §2.7 face: UNION ALL (pure concatenation, no
+    tables=("customer", "supplier", "orders"),
+    doc="""Consolidated SURVEY §2.7 face: UNION ALL (pure concatenation, no
     shuffle), INTERSECT and EXCEPT (distinct semantics, hash-partitioned
     on the full row) witnessed in one query; per-variant forms
     (``set_union``/``set_intersect``/``set_except``) stay registered for
-    the replica."""
-    c = load_table(spark, sf_dir, "customer")
-    s = load_table(spark, sf_dir, "supplier")
-    o = load_table(spark, sf_dir, "orders")
-    cn = c.select(F.col("c_nationkey").alias("key"))
-    sn = s.select(F.col("s_nationkey").alias("key"))
-    union_leg = cn.select(F.lit("union:customer").alias("variant"), "key").unionByName(
-        sn.select(F.lit("union:supplier").alias("variant"), "key")
-    )
-    intersect_leg = cn.intersect(sn).select(F.lit("intersect").alias("variant"), "key")
-    open_ = o.where(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("key"))
-    fin = o.where(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("key"))
-    except_leg = open_.subtract(fin).select(F.lit("except").alias("variant"), "key")
-    return union_leg.unionByName(intersect_leg).unionByName(except_leg)
+    the replica.""",
+)

@@ -7,8 +7,14 @@ fixture actually has.  They exercise the join-ordering / broadcast /
 partial-agg machinery end-to-end and anchor the bench against
 recognizable workloads.
 
+Each query is one SQL text that Spark runs and DuckDB checks
+(``register_sql``).  Catalyst keeps a text's join order (no cost-based
+reordering), so each FROM clause starts at the fact table and joins
+outward in the order the plan should take.
+
 Scale notes: only FIXED-cardinality sides carry an explicit broadcast
-hint — nation (25 rows), region (5), and 1-row scalar folds, which stay
+hint in the text (``/*+ BROADCAST(nation) */``, a comment to DuckDB) —
+nation (25 rows), region (5), and 1-row scalar folds, which stay
 driver-small at any SF.  Sides that GROW with the scale factor
 (customer, supplier, part, filtered/derived variants) are left to AQE's
 size threshold: at bench SF they auto-broadcast to the identical plan,
@@ -20,59 +26,35 @@ revenue sums ride the DECIMAL-exact convention.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from gordo_components_spark.operators.relational import (
-    _dsum,
-    _dsum_cents,
-    _fshift,
-    _fshift_expr,
-    _osum,
-    _osum_cents,
-    _sum_cents_expr,
-)
-from gordo_components_spark.registry import register
-from gordo_components_spark.sources.tables import load_table
+from gordo_components_spark.operators.relational import _fshift, _osum, _osum_cents, _sum_cents_expr
+from gordo_components_spark.registry import register_sql
 
 _REV = _sum_cents_expr("l_extendedprice * (1 - l_discount)")
 
 
-@register(
+register_sql(
     "tpch_q3",
-    oracle=f"""
+    f"""
     SELECT l_orderkey, o_orderdate,
            {_REV} AS revenue_cents
-    FROM customer
-    JOIN orders   ON c_custkey = o_custkey
-    JOIN lineitem ON l_orderkey = o_orderkey
+    FROM lineitem
+    JOIN orders   ON l_orderkey = o_orderkey
+    JOIN customer ON o_custkey = c_custkey
     WHERE c_mktsegment = 'BUILDING'
       AND o_orderdate < TIMESTAMP '2000-01-01 00:00:00'
       AND l_shipdate  > TIMESTAMP '2000-01-01 00:00:00'
     GROUP BY l_orderkey, o_orderdate
     """,
+    tables=("customer", "orders", "lineitem"),
     tags=("bench",),
+    doc="""Q3 shipping-priority shape: unshipped revenue of a segment's
+    orders placed before the cutoff.""",
 )
-def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q3 shipping-priority shape: unshipped revenue of a segment's
-    orders placed before the cutoff."""
-    c = load_table(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    o = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") < F.lit("2000-01-01").cast("timestamp")
-    )
-    li = load_table(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") > F.lit("2000-01-01").cast("timestamp")
-    )
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(F.expr(_REV).alias("revenue_cents"))
-    )
 
 
-@register(
+register_sql(
     "tpch_q6",
-    oracle=f"""
+    f"""
     SELECT {_osum_cents('l_extendedprice * l_discount', 'revenue_cents')},
            COUNT(*) AS n_items
     FROM lineitem
@@ -81,100 +63,57 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
     """,
-)
-def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q6 forecast-revenue-change: pure predicate + aggregate — the
+    tables=("lineitem",),
+    doc="""Q6 forecast-revenue-change: pure predicate + aggregate — the
     canonical scan-pushdown benchmark (every predicate reaches the
-    parquet scan; no shuffle beyond the final single-row agg)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.where(
-        (F.col("l_shipdate") >= F.lit("1998-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1999-01-01").cast("timestamp"))
-        & (F.col("l_discount") >= 0.05)
-        & (F.col("l_discount") <= 0.07)
-        & (F.col("l_quantity") < 24)
-    ).agg(
-        _dsum_cents("l_extendedprice * l_discount", "revenue_cents"),
-        F.count(F.lit(1)).alias("n_items"),
-    )
+    parquet scan; no shuffle beyond the final single-row agg).""",
+)
 
 
-@register(
+register_sql(
     "tpch_q5",
-    oracle=f"""
-    SELECT n_name, {_REV} AS revenue_cents
-    FROM customer
-    JOIN orders   ON c_custkey = o_custkey
-    JOIN lineitem ON l_orderkey = o_orderkey
+    f"""
+    SELECT /*+ BROADCAST(nation, region) */ n_name, {_REV} AS revenue_cents
+    FROM lineitem
+    JOIN orders   ON l_orderkey = o_orderkey
+    JOIN customer ON o_custkey = c_custkey
     JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
     JOIN nation   ON s_nationkey = n_nationkey
     JOIN region   ON n_regionkey = r_regionkey
     WHERE r_name = 'ASIA'
     GROUP BY n_name
     """,
-    tags=("bench",),  # round-6: Q3/Q5/Q10 trio promoted per module docstring
+    tables=("region", "nation", "customer", "supplier", "orders", "lineitem"),
+    tags=("bench",),
+    doc="""Q5 local-supplier volume: revenue where customer and supplier
+    share a nation inside one region (the classic snowflake 6-way).""",
 )
-def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q5 local-supplier volume: revenue where customer and supplier
-    share a nation inside one region (the classic snowflake 6-way)."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(
-            s,
-            (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
-        )
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("n_name")
-        .agg(F.expr(_REV).alias("revenue_cents"))
-    )
 
 
-@register(
+register_sql(
     "tpch_q10",
-    oracle=f"""
-    SELECT c_custkey, c_name, n_name,
+    f"""
+    SELECT /*+ BROADCAST(nation) */ c_custkey, c_name, n_name,
            {_REV} AS revenue_cents
-    FROM customer
-    JOIN orders   ON c_custkey = o_custkey
-    JOIN lineitem ON l_orderkey = o_orderkey
+    FROM lineitem
+    JOIN orders   ON l_orderkey = o_orderkey
+    JOIN customer ON o_custkey = c_custkey
     JOIN nation   ON c_nationkey = n_nationkey
     WHERE l_returnflag = 'R'
       AND o_orderdate >= TIMESTAMP '1998-01-01 00:00:00'
       AND o_orderdate <  TIMESTAMP '1999-01-01 00:00:00'
     GROUP BY c_custkey, c_name, n_name
     """,
-    tags=("bench",),  # round-6: Q3/Q5/Q10 trio promoted per module docstring
+    tables=("nation", "customer", "orders", "lineitem"),
+    tags=("bench",),
+    doc="""Q10 returned-items report: per-customer lost revenue from returns
+    in a window.""",
 )
-def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q10 returned-items report: per-customer lost revenue from returns
-    in a window."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1998-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp"))
-    )
-    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    n = load_table(spark, sf_dir, "nation")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(F.expr(_REV).alias("revenue_cents"))
-    )
 
 
-@register(
+register_sql(
     "tpch_q1",
-    oracle=f"""
+    f"""
     SELECT l_returnflag, l_linestatus,
            {_osum('l_quantity', 'sum_qty', scale=0)},
            {_osum_cents('l_extendedprice', 'sum_base_price_cents')},
@@ -187,36 +126,16 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_shipdate <= TIMESTAMP '2001-06-01 00:00:00'
     GROUP BY l_returnflag, l_linestatus
     """,
-)
-def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q1 pricing summary in full (agg_groupby_sum is the reduced face):
+    tables=("lineitem",),
+    doc="""Q1 pricing summary in full (agg_groupby_sum is the reduced face):
     charge includes tax; means are exact-integer-numerator divisions with
-    floor-shift rounding so both engines agree bit-for-bit."""
-    li = load_table(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") <= F.lit("2001-06-01").cast("timestamp")
-    )
-    return li.groupBy("l_returnflag", "l_linestatus").agg(
-        # scale 0: l_quantity is integral (same headroom fix as
-        # agg_groupby_sum — scale 8 crosses the 2^53 cliff near sf5)
-        _dsum("l_quantity", "sum_qty", scale=0),
-        _dsum_cents("l_extendedprice", "sum_base_price_cents"),
-        _dsum_cents("l_extendedprice * (1 - l_discount)", "sum_disc_price_cents"),
-        _dsum_cents("l_extendedprice * (1 - l_discount) * (1 + l_tax)", "sum_charge_cents"),
-        F.expr(
-            _fshift_expr("CAST(SUM(CAST(l_quantity AS DECIMAL(30,0))) AS DOUBLE) / COUNT(*)")
-        ).alias("avg_qty"),
-        F.expr(
-            _fshift_expr(
-                f"CAST({_sum_cents_expr('l_extendedprice')} AS DOUBLE) / 100.0 / COUNT(*)"
-            )
-        ).alias("avg_price"),
-        F.count(F.lit(1)).alias("count_order"),
-    )
+    floor-shift rounding so both engines agree bit-for-bit.""",
+)
 
 
-@register(
+register_sql(
     "tpch_q4",
-    oracle="""
+    """
     SELECT o_orderpriority, COUNT(*) AS order_count
     FROM orders
     WHERE o_orderdate >= TIMESTAMP '1998-01-01 00:00:00'
@@ -226,67 +145,40 @@ def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AND l_shipdate > o_orderdate + INTERVAL 45 DAY)
     GROUP BY o_orderpriority
     """,
-)
-def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q4 order-priority checking, adapted to the fixture's columns (no
+    tables=("orders", "lineitem"),
+    doc="""Q4 order-priority checking, adapted to the fixture's columns (no
     l_commitdate/l_receiptdate — lateness is ship > order + 45 days):
     EXISTS becomes a left-semi join with an equi key + range residual, so
-    it stays a hash join and the fact table is the probe side."""
-    o = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1998-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp"))
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    cond = (li.l_orderkey == o.o_orderkey) & (
-        li.l_shipdate > o.o_orderdate + F.expr("INTERVAL 45 DAYS")
-    )
-    return (
-        o.join(li, cond, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-    )
+    it stays a hash join and the fact table is the probe side.""",
+)
 
 
-@register(
+register_sql(
     "tpch_q12",
-    oracle="""
+    """
     SELECT l_linestatus,
            SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                     THEN 1 ELSE 0 END) AS high_line_count,
            SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
                     THEN 1 ELSE 0 END) AS low_line_count
-    FROM orders JOIN lineitem ON l_orderkey = o_orderkey
+    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
       AND l_shipdate <  TIMESTAMP '1999-01-01 00:00:00'
     GROUP BY l_linestatus
     """,
-)
-def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q12 shipping-mode/priority matrix, adapted (no l_shipmode —
+    tables=("orders", "lineitem"),
+    doc="""Q12 shipping-mode/priority matrix, adapted (no l_shipmode —
     l_linestatus is the grouping axis): conditional counts ride the one
-    orders⋈lineitem shuffle; priorities are CASE sums, not extra scans."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit("1998-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1999-01-01").cast("timestamp"))
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
-    )
+    orders⋈lineitem shuffle; priorities are CASE sums, not extra scans.""",
+)
 
 
 _Q14_PROMO = "CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0 END"
 
 
-@register(
+register_sql(
     "tpch_q14",
-    oracle=f"""
+    f"""
     SELECT {_osum_cents(_Q14_PROMO, 'promo_cents')},
            {_osum_cents('l_extendedprice * (1 - l_discount)', 'total_cents')},
            {_fshift(
@@ -297,70 +189,35 @@ _Q14_PROMO = "CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount)
     WHERE l_shipdate >= TIMESTAMP '1998-06-01 00:00:00'
       AND l_shipdate <  TIMESTAMP '1998-07-01 00:00:00'
     """,
-)
-def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q14 promotion effect: the percent is a division of two EXACT
+    tables=("part", "lineitem"),
+    doc="""Q14 promotion effect: the percent is a division of two EXACT
     integer-cent aggregates (cast to double under 2⁵³, so bit-identical),
-    then floor-shift rounded; part broadcasts."""
-    li = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit("1998-06-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-07-01").cast("timestamp"))
-    )
-    p = load_table(spark, sf_dir, "part")
-    pc = _sum_cents_expr(_Q14_PROMO)
-    tc = _sum_cents_expr("l_extendedprice * (1 - l_discount)")
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .agg(
-            _dsum_cents(_Q14_PROMO, "promo_cents"),
-            _dsum_cents("l_extendedprice * (1 - l_discount)", "total_cents"),
-            F.expr(
-                _fshift_expr(f"100.0 * CAST({pc} AS DOUBLE) / CAST({tc} AS DOUBLE)")
-            ).alias("promo_pct"),
-        )
-    )
+    then floor-shift rounded; part broadcasts.""",
+)
 
 
-@register(
+register_sql(
     "tpch_q18",
-    oracle=f"""
+    f"""
     SELECT c_custkey, c_name, o_orderkey, o_orderdate,
            {_osum('l_quantity', 'sum_qty')}
-    FROM customer
-    JOIN orders   ON c_custkey = o_custkey
-    JOIN lineitem ON l_orderkey = o_orderkey
+    FROM lineitem
+    JOIN orders   ON l_orderkey = o_orderkey
+    JOIN customer ON o_custkey = c_custkey
     GROUP BY c_custkey, c_name, o_orderkey, o_orderdate
     HAVING SUM(CAST(l_quantity AS DECIMAL(30,8))) > 250
     ORDER BY sum_qty DESC, o_orderkey
     LIMIT 25
     """,
+    tables=("customer", "orders", "lineitem"),
+    doc="""Q18 large-volume customers: HAVING on an exact decimal sum, then
+    TakeOrderedAndProject top-25 with a unique orderkey tiebreak.""",
 )
-def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q18 large-volume customers: HAVING on an exact decimal sum, then
-    TakeOrderedAndProject top-25 with a unique orderkey tiebreak."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .groupBy("c_custkey", "c_name", "o_orderkey", "o_orderdate")
-        # scale 0: l_quantity is integral (same headroom fix as
-        # agg_groupby_sum — scale 8 crosses the 2^53 cliff near sf5).
-        # The HAVING filters on sum_qty directly: per-order quantity
-        # sums are far below 2^53, so the DECIMAL→DOUBLE cast is exact
-        # and a second aggregate buffer for the filter buys nothing
-        # (round-6 simplification of the old __dq re-aggregation).
-        .agg(_dsum("l_quantity", "sum_qty", scale=0))
-        .where(F.col("sum_qty") > 250)
-        .orderBy(F.col("sum_qty").desc(), "o_orderkey")
-        .limit(25)
-    )
 
 
-@register(
+register_sql(
     "tpch_q19",
-    oracle=f"""
+    f"""
     SELECT {_osum_cents('l_extendedprice * (1 - l_discount)', 'revenue_cents')},
            COUNT(*) AS n_items
     FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -368,40 +225,25 @@ def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 20)
        OR (p_brand = 'Brand#3'  AND p_size BETWEEN 1 AND 35 AND l_quantity BETWEEN 20 AND 30)
     """,
-)
-def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q19 discounted revenue under disjunctive brand/size/quantity arms
+    tables=("part", "lineitem"),
+    doc="""Q19 discounted revenue under disjunctive brand/size/quantity arms
     (adapted: no l_shipmode/l_shipinstruct in the fixture).  The OR-of-ANDs
-    is a post-join residual; the join key stays equi so part broadcasts."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part")
-    arm = lambda brand, smax, qlo, qhi: (  # noqa: E731
-        (F.col("p_brand") == brand)
-        & F.col("p_size").between(1, smax)
-        & F.col("l_quantity").between(qlo, qhi)
-    )
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .where(arm("Brand#12", 15, 1, 11) | arm("Brand#23", 25, 10, 20) | arm("Brand#3", 35, 20, 30))
-        .agg(
-            _dsum_cents("l_extendedprice * (1 - l_discount)", "revenue_cents"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
+    is a post-join residual; the join key stays equi so part broadcasts.""",
+)
 
 
-@register(
+register_sql(
     "tpch_q7",
-    oracle=f"""
+    f"""
     SELECT supp_nation, cust_nation, l_year,
            {_osum_cents('volume', 'revenue_cents')}
     FROM (
-      SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+      SELECT /*+ BROADCAST(n1, n2) */ n1.n_name AS supp_nation, n2.n_name AS cust_nation,
              CAST(year(l_shipdate) AS INT) AS l_year,
              l_extendedprice * (1 - l_discount) AS volume
-      FROM supplier
-      JOIN lineitem ON s_suppkey = l_suppkey
+      FROM lineitem
       JOIN orders   ON o_orderkey = l_orderkey
+      JOIN supplier ON s_suppkey = l_suppkey
       JOIN customer ON c_custkey = o_custkey
       JOIN nation n1 ON s_nationkey = n1.n_nationkey
       JOIN nation n2 ON c_nationkey = n2.n_nationkey
@@ -410,42 +252,17 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY supp_nation, cust_nation, l_year
     """,
-)
-def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q7 volume shipping between a nation pair: the two nation dims
+    tables=("nation", "customer", "supplier", "orders", "lineitem"),
+    doc="""Q7 volume shipping between a nation pair: the two nation dims
     broadcast twice under different roles (supplier vs customer side);
     the disjunctive pair predicate is a post-join residual on broadcast
-    rows, so the fact tables still join hash-only."""
-    s = load_table(spark, sf_dir, "supplier")
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    n1 = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
-    )
-    n2 = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation")
-    )
-    pair = (
-        (F.col("supp_nation") == "NATION_3") & (F.col("cust_nation") == "NATION_7")
-    ) | ((F.col("supp_nation") == "NATION_7") & (F.col("cust_nation") == "NATION_3"))
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
-        .where(pair)
-        .groupBy(
-            "supp_nation", "cust_nation", F.year("l_shipdate").cast("int").alias("l_year")
-        )
-        .agg(_dsum_cents("l_extendedprice * (1 - l_discount)", "revenue_cents"))
-    )
+    rows, so the fact tables still join hash-only.""",
+)
 
 
-@register(
+register_sql(
     "tpch_q13",
-    oracle="""
+    """
     SELECT c_count, COUNT(*) AS custdist
     FROM (
       SELECT c_custkey, COUNT(o_orderkey) AS c_count
@@ -455,25 +272,17 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY c_count
     """,
-)
-def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q13 customer order-count distribution: left join preserving
+    tables=("customer", "orders"),
+    doc="""Q13 customer order-count distribution: left join preserving
     zero-order customers (the point of Q13), then a histogram of the
     per-customer counts — two aggregations, the second over the first's
-    tiny output."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").where(F.col("o_orderpriority") != "5-LOW")
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
+    tiny output.""",
+)
 
 
-@register(
+register_sql(
     "tpch_q17",
-    oracle=f"""
+    f"""
     SELECT {_osum_cents('l_extendedprice', 'small_lot_cents')},
            COUNT(*) AS n_items
     FROM lineitem
@@ -486,37 +295,17 @@ def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) pa ON agg_partkey = l_partkey
     WHERE p_brand = 'Brand#12' AND l_quantity < avg_half
     """,
-)
-def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q17 small-quantity-order revenue: the correlated per-part average
+    tables=("part", "lineitem"),
+    doc="""Q17 small-quantity-order revenue: the correlated per-part average
     decorrelated into a pre-aggregated join side (the plan Catalyst's
     own decorrelation produces); the half-average threshold is a double
-    division of exact decimal numerators, identical on both engines."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#12")
-    pa = li.groupBy(F.col("l_partkey").alias("agg_partkey")).agg(
-        (
-            0.5
-            * (
-                F.expr("CAST(SUM(CAST(l_quantity AS DECIMAL(30,8))) AS DOUBLE)")
-                / F.count(F.lit(1))
-            )
-        ).alias("avg_half")
-    )
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .join(pa, li.l_partkey == pa.agg_partkey)
-        .where(F.col("l_quantity") < F.col("avg_half"))
-        .agg(
-            _dsum_cents("l_extendedprice", "small_lot_cents"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
+    division of exact decimal numerators, identical on both engines.""",
+)
 
 
-@register(
+register_sql(
     "tpch_q22",
-    oracle=f"""
+    f"""
     WITH avg_bal AS (
       SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(30,8))) AS DOUBLE) / COUNT(*) AS a
       FROM customer WHERE c_acctbal > 0.0
@@ -524,40 +313,21 @@ def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT cntrycode, COUNT(*) AS numcust,
            {_osum_cents('c_acctbal', 'totacctbal_cents')}
     FROM (
-      SELECT CAST(c_nationkey % 10 AS INT) AS cntrycode, c_acctbal
-      FROM customer, avg_bal
+      SELECT /*+ BROADCAST(avg_bal) */ CAST(c_nationkey % 10 AS INT) AS cntrycode, c_acctbal
+      FROM customer CROSS JOIN avg_bal
       WHERE c_acctbal > avg_bal.a
         AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
                         AND o_orderdate >= TIMESTAMP '2000-06-01 00:00:00')
     )
     GROUP BY cntrycode
     """,
-)
-def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q22 global-sales-opportunity: above-average-balance customers who
+    tables=("customer", "orders"),
+    doc="""Q22 global-sales-opportunity: above-average-balance customers who
     have not ordered recently — a 1-row broadcast global average + left-anti join
     (adapted: the fixture customer has no phone column, so cntrycode is
     nationkey mod 10).  The exact-decimal numerator makes the average
-    threshold engine-identical."""
-    c = load_table(spark, sf_dir, "customer")
-    recent = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") >= F.lit("2000-06-01").cast("timestamp")
-    )
-    avg_bal = c.where(F.col("c_acctbal") > 0.0).agg(
-        (
-            F.expr("CAST(SUM(CAST(c_acctbal AS DECIMAL(30,8))) AS DOUBLE)")
-            / F.count(F.lit(1))
-        ).alias("a")
-    )
-    rich = (
-        c.crossJoin(F.broadcast(avg_bal))
-        .where(F.col("c_acctbal") > F.col("a"))
-        .join(recent, c.c_custkey == recent.o_custkey, "left_anti")
-    )
-    return rich.groupBy((F.col("c_nationkey") % 10).cast("int").alias("cntrycode")).agg(
-        F.count(F.lit(1)).alias("numcust"),
-        _dsum_cents("c_acctbal", "totacctbal_cents"),
-    )
+    threshold engine-identical.""",
+)
 
 
 # --- round 3: the remaining classics (full 22/22 coverage) -----------------
@@ -569,20 +339,32 @@ def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
 # semi/anti-joins) so the same planner machinery is exercised.
 
 
-@register(
+# ps semi-restricts lineitem to CANDIDATE parts BEFORE the (part, supplier)
+# min pre-agg: the filter selects ~1/250 of parts, so the pre-agg shuffle
+# shrinks by the same factor (per-group mins are untouched: filtering by
+# part only drops whole groups the later inner join discards anyway).
+# Unhinted: AQE broadcasts the filtered key list at bench SF; at a scale
+# where it outgrows broadcast, a key-shuffle semi-join is still strictly
+# smaller than shuffling unfiltered lineitem (100x replica: 6.7 s → 1.7 s
+# for the pre-agg leg).  It is an EXISTS, not an IN: Catalyst copies an IN
+# predicate across cand's join onto part, adding a semi-join per reference.
+register_sql(
     "tpch_q2",
-    oracle="""
+    """
     WITH ps AS (
       SELECT l_partkey, l_suppkey, MIN(l_extendedprice) AS supplycost
-      FROM lineitem GROUP BY l_partkey, l_suppkey
+      FROM lineitem
+      WHERE EXISTS (SELECT 1 FROM part
+                    WHERE p_partkey = l_partkey AND p_size = 15 AND p_type = 'STANDARD')
+      GROUP BY l_partkey, l_suppkey
     ), esup AS (
-      SELECT s_suppkey, s_name, s_acctbal, n_name
+      SELECT /*+ BROADCAST(nation, region) */ s_suppkey, s_name, s_acctbal, n_name
       FROM supplier JOIN nation ON s_nationkey = n_nationkey
       JOIN region ON n_regionkey = r_regionkey
       WHERE r_name = 'EUROPE'
     ), cand AS (
       SELECT p_partkey, s_name, s_acctbal, n_name, supplycost
-      FROM part JOIN ps ON p_partkey = l_partkey
+      FROM ps JOIN part ON p_partkey = l_partkey
       JOIN esup ON l_suppkey = s_suppkey
       WHERE p_size = 15 AND p_type = 'STANDARD'
     ), mn AS (
@@ -594,57 +376,13 @@ def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY s_acctbal DESC, p_partkey, s_name
     LIMIT 100
     """,
-)
-def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2 minimum-cost supplier (adapted: supplycost = MIN l_extendedprice
+    tables=("region", "nation", "supplier", "part", "lineitem"),
+    doc="""Q2 minimum-cost supplier (adapted: supplycost = MIN l_extendedprice
     over the lineitem-derived part-supplier association).  The correlated
     per-part MIN decorrelates into a pre-agg joined back on
     (part, supplycost) — equality on an unaccumulated double MIN is
-    engine-exact.  Unique (s_acctbal, p_partkey, s_name) tiebreak."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part").where(
-        (F.col("p_size") == 15) & (F.col("p_type") == "STANDARD")
-    )
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE")
-    # round-9 (decade2 7.3): semi-restrict lineitem to CANDIDATE parts
-    # BEFORE the (part, supplier) min pre-agg — the filter selects
-    # ~1/250 of parts, so the pre-agg shuffle shrinks by the same
-    # factor (per-group mins are untouched: filtering by part only
-    # drops whole groups the later inner join discards anyway).
-    # Unhinted: AQE broadcasts the filtered key list at bench SF; at a
-    # scale where it outgrows broadcast, a key-shuffle semi-join is
-    # still strictly smaller than shuffling unfiltered lineitem.
-    # Measured 100× replica: 6.7 s → 1.7 s for the pre-agg leg.
-    cand_keys = p.select(F.col("p_partkey").alias("l_partkey"))
-    ps = (
-        li.join(cand_keys, "l_partkey", "left_semi")
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(F.min("l_extendedprice").alias("supplycost"))
-    )
-    esup = (
-        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .select("s_suppkey", "s_name", "s_acctbal", "n_name")
-    )
-    cand = (
-        ps.join(p, ps.l_partkey == p.p_partkey)
-        .join(esup, ps.l_suppkey == F.col("s_suppkey"))
-        .select("p_partkey", "s_name", "s_acctbal", "n_name", "supplycost")
-    )
-    mn = cand.groupBy(F.col("p_partkey").alias("mk")).agg(
-        F.min("supplycost").alias("min_cost")
-    )
-    return (
-        cand.join(
-            mn,
-            (cand.p_partkey == mn.mk) & (cand.supplycost == mn.min_cost),
-        )
-        .select("s_acctbal", "s_name", "n_name", "p_partkey", "supplycost")
-        .orderBy(F.col("s_acctbal").desc(), "p_partkey", "s_name")
-        .limit(100)
-    )
+    engine-exact.  Unique (s_acctbal, p_partkey, s_name) tiebreak.""",
+)
 
 
 _Q8_NATION_VOL = "CASE WHEN supp_nation = 'NATION_1' THEN volume ELSE 0.0 END"
@@ -654,11 +392,11 @@ _Q8_SHARE = (
 )
 
 
-@register(
+register_sql(
     "tpch_q8",
-    oracle=f"""
+    f"""
     WITH base AS (
-      SELECT CAST(year(o_orderdate) AS INT) AS o_year,
+      SELECT /*+ BROADCAST(n1, region, n2) */ CAST(year(o_orderdate) AS INT) AS o_year,
              l_extendedprice * (1 - l_discount) AS volume,
              n2.n_name AS supp_nation
       FROM lineitem
@@ -674,49 +412,18 @@ _Q8_SHARE = (
     SELECT o_year, {_fshift(_Q8_SHARE, 'mkt_share')}
     FROM base GROUP BY o_year
     """,
-)
-def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q8 national market share: one nation's fraction of a region's
+    tables=("region", "nation", "customer", "supplier", "part", "orders", "lineitem"),
+    doc="""Q8 national market share: one nation's fraction of a region's
     revenue in one part type, by order year.  Both numerator and
     denominator ride the integer-cents convention; the final division is
-    bigint→double (exact below 2^53), rounded at 6."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    p = load_table(spark, sf_dir, "part").where(F.col("p_type") == "ECONOMY")
-    s = load_table(spark, sf_dir, "supplier")
-    n1 = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("n1_key"), F.col("n_regionkey").alias("n1_rk")
-    )
-    n2 = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("supp_nation")
-    )
-    r = load_table(spark, sf_dir, "region").where(F.col("r_name") == "AMERICA")
-    base = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(p, li.l_partkey == p.p_partkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n1), F.col("c_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(r), F.col("n1_rk") == F.col("r_regionkey"))
-        .join(F.broadcast(n2), F.col("s_nationkey") == F.col("n2_key"))
-        .select(
-            F.year("o_orderdate").cast("int").alias("o_year"),
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("volume"),
-            "supp_nation",
-        )
-    )
-    # floor-shift, not round(x, 6): the ratio is a double, and engine
-    # round() half-tie algorithms differ (CLAUDE.md failure mode b)
-    return base.groupBy("o_year").agg(
-        F.expr(_fshift_expr(_Q8_SHARE)).alias("mkt_share")
-    )
+    bigint→double (exact below 2^53), rounded at 6.""",
+)
 
 
-@register(
+register_sql(
     "tpch_q9",
-    oracle=f"""
-    SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year,
+    f"""
+    SELECT /*+ BROADCAST(nation) */ n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year,
            {_osum_cents('l_extendedprice * (1 - l_discount) - p_retailprice * l_quantity * 0.05', 'profit_cents')}
     FROM lineitem
     JOIN orders   ON l_orderkey = o_orderkey
@@ -726,41 +433,20 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p_name LIKE '%gear%'
     GROUP BY n_name, CAST(year(o_orderdate) AS INT)
     """,
-)
-def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q9 product-type profit by supplier nation and year (adapted: the
+    tables=("nation", "supplier", "part", "orders", "lineitem"),
+    doc="""Q9 product-type profit by supplier nation and year (adapted: the
     fixture has no ps_supplycost, so cost is proxied at 5% of retail price
     per unit — the 5-way join + LIKE filter + two-key agg shape is
     untouched).  Per-row arithmetic is IEEE-identical; the sum rides
-    integer cents."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    p = load_table(spark, sf_dir, "part").where(F.col("p_name").like("%gear%"))
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(p, li.l_partkey == p.p_partkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").cast("int").alias("o_year"),
-        )
-        .agg(
-            _dsum_cents(
-                "l_extendedprice * (1 - l_discount) - p_retailprice * l_quantity * 0.05",
-                "profit_cents",
-            )
-        )
-    )
+    integer cents.""",
+)
 
 
-@register(
+register_sql(
     "tpch_q11",
-    oracle=f"""
+    f"""
     WITH val AS (
-      SELECT l_partkey AS ps_partkey,
+      SELECT /*+ BROADCAST(nation) */ l_partkey AS ps_partkey,
              {_osum_cents('l_extendedprice * l_quantity', 'value_cents')}
       FROM lineitem
       JOIN supplier ON l_suppkey = s_suppkey
@@ -768,39 +454,22 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE n_name = 'NATION_3'
       GROUP BY l_partkey
     ), tot AS (SELECT SUM(value_cents) AS t FROM val)
-    SELECT ps_partkey, value_cents
-    FROM val, tot
+    SELECT /*+ BROADCAST(tot) */ ps_partkey, value_cents
+    FROM val CROSS JOIN tot
     WHERE CAST(value_cents AS DOUBLE) > 0.0001 * CAST(t AS DOUBLE)
     """,
-)
-def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q11 important stock (adapted: part value = shipped
+    tables=("nation", "supplier", "lineitem"),
+    doc="""Q11 important stock (adapted: part value = shipped
     extendedprice·quantity of one nation's suppliers).  The HAVING
     against a scalar-subquery global total becomes a 1-row broadcast
     cross join — the fraction threshold compares exact bigint cents cast
-    to double on both engines."""
-    li = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation").where(F.col("n_name") == "NATION_3")
-    val = (
-        li.join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(F.col("l_partkey").alias("ps_partkey"))
-        .agg(_dsum_cents("l_extendedprice * l_quantity", "value_cents"))
-    )
-    tot = val.agg(F.sum("value_cents").alias("t"))
-    return (
-        val.crossJoin(F.broadcast(tot))
-        .where(
-            F.col("value_cents").cast("double") > 0.0001 * F.col("t").cast("double")
-        )
-        .select("ps_partkey", "value_cents")
-    )
+    to double on both engines.""",
+)
 
 
-@register(
+register_sql(
     "tpch_q15",
-    oracle=f"""
+    f"""
     WITH rev AS (
       SELECT l_suppkey AS supplier_no,
              {_osum_cents("l_extendedprice * (1 - l_discount)", 'total_revenue_cents')}
@@ -809,71 +478,42 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         AND l_shipdate <  TIMESTAMP '2000-04-01 00:00:00'
       GROUP BY l_suppkey
     ), mx AS (SELECT MAX(total_revenue_cents) AS m FROM rev)
-    SELECT s_suppkey, s_name, total_revenue_cents
+    SELECT /*+ BROADCAST(mx) */ s_suppkey, s_name, total_revenue_cents
     FROM supplier JOIN rev ON s_suppkey = supplier_no
     JOIN mx ON total_revenue_cents = m
     """,
-)
-def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q15 top supplier: quarterly revenue view + scalar-subquery MAX,
+    tables=("supplier", "lineitem"),
+    doc="""Q15 top supplier: quarterly revenue view + scalar-subquery MAX,
     decorrelated into a 1-row broadcast equi-join on the exact cents
-    value (ties all surface, as in the spec)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier")
-    rev = (
-        li.where(
-            (F.col("l_shipdate") >= F.lit("2000-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("2000-04-01").cast("timestamp"))
-        )
-        .groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(_dsum_cents("l_extendedprice * (1 - l_discount)", "total_revenue_cents"))
-    )
-    mx = rev.agg(F.max("total_revenue_cents").alias("m"))
-    return (
-        s.join(rev, s.s_suppkey == rev.supplier_no)
-        .join(F.broadcast(mx), F.col("total_revenue_cents") == F.col("m"))
-        .select("s_suppkey", "s_name", "total_revenue_cents")
-    )
+    value (ties all surface, as in the spec).""",
+)
 
 
-@register(
+register_sql(
     "tpch_q16",
-    oracle="""
+    """
     SELECT p_brand, p_type, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
     FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) ps
     JOIN part ON p_partkey = l_partkey
     WHERE p_brand <> 'Brand#12' AND p_type <> 'PROMO'
       AND p_size IN (1, 5, 10, 15, 20, 25)
-      AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+      AND NOT EXISTS (SELECT 1 FROM supplier WHERE s_suppkey = l_suppkey AND s_acctbal < 0)
     GROUP BY p_brand, p_type, p_size
     """,
-)
-def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q16 parts-supplier relationship (adapted: association from
+    tables=("supplier", "part", "lineitem"),
+    doc="""Q16 parts-supplier relationship (adapted: association from
     lineitem; the excluded-supplier NOT IN keeps its anti-join shape
     against negative-balance suppliers standing in for the comment
-    filter).  Exact COUNT(DISTINCT)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part").where(
-        (F.col("p_brand") != "Brand#12")
-        & (F.col("p_type") != "PROMO")
-        & F.col("p_size").isin(1, 5, 10, 15, 20, 25)
-    )
-    bad = load_table(spark, sf_dir, "supplier").where(F.col("s_acctbal") < 0).select(
-        "s_suppkey"
-    )
-    ps = li.select("l_partkey", "l_suppkey").distinct()
-    return (
-        ps.join(p, ps.l_partkey == p.p_partkey)
-        .join(bad, ps.l_suppkey == bad.s_suppkey, "left_anti")
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
+    filter).  Exact COUNT(DISTINCT).  Written NOT EXISTS: Spark plans a
+    NOT IN subquery as a null-aware anti join, which broadcasts the
+    supplier side whatever its size; the keys are never NULL, so the
+    rows are the same.""",
+)
 
 
-@register(
+register_sql(
     "tpch_q20",
-    oracle="""
+    """
     WITH shipped AS (
       SELECT l_suppkey, l_partkey,
              SUM(CAST(l_quantity AS DECIMAL(30,8))) AS qty_total,
@@ -882,7 +522,7 @@ def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
                            THEN l_quantity ELSE 0.0 END AS DECIMAL(30,8))) AS qty_1998
       FROM lineitem GROUP BY l_suppkey, l_partkey
     )
-    SELECT DISTINCT s_suppkey, s_name, n_name
+    SELECT /*+ BROADCAST(nation) */ DISTINCT s_suppkey, s_name, n_name
     FROM shipped
     JOIN part     ON l_partkey = p_partkey
     JOIN supplier ON l_suppkey = s_suppkey
@@ -890,47 +530,23 @@ def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p_type = 'SMALL' AND n_name = 'NATION_7'
       AND CAST(qty_1998 AS DOUBLE) > 0.3 * CAST(qty_total AS DOUBLE)
     """,
-)
-def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q20 potential part promotion (adapted: a supplier qualifies when
+    tables=("nation", "supplier", "part", "lineitem"),
+    doc="""Q20 potential part promotion (adapted: a supplier qualifies when
     its 1998 shipments of a SMALL-type part exceed 30% of its all-time
     shipments of that part — the nested IN/EXISTS chain becomes
-    pre-agg → semi-join-by-distinct).  Quantity sums ride DECIMAL."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part").where(F.col("p_type") == "SMALL")
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation").where(F.col("n_name") == "NATION_7")
-    in98 = (
-        (F.col("l_shipdate") >= F.lit("1998-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1999-01-01").cast("timestamp"))
-    )
-    shipped = li.groupBy("l_suppkey", "l_partkey").agg(
-        F.expr("SUM(CAST(l_quantity AS DECIMAL(30,8)))").alias("qty_total"),
-        F.sum(
-            F.when(in98, F.col("l_quantity")).otherwise(0.0).cast("decimal(30,8)")
-        ).alias("qty_1998"),
-    )
-    return (
-        shipped.join(p, shipped.l_partkey == p.p_partkey)
-        .join(s, shipped.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .where(
-            F.col("qty_1998").cast("double") > 0.3 * F.col("qty_total").cast("double")
-        )
-        .select("s_suppkey", "s_name", "n_name")
-        .distinct()
-    )
+    pre-agg → semi-join-by-distinct).  Quantity sums ride DECIMAL.""",
+)
 
 
-@register(
+register_sql(
     "tpch_q21",
-    oracle="""
+    """
     WITH om AS (
       SELECT l_orderkey AS ok, MAX(l_shipdate) AS max_ship,
              COUNT(DISTINCT l_suppkey) AS nsupp
       FROM lineitem GROUP BY l_orderkey
     )
-    SELECT s_name, COUNT(*) AS numwait
+    SELECT /*+ BROADCAST(nation) */ s_name, COUNT(*) AS numwait
     FROM lineitem l1
     JOIN orders   ON o_orderkey = l1.l_orderkey AND o_orderstatus = 'F'
     JOIN om       ON om.ok = l1.l_orderkey
@@ -941,30 +557,11 @@ def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY numwait DESC, s_name
     LIMIT 100
     """,
-)
-def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q21 suppliers who kept orders waiting (adapted: no receipt/commit
+    tables=("nation", "supplier", "orders", "lineitem"),
+    doc="""Q21 suppliers who kept orders waiting (adapted: no receipt/commit
     dates, so 'kept waiting' = this supplier shipped the LAST item of a
     finished multi-supplier order).  The EXISTS (another supplier) /
     NOT EXISTS (anyone later) pair decorrelates into one per-order agg
     (max shipdate + distinct-supplier count) joined back — one shuffle
-    instead of two correlated probes."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation").where(F.col("n_name") == "NATION_2")
-    om = li.groupBy(F.col("l_orderkey").alias("ok")).agg(
-        F.max("l_shipdate").alias("max_ship"),
-        F.countDistinct("l_suppkey").alias("nsupp"),
-    )
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(om, li.l_orderkey == om.ok)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .where((F.col("nsupp") > 1) & (F.col("l_shipdate") == F.col("max_ship")))
-        .groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-        .orderBy(F.col("numwait").desc(), "s_name")
-        .limit(100)
-    )
+    instead of two correlated probes.""",
+)

@@ -6,6 +6,22 @@ DataFrame; ``oracle_sql`` is the equivalent ANSI SQL DuckDB runs over the
 same parquet (views pre-registered by the driver).  ``oracle_sql=None``
 marks rows-only checks (non-SQL-expressible ops).
 
+Two registration forms:
+
+- :func:`register_sql` — a SQL-expressible query is ONE text.  Its Spark
+  fn runs the exact string DuckDB runs as the oracle, over the declared
+  tables' ``load_table`` frames, so the replica checks Spark's engine
+  and loader against DuckDB on one declared text; nothing can drift
+  between two copies.  Plan hints travel in the text
+  (``/*+ BROADCAST(nation) */`` is a comment to DuckDB).
+- :func:`register` — a decorated Spark body, for rows-only queries and
+  for SQL-expressible queries that keep two bodies.  A query keeps two
+  bodies only when its Spark body is a stated physical rewrite of the
+  oracle's plan (salting, ``stack``, a different join/aggregate plan),
+  or when its oracle text does not parse on Spark (DuckDB-only
+  functions or types such as ``epoch``, ``HUGEINT``, unsized ``VARCHAR``);
+  each such query says which in a comment at its registration.
+
 Oracle-parity rules (learned from the driver contract, SURVEY §5 ring 2):
 - alias every computed column identically on both sides;
 - exact aggregates over approx (``percentile``, exact COUNT(DISTINCT));
@@ -21,10 +37,14 @@ Oracle-parity rules (learned from the driver contract, SURVEY §5 ring 2):
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from gordo_components_spark.functions.timeseries import sql_over
+from gordo_components_spark.sources.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -36,21 +56,51 @@ class QuerySpec:
     oracle: str | None  # ANSI SQL for DuckDB, or None => rows-only check
     doc: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
+    source: str = ""  # "module:line" of the registration
 
 
 REGISTRY: dict[str, QuerySpec] = {}
+
+
+def _add(name, fn, oracle, doc, tags) -> None:
+    if name in REGISTRY:
+        raise ValueError(f"duplicate harness query {name!r}")
+    caller = sys._getframe(2)  # the module statement: _add ← deco / register_sql ← module
+    source = f"{caller.f_globals['__name__']}:{caller.f_lineno}"
+    REGISTRY[name] = QuerySpec(name, fn, oracle, doc.strip(), tags, source)
 
 
 def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     """Decorator: register a harness query (SURVEY §2 Harness ID)."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        if name in REGISTRY:
-            raise ValueError(f"duplicate harness query {name!r}")
-        REGISTRY[name] = QuerySpec(name, fn, oracle, (fn.__doc__ or "").strip(), tags)
+        _add(name, fn, oracle, fn.__doc__ or "", tags)
         return fn
 
     return deco
+
+
+def register_sql(name: str, text: str, tables: tuple[str, ...], tags: tuple[str, ...] = (),
+                 doc: str = "") -> None:
+    """Register ``text`` as both the oracle and the Spark query.
+
+    The Spark fn binds each declared table to its ``load_table`` frame
+    through a uniquely named temp view (:func:`sql_over`) and runs
+    ``WITH lineitem AS (SELECT * FROM <view>), … SELECT * FROM (text)``,
+    so the text's table names resolve to the loader's frames and two
+    threads running the query against different scale factors never
+    share a view."""
+
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        frames = {t: load_table(spark, sf_dir, t) for t in tables}
+        return sql_over(frames, lambda views: (
+            "WITH " + ", ".join(f"{t} AS (SELECT * FROM {v})" for t, v in views.items())
+            + f"\nSELECT * FROM (\n{text}\n)"
+        ))
+
+    fn.__name__ = fn.__qualname__ = name
+    fn.__doc__ = doc
+    _add(name, fn, text, doc, tags)
 
 
 # The driver's correctness gate witnesses the FIRST 50 registry entries

@@ -117,6 +117,40 @@ def test_witness_window_is_first_50():
     assert tuple(names[:50]) == WITNESS_ORDER
 
 
+def test_sql_query_threads_see_their_own_scale_factor(spark, sf_dir):
+    # a register_sql query binds its tables through uniquely named temp
+    # views, so two threads running it in one session against two
+    # scale-factor directories each get only their own rows
+    import os
+    import threading
+
+    import pyarrow.parquet as pq
+
+    fn = load_all()["agg_groupby_sum"].fn
+    dirs = [sf_dir, os.path.join(os.path.dirname(sf_dir), "sf0.01")]
+    want = {d: pq.ParquetFile(f"{d}/lineitem.parquet").metadata.num_rows for d in dirs}
+    assert len(set(want.values())) == 2
+    barrier, got, errors = threading.Barrier(2, timeout=120), {d: [] for d in dirs}, []
+
+    def run(d):
+        try:
+            for _ in range(3):
+                barrier.wait()
+                got[d].append(sum(r["count_order"] for r in fn(spark, d).collect()))
+        except Exception as exc:  # noqa: BLE001 - reported by the assert below
+            errors.append(exc)
+            barrier.abort()
+
+    threads = [threading.Thread(target=run, args=(d,)) for d in dirs]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert got == {d: [n] * 3 for d, n in want.items()}
+
+
 def test_multimodal_transform_deterministic(spark, sf_dir):
     # stub kernels must be deterministic (digest-seeded): two runs agree
     from gordo_components_spark.registry import load_all

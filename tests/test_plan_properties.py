@@ -48,6 +48,37 @@ def test_dim_joins_broadcast(spark, sf_dir):
         assert "BroadcastHashJoin" in plan_of(spark, name, sf_dir), name
 
 
+def test_broadcast_hints_survive_without_auto_broadcast(spark, sf_dir):
+    # every /*+ BROADCAST(...) */ hint in a registered SQL text must still
+    # broadcast with both size thresholds off: AQE's size-based broadcast
+    # would otherwise hide a lost hint from test_dim_joins_broadcast (with
+    # the thresholds off, unhinted join_broadcast_dim plans 0 of its 2
+    # broadcast joins, tpch_q5 0 of 2 and tpch_q10 0 of 1)
+    import re
+
+    keys = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    hinted = {
+        name: sum(len(h.split(",")) for h in re.findall(r"/\*\+ BROADCAST\(([^)]*)\) \*/", spec.oracle))
+        for name, spec in load_all().items()
+        if spec.oracle and "/*+ BROADCAST(" in spec.oracle
+    }
+    assert {"join_broadcast_dim", "tpch_q5", "tpch_q10"} <= set(hinted)
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        for name, n_hinted in hinted.items():
+            plan = plan_of(spark, name, sf_dir)
+            joins = len(re.findall(r"^\(\d+\) Broadcast(HashJoin|NestedLoopJoin)", plan, re.M))
+            assert joins >= n_hinted, (name, joins, n_hinted)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def test_flagship_single_scan_no_join(spark, sf_dir):
     # threshold is a window aggregate over the same partitioning — the
     # plan must contain no join (and therefore no second events scan)

@@ -1,14 +1,13 @@
 """Generate docs/OPERATORS.md — the full harness-ID index.
 
-One row per registered query: name, oracle mode, module:line, first
-docstring sentence.  Regenerate after adding operators:
+One row per registered query: name, oracle mode, the module:line where
+it is registered, first sentence of its doc.  Regenerate after adding operators:
 
     python tools/gen_operator_index.py
 """
 
 from __future__ import annotations
 
-import inspect
 import os
 import sys
 
@@ -20,17 +19,11 @@ from gordo_components_spark.registry import load_all
 def main() -> None:
     rows = []
     for name, spec in load_all().items():
-        fn = spec.fn
-        mod = inspect.getmodule(fn).__name__.replace("gordo_components_spark.", "")
-        try:
-            line = inspect.getsourcelines(fn)[1]
-        except OSError:
-            line = 0
-        doc = " ".join((fn.__doc__ or "").split())
+        doc = " ".join(spec.doc.split())
         # first sentence, compacted
         head = doc.split(". ")[0].split(" — ")[0][:110]
         mode = "oracle" if spec.oracle else "rows-only"
-        rows.append((name, mode, f"{mod}:{line}", head))
+        rows.append((name, mode, spec.source.replace("gordo_components_spark.", ""), head))
     out = [
         "# Operator index (generated — do not edit)",
         "",

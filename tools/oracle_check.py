@@ -28,6 +28,20 @@ TABLES = (
 ).split()
 
 
+def _map_count() -> int:
+    """This process's memory mappings (one line each in /proc/self/maps)."""
+    with open("/proc/self/maps") as fh:
+        return sum(1 for _ in fh)
+
+
+def _max_map_count() -> str:
+    try:
+        with open("/proc/sys/vm/max_map_count") as fh:
+            return fh.read().strip()
+    except OSError:
+        return "unknown"
+
+
 def _canon_cell(v):
     if v is None or (isinstance(v, float) and math.isnan(v)):
         return None
@@ -114,32 +128,12 @@ def main():
     # glibc mmaps every allocation past the 128 KB threshold, so a
     # 16 GB buffer pool is 65536 mappings — the map quota, not memory,
     # is the binding constraint.  8 GB caps the pool at 32768 mappings
-    # (plus ~3k for python/pyarrow/py4j — comfortable margin) and the
-    # temp_directory lets the heavy chain SPILL instead of raising (an
-    # in-memory duckdb connection has no spill path by default).  The
-    # r9 "tail-of-session memory transient" reproduced-clean-standalone
-    # for the same reason: standalone, the pool started empty.
-    # Second finding from the same monitor: the map pressure is mostly
-    # tens of thousands of SMALL retained anonymous mappings (DuckDB's
-    # bundled jemalloc retains virtual maps by design), so the block
-    # cap alone is not sufficient for a 252-query session — raise the
-    # kernel quota too when we can (root in this container; best-effort
-    # no-op elsewhere; value persists until container restart).
-    try:
-        with open("/proc/sys/vm/max_map_count") as fh:
-            if int(fh.read()) < 262144:
-                with open("/proc/sys/vm/max_map_count", "w") as wfh:
-                    wfh.write("1048576")
-                # machine-wide kernel setting mutated as a side effect —
-                # say so when it actually happens (r10 advisory: silent
-                # global change on shared hosts), persists to reboot
-                print(
-                    "oracle_check: raised vm.max_map_count to 1048576 "
-                    "(machine-wide, persists until container restart)",
-                    file=sys.stderr,
-                )
-    except OSError:
-        pass
+    # (plus ~3k for python/pyarrow/py4j) and the temp_directory lets the
+    # heavy chain SPILL instead of raising (an in-memory duckdb
+    # connection has no spill path by default).  DuckDB's bundled
+    # jemalloc also RETAINS small anonymous mappings across a long
+    # session, so the run ends by printing its own map count against
+    # the quota; the check never changes the kernel setting.
     os.makedirs("/tmp/gordo_duck_spill", exist_ok=True)
     con.execute("SET memory_limit='8GB'")
     con.execute("SET temp_directory='/tmp/gordo_duck_spill'")
@@ -189,6 +183,7 @@ def main():
             }
         )
     print(f"\n{n_ok}/{len(names)} ok; failed: {failed}")
+    print(f"memory maps: {_map_count()} of vm.max_map_count {_max_map_count()}")
     if args.json:
         import json
 
