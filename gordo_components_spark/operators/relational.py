@@ -212,10 +212,14 @@ register_sql(
     "join_semi",
     f"""
     SELECT c_custkey, c_name FROM customer
-    WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > {_BIG_ORDER})
+    WHERE c_custkey IS NOT NULL
+      AND c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > {_BIG_ORDER})
     """,
     tables=("customer", "orders"),
-    doc="""Left-semi join (EXISTS): customers with any big order.""",
+    doc="""Left-semi join (EXISTS): customers with any big order.  The
+    explicit ``c_custkey IS NOT NULL`` (implied by IN) keeps customer's
+    pushed ``IsNotNull``: Catalyst rewrites the subquery into the join
+    after it infers filters.""",
 )
 
 
@@ -281,7 +285,8 @@ register_sql(
     SELECT 'semi' AS variant, c_mktsegment AS grp,
            COUNT(*) AS n, CAST(0 AS BIGINT) AS cents
     FROM customer
-    WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > {_BIG_ORDER})
+    WHERE c_custkey IS NOT NULL
+      AND c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > {_BIG_ORDER})
     GROUP BY c_mktsegment
     UNION ALL
     SELECT 'anti' AS variant, c_mktsegment AS grp,

@@ -142,6 +142,7 @@ register_sql(
       AND o_orderdate <  TIMESTAMP '1999-01-01 00:00:00'
       AND EXISTS (SELECT 1 FROM lineitem
                   WHERE l_orderkey = o_orderkey
+                    AND l_orderkey IS NOT NULL
                     AND l_shipdate > o_orderdate + INTERVAL 45 DAY)
     GROUP BY o_orderpriority
     """,
@@ -149,7 +150,10 @@ register_sql(
     doc="""Q4 order-priority checking, adapted to the fixture's columns (no
     l_commitdate/l_receiptdate — lateness is ship > order + 45 days):
     EXISTS becomes a left-semi join with an equi key + range residual, so
-    it stays a hash join and the fact table is the probe side.""",
+    it stays a hash join and the fact table is the probe side.  The
+    explicit ``l_orderkey IS NOT NULL`` (implied by the equi key) keeps
+    lineitem's pushed ``IsNotNull``: Catalyst rewrites the subquery into
+    the join after it infers filters.""",
 )
 
 

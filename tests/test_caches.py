@@ -89,6 +89,62 @@ def test_trained_blob_map_single_flight(monkeypatch, sf_dir):
     assert maps == [{7: "blob"}] * 8
 
 
+def test_blob_broadcast_slot_under_concurrent_maps(monkeypatch):
+    """12 scoring threads alternate between two blob maps: each always
+    gets a broadcast of its own map, and every replaced broadcast is
+    unpersisted (the fake has no ``destroy``)."""
+    import sys
+    import threading
+    import time
+
+    from gordo_components_spark.ml import islands
+
+    class _Broadcast:
+        def __init__(self, value):
+            self.value, self.unpersisted = dict(value), False
+
+        def unpersist(self, blocking=False):
+            time.sleep(0)  # a py4j round trip: other threads run here
+            self.unpersisted = True
+
+    made = []
+
+    class _Context:
+        def broadcast(self, value):
+            made.append(_Broadcast(value))
+            return made[-1]
+
+    class _Spark:
+        sparkContext = _Context()
+
+    monkeypatch.setattr(islands, "_BLOBS", None)
+    maps = [{"m1": "a", "m2": "b"}, {"m1": "c", "m2": "b"}]
+    wrong = []
+
+    def score(i):
+        for j in range(200):
+            want = maps[(i + j // 7) % 2]
+            if islands._blob_broadcast(_Spark, dict(want)).value != want:
+                wrong.append((i, j))
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=score, args=(i,)) for i in range(12)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert wrong == []
+    held = islands._BLOBS[2]
+    assert 1 < len(made) < 12 * 200  # equal maps reused a broadcast
+    assert not held.unpersisted
+    assert all(bc.unpersisted for bc in made if bc is not held)
+
+
 def test_concurrent_builds_never_delete_a_served_dir(tmp_path, sf_dir):
     """8 cold builders with staggered build times: a builder that finishes
     after another has installed must adopt that dir, never replace it —

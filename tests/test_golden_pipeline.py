@@ -96,3 +96,55 @@ def test_golden_anomaly_pipeline(spark, synthetic_events):
     assert spikes["is_anomaly"].all(), spikes
     # ≥95% of clean buckets stay quiet (B4 criterion)
     assert (1 - clean_rows["is_anomaly"].mean()) >= 0.95
+
+
+def test_scoring_after_a_retrain_uses_the_new_blobs(spark):
+    """Scoring keeps one broadcast per blob-map content: an equal map
+    reuses it, a retrain's map replaces it, and a frame built on the
+    replaced broadcast still runs (unpersisted, not destroyed)."""
+    import base64
+    import pickle
+
+    from gordo_components_spark.ml import islands
+
+    rng = np.random.default_rng(7)
+
+    def features(scale):
+        rows = [
+            (m, pd.Timestamp("2024-01-01") + pd.Timedelta(hours=h), *(scale * rng.normal(10, 2, 4)))
+            for m in ("1", "2") for h in range(24)
+        ]
+        return spark.createDataFrame(pd.DataFrame(rows, columns=["user_id", "bucket", *FEATURES]))
+
+    def blob_map(feats):
+        return {r["machine"]: r["model_pkl_b64"] for r in train_models(feats).collect()}
+
+    def expected(feats, blobs):
+        pdf = feats.toPandas().sort_values(["user_id", "bucket"])
+        return {
+            m: pickle.loads(base64.b64decode(blobs[m])).anomaly(g[list(FEATURES)].to_numpy())["total_anomaly"]
+            for m, g in pdf.groupby("user_id")
+        }
+
+    def scored(df):
+        pdf = df.toPandas().sort_values(["machine", "bucket"])
+        return {m: g["total_anomaly"].to_numpy() for m, g in pdf.groupby("machine")}
+
+    feats_a, feats_b = features(1.0), features(50.0)
+    blobs_a = blob_map(feats_a)
+    old = score_models(feats_b, blobs_a)
+    held = islands._BLOBS[2]
+    score_models(feats_b, dict(blobs_a))
+    assert islands._BLOBS[2] is held  # equal content: no new broadcast
+
+    blobs_b = blob_map(feats_b)  # retrained on changed data
+    assert blobs_b != blobs_a
+    new = scored(score_models(feats_b, blobs_b))
+    assert islands._BLOBS[2] is not held
+    want = expected(feats_b, blobs_b)
+    assert set(new) == set(want) == {"1", "2"}
+    for m in want:
+        np.testing.assert_allclose(new[m], want[m], rtol=1e-9)
+    stale = scored(old)  # built on the replaced broadcast
+    for m, v in expected(feats_b, blobs_a).items():
+        np.testing.assert_allclose(stale[m], v, rtol=1e-9)

@@ -285,7 +285,7 @@ def _sent_commands(spark, request):
 
 @pytest.mark.parametrize(
     "request_kind, commands, jobs",
-    [("plain", 30, 0), ("filtered", 30, 0), ("buffered", 80, None), ("score", 100, 0)],
+    [("plain", 30, 0), ("filtered", 30, 0), ("buffered", 80, None), ("score", 94, 0)],
 )
 def test_serve_requests_py4j_budget(spark, request_kind, commands, jobs):
     """A serve request is one SQL text (a buffered filter: one per side of
@@ -293,7 +293,8 @@ def test_serve_requests_py4j_budget(spark, request_kind, commands, jobs):
     the caller's collect is a small constant — the Column-API build sent
     ~550-660 commands per dataset request, ~1130-1280 buffered and
     ~490-570 plus one Spark job per scoring request (warm session,
-    sf0.01)."""
+    sf0.01).  A warm scoring request reuses the blob-map broadcast of
+    the one before it: 88 commands, 91 when it broadcast every time."""
     import os
 
     from gordo_components_spark.client import predict_date_range

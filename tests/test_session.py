@@ -200,16 +200,22 @@ def test_claim_is_held_while_its_pid_lives(tmp_path):
 def test_existing_jvm_is_left_alone(tmp_path, stopped):
     """With a session already running, or a JVM a stopped session left
     behind, get_spark launches nothing: no env var changes, no archive
-    dir, no dump."""
+    dir, no dump.  A running session keeps its own Python worker daemon;
+    a new context on a stopped session's JVM takes get_spark's."""
     pre = (
         "from pyspark.sql import SparkSession\n"
         "s = SparkSession.builder.master('local[1]').config('spark.driver.memory', '1g').getOrCreate()\n"
         + ("s.stop()\n" if stopped else "")
         + "env = dict(os.environ)"
     )
-    got = _launch(tmp_path / "cds", pre=pre, post="out['env_same'] = dict(os.environ) == env")
+    post = (
+        "out['env_same'] = dict(os.environ) == env\n"
+        "out['daemon'] = spark.sparkContext.getConf().get('spark.python.daemon.module')"
+    )
+    got = _launch(tmp_path / "cds", pre=pre, post=post)
     assert got["state"].startswith("off: no JVM launched by get_spark")
     assert got["env_same"]
+    assert got["daemon"] == ("gordo_components_spark.pyworker" if stopped else None)
     assert not os.path.exists(tmp_path / "cds")
 
 
