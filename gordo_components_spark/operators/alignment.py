@@ -333,6 +333,7 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # distance-0 twin), and each error reads its floor/ceiling purchase
 # from two IGNORE NULLS window folds.  The winner is decided by exact
 # integer distance compare (<= prefers the floor = the lower value).
+# Two bodies: the oracle is the independent naive argmin.
 @register(
     "join_nearest_value",
     oracle="""

@@ -21,7 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from gordo_components_spark.caches import footer_rows
-from gordo_components_spark.registry import register
+from gordo_components_spark.registry import register, register_sql
 from gordo_components_spark.sources.tables import load_table, spread_scan
 
 # ---------------------------------------------------------------------------
@@ -96,6 +96,7 @@ def _delta_batch(docs: DataFrame) -> DataFrame:
     return fresh.unionAll(recrawl)
 
 
+# Two bodies: the Spark body reads the dedup index, which the oracle does not read.
 @register(
     "pipe_dedup_incremental",
     oracle="""
@@ -155,7 +156,7 @@ def pipe_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the deterministic v2 fixture shared by pipe_snapshot_diff and
 # pipe_embed_invalidate (drop doc_id%13, revise doc_id%11, add re-keyed
 # doc_id%17) — one definition so the faces can never desynchronize
-_V2_ORACLE = """
+_V2_SQL = """
       SELECT doc_id,
              CASE WHEN doc_id % 11 = 0 THEN md5(text || ' rev2') ELSE md5(text) END AS h
       FROM documents WHERE doc_id % 13 <> 0
@@ -165,30 +166,12 @@ _V2_ORACLE = """
 """
 
 
-def _snapshot_v2(docs: DataFrame) -> DataFrame:
-    return (
-        docs.where(F.col("doc_id") % 13 != 0)
-        .select(
-            "doc_id",
-            F.when(F.col("doc_id") % 11 == 0, F.md5(F.concat(F.col("text"), F.lit(" rev2"))))
-            .otherwise(F.md5("text"))
-            .alias("h"),
-        )
-        .unionAll(
-            docs.where(F.col("doc_id") % 17 == 0).select(
-                (F.col("doc_id") + 3000000).alias("doc_id"),
-                F.md5(F.concat(F.col("text"), F.lit(" new"))).alias("h"),
-            )
-        )
-    )
-
-
-@register(
+register_sql(
     "pipe_snapshot_diff",
-    oracle=f"""
+    f"""
     WITH v1 AS (
       SELECT doc_id, md5(text) AS h FROM documents
-    ), v2 AS ({_V2_ORACLE}
+    ), v2 AS ({_V2_SQL}
     )
     SELECT COALESCE(v1.doc_id, v2.doc_id) AS doc_id,
            CASE WHEN v1.doc_id IS NULL THEN 'added'
@@ -198,9 +181,7 @@ def _snapshot_v2(docs: DataFrame) -> DataFrame:
     FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id
     WHERE v1.doc_id IS NULL OR v2.doc_id IS NULL OR v1.h <> v2.h
     """,
-)
-def pipe_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus snapshot diff — the data-versioning primitive (what a lake
+    doc="""Corpus snapshot diff — the data-versioning primitive (what a lake
     table format computes between two commits): full-outer join of two
     corpus versions on the stable key, rows classified added / removed /
     changed by digest comparison; unchanged rows are filtered out so the
@@ -212,27 +193,8 @@ def pipe_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: one shuffle on the key for the join; comparing md5 digests
     (not text) keeps shuffle rows digest-width — and with both versions
     stored bucketed by doc_id the join needs no shuffle at all.  The
-    output is the CDC feed downstream incremental jobs consume."""
-    docs = load_table(spark, sf_dir, "documents")
-    v1 = docs.select("doc_id", F.md5("text").alias("h"))
-    v2 = _snapshot_v2(docs)
-    a, b = v1.alias("a"), v2.alias("b")
-    joined = a.join(b, F.col("a.doc_id") == F.col("b.doc_id"), "full_outer")
-    change = (
-        F.when(F.col("a.doc_id").isNull(), F.lit("added"))
-        .when(F.col("b.doc_id").isNull(), F.lit("removed"))
-        .otherwise(F.lit("changed"))
-    )
-    return joined.where(
-        F.col("a.doc_id").isNull()
-        | F.col("b.doc_id").isNull()
-        | (F.col("a.h") != F.col("b.h"))
-    ).select(
-        F.coalesce(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_id"),
-        change.alias("change_type"),
-        F.col("a.h").alias("old_hash"),
-        F.col("b.h").alias("new_hash"),
-    )
+    output is the CDC feed downstream incremental jobs consume.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1188,10 +1150,10 @@ def ext_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
+register_sql(
     "pipe_embed_invalidate",
-    oracle=f"""
-    WITH v2 AS ({_V2_ORACLE}
+    f"""
+    WITH v2 AS ({_V2_SQL}
     ), delta AS (
       SELECT COALESCE(v1.doc_id, v2.doc_id) AS doc_id,
              CASE WHEN v1.doc_id IS NULL THEN 'added' ELSE 'changed' END AS reason
@@ -1203,9 +1165,7 @@ def ext_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
            CASE WHEN e.vec_id IS NOT NULL THEN 1 ELSE 0 END AS has_stale_vector
     FROM delta d LEFT JOIN embeddings e ON d.doc_id = e.vec_id
     """,
-)
-def pipe_embed_invalidate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cache invalidation — the maintenance join every
+    doc="""Embedding-cache invalidation — the maintenance join every
     vector-indexed corpus needs after a crawl: docs whose text CHANGED
     (stale vector must be re-embedded and the ANN index cell updated)
     or were ADDED (no vector yet) in the new snapshot, flagged with
@@ -1217,30 +1177,8 @@ def pipe_embed_invalidate(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the embeddings table on the shared id.  At 100 TB the
     embeddings side is large but the probe side is the delta, so this
     is a classic small-probe shuffle join; with embeddings bucketed by
-    vec_id it degenerates to a map-side lookup."""
-    docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id")
-    v1 = docs.select("doc_id", F.md5("text").alias("h"))
-    v2 = _snapshot_v2(docs)
-    a, b = v1.alias("a"), v2.alias("b")
-    delta = (
-        a.join(b, F.col("a.doc_id") == F.col("b.doc_id"), "full_outer")
-        .where(
-            F.col("b.doc_id").isNotNull()
-            & (F.col("a.doc_id").isNull() | (F.col("a.h") != F.col("b.h")))
-        )
-        .select(
-            F.coalesce(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_id"),
-            F.when(F.col("a.doc_id").isNull(), F.lit("added"))
-            .otherwise(F.lit("changed"))
-            .alias("reason"),
-        )
-    )
-    return delta.join(emb, delta["doc_id"] == emb["vec_id"], "left").select(
-        "doc_id",
-        "reason",
-        F.when(F.col("vec_id").isNotNull(), 1).otherwise(0).alias("has_stale_vector"),
-    )
+    vec_id it degenerates to a map-side lookup.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1444,6 +1382,7 @@ def pipe_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+# Two bodies: the Spark body reads the dedup index, which the oracle does not read.
 @register(
     "pipe_dedup_index_merge",
     oracle="""
@@ -1562,9 +1501,9 @@ def agg_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ASOF_T = "2024-01-15 00:00:00"
 
 
-@register(
+register_sql(
     "pipe_scd2_asof_read",
-    oracle=f"""
+    f"""
     WITH changes AS (
       SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts, event_id, value,
              lag(value) OVER (PARTITION BY user_id, event_type
@@ -1586,9 +1525,7 @@ _ASOF_T = "2024-01-15 00:00:00"
     WHERE valid_from <= TIMESTAMP '{_ASOF_T}'
       AND (valid_to IS NULL OR valid_to > TIMESTAMP '{_ASOF_T}')
     """,
-)
-def pipe_scd2_asof_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time travel over the SCD2 history (``pipe_scd2_intervals`` is the
+    doc="""Time travel over the SCD2 history (``pipe_scd2_intervals`` is the
     write path): "the table AS OF T" = the one version per
     (entity, attribute) whose validity interval contains T — what a
     lake table format answers for `VERSION AS OF` and what every
@@ -1600,17 +1537,8 @@ def pipe_scd2_asof_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the filter prunes BEFORE anything wide — with history
     partitioned on valid_from dates, partition pruning cuts the scan to
     segments overlapping T; no join, no extra shuffle beyond the
-    history build's own window exchange."""
-    from gordo_components_spark.operators.extensions_pipeline import (
-        pipe_scd2_intervals,
-    )
-
-    hist = pipe_scd2_intervals(spark, sf_dir)
-    t = F.to_timestamp(F.lit(_ASOF_T))
-    return hist.where(
-        (F.col("valid_from") <= t)
-        & (F.col("valid_to").isNull() | (F.col("valid_to") > t))
-    ).select("user_id", "event_type", "value", "valid_from")
+    history build's own window exchange.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -2289,6 +2217,7 @@ _LEV_DIRTY = """
 """
 
 
+# Two bodies: the Spark body is a blocked pair join.
 @register(
     "join_fuzzy_levenshtein",
     oracle=f"""

@@ -16,13 +16,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from gordo_components_spark.caches import persist_tracked
 from gordo_components_spark.operators.relational import _fshift, _fshift_col
-from gordo_components_spark.registry import register
+from gordo_components_spark.registry import register, register_sql
 from gordo_components_spark.sources.tables import load_table, spread_scan
 
 
-@register(
+register_sql(
     "ext_dedup_exact",
-    oracle="""
+    """
     WITH doubled AS (
       SELECT doc_id, text FROM documents
       UNION ALL
@@ -34,21 +34,12 @@ from gordo_components_spark.sources.tables import load_table, spread_scan
     FROM doubled
     GROUP BY md5(text)
     """,
-)
-def ext_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E1 exact dedup: hash-groupBy on content digest, keep the lowest id
+    doc="""E1 exact dedup: hash-groupBy on content digest, keep the lowest id
     (deterministic survivor).  The fixture corpus is duplicate-free, so an
     offset copy is unioned in to make every group size 2.  At 100 TB this
     is one shuffle on the digest — the digest (not the text) is the
-    shuffle key, so wide rows don't inflate the exchange."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    doubled = docs.unionByName(
-        docs.select((F.col("doc_id") + 1000000).alias("doc_id"), "text")
-    )
-    return (
-        doubled.groupBy(F.md5("text").alias("text_hash"))
-        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
-    )
+    shuffle key, so wide rows don't inflate the exchange.""",
+)
 
 
 # Word-3-gram shingle set.  The token array is BOUND ONCE as a lambda

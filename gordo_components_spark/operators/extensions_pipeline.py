@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from gordo_components_spark.functions.timeseries import sql_over
 from gordo_components_spark.operators.relational import _fshift, _fshift_col
-from gordo_components_spark.registry import register
+from gordo_components_spark.registry import register, register_sql
 from gordo_components_spark.sources.tables import load_table
 
 
@@ -45,7 +45,9 @@ _BUCKET_SPARK = _bucket("{key}", "instr")
 _BUCKET_DUCK = _bucket("{key}", "strpos")
 
 
-_UPSERT_ORACLE = """
+register_sql(
+    "pipe_upsert_latest",
+    """
     WITH updates AS (
       SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events
       UNION ALL
@@ -58,30 +60,12 @@ _UPSERT_ORACLE = """
       FROM updates
     )
     SELECT event_id, user_id, ts, value FROM ranked WHERE rn = 1
-    """
-
-
-@register("pipe_upsert_latest", oracle=_UPSERT_ORACLE)
-def pipe_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC-style latest-wins upsert compaction: base ∪ updates, keep the
+    """,
+    doc="""CDC-style latest-wins upsert compaction: base ∪ updates, keep the
     newest record per key (row_number over event-time desc).  This is the
     batch MERGE for append-only lakes; at 100 TB it's one shuffle on the
-    key, and with the base bucketed by key the shuffle disappears."""
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
-    updates = (
-        ev.where(F.col("event_id") % 10 == 0)
-        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
-        .withColumn("value", F.col("value") + 1000.0)
-    )
-    merged = ev.unionByName(updates)
-    return (
-        merged.withColumn(
-            "rn",
-            F.expr("ROW_NUMBER() OVER (PARTITION BY event_id ORDER BY ts DESC, value DESC)"),
-        )
-        .where("rn = 1")
-        .drop("rn")
-    )
+    key, and with the base bucketed by key the shuffle disappears.""",
+)
 
 
 _MANIFEST_DEL_MOD = 97  # broad erasure fixture: event_id % 97 == 0
@@ -270,6 +254,7 @@ _MANIFEST_UPSERT_ORACLE = """
     """
 
 
+# Two bodies: the Spark body reads the manifest table, which the oracle does not read.
 @register(
     "pipe_manifest_upsert",
     oracle=_MANIFEST_UPSERT_ORACLE,
@@ -297,6 +282,7 @@ def pipe_manifest_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ManifestTable(root).read(spark, version=2)
 
 
+# Two bodies: the Spark body reads the manifest table, which the oracle does not read.
 @register(
     "pipe_manifest_delete",
     oracle=_MANIFEST_UPSERT_ORACLE.replace(
@@ -321,6 +307,7 @@ def pipe_manifest_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ManifestTable(root).read(spark, version=3)
 
 
+# Two bodies: the Spark body reads the manifest table, which the oracle does not read.
 @register(
     "pipe_manifest_gdpr_erase",
     oracle=_MANIFEST_UPSERT_ORACLE.replace(
@@ -378,6 +365,7 @@ def _manifest_merge_root(spark: SparkSession, sf_dir: str) -> str:
     return _manifest_fixture(sf_dir, "events_merge_2v", "merge", build)
 
 
+# Two bodies: the Spark body reads the manifest table, which the oracle does not read.
 @register(
     "pipe_manifest_merge_granular",
     oracle=f"""
@@ -433,6 +421,7 @@ def _manifest_compact_root(spark: SparkSession, sf_dir: str) -> str:
     return _manifest_fixture(sf_dir, "events_compact_5v", "compact", build)
 
 
+# Two bodies: the Spark body reads the manifest table, which the oracle does not read.
 @register(
     "pipe_manifest_compact",
     oracle="""
@@ -457,6 +446,7 @@ def pipe_manifest_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ManifestTable(root).read(spark)
 
 
+# Two bodies: the Spark body reads the manifest table, which the oracle does not read.
 @register(
     "pipe_manifest_pruned_read",
     oracle=_MANIFEST_UPSERT_ORACLE.replace(
@@ -484,6 +474,7 @@ def pipe_manifest_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Two bodies: the Spark body reads the manifest table, which the oracle does not read.
 @register(
     "pipe_manifest_time_travel",
     oracle="""
@@ -527,6 +518,7 @@ def _manifest_evolve_root(spark: SparkSession, sf_dir: str) -> str:
     return _manifest_fixture(sf_dir, "events_evolve_2v", "evolve", build)
 
 
+# Two bodies: the Spark body reads the manifest table, which the oracle does not read.
 @register(
     "pipe_manifest_schema_evolve",
     oracle="""
@@ -579,6 +571,7 @@ def _manifest_restat_root(spark: SparkSession, sf_dir: str) -> str:
     return _manifest_fixture(sf_dir, "events_restat_3v", "restat", build)
 
 
+# Two bodies: the Spark body reads the manifest table, which the oracle does not read.
 @register(
     "pipe_manifest_restat_read",
     oracle="""
@@ -688,6 +681,7 @@ def _manifest_manydirs_root(spark: SparkSession, sf_dir: str) -> str:
     return _manifest_fixture(sf_dir, "events_manydirs_2v", "manydirs", build)
 
 
+# Two bodies: the Spark body reads the manifest table, which the oracle does not read.
 @register(
     "pipe_manifest_many_appends",
     oracle="""
@@ -730,6 +724,7 @@ def pipe_manifest_many_appends(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Two bodies: the Spark body reads the manifest table, which the oracle does not read.
 @register(
     "pipe_manifest_skip_read",
     oracle=f"""
@@ -765,6 +760,7 @@ def pipe_manifest_skip_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ManifestTable(root).read_pruned(spark, "user_id", 5, 9, version=2)
 
 
+# Two bodies: the Spark body reads the manifest table, which the oracle does not read.
 @register(
     "pipe_manifest_changefeed",
     oracle=f"""
@@ -902,9 +898,9 @@ def pipe_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "pipe_scd2_intervals",
-    oracle="""
+    """
     WITH changes AS (
       SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts, event_id, value,
              lag(value) OVER (PARTITION BY user_id, event_type
@@ -923,9 +919,7 @@ def pipe_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
                                ORDER BY ts, event_id) IS NULL AS BOOLEAN) AS is_current
     FROM versioned
     """,
-)
-def pipe_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD-type-2 history building (the CDC→warehouse pattern): collapse
+    doc="""SCD-type-2 history building (the CDC→warehouse pattern): collapse
     an append-only event stream into validity intervals per
     (entity, attribute) — keep only rows where the value CHANGED (lag
     compare), then close each version with the next change's timestamp
@@ -933,25 +927,8 @@ def pipe_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Two window passes over the same (user_id, event_type) partitioning —
     one shuffle, frames never cross machines; at 100 TB this is the
-    standard one-pass historization of a CDC feed, no self-join."""
-    ev = load_table(spark, sf_dir, "events")
-    part = "PARTITION BY user_id, event_type ORDER BY ts, event_id"
-    changes = ev.select(
-        "user_id", "event_type", "ts", "event_id", "value",
-        F.expr(f"lag(value) OVER ({part})").alias("prev_value"),
-    )
-    versioned = changes.where(
-        F.col("prev_value").isNull() | (F.col("value") != F.col("prev_value"))
-    )
-    lead_ts = F.expr(f"lead(ts) OVER ({part})")
-    return versioned.select(
-        "user_id",
-        "event_type",
-        "value",
-        F.col("ts").alias("valid_from"),
-        lead_ts.alias("valid_to"),
-        lead_ts.isNull().cast("boolean").alias("is_current"),
-    )
+    standard one-pass historization of a CDC feed, no self-join.""",
+)
 
 
 @register(
@@ -2875,13 +2852,13 @@ def pipe_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "pipe_split_stratified",
-    oracle="""
+    """
     WITH r AS (
       SELECT doc_id, source, lang,
              CAST(row_number() OVER (PARTITION BY source, lang
-                    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
+                    ORDER BY md5(CAST(doc_id AS STRING)), doc_id)
                   AS BIGINT) AS rk,
              CAST(count(*) OVER (PARTITION BY source, lang) AS BIGINT) AS n
       FROM documents
@@ -2892,9 +2869,7 @@ def pipe_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'test' END AS split
     FROM r
     """,
-)
-def pipe_split_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stratified train/val/test assignment (round 10) — the split every
+    doc="""Stratified train/val/test assignment (round 10) — the split every
     released corpus ships next to ``pipe_split_leakage_safe``: within
     each (source, lang) stratum, documents are ordered by a content-free
     deterministic hash (md5 of the id — reshuffling text cannot move a
@@ -2910,31 +2885,8 @@ def pipe_split_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     — thousands at worst, each window sort bounded by its stratum; a
     single pathological stratum would shard via the histogram-offset
     decomposition ``pipe_shuffle_global`` uses.  All outputs integer or
-    categorical — bit-exact, no rounding convention."""
-    docs = load_table(spark, sf_dir, "documents")
-    r = docs.select(
-        "doc_id",
-        "source",
-        "lang",
-        F.expr(
-            "CAST(row_number() OVER (PARTITION BY source, lang"
-            " ORDER BY md5(CAST(doc_id AS STRING)), doc_id) AS BIGINT)"
-        ).alias("rk"),
-        F.expr(
-            "CAST(count(*) OVER (PARTITION BY source, lang) AS BIGINT)"
-        ).alias("n"),
-    )
-    return r.select(
-        "doc_id",
-        "source",
-        "lang",
-        "rk",
-        "n",
-        F.when(F.col("rk") * 10 <= F.col("n") * 8, F.lit("train"))
-        .when(F.col("rk") * 10 <= F.col("n") * 9, F.lit("val"))
-        .otherwise(F.lit("test"))
-        .alias("split"),
-    )
+    categorical — bit-exact, no rounding convention.""",
+)
 
 
 # ---------------------------------------------------------------------------

@@ -14,11 +14,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from gordo_components_spark.functions.timeseries import pivot_wide, pivot_wide_sql
-from gordo_components_spark.operators.relational import _fshift, _fshift_col, _fshift_expr
-from gordo_components_spark.registry import register
+from gordo_components_spark.operators.relational import _fshift, _fshift_expr
+from gordo_components_spark.registry import register, register_sql
 from gordo_components_spark.sources.tables import load_table
 
 
+# Two bodies: the Spark body is a pandas UDF.
 @register(
     "udf_minmax_scale",
     oracle="""
@@ -56,6 +57,7 @@ def udf_minmax_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Two bodies: the Spark body is a pandas UDF.
 @register(
     "udf_group_normalize",
     oracle="""
@@ -152,6 +154,12 @@ def udaf_anomaly_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Decimal-routed means throughout: avg-of-doubles is engine-order
+# dependent at ~1 ulp, enough to flip round() boundaries at sf0.1+;
+# exact decimal numerators / counts are bit-identical (scales sized so
+# numerators stay under 2^53 — decimal→double is then exact too).  The
+# outputs floor-shift, not round(): engines disagree on exact half-ties
+# (Spark rounds the shortest decimal repr, DuckDB multiplies).
 _CV_MAE = (
     "CAST(SUM(CAST(abs(f.value - m.fold_mean) AS DECIMAL(30,8))) AS DOUBLE)"
     " / COUNT(*)"
@@ -162,9 +170,9 @@ _CV_RMSE = (
 )
 
 
-@register(
+register_sql(
     "udaf_ts_cv_metrics",
-    oracle=f"""
+    f"""
     WITH folds AS (
       SELECT user_id, value,
              CAST(ntile(3) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS INT) AS fold
@@ -181,49 +189,12 @@ _CV_RMSE = (
     FROM folds f JOIN mu m ON f.user_id = m.user_id AND f.fold = m.fold
     GROUP BY f.user_id, f.fold
     """,
-)
-def udaf_ts_cv_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O45 TimeSeriesSplit CV metrics: time-ordered ntile(3) fold
+    doc="""O45 TimeSeriesSplit CV metrics: time-ordered ntile(3) fold
     assignment per machine, then per-fold MAE/RMSE against the fold-mean
     predictor (reference ``cross_validate`` + ``metric_wrapper``).  The
     real estimator CV runs in ``ml/islands.py``; fold bookkeeping and
-    metric aggregation stay native."""
-    ev = load_table(spark, sf_dir, "events")
-    folds = ev.select(
-        "user_id",
-        "value",
-        F.expr("CAST(ntile(3) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS INT)").alias(
-            "fold"
-        ),
-    )
-    # decimal-routed means throughout: avg-of-doubles is engine-order
-    # dependent at ~1 ulp, enough to flip round() boundaries at sf0.1+;
-    # exact decimal numerators / counts are bit-identical (scales sized
-    # so numerators stay under 2^53 — decimal→double is then exact too)
-    mu = folds.groupBy("user_id", "fold").agg(
-        F.round(
-            F.expr("CAST(SUM(CAST(value AS DECIMAL(30,8))) AS DOUBLE)") / F.count(F.lit(1)), 9
-        ).alias("fold_mean")
-    )
-    dev = F.col("value") - F.col("fold_mean")
-    n = F.count(F.lit(1))
-    mae_sum = F.expr(
-        "CAST(SUM(CAST(abs(value - fold_mean) AS DECIMAL(30,8))) AS DOUBLE)"
-    )
-    sq_sum = F.expr(
-        "CAST(SUM(CAST((value - fold_mean) * (value - fold_mean) AS DECIMAL(30,6))) AS DOUBLE)"
-    )
-    return (
-        folds.join(mu, ["user_id", "fold"])
-        .groupBy("user_id", "fold")
-        .agg(
-            n.alias("n"),
-            # floor-shift, not round(): engines disagree on exact half-ties
-            # (Spark rounds the shortest decimal repr, DuckDB multiplies)
-            _fshift_col(mae_sum / n).alias("mae"),
-            _fshift_col(F.sqrt(sq_sum / n)).alias("rmse"),
-        )
-    )
+    metric aggregation stay native.""",
+)
 
 
 # ---- distribution drift (train window vs serve window) -------------------
@@ -304,9 +275,9 @@ def _drift_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return terms
 
 
-@register(
+register_sql(
     "ml_drift_bins",
-    oracle=f"""
+    f"""
     WITH {_DRIFT_COUNTS_SQL}
     SELECT event_type, bin, c_train, c_serve,
            {_fshift('CAST(c_train AS DOUBLE) / n_train', 'p_train')},
@@ -314,9 +285,7 @@ def _drift_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
            {_fshift('term', 'drift_term')}
     FROM terms
     """,
-)
-def ml_drift_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Model-drift histogram — the MLOps check between O39's registry and
+    doc="""Model-drift histogram — the MLOps check between O39's registry and
     O43's batch scorer: per (tag, value-bin), the train-window vs
     serve-window rates and the bin's chi-square-style drift contribution.
     A serving pipeline alerts (and triggers rebuild, reference
@@ -326,17 +295,8 @@ def ml_drift_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     One scan, two groupBys (bin grid, then tag totals), one broadcast-
     size join back — counts are integers end-to-end, so the rates and
     terms are bit-identical doubles before the floor-shift (see module
-    comment)."""
-    terms = _drift_terms(spark, sf_dir)
-    return terms.select(
-        "event_type",
-        "bin",
-        "c_train",
-        "c_serve",
-        F.expr(_fshift_expr("CAST(c_train AS DOUBLE) / n_train")).alias("p_train"),
-        F.expr(_fshift_expr("CAST(c_serve AS DOUBLE) / n_serve")).alias("p_serve"),
-        F.expr(_fshift_expr("term")).alias("drift_term"),
-    )
+    comment).""",
+)
 
 
 @register(
@@ -393,9 +353,9 @@ _KS_W = "PARTITION BY event_type"
 _KS_CUM = f"{_KS_W} ORDER BY v100 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
 
 
-@register(
+register_sql(
     "ml_drift_ks",
-    oracle=f"""
+    f"""
     WITH e AS (
       SELECT event_type,
              CASE WHEN CAST(ts AS TIMESTAMP) < {_DRIFT_SPLIT} THEN 1 ELSE 0 END AS is_train,
@@ -428,49 +388,11 @@ _KS_CUM = f"{_KS_W} ORDER BY v100 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT R
     HAVING MAX(n_train) > 0 AND MAX(n_serve) > 0
     """,
     tags=("bench",),  # round-9: ECDF drift class promoted (ROUND9_NOTES #1)
-)
-def ml_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact two-sample KS drift per tag between the train and serve
+    doc="""Exact two-sample KS drift per tag between the train and serve
     windows (shared ``_DRIFT_SPLIT``) — the watchman check for shape
     shifts the binned ``ml_drift_score`` can miss, with the rebuild
     flag decided by integer cross-multiplication (D > 0.1), never a
     float compare.  See the block comment for the histogram-windowed
     scale shape (corpus is never sorted; ECDF windows ride the compact
-    per-(tag, v100) histogram; one exchange end to end)."""
-    ev = load_table(spark, sf_dir, "events")
-    e = ev.select(
-        "event_type",
-        F.expr(f"CASE WHEN ts < {_DRIFT_SPLIT} THEN 1 ELSE 0 END").alias("is_train"),
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("v100"),
-    )
-    h = e.groupBy("event_type", "v100").agg(
-        F.expr("CAST(SUM(is_train) AS BIGINT)").alias("c_train"),
-        F.expr("CAST(SUM(1 - is_train) AS BIGINT)").alias("c_serve"),
-    )
-    w = h.select(
-        "event_type",
-        "v100",
-        F.expr(f"SUM(c_train) OVER ({_KS_CUM})").alias("cum_t"),
-        F.expr(f"SUM(c_serve) OVER ({_KS_CUM})").alias("cum_s"),
-        F.expr(f"SUM(c_train) OVER ({_KS_W})").alias("n_train"),
-        F.expr(f"SUM(c_serve) OVER ({_KS_W})").alias("n_serve"),
-    )
-    d_num = "abs(cum_t * n_serve - cum_s * n_train)"
-    return (
-        w.groupBy("event_type")
-        .agg(
-            F.expr("CAST(MAX(n_train) AS BIGINT)").alias("n_train"),
-            F.expr("CAST(MAX(n_serve) AS BIGINT)").alias("n_serve"),
-            F.expr(f"CAST(MAX({d_num}) AS BIGINT)").alias("ks_num"),
-            F.expr(
-                _fshift_expr(
-                    f"CAST(MAX({d_num}) AS DOUBLE)"
-                    " / (CAST(MAX(n_train) AS DOUBLE) * CAST(MAX(n_serve) AS DOUBLE))"
-                )
-            ).alias("ks_stat"),
-            F.expr(
-                f"(MAX({d_num}) * 10 > MAX(n_train) * MAX(n_serve))"
-            ).alias("drifted"),
-        )
-        .where((F.col("n_train") > 0) & (F.col("n_serve") > 0))
-    )
+    per-(tag, v100) histogram; one exchange end to end).""",
+)

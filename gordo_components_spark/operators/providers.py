@@ -19,13 +19,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from gordo_components_spark.registry import register
+from gordo_components_spark.registry import register, register_sql
 from gordo_components_spark.sources.tables import load_table
 
 
-@register(
+register_sql(
     "scan_union_sources",
-    oracle="""
+    """
     WITH unioned AS (
       SELECT event_type, value FROM events WHERE event_type IN ('click','view','purchase')
       UNION ALL
@@ -35,24 +35,13 @@ from gordo_components_spark.sources.tables import load_table
            CAST(SUM(CAST(value AS DECIMAL(30,8))) AS DOUBLE) AS total_value
     FROM unioned GROUP BY event_type
     """,
-)
-def scan_union_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O1 provider dispatch: each tag routes to the provider that
+    doc="""O1 provider dispatch: each tag routes to the provider that
     ``can_handle_tag``s it; the merged lazy stream is a union of scans.
-    Here: two disjoint tag partitions scanned separately, unionByName'd."""
-    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
-    provider_a = ev.where(F.col("event_type").isin("click", "view", "purchase"))
-    provider_b = ev.where(F.col("event_type").isin("error", "signup"))
-    return (
-        provider_a.unionByName(provider_b)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("CAST(SUM(CAST(value AS DECIMAL(30,8))) AS DOUBLE)").alias("total_value"),
-        )
-    )
+    Here: two disjoint tag partitions scanned separately, unionByName'd.""",
+)
 
 
+# Two bodies: the Spark body is the time-range scan whose pushdown this face exists to show.
 @register(
     "scan_pruned_range",
     oracle="""
@@ -85,6 +74,7 @@ _CSV_SCHEMA = T.StructType(
 )
 
 
+# Two bodies: the Spark body reads a CSV copy of events, which the oracle does not read.
 @register(
     "scan_csv_events",
     oracle="""
@@ -169,6 +159,7 @@ _FMT_ORACLE = """
     """
 
 
+# Two bodies: the Spark body reads a JSON-lines copy of events, which the oracle does not read.
 @register("scan_jsonl_events", oracle=_FMT_ORACLE)
 def scan_jsonl_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O3-adjacent source-format breadth: JSON-lines scan with explicit
@@ -176,6 +167,7 @@ def scan_jsonl_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _format_scan(spark, sf_dir, "json")
 
 
+# Two bodies: the Spark body reads an ORC copy of events, which the oracle does not read.
 @register("scan_orc_events", oracle=_FMT_ORACLE)
 def scan_orc_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Source-format breadth: ORC scan (the other columnar at-rest format
@@ -183,6 +175,8 @@ def scan_orc_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _format_scan(spark, sf_dir, "orc")
 
 
+# Two bodies: the Spark body reads a hive-partitioned copy of events, which the
+# oracle does not read.
 @register(
     "scan_partition_pruned",
     oracle="""
@@ -245,6 +239,8 @@ def gen_synthetic_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Two bodies: the Spark body reads an evolved-schema copy of events, which the
+# oracle does not read.
 @register(
     "scan_schema_evolution",
     oracle="""
@@ -386,6 +382,7 @@ def _bucketed_table(
     return name
 
 
+# Two bodies: the Spark body joins bucketed tables, which the oracle does not read.
 @register(
     "scan_bucketed_join",
     oracle="""

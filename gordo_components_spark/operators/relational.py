@@ -85,7 +85,6 @@ register_sql(
     FROM lineitem
     GROUP BY l_returnflag, l_linestatus
     """,
-    tables=("lineitem",),
     tags=("bench",),
     doc="""TPC-H Q1-style hash aggregate (map-side partial agg, one shuffle).""",
 )
@@ -106,7 +105,6 @@ register_sql(
            COUNT(*) AS n_rows
     FROM lineitem GROUP BY l_returnflag
     """,
-    tables=("orders", "lineitem"),
     doc="""Exact distinct aggregation (expand + two-phase agg under AQE),
     consolidated SURVEY §2.4 face: the orders leg is the plain exact
     COUNT(DISTINCT); the lineitem leg is the cardinality-estimation
@@ -124,7 +122,6 @@ register_sql(
            COUNT(DISTINCT l_suppkey) AS n_supps
     FROM lineitem GROUP BY l_returnflag
     """,
-    tables=("lineitem",),
     doc="""Cardinality estimation surface; declared with *exact* distinct on
     both sides per SURVEY §2.4 (approx_count_distinct isn't oracle-stable).
     The 100 TB path swaps in approx_count_distinct(rsd) — same plan shape.""",
@@ -142,7 +139,6 @@ register_sql(
     FROM lineitem
     GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
-    tables=("lineitem",),
     doc="""Hierarchical subtotals via ROLLUP (Expand operator; single shuffle).""",
 )
 
@@ -186,7 +182,6 @@ register_sql(
     FROM orders JOIN customer ON o_custkey = c_custkey
     GROUP BY c_mktsegment
     """,
-    tables=("customer", "orders"),
     tags=("bench",),
     doc="""Fact⋈dim equi join; the dim side broadcasts via AQE's size
     threshold (no fact shuffle at bench SF) — customer GROWS with the
@@ -203,7 +198,6 @@ register_sql(
     FROM customer LEFT JOIN orders ON o_custkey = c_custkey
     GROUP BY c_custkey, c_name
     """,
-    tables=("customer", "orders"),
     doc="""Left outer join preserving customers with zero orders.""",
 )
 
@@ -215,7 +209,6 @@ register_sql(
     WHERE c_custkey IS NOT NULL
       AND c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > {_BIG_ORDER})
     """,
-    tables=("customer", "orders"),
     doc="""Left-semi join (EXISTS): customers with any big order.  The
     explicit ``c_custkey IS NOT NULL`` (implied by IN) keeps customer's
     pushed ``IsNotNull``: Catalyst rewrites the subquery into the join
@@ -230,7 +223,6 @@ register_sql(
     WHERE NOT EXISTS (SELECT 1 FROM orders
                       WHERE o_custkey = c_custkey AND o_orderpriority = '{_URGENT}')
     """,
-    tables=("customer", "orders"),
     doc="""Left-anti join (NOT EXISTS): customers with no urgent orders.""",
 )
 
@@ -244,7 +236,6 @@ register_sql(
      AND l_shipdate > o_orderdate + INTERVAL {_THETA_DAYS} DAY
     GROUP BY o_orderkey
     """,
-    tables=("orders", "lineitem"),
     doc="""Equi key + non-equi range residual (ship >30 days after order).
     The equi conjunct keeps it a hash/sort-merge join — never a cartesian.""",
 )
@@ -259,7 +250,6 @@ register_sql(
     JOIN region ON n_regionkey = r_regionkey
     GROUP BY r_name, n_name
     """,
-    tables=("region", "nation", "customer"),
     tags=("bench",),
     doc="""O17 tag→asset dimension lookup restated: snowflake dims broadcast
     (reference ``dataset/sensor_tag.py::normalize_sensor_tags``).""",
@@ -303,7 +293,6 @@ register_sql(
      AND l_shipdate > o_orderdate + INTERVAL {_THETA_DAYS} DAY
     GROUP BY o_orderpriority
     """,
-    tables=("customer", "orders", "lineitem"),
     doc="""Consolidated SURVEY §2.3 addendum face: one witnessed query per
     join strategy — broadcast-hash equi inner, null-preserving left
     outer, left-semi (EXISTS), left-anti (NOT EXISTS), and equi+range
@@ -324,7 +313,6 @@ register_sql(
            CAST(ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS seq
     FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events)
     """,
-    tables=("events",),
     doc="""O26 timestamp-ordered sequencing. Partitioned by machine (user_id)
     so the sort is shuffle-parallel — a single global ORDER BY would
     serialize on one partition at 100 TB.""",
@@ -339,7 +327,6 @@ register_sql(
     ORDER BY o_totalprice DESC, o_orderkey
     LIMIT 25
     """,
-    tables=("orders",),
     doc="""O27 top-k: TakeOrderedAndProject (per-partition heap + driver merge,
     no full sort). Unique o_orderkey tiebreak makes the k-set deterministic.""",
 )
@@ -354,7 +341,6 @@ register_sql(
     UNION ALL
     SELECT s_nationkey AS nationkey, 'supplier' AS side FROM supplier
     """,
-    tables=("customer", "supplier"),
     doc="""UNION ALL (no shuffle — pure concatenation).""",
 )
 
@@ -366,7 +352,6 @@ register_sql(
     INTERSECT
     SELECT s_nationkey AS nationkey FROM supplier
     """,
-    tables=("customer", "supplier"),
     doc="""INTERSECT (distinct semantics on both engines).""",
 )
 
@@ -378,7 +363,6 @@ register_sql(
     EXCEPT
     SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
     """,
-    tables=("orders",),
     doc="""EXCEPT (distinct): customers with open but no finished orders.""",
 )
 
@@ -400,7 +384,6 @@ register_sql(
       EXCEPT
       SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F')
     """,
-    tables=("customer", "supplier", "orders"),
     doc="""Consolidated SURVEY §2.7 face: UNION ALL (pure concatenation, no
     shuffle), INTERSECT and EXCEPT (distinct semantics, hash-partitioned
     on the full row) witnessed in one query; per-variant forms

@@ -1,8 +1,9 @@
 """Relational breadth addendum: correlated subqueries, grouping sets,
 cube, unpivot/reshape, and three-valued-logic null operators — the SQL
 surface a reference user's ad-hoc queries hit beyond the §2 core.
-The subquery/grouping/null entries are one SQL text that Spark runs and
-DuckDB checks (``register_sql``), exercising the SQL front-end; the rest
+The subquery/grouping/null entries, the Benford screen and the Gini
+skew screen are one SQL text that Spark runs and DuckDB checks
+(``register_sql``), exercising the SQL front-end; the rest
 keep a Spark body, each for the reason given at its registration.
 """
 
@@ -24,7 +25,6 @@ register_sql(
     WHERE c_acctbal > (SELECT AVG(c2.c_acctbal) FROM customer c2
                        WHERE c2.c_nationkey = c.c_nationkey)
     """,
-    tables=("customer",),
     doc="""Correlated scalar subquery (decorrelates to an aggregate + join in
     Catalyst — verify no per-row re-execution survives in the plan).""",
 )
@@ -41,7 +41,6 @@ register_sql(
     FROM orders
     GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
     """,
-    tables=("orders",),
     doc="""Explicit GROUPING SETS through the SQL front-end.""",
 )
 
@@ -56,7 +55,6 @@ register_sql(
     FROM lineitem
     GROUP BY CUBE (l_returnflag, l_linestatus)
     """,
-    tables=("lineitem",),
     doc="""CUBE: all 2^k grouping combinations in one Expand pass.""",
 )
 
@@ -100,7 +98,6 @@ register_sql(
            (v IS DISTINCT FROM value) AS v_differs
     FROM t
     """,
-    tables=("events",),
     doc="""Three-valued-logic surface: COALESCE / NULLIF / IS [NOT] NULL /
     IS DISTINCT FROM — identical semantics both engines.""",
 )
@@ -402,13 +399,17 @@ _BENFORD_OBS_PAIRS = [
 _BENFORD_OBS = ", ".join(f"{e} AS {a}" for a, e in _BENFORD_OBS_PAIRS)
 
 
-# Two bodies: the oracle's ``CAST(… AS VARCHAR)`` does not parse on Spark.
-@register(
+# Readings below half a cent (or negative) have no first significant
+# digit in 1..9: excluding them keeps n = sum(observed), so the χ²
+# expectation is well-posed (counting them in n but in no bucket would
+# bias chi2 upward identically in both engines, which oracle parity can
+# never catch).
+register_sql(
     "agg_benford_screen",
-    oracle=f"""
+    f"""
     WITH v AS (
       SELECT event_type,
-             substr(CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR), 1, 1)
+             substr(CAST(CAST(round(value * 100) AS BIGINT) AS STRING), 1, 1)
                AS d
       FROM events
       WHERE round(value * 100) >= 1
@@ -421,9 +422,7 @@ _BENFORD_OBS = ", ".join(f"{e} AS {a}" for a, e in _BENFORD_OBS_PAIRS)
            (({_BENFORD_CHI2}) < 15.507) AS conforms
     FROM o
     """,
-)
-def agg_benford_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford first-significant-digit conformance per tag — the
+    doc="""Benford first-significant-digit conformance per tag — the
     data-quality screen that catches stuck, clipped, or fabricated
     sensor feeds (a healthy multi-decade reading stream follows
     log10(1 + 1/d); a sensor pinned near one value does not): observed
@@ -435,31 +434,8 @@ def agg_benford_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     no pivot shuffle, no join); at 100 TB this is a single map-side
     combinable pass.  Exactness: integer counts; the χ² is a
     fixed-order float chain over compile-time literals (block
-    comment) — bit-identical, no rounding convention."""
-    ev = load_table(spark, sf_dir, "events")
-    # readings below half a cent (or negative) have no first significant
-    # digit in 1..9: excluding them keeps n = sum(observed) so the chi-sq
-    # expectation is well-posed (review finding: counting them in n but
-    # in no bucket biases chi2 upward identically in both engines, which
-    # oracle parity can never catch)
-    v = ev.where(F.expr("round(value * 100) >= 1")).select(
-        "event_type",
-        F.expr(
-            "substr(CAST(CAST(round(value * 100) AS BIGINT) AS STRING), 1, 1)"
-        ).alias("d"),
-    )
-    o = v.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        *[F.expr(e).alias(a) for a, e in _BENFORD_OBS_PAIRS],
-    )
-    return o.select(
-        "event_type",
-        "n",
-        "o1",
-        "o9",
-        F.expr(_BENFORD_CHI2).alias("chi2"),
-        F.expr(f"(({_BENFORD_CHI2}) < 15.507)").alias("conforms"),
-    )
+    comment) — bit-identical, no rounding convention.""",
+)
 
 
 # Gini concentration of per-machine event counts (Gini 1912; the
@@ -472,10 +448,9 @@ def agg_benford_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 # i ≈ 10⁷ and c_i ≈ 10⁷ put S ≈ 10²¹ past bigint) — decimal-routed,
 # with checked-SF values < 2⁵³ so the closing divisions are single
 # exact-int → double ops, bit-identical across engines.
-# Two bodies: the oracle's ``HUGEINT`` does not parse on Spark.
-@register(
+register_sql(
     "agg_skew_gini",
-    oracle="""
+    """
     WITH c AS (
       SELECT event_type, user_id, CAST(count(*) AS BIGINT) AS cnt
       FROM events GROUP BY 1, 2
@@ -487,17 +462,15 @@ def agg_benford_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), g AS (
       SELECT event_type, CAST(count(*) AS BIGINT) AS k,
              CAST(sum(cnt) AS BIGINT) AS t,
-             sum(CAST(i AS HUGEINT) * cnt) AS s
+             sum(CAST(i AS DECIMAL(38,0)) * cnt) AS s
       FROM r GROUP BY 1
     )
     SELECT event_type, k AS n_machines, t AS n_events,
-           CAST(2 * s - CAST(k + 1 AS HUGEINT) * t AS DOUBLE)
-             / CAST(CAST(k AS HUGEINT) * t AS DOUBLE) AS gini
+           CAST(2 * s - CAST(k + 1 AS DECIMAL(38,0)) * t AS DOUBLE)
+             / CAST(CAST(k AS DECIMAL(38,0)) * t AS DOUBLE) AS gini
     FROM g
     """,
-)
-def agg_skew_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fleet-skew screen per tag: the Gini coefficient of how unevenly a
+    doc="""Fleet-skew screen per tag: the Gini coefficient of how unevenly a
     tag's events concentrate across machines (0 = every machine reports
     equally, →1 = one machine dominates).  The capacity-planning /
     hot-key diagnostic read before choosing partition keys — a tag with
@@ -513,39 +486,8 @@ def agg_skew_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     fleet the window frame is trivially sized.
 
     Exactness: block comment — decimal-routed moments, tie-invariant
-    ranks, one exact-int division per output."""
-    ev = load_table(spark, sf_dir, "events")
-    c = ev.groupBy("event_type", "user_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt")
-    )
-    r = c.select(
-        "event_type",
-        "cnt",
-        F.expr(
-            "CAST(row_number() OVER (PARTITION BY event_type"
-            " ORDER BY cnt, user_id) AS BIGINT)"
-        ).alias("i"),
-    )
-    g = r.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.sum("cnt").cast("bigint").alias("t"),
-        # the PRODUCT itself is decimal-typed (not just the sum): a
-        # bigint i*cnt wraps silently past 2^63 at extreme fleet scale,
-        # while the oracle's HUGEINT product never does
-        F.expr("sum(CAST(i AS DECIMAL(19,0)) * cnt)")
-        .cast("decimal(38,0)")
-        .alias("s"),
-    )
-    return g.select(
-        "event_type",
-        F.col("k").alias("n_machines"),
-        F.col("t").alias("n_events"),
-        F.expr(
-            "CAST(2 * s - CAST(k + 1 AS DECIMAL(19,0)) * CAST(t AS DECIMAL(19,0))"
-            " AS DOUBLE)"
-            " / CAST(CAST(k AS DECIMAL(19,0)) * CAST(t AS DECIMAL(19,0)) AS DOUBLE)"
-        ).alias("gini"),
-    )
+    ranks, one exact-int division per output.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -578,7 +520,7 @@ def _cm_cell(h: str, f: str, r: str) -> str:
     )
 
 
-# Two bodies: the oracle's ``CAST(… AS VARCHAR)`` does not parse on Spark.
+# Two bodies: the oracle's ``strpos`` does not resolve on Spark.
 @register(
     "agg_countmin_estimate",
     tags=("bench",),  # round-12 promotion (r11 verdict item 6): sketch family anchor

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from gordo_components_spark.registry import register
+from gordo_components_spark.registry import register, register_sql
 from gordo_components_spark.sources.tables import load_table
 
 _DNS1035 = "^[a-z]([-a-z0-9]*[a-z0-9])?$"
@@ -78,9 +78,9 @@ def scalar_ts_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "scalar_math_anomaly",
-    oracle="""
+    """
     SELECT event_id,
            abs(value - 100.0) AS abs_dev,
            sqrt(abs(value)) AS sqrt_v,
@@ -90,20 +90,9 @@ def scalar_ts_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sign(value - 100.0) AS DOUBLE) AS dev_sign
     FROM events
     """,
+    doc="""O30 elementwise anomaly math: |y−ŷ|, norms, clamps — all
+    correctly-rounded IEEE ops, so no rounding needed for parity.""",
 )
-def scalar_math_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O30 elementwise anomaly math: |y−ŷ|, norms, clamps — all
-    correctly-rounded IEEE ops, so no rounding needed for parity."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.abs(F.col("value") - 100.0).alias("abs_dev"),
-        F.sqrt(F.abs("value")).alias("sqrt_v"),
-        (F.col("value") * F.col("value")).alias("v_sq"),
-        F.greatest("value", F.lit(50.0)).alias("clamp_lo"),
-        F.least("value", F.lit(450.0)).alias("clamp_hi"),
-        F.signum(F.col("value") - 100.0).cast("double").alias("dev_sign"),
-    )
 
 
 @register(

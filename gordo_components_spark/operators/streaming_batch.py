@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from gordo_components_spark.registry import register
+from gordo_components_spark.registry import register, register_sql
 from gordo_components_spark.sources.tables import load_table
 
 
@@ -70,6 +70,7 @@ def stream_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Two bodies: the Spark body is ``session_window``.
 @register(
     "stream_sessionize",
     oracle="""
@@ -118,6 +119,8 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Two bodies: the Spark body is ``dropDuplicates`` on the key; the text is a
+# DISTINCT over three columns.
 @register(
     "stream_dedup_ids",
     oracle="""
@@ -340,11 +343,11 @@ def stream_benford_genuine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_streaming_benford(spark, sf_dir)
 
 
-@register(
+register_sql(
     "stream_sample_bottomk",
-    oracle="""
+    """
     WITH h AS (
-      SELECT event_type, event_id, md5(CAST(event_id AS VARCHAR)) AS hid
+      SELECT event_type, event_id, md5(CAST(event_id AS STRING)) AS hid
       FROM events
     ), r AS (
       SELECT *, row_number() OVER (PARTITION BY event_type
@@ -354,9 +357,7 @@ def stream_benford_genuine(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_type, CAST(rk AS INT) AS rk, event_id, hid
     FROM r WHERE rk <= 10
     """,
-)
-def stream_sample_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed uniform sampling as a BOTTOM-K hash sketch (the
+    doc="""Distributed uniform sampling as a BOTTOM-K hash sketch (the
     KMV/min-hash sampling idea): the k events with the smallest
     content-free hash per tag ARE a uniform k-sample, and — unlike
     reservoir sampling — the sketch is MERGEABLE and order-free:
@@ -378,22 +379,8 @@ def stream_sample_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Partial-below-Exchange ordering, so a rewrite that defeats the
     pushdown fails the ring).  The low-cardinality tag key therefore
     never funnels the corpus through ~5 tasks.  Exactness: md5 hex is
-    engine-identical; (hid, event_id) is a unique total order."""
-    ev = load_table(spark, sf_dir, "events")
-    h = ev.select(
-        "event_type",
-        "event_id",
-        F.md5(F.col("event_id").cast("string")).alias("hid"),
-    )
-    r = h.select(
-        "*",
-        F.expr(
-            "row_number() OVER (PARTITION BY event_type ORDER BY hid, event_id)"
-        ).alias("rk"),
-    )
-    return r.where(F.col("rk") <= 10).select(
-        "event_type", F.col("rk").cast("int").alias("rk"), "event_id", "hid"
-    )
+    engine-identical; (hid, event_id) is a unique total order.""",
+)
 
 
 @register("stream_sample_bottomk_genuine", oracle=None)

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from gordo_components_spark.caches import persist_tracked
 from gordo_components_spark.functions.timeseries import resample
 from gordo_components_spark.operators.relational import _fshift, _fshift_col, _fshift_expr
-from gordo_components_spark.registry import register
+from gordo_components_spark.registry import register, register_sql
 from gordo_components_spark.sources.tables import load_table
 
 
@@ -56,9 +56,9 @@ def agg_resample_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "agg_tag_stats",
-    oracle="""
+    """
     SELECT user_id, event_type,
            COUNT(*) AS n_rows,
            CAST(MIN(ts) AS TIMESTAMP) AS first_ts,
@@ -67,23 +67,15 @@ def agg_resample_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY user_id, event_type
     """,
-)
-def agg_tag_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O19 dataset-stats metadata: per-tag row counts and coverage recorded
+    doc="""O19 dataset-stats metadata: per-tag row counts and coverage recorded
     into build metadata (reference assembles this inside ``get_data``).
-    min/max commute with the ns→µs truncation, so CAST(MIN(ts)) matches."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.min("ts").alias("first_ts"),
-        F.max("ts").alias("last_ts"),
-        F.round(F.avg("value"), 9).alias("mean_value"),
-    )
+    min/max commute with the ns→µs truncation, so CAST(MIN(ts)) matches.""",
+)
 
 
-@register(
+register_sql(
     "agg_cv_scores",
-    oracle="""
+    """
     WITH folds AS (
       SELECT event_type, event_id % 3 AS fold,
              round(avg(abs(value - 100.0)), 9) AS mae
@@ -98,25 +90,12 @@ def agg_tag_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM folds
     GROUP BY event_type
     """,
-)
-def agg_cv_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O20 CV score aggregation: per-fold metric values summarized to
+    doc="""O20 CV score aggregation: per-fold metric values summarized to
     mean/min/max/std per metric (reference ``builder/build_model.py`` +
     ``model/utils.py::metric_wrapper``).  Fold assignment here is the
     deterministic stand-in ``event_id % 3``; the real TimeSeriesSplit
-    fold map lives in ``ml/`` (O45)."""
-    ev = load_table(spark, sf_dir, "events")
-    folds = (
-        ev.withColumn("fold", F.col("event_id") % 3)
-        .groupBy("event_type", "fold")
-        .agg(F.round(F.avg(F.abs(F.col("value") - 100.0)), 9).alias("mae"))
-    )
-    return folds.groupBy("event_type").agg(
-        F.round(F.avg("mae"), 9).alias("mae_mean"),
-        F.min("mae").alias("mae_min"),
-        F.max("mae").alias("mae_max"),
-        F.round(F.stddev_samp("mae"), 9).alias("mae_std"),
-    )
+    fold map lives in ``ml/`` (O45).""",
+)
 
 
 @register(
@@ -400,9 +379,9 @@ def agg_sensor_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "agg_alert_episodes",
-    oracle="""
+    """
     WITH e AS (
       SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events
     ), numbered AS (
@@ -421,9 +400,7 @@ def agg_sensor_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM flagged
     GROUP BY user_id, grp
     """,
-)
-def agg_alert_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Alert-episode coalescing — the post-processing step between O44's
+    doc="""Alert-episode coalescing — the post-processing step between O44's
     per-row anomaly scores and a pager: maximal runs of CONSECUTIVE
     above-threshold readings per machine become one episode row
     (start/end/size/peak).  Classic gaps-and-islands: the difference of
@@ -435,34 +412,8 @@ def agg_alert_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame collapse into a single WindowExec pass), then one groupBy on
     (user_id, grp) — partial-agg combinable, no self-join, no island
     loop.  max(value) is a bit-exact selection; the episode bounds are
-    µs-truncated timestamps — nothing needs a rounding convention."""
-    ev = load_table(spark, sf_dir, "events")
-    w = "PARTITION BY user_id ORDER BY ts, event_id"
-    numbered = ev.select(
-        "user_id",
-        "ts",
-        "value",
-        F.expr(f"ROW_NUMBER() OVER ({w})").alias("rn"),
-        "event_id",
-    )
-    flagged = numbered.where(F.col("value") > 100.0).select(
-        "user_id",
-        "ts",
-        "value",
-        (F.col("rn") - F.expr(f"ROW_NUMBER() OVER ({w})")).alias("grp"),
-    )
-    return (
-        flagged.groupBy("user_id", "grp")
-        .agg(
-            F.min("ts").alias("episode_start"),
-            F.max("ts").alias("episode_end"),
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            F.max("value").alias("peak_value"),
-        )
-        .drop("grp")
-    )
-
-
+    µs-truncated timestamps — nothing needs a rounding convention.""",
+)
 
 
 _CORR_XY = "CAST(n * sxy - sx * sy AS DOUBLE)"
@@ -667,9 +618,9 @@ _SEAS_Z = (
 )
 
 
-@register(
+register_sql(
     "agg_seasonal_profile",
-    oracle=f"""
+    f"""
     WITH v AS (
       SELECT user_id, event_type,
              CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) AS hod,
@@ -692,9 +643,7 @@ _SEAS_Z = (
     GROUP BY 1, 2, 3
     """,
     tags=("bench",),  # round-7: single-exchange window+agg anchors the profile face
-)
-def agg_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seasonal baseline + exceedance report: per (machine, tag,
+    doc="""Seasonal baseline + exceedance report: per (machine, tag,
     hour-of-day) the mean reading, and how many readings sit > 2σ from
     their seasonal group — the diurnal-profile face a plant compares a
     sensor against before reaching for a model (the model-free sibling
@@ -709,34 +658,8 @@ def agg_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     machines × tags × 24, all aggregates partial/combinable.
 
     Exactness: integer-moment z (see block comment) — bit-identical
-    doubles, no rounding convention."""
-    ev = load_table(spark, sf_dir, "events")
-    v = ev.select(
-        "user_id",
-        "event_type",
-        F.expr("CAST(hour(ts) AS BIGINT)").alias("hod"),
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("v100"),
-    )
-    m = v.select(
-        "user_id",
-        "event_type",
-        "hod",
-        "v100",
-        *[F.expr(e).alias(a) for a, e in _SEAS_MOMENTS],
-    )
-    z = m.select(
-        "user_id", "event_type", "hod", "n", "s1", F.expr(_SEAS_Z).alias("zval")
-    )
-    return z.groupBy("user_id", "event_type", "hod").agg(
-        F.max("n").cast("bigint").alias("n"),
-        (F.max("s1").cast("double") / (100.0 * F.max("n").cast("double"))).alias(
-            "mean_value"
-        ),
-        F.expr("CAST(count(CASE WHEN abs(zval) > 2.0 THEN 1 END) AS BIGINT)").alias(
-            "n_out"
-        ),
-        F.max(F.abs("zval")).alias("max_abs_z"),
-    )
+    doubles, no rounding convention.""",
+)
 
 
 @register(
@@ -957,56 +880,22 @@ def agg_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 # diagnostics a forecaster (O42's AR face) reads before picking a
 # lookback.  Pairwise-Pearson form over (x_t, x_{t−k}) pairs; the same
 # exact-integer co-moment machinery as agg_tag_correlation (nanos →
-# here 2-dp ints directly), DECIMAL(38,0) in Spark / HUGEINT in DuckDB,
-# numerators bit-identical; final sqrt/divide masked by floor-shift.
-def _acf_moments(k: int, hugeint: bool) -> list[tuple[str, str]]:
-    """(alias, expr) co-moment pairs for lag k — HUGEINT dialect for the
-    DuckDB oracle, DECIMAL(38,0)-summed for Spark."""
-    if hugeint:
-        return [
-            (f"n{k}", f"CAST(count(y{k}) AS HUGEINT)"),
-            (f"sx{k}", f"sum(CASE WHEN y{k} IS NOT NULL THEN CAST(x AS HUGEINT) END)"),
-            (f"sy{k}", f"sum(CAST(y{k} AS HUGEINT))"),
-            (f"sxy{k}", f"sum(CAST(x AS HUGEINT) * y{k})"),
-            (f"sxx{k}", f"sum(CASE WHEN y{k} IS NOT NULL THEN CAST(x AS HUGEINT) * x END)"),
-            (f"syy{k}", f"sum(CAST(y{k} AS HUGEINT) * y{k})"),
-        ]
-    big = "DECIMAL(28,0)"
-    return [
-        (f"n{k}", f"CAST(count(y{k}) AS BIGINT)"),
-        (f"sx{k}", f"CAST(sum(CASE WHEN y{k} IS NOT NULL THEN x END) AS BIGINT)"),
-        (f"sy{k}", f"CAST(sum(y{k}) AS BIGINT)"),
-        (f"sxy{k}", f"sum(CAST(x * y{k} AS {big}))"),
-        (f"sxx{k}", f"sum(CASE WHEN y{k} IS NOT NULL THEN CAST(x * x AS {big}) END)"),
-        (f"syy{k}", f"sum(CAST(y{k} * y{k} AS {big}))"),
-    ]
-
-
+# here 2-dp ints directly), summed as DECIMAL(38,0), numerators
+# bit-identical; final sqrt/divide masked by floor-shift.
 def _acf_moments_sql(k: int) -> str:
-    return ", ".join(f"{e} AS {a}" for a, e in _acf_moments(k, True))
+    """The co-moment aggregates of lag ``k``."""
+    big = "DECIMAL(38,0)"
+    return ", ".join(f"{e} AS {a}" for a, e in (
+        (f"n{k}", f"CAST(count(y{k}) AS {big})"),
+        (f"sx{k}", f"sum(CASE WHEN y{k} IS NOT NULL THEN CAST(x AS {big}) END)"),
+        (f"sy{k}", f"sum(CAST(y{k} AS {big}))"),
+        (f"sxy{k}", f"sum(CAST(x AS {big}) * y{k})"),
+        (f"sxx{k}", f"sum(CASE WHEN y{k} IS NOT NULL THEN CAST(x AS {big}) * x END)"),
+        (f"syy{k}", f"sum(CAST(y{k} AS {big}) * y{k})"),
+    ))
 
 
 def _acf_expr(k: int) -> str:
-    n = f"CAST(n{k} AS DECIMAL(11,0))"
-    num = (
-        f"CAST({n} * sxy{k} - CAST(sx{k} AS DECIMAL(19,0))"
-        f" * CAST(sy{k} AS DECIMAL(19,0)) AS DOUBLE)"
-    )
-    vx = (
-        f"CAST({n} * sxx{k} - CAST(sx{k} AS DECIMAL(19,0))"
-        f" * CAST(sx{k} AS DECIMAL(19,0)) AS DOUBLE)"
-    )
-    vy = (
-        f"CAST({n} * syy{k} - CAST(sy{k} AS DECIMAL(19,0))"
-        f" * CAST(sy{k} AS DECIMAL(19,0)) AS DOUBLE)"
-    )
-    return (
-        f"CASE WHEN n{k} >= 3 AND {vx} > 0 AND {vy} > 0 THEN "
-        f"{_fshift_expr(f'{num} / sqrt({vx} * {vy})')} ELSE NULL END"
-    )
-
-
-def _acf_expr_duck(k: int) -> str:
     num = f"CAST(n{k} * sxy{k} - sx{k} * sy{k} AS DOUBLE)"
     vx = f"CAST(n{k} * sxx{k} - sx{k} * sx{k} AS DOUBLE)"
     vy = f"CAST(n{k} * syy{k} - sy{k} * sy{k} AS DOUBLE)"
@@ -1019,9 +908,9 @@ def _acf_expr_duck(k: int) -> str:
 _ACF_LAG_O = "PARTITION BY user_id ORDER BY ts, event_id"
 
 
-@register(
+register_sql(
     "agg_autocorr",
-    oracle=f"""
+    f"""
     WITH v AS (
       SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
              CAST(round(value * 100) AS BIGINT) AS v100
@@ -1039,14 +928,12 @@ _ACF_LAG_O = "PARTITION BY user_id ORDER BY ts, event_id"
       FROM l GROUP BY user_id HAVING count(*) >= 10
     )
     SELECT user_id, n,
-           {_acf_expr_duck(1)} AS acf1,
-           {_acf_expr_duck(2)} AS acf2,
-           {_acf_expr_duck(3)} AS acf3
+           {_acf_expr(1)} AS acf1,
+           {_acf_expr(2)} AS acf2,
+           {_acf_expr(3)} AS acf3
     FROM m
     """,
-)
-def agg_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O42/O45 adjacency — per-machine sample autocorrelation of the
+    doc="""O42/O45 adjacency — per-machine sample autocorrelation of the
     reading series at lags 1–3 (pairwise-Pearson over (x_t, x_{t−k})):
     the stationarity/persistence diagnostic read before choosing a
     forecast lookback, and the whiteness check on residuals after.
@@ -1059,40 +946,9 @@ def agg_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(38,0) sums.  At 100 TB: parallelism = machines, no join.
 
     Exactness: integer co-moments (block comment above
-    :func:`_acf_moments`); only the closing sqrt/divide are float,
-    floor-shift-rounded per the registry convention."""
-    ev = load_table(spark, sf_dir, "events")
-    v = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("v100"),
-    )
-    l = v.select(
-        "user_id",
-        F.col("v100").alias("x"),
-        *[
-            F.expr(f"LAG(v100, {k}) OVER ({_ACF_LAG_O})").alias(f"y{k}")
-            for k in (1, 2, 3)
-        ],
-    )
-    m = (
-        l.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            *[
-                F.expr(e).alias(a)
-                for k in (1, 2, 3)
-                for a, e in _acf_moments(k, False)
-            ],
-        )
-        .where(F.col("n") >= 10)
-    )
-    return m.select(
-        "user_id",
-        "n",
-        *[F.expr(_acf_expr(k)).alias(f"acf{k}") for k in (1, 2, 3)],
-    )
+    :func:`_acf_moments_sql`); only the closing sqrt/divide are float,
+    floor-shift-rounded per the registry convention.""",
+)
 
 
 # Cross-correlation lead/lag scan — agg_tag_correlation generalized
@@ -1488,9 +1344,9 @@ def agg_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _spread(ev).groupBy("user_id").applyInPandas(fn, _LTTB_SCHEMA)
 
 
-@register(
+register_sql(
     "agg_markov_transitions",
-    oracle="""
+    """
     WITH s AS (
       SELECT user_id, event_type AS cur,
              LEAD(event_type) OVER (PARTITION BY user_id
@@ -1506,9 +1362,7 @@ def agg_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
              / CAST(SUM(n_ab) OVER (PARTITION BY cur) AS DOUBLE) AS p
     FROM c
     """,
-)
-def agg_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix over each machine's event
+    doc="""First-order Markov transition matrix over each machine's event
     sequence: for every (current tag, next tag) pair, the transition
     count and conditional probability P(next | current) — the
     path-analytics face (what usually follows an 'error'?), and the
@@ -1522,28 +1376,8 @@ def agg_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     anywhere.  At 100 TB the output is ≤ tags² rows.
 
     Exactness: integer counts; p is one exact-int division —
-    bit-identical, no rounding convention."""
-    ev = load_table(spark, sf_dir, "events")
-    s = ev.select(
-        "user_id",
-        F.col("event_type").alias("cur"),
-        F.expr(
-            "LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)"
-        ).alias("nxt"),
-    )
-    c = (
-        s.where(F.col("nxt").isNotNull())
-        .groupBy("cur", "nxt")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_ab"))
-    )
-    tot = "SUM(n_ab) OVER (PARTITION BY cur)"
-    return c.select(
-        "cur",
-        "nxt",
-        "n_ab",
-        F.expr(f"CAST({tot} AS BIGINT)").alias("n_a"),
-        F.expr(f"CAST(n_ab AS DOUBLE) / CAST({tot} AS DOUBLE)").alias("p"),
-    )
+    bit-identical, no rounding convention.""",
+)
 
 
 @register(
@@ -1705,9 +1539,12 @@ def agg_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# run_id = MIN(event_id) is the guaranteed-unique run key: two same-value
+# runs split by an interleaved reading at a DUPLICATE timestamp tie on
+# (run_len, run_start, v100); MIN(event_id) never ties.
+register_sql(
     "agg_value_runs",
-    oracle="""
+    """
     WITH v AS (
       SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts, event_id,
              CAST(round(value * 100) AS BIGINT) AS v100
@@ -1740,9 +1577,7 @@ def agg_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
            run_start
     FROM best WHERE rk = 1
     """,
-)
-def agg_value_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stuck-sensor screen per (machine, tag): the LONGEST run of
+    doc="""Stuck-sensor screen per (machine, tag): the LONGEST run of
     consecutive identical 2-dp readings (gaps-and-islands via the
     row_number difference), with the run's value and start time and the
     total run count — the frozen-transmitter diagnostic that
@@ -1754,48 +1589,8 @@ def agg_value_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (machine, tag) exchange (the sub-keyed islands window is a finer
     sort of the same partitioning); output is one row per series.
     Exactness: integer counts and 2-dp ints; `run_start` is the exact
-    µs timestamp; unique tiebreak chain."""
-    ev = load_table(spark, sf_dir, "events")
-    v = ev.select(
-        "user_id",
-        "event_type",
-        "ts",
-        "event_id",
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("v100"),
-    )
-    o = "ORDER BY ts, event_id"
-    d = v.select(
-        "*",
-        F.expr(
-            f"row_number() OVER (PARTITION BY user_id, event_type {o})"
-            f" - row_number() OVER (PARTITION BY user_id, event_type, v100 {o})"
-        ).alias("grp"),
-    )
-    runs = d.groupBy("user_id", "event_type", "v100", "grp").agg(
-        F.count(F.lit(1)).cast("bigint").alias("run_len"),
-        F.min("ts").alias("run_start"),
-        # guaranteed-unique run key: two same-value runs split by an
-        # interleaved reading at a DUPLICATE timestamp tie on
-        # (run_len, run_start, v100); MIN(event_id) never ties
-        F.min("event_id").alias("run_id"),
-    )
-    wp = "PARTITION BY user_id, event_type"
-    best = runs.select(
-        "*",
-        F.expr(
-            f"row_number() OVER"
-            f" ({wp} ORDER BY run_len DESC, run_start, v100, run_id)"
-        ).alias("rk"),
-        F.expr(f"CAST(count(*) OVER ({wp}) AS BIGINT)").alias("n_runs"),
-    )
-    return best.where(F.col("rk") == 1).select(
-        "user_id",
-        "event_type",
-        "n_runs",
-        F.col("run_len").alias("longest_run"),
-        F.expr("CAST(v100 AS DOUBLE) / 100.0").alias("run_value"),
-        "run_start",
-    )
+    µs timestamp; unique tiebreak chain.""",
+)
 
 
 # Shannon entropy of the binned value distribution per tag.  Float
@@ -1891,9 +1686,9 @@ def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # raises).  Pair volume is series × C(days-in-month, 2) ≤ 465·series —
 # calendar-bounded per series, linear in the corpus (more machines =
 # more series, never more pairs per series).
-@register(
+register_sql(
     "agg_mann_kendall",
-    oracle="""
+    """
     WITH d AS (
       SELECT user_id, event_type,
              date_trunc('month', CAST(ts AS TIMESTAMP)) AS mo,
@@ -1903,7 +1698,7 @@ def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM events GROUP BY 1, 2, 3, 4
     ), p AS (
       SELECT a.user_id, a.event_type, a.mo,
-             sign(CAST(b.s AS HUGEINT) * a.n - CAST(a.s AS HUGEINT) * b.n)
+             sign(CAST(b.s AS DECIMAL(38,0)) * a.n - CAST(a.s AS DECIMAL(38,0)) * b.n)
                AS sgn
       FROM d a JOIN d b
         ON a.user_id = b.user_id AND a.event_type = b.event_type
@@ -1914,9 +1709,7 @@ def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(sgn) AS BIGINT) AS s_stat
     FROM p GROUP BY 1, 2, 3
     """,
-)
-def agg_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nonparametric trend screen per (machine, tag, month): the
+    doc="""Nonparametric trend screen per (machine, tag, month): the
     Mann–Kendall S statistic over the month's daily means — the
     distribution-free "is this sensor drifting" test run before fitting
     anomaly baselines (monotone drift violates the stationary-training
@@ -1931,43 +1724,8 @@ def agg_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume calendar-bounded at C(31,2) per series-month (block comment),
     the exact day-blocked pattern ``join_interval_overlap`` rehearses.
     Sign comparisons are decimal-routed integer cross-multiplications —
-    no float daily mean exists anywhere (block comment)."""
-    ev = load_table(spark, sf_dir, "events")
-    d = (
-        ev.groupBy(
-            "user_id",
-            "event_type",
-            F.expr("date_trunc('month', ts)").alias("mo"),
-            F.expr("date_trunc('day', ts)").alias("day"),
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.expr(
-                "CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)"
-            ).alias("s"),
-        )
-    )
-    a = d.alias("a")
-    b = d.alias("b")
-    p = a.join(
-        b,
-        (F.col("a.user_id") == F.col("b.user_id"))
-        & (F.col("a.event_type") == F.col("b.event_type"))
-        & (F.col("a.mo") == F.col("b.mo"))
-        & (F.col("a.day") < F.col("b.day")),
-    ).select(
-        F.col("a.user_id").alias("user_id"),
-        F.col("a.event_type").alias("event_type"),
-        F.col("a.mo").alias("mo"),
-        F.expr(
-            "sign(CAST(b.s AS DECIMAL(19,0)) * a.n"
-            " - CAST(a.s AS DECIMAL(19,0)) * b.n)"
-        ).alias("sgn"),
-    )
-    return p.groupBy("user_id", "event_type", "mo").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-        F.sum("sgn").cast("bigint").alias("s_stat"),
-    )
+    no float daily mean exists anywhere (block comment).""",
+)
 
 
 # Theil–Sen robust trend (Theil 1950; Sen 1968): the MEDIAN of all

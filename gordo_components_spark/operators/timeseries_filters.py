@@ -13,13 +13,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from gordo_components_spark.functions.filter_dsl import compile_filter
 from gordo_components_spark.functions.timeseries import EVENT_TYPES, pivot_wide, pivot_wide_sql
-from gordo_components_spark.registry import register
+from gordo_components_spark.registry import register, register_sql
 from gordo_components_spark.sources.tables import load_events_in_range, load_table
 
 _FROM_TS = "2024-01-05 00:00:00"
 _TO_TS = "2024-01-20 00:00:00"
 
 
+# Two bodies: the Spark body needs the time pushdown of ``load_events_in_range``.
 @register(
     "filter_time_range",
     oracle=f"""
@@ -60,9 +61,9 @@ def filter_dsl_compound(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "filter_buffer_window",
-    oracle="""
+    """
     WITH m AS (
       SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value,
              CASE WHEN value < 300 THEN 1 ELSE 0 END AS ok
@@ -74,27 +75,17 @@ def filter_dsl_compound(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT event_id, user_id, ts, value FROM d WHERE keep = 1
     """,
-)
-def filter_buffer_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O11 buffer dilation: a failing row also knocks out ±buffer_size
+    doc="""O11 buffer dilation: a failing row also knocks out ±buffer_size
     neighbors (sensor settling time; reference ``apply_buffer``).  Mask
     dilation = MIN over a symmetric rows frame, partitioned per machine so
-    the window never crosses executors' partition boundaries at scale."""
-    ev = load_table(spark, sf_dir, "events")
-    mask = ev.withColumn("ok", F.when(F.col("value") < 300, 1).otherwise(0))
-    keep = mask.withColumn(
-        "keep",
-        F.expr(
-            "MIN(ok) OVER (PARTITION BY user_id ORDER BY ts, event_id "
-            "ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING)"
-        ),
-    )
-    return keep.where(F.col("keep") == 1).select("event_id", "user_id", "ts", "value")
+    the window never crosses executors' partition boundaries at scale.""",
+)
 
 
 _PERIODS = (("2024-01-05 00:00:00", "2024-01-07 00:00:00"), ("2024-01-20 00:00:00", "2024-01-22 00:00:00"))
 
 
+# Two bodies: the Spark body needs the time pushdown of ``load_events_in_range``.
 @register(
     "filter_known_periods",
     oracle=f"""
@@ -113,25 +104,18 @@ def filter_known_periods(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select("event_id", "user_id", "ts", "value")
 
 
-@register(
+register_sql(
     "gate_min_samples",
-    oracle="""
+    """
     SELECT user_id, event_type, COUNT(*) AS n_samples
     FROM events
     GROUP BY user_id, event_type
     HAVING COUNT(*) >= 10
     """,
-)
-def gate_min_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O13 InsufficientDataError gate: machines/tags below the sample
+    doc="""O13 InsufficientDataError gate: machines/tags below the sample
     threshold are rejected before training (driver code raises; the
-    declarative face is a HAVING filter)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy("user_id", "event_type")
-        .agg(F.count(F.lit(1)).alias("n_samples"))
-        .where(F.col("n_samples") >= 10)
-    )
+    declarative face is a HAVING filter).""",
+)
 
 
 @register(

@@ -45,7 +45,6 @@ register_sql(
       AND l_shipdate  > TIMESTAMP '2000-01-01 00:00:00'
     GROUP BY l_orderkey, o_orderdate
     """,
-    tables=("customer", "orders", "lineitem"),
     tags=("bench",),
     doc="""Q3 shipping-priority shape: unshipped revenue of a segment's
     orders placed before the cutoff.""",
@@ -63,7 +62,6 @@ register_sql(
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
     """,
-    tables=("lineitem",),
     doc="""Q6 forecast-revenue-change: pure predicate + aggregate — the
     canonical scan-pushdown benchmark (every predicate reaches the
     parquet scan; no shuffle beyond the final single-row agg).""",
@@ -83,7 +81,6 @@ register_sql(
     WHERE r_name = 'ASIA'
     GROUP BY n_name
     """,
-    tables=("region", "nation", "customer", "supplier", "orders", "lineitem"),
     tags=("bench",),
     doc="""Q5 local-supplier volume: revenue where customer and supplier
     share a nation inside one region (the classic snowflake 6-way).""",
@@ -104,7 +101,6 @@ register_sql(
       AND o_orderdate <  TIMESTAMP '1999-01-01 00:00:00'
     GROUP BY c_custkey, c_name, n_name
     """,
-    tables=("nation", "customer", "orders", "lineitem"),
     tags=("bench",),
     doc="""Q10 returned-items report: per-customer lost revenue from returns
     in a window.""",
@@ -126,7 +122,6 @@ register_sql(
     WHERE l_shipdate <= TIMESTAMP '2001-06-01 00:00:00'
     GROUP BY l_returnflag, l_linestatus
     """,
-    tables=("lineitem",),
     doc="""Q1 pricing summary in full (agg_groupby_sum is the reduced face):
     charge includes tax; means are exact-integer-numerator divisions with
     floor-shift rounding so both engines agree bit-for-bit.""",
@@ -146,7 +141,6 @@ register_sql(
                     AND l_shipdate > o_orderdate + INTERVAL 45 DAY)
     GROUP BY o_orderpriority
     """,
-    tables=("orders", "lineitem"),
     doc="""Q4 order-priority checking, adapted to the fixture's columns (no
     l_commitdate/l_receiptdate — lateness is ship > order + 45 days):
     EXISTS becomes a left-semi join with an equi key + range residual, so
@@ -170,7 +164,6 @@ register_sql(
       AND l_shipdate <  TIMESTAMP '1999-01-01 00:00:00'
     GROUP BY l_linestatus
     """,
-    tables=("orders", "lineitem"),
     doc="""Q12 shipping-mode/priority matrix, adapted (no l_shipmode —
     l_linestatus is the grouping axis): conditional counts ride the one
     orders⋈lineitem shuffle; priorities are CASE sums, not extra scans.""",
@@ -193,7 +186,6 @@ register_sql(
     WHERE l_shipdate >= TIMESTAMP '1998-06-01 00:00:00'
       AND l_shipdate <  TIMESTAMP '1998-07-01 00:00:00'
     """,
-    tables=("part", "lineitem"),
     doc="""Q14 promotion effect: the percent is a division of two EXACT
     integer-cent aggregates (cast to double under 2⁵³, so bit-identical),
     then floor-shift rounded; part broadcasts.""",
@@ -213,7 +205,6 @@ register_sql(
     ORDER BY sum_qty DESC, o_orderkey
     LIMIT 25
     """,
-    tables=("customer", "orders", "lineitem"),
     doc="""Q18 large-volume customers: HAVING on an exact decimal sum, then
     TakeOrderedAndProject top-25 with a unique orderkey tiebreak.""",
 )
@@ -229,7 +220,6 @@ register_sql(
        OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 20)
        OR (p_brand = 'Brand#3'  AND p_size BETWEEN 1 AND 35 AND l_quantity BETWEEN 20 AND 30)
     """,
-    tables=("part", "lineitem"),
     doc="""Q19 discounted revenue under disjunctive brand/size/quantity arms
     (adapted: no l_shipmode/l_shipinstruct in the fixture).  The OR-of-ANDs
     is a post-join residual; the join key stays equi so part broadcasts.""",
@@ -256,7 +246,6 @@ register_sql(
     )
     GROUP BY supp_nation, cust_nation, l_year
     """,
-    tables=("nation", "customer", "supplier", "orders", "lineitem"),
     doc="""Q7 volume shipping between a nation pair: the two nation dims
     broadcast twice under different roles (supplier vs customer side);
     the disjunctive pair predicate is a post-join residual on broadcast
@@ -276,7 +265,6 @@ register_sql(
     )
     GROUP BY c_count
     """,
-    tables=("customer", "orders"),
     doc="""Q13 customer order-count distribution: left join preserving
     zero-order customers (the point of Q13), then a histogram of the
     per-customer counts — two aggregations, the second over the first's
@@ -299,7 +287,6 @@ register_sql(
     ) pa ON agg_partkey = l_partkey
     WHERE p_brand = 'Brand#12' AND l_quantity < avg_half
     """,
-    tables=("part", "lineitem"),
     doc="""Q17 small-quantity-order revenue: the correlated per-part average
     decorrelated into a pre-aggregated join side (the plan Catalyst's
     own decorrelation produces); the half-average threshold is a double
@@ -325,7 +312,6 @@ register_sql(
     )
     GROUP BY cntrycode
     """,
-    tables=("customer", "orders"),
     doc="""Q22 global-sales-opportunity: above-average-balance customers who
     have not ordered recently — a 1-row broadcast global average + left-anti join
     (adapted: the fixture customer has no phone column, so cntrycode is
@@ -380,7 +366,6 @@ register_sql(
     ORDER BY s_acctbal DESC, p_partkey, s_name
     LIMIT 100
     """,
-    tables=("region", "nation", "supplier", "part", "lineitem"),
     doc="""Q2 minimum-cost supplier (adapted: supplycost = MIN l_extendedprice
     over the lineitem-derived part-supplier association).  The correlated
     per-part MIN decorrelates into a pre-agg joined back on
@@ -416,7 +401,6 @@ register_sql(
     SELECT o_year, {_fshift(_Q8_SHARE, 'mkt_share')}
     FROM base GROUP BY o_year
     """,
-    tables=("region", "nation", "customer", "supplier", "part", "orders", "lineitem"),
     doc="""Q8 national market share: one nation's fraction of a region's
     revenue in one part type, by order year.  Both numerator and
     denominator ride the integer-cents convention; the final division is
@@ -437,7 +421,6 @@ register_sql(
     WHERE p_name LIKE '%gear%'
     GROUP BY n_name, CAST(year(o_orderdate) AS INT)
     """,
-    tables=("nation", "supplier", "part", "orders", "lineitem"),
     doc="""Q9 product-type profit by supplier nation and year (adapted: the
     fixture has no ps_supplycost, so cost is proxied at 5% of retail price
     per unit — the 5-way join + LIKE filter + two-key agg shape is
@@ -462,7 +445,6 @@ register_sql(
     FROM val CROSS JOIN tot
     WHERE CAST(value_cents AS DOUBLE) > 0.0001 * CAST(t AS DOUBLE)
     """,
-    tables=("nation", "supplier", "lineitem"),
     doc="""Q11 important stock (adapted: part value = shipped
     extendedprice·quantity of one nation's suppliers).  The HAVING
     against a scalar-subquery global total becomes a 1-row broadcast
@@ -486,7 +468,6 @@ register_sql(
     FROM supplier JOIN rev ON s_suppkey = supplier_no
     JOIN mx ON total_revenue_cents = m
     """,
-    tables=("supplier", "lineitem"),
     doc="""Q15 top supplier: quarterly revenue view + scalar-subquery MAX,
     decorrelated into a 1-row broadcast equi-join on the exact cents
     value (ties all surface, as in the spec).""",
@@ -504,7 +485,6 @@ register_sql(
       AND NOT EXISTS (SELECT 1 FROM supplier WHERE s_suppkey = l_suppkey AND s_acctbal < 0)
     GROUP BY p_brand, p_type, p_size
     """,
-    tables=("supplier", "part", "lineitem"),
     doc="""Q16 parts-supplier relationship (adapted: association from
     lineitem; the excluded-supplier NOT IN keeps its anti-join shape
     against negative-balance suppliers standing in for the comment
@@ -534,7 +514,6 @@ register_sql(
     WHERE p_type = 'SMALL' AND n_name = 'NATION_7'
       AND CAST(qty_1998 AS DOUBLE) > 0.3 * CAST(qty_total AS DOUBLE)
     """,
-    tables=("nation", "supplier", "part", "lineitem"),
     doc="""Q20 potential part promotion (adapted: a supplier qualifies when
     its 1998 shipments of a SMALL-type part exceed 30% of its all-time
     shipments of that part — the nested IN/EXISTS chain becomes
@@ -561,7 +540,6 @@ register_sql(
     ORDER BY numwait DESC, s_name
     LIMIT 100
     """,
-    tables=("nation", "supplier", "orders", "lineitem"),
     doc="""Q21 suppliers who kept orders waiting (adapted: no receipt/commit
     dates, so 'kept waiting' = this supplier shipped the LAST item of a
     finished multi-supplier order).  The EXISTS (another supplier) /

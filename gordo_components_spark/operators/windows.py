@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from gordo_components_spark.operators.relational import _fshift, _fshift_expr
-from gordo_components_spark.registry import register
+from gordo_components_spark.registry import register, register_sql
 from gordo_components_spark.sources.tables import load_table
 
 _ORDER = "PARTITION BY user_id ORDER BY ts, event_id"
@@ -47,52 +47,35 @@ def window_lookback_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "window_lead_target",
-    oracle=f"""
+    f"""
     SELECT event_id, user_id, value,
            lead(value, 1) OVER ({_ORDER}) AS target_next
     FROM events
     """,
+    doc="""O24 forecast shift: y = value at t+lookahead (KerasLSTMForecast,
+    lookahead=1).  lead() copies the double bit-exactly — no rounding.""",
 )
-def window_lead_target(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O24 forecast shift: y = value at t+lookahead (KerasLSTMForecast,
-    lookahead=1).  lead() copies the double bit-exactly — no rounding."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        "user_id",
-        "value",
-        F.expr(f"lead(value, 1) OVER ({_ORDER})").alias("target_next"),
-    )
 
 
-@register(
+register_sql(
     "window_rolling_avg",
-    oracle=f"""
+    f"""
     SELECT event_id, user_id,
            round(avg(value) OVER ({_ORDER}
              ROWS BETWEEN 5 PRECEDING AND CURRENT ROW), 9) AS value_smooth
     FROM events
     """,
     tags=("bench",),
+    doc="""O25 score smoothing: rolling mean over the trailing window
+    (anomaly-score smoothing in later DiffBased revisions).""",
 )
-def window_rolling_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O25 score smoothing: rolling mean over the trailing window
-    (anomaly-score smoothing in later DiffBased revisions)."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.round(
-            F.expr(f"avg(value) OVER ({_ORDER} ROWS BETWEEN 5 PRECEDING AND CURRENT ROW)"), 9
-        ).alias("value_smooth"),
-    )
 
 
-@register(
+register_sql(
     "window_rank",
-    oracle="""
+    """
     SELECT * FROM (
       SELECT o_custkey, o_orderkey, o_totalprice,
              CAST(ROW_NUMBER() OVER (PARTITION BY o_custkey
@@ -102,47 +85,26 @@ def window_rolling_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM orders
     ) WHERE rn <= 3
     """,
+    doc="""Addendum ranking: top-3 orders per customer (row_number + rank with
+    a unique tiebreak so the selected set is deterministic).""",
 )
-def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Addendum ranking: top-3 orders per customer (row_number + rank with
-    a unique tiebreak so the selected set is deterministic)."""
-    o = load_table(spark, sf_dir, "orders")
-    w = "PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey"
-    return (
-        o.select(
-            "o_custkey",
-            "o_orderkey",
-            "o_totalprice",
-            F.expr(f"CAST(ROW_NUMBER() OVER ({w}) AS BIGINT)").alias("rn"),
-            F.expr(f"CAST(RANK() OVER ({w}) AS BIGINT)").alias("rnk"),
-        )
-        .where(F.col("rn") <= 3)
-    )
 
 
-@register(
+register_sql(
     "window_lag",
-    oracle=f"""
+    f"""
     SELECT event_id, user_id, value,
            round(value - lag(value, 1) OVER ({_ORDER}), 9) AS delta_prev
     FROM events
     """,
+    doc="""Addendum analytic lag: per-machine first difference of the series
+    (the diff in DiffBasedAnomalyDetector).""",
 )
-def window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Addendum analytic lag: per-machine first difference of the series
-    (the diff in DiffBasedAnomalyDetector)."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        "user_id",
-        "value",
-        F.round(F.col("value") - F.expr(f"lag(value, 1) OVER ({_ORDER})"), 9).alias("delta_prev"),
-    )
 
 
-@register(
+register_sql(
     "window_range_frame",
-    oracle="""
+    """
     SELECT event_id, user_id,
            round(sum(value) OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP)
              RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW), 9) AS sum_1h,
@@ -150,27 +112,15 @@ def window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
              RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW) AS BIGINT) AS n_1h
     FROM events
     """,
+    doc="""Addendum RANGE frame: trailing 1-hour aggregate by actual event
+    time (irregular series — rows frames can't express this).""",
 )
-def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Addendum RANGE frame: trailing 1-hour aggregate by actual event
-    time (irregular series — rows frames can't express this)."""
-    ev = load_table(spark, sf_dir, "events")
-    w = (
-        "PARTITION BY user_id ORDER BY ts "
-        "RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW"
-    )
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.round(F.expr(f"sum(value) OVER ({w})"), 9).alias("sum_1h"),
-        F.expr(f"CAST(count(*) OVER ({w}) AS BIGINT)").alias("n_1h"),
-    )
 
 
-@register(
+register_sql(
     "window_analytic",
-    oracle=f"""
-    SELECT 'rank' AS variant, o_orderkey AS id, CAST(o_custkey AS VARCHAR) AS grp,
+    f"""
+    SELECT 'rank' AS variant, o_orderkey AS id, CAST(o_custkey AS STRING) AS grp,
            CAST(o_totalprice AS DOUBLE) AS v_dbl, rn AS n1, rnk AS n2
     FROM (
       SELECT o_custkey, o_orderkey, o_totalprice,
@@ -181,12 +131,12 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM orders
     ) WHERE rn <= 3
     UNION ALL
-    SELECT 'lag' AS variant, event_id AS id, CAST(user_id AS VARCHAR) AS grp,
+    SELECT 'lag' AS variant, event_id AS id, CAST(user_id AS STRING) AS grp,
            round(value - lag(value, 1) OVER ({_ORDER}), 9) AS v_dbl,
            CAST(0 AS BIGINT) AS n1, CAST(0 AS BIGINT) AS n2
     FROM events
     UNION ALL
-    SELECT 'range_1h' AS variant, event_id AS id, CAST(user_id AS VARCHAR) AS grp,
+    SELECT 'range_1h' AS variant, event_id AS id, CAST(user_id AS STRING) AS grp,
            round(sum(value) OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP)
              RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW), 9) AS v_dbl,
            CAST(count(*) OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP)
@@ -194,54 +144,16 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(0 AS BIGINT) AS n2
     FROM events
     """,
-)
-def window_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Consolidated SURVEY §2.5 addendum face: ranking (row_number + rank
+    doc="""Consolidated SURVEY §2.5 addendum face: ranking (row_number + rank
     with unique tiebreak), analytic lag (per-machine first difference),
     and a time-RANGE trailing frame — one witnessed query, three window
     families, all partitioned by their natural key so frames never cross
-    executors.  Per-variant forms stay registered for the replica."""
-    o = load_table(spark, sf_dir, "orders")
-    ev = load_table(spark, sf_dir, "events")
-    zero = F.lit(0).cast("long")
-    wr = "PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey"
-    rank_leg = (
-        o.select(
-            F.lit("rank").alias("variant"),
-            F.col("o_orderkey").alias("id"),
-            F.col("o_custkey").cast("string").alias("grp"),
-            F.col("o_totalprice").cast("double").alias("v_dbl"),
-            F.expr(f"CAST(ROW_NUMBER() OVER ({wr}) AS BIGINT)").alias("n1"),
-            F.expr(f"CAST(RANK() OVER ({wr}) AS BIGINT)").alias("n2"),
-        )
-        .where(F.col("n1") <= 3)
-    )
-    lag_leg = ev.select(
-        F.lit("lag").alias("variant"),
-        F.col("event_id").alias("id"),
-        F.col("user_id").cast("string").alias("grp"),
-        F.round(F.col("value") - F.expr(f"lag(value, 1) OVER ({_ORDER})"), 9).alias("v_dbl"),
-        zero.alias("n1"),
-        zero.alias("n2"),
-    )
-    wrange = (
-        "PARTITION BY user_id ORDER BY ts "
-        "RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW"
-    )
-    range_leg = ev.select(
-        F.lit("range_1h").alias("variant"),
-        F.col("event_id").alias("id"),
-        F.col("user_id").cast("string").alias("grp"),
-        F.round(F.expr(f"sum(value) OVER ({wrange})"), 9).alias("v_dbl"),
-        F.expr(f"CAST(count(*) OVER ({wrange}) AS BIGINT)").alias("n1"),
-        zero.alias("n2"),
-    )
-    return rank_leg.unionByName(lag_leg).unionByName(range_leg)
+    executors.  Per-variant forms stay registered for the replica.""",
+)
 
 
-# Truncated dyadic EWMA: weights 2^-k, k=0..7.  The SAME SQL fragment is
-# compiled by both engines (oracle string and F.expr), so the float
-# expression TREE — not just the math — is identical: products are exact
+# Truncated dyadic EWMA: weights 2^-k, k=0..7.  Both engines compile the
+# one query text, so the float expression TREE — not just the math — is identical: products are exact
 # power-of-two scalings, the sums fold left-associatively in textual
 # order, and the final division sees bit-identical operands.  No rounding
 # is needed (cf. window_lead_target's bit-exact copy rationale).
@@ -260,16 +172,14 @@ def _ewma_sql(order: str, k: int = 8) -> str:
     return f"({num}) / ({den})"
 
 
-@register(
+register_sql(
     "window_ewma_batch",
-    oracle=f"""
+    f"""
     SELECT event_id, user_id, value,
            {_ewma_sql(_ORDER)} AS value_ewma
     FROM events
     """,
-)
-def window_ewma_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O25 addendum: exponentially-weighted smoothing as a BATCH window —
+    doc="""O25 addendum: exponentially-weighted smoothing as a BATCH window —
     the deterministic face of ``stream_stateful_ewma``.  True recursive
     EWMA needs per-row state (the streaming face has it); the batch form
     truncates the tail at 8 lags, which for alpha=1/2 leaves a relative
@@ -280,14 +190,8 @@ def window_ewma_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     alpha is deliberately dyadic (1/2): every weight 2^-k is an exact
     double, so weighting is exact scaling and the shared expression
     fragment evaluates bit-identically in Spark and DuckDB — this face
-    needs NO rounding convention at all."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        "user_id",
-        "value",
-        F.expr(_ewma_sql(_ORDER)).alias("value_ewma"),
-    )
+    needs NO rounding convention at all.""",
+)
 
 
 # Statistical-process-control z-score against a TRAILING baseline window
@@ -314,9 +218,9 @@ _SPC_Z = (
 )
 
 
-@register(
+register_sql(
     "window_spc_zscore",
-    oracle=f"""
+    f"""
     WITH v AS (
       SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value,
              CAST(round(value * 100) AS BIGINT) AS v100
@@ -332,9 +236,7 @@ _SPC_Z = (
     FROM m
     WHERE n_base >= 12
     """,
-)
-def window_spc_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O25/O44 adjacency — control-chart scoring WITHOUT a model: each
+    doc="""O25/O44 adjacency — control-chart scoring WITHOUT a model: each
     reading's z-score against its machine's trailing-20 baseline (frame
     excludes the current row, so a spike can't inflate its own
     baseline), flagged at |z| > 3 — the Shewhart rule a plant runs on
@@ -346,35 +248,13 @@ def window_spc_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     readings (see block comment) — no rounding convention needed, the
     z doubles are bit-identical.  One window pass per machine partition
     (the O22–O25 invariant); at 100 TB this is a single sort-free
-    rolling frame per machine, no shuffle beyond the partitioning."""
-    ev = load_table(spark, sf_dir, "events")
-    v = ev.select(
-        "event_id",
-        "user_id",
-        "ts",
-        "value",
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("v100"),
-    )
-    m = v.select(
-        "event_id",
-        "user_id",
-        "value",
-        "v100",
-        *[F.expr(e).alias(a) for a, e in _SPC_MOMENTS],
-    )
-    return m.where(F.col("n_base") >= 12).select(
-        "event_id",
-        "user_id",
-        "value",
-        F.col("n_base").cast("bigint").alias("n_base"),
-        F.expr(_SPC_Z).alias("zscore"),
-        F.expr(f"(({_SPC_Z}) IS NOT NULL AND abs({_SPC_Z}) > 3.0)").alias("is_out"),
-    )
+    rolling frame per machine, no shuffle beyond the partitioning.""",
+)
 
 
-@register(
+register_sql(
     "window_ntile_dist",
-    oracle="""
+    """
     SELECT o_custkey, o_orderkey,
            CAST(ntile(4) OVER w AS BIGINT) AS quartile,
            percent_rank() OVER w AS pct_rank,
@@ -382,9 +262,7 @@ def window_spc_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey)
     """,
-)
-def window_ntile_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.5 addendum — distribution ranks: order-value quartile, percent
+    doc="""§2.5 addendum — distribution ranks: order-value quartile, percent
     rank and cumulative distribution per customer (the spend-percentile
     facets a dashboard ranks machines/customers by).  The ORDER BY
     carries the unique o_orderkey tiebreak, so tile assignment and both
@@ -393,16 +271,8 @@ def window_ntile_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parity: percent_rank = (rank−1)/(n−1) and cume_dist = peers/n are
     single IEEE divisions of small exact integers — correctly rounded,
     bit-identical in both engines; ntile is pure integer algebra.  Same
-    one-partition-one-sort shape as every §2.5 frame."""
-    o = load_table(spark, sf_dir, "orders")
-    w = "PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey"
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.expr(f"CAST(ntile(4) OVER ({w}) AS BIGINT)").alias("quartile"),
-        F.expr(f"percent_rank() OVER ({w})").alias("pct_rank"),
-        F.expr(f"cume_dist() OVER ({w})").alias("cume"),
-    )
+    one-partition-one-sort shape as every §2.5 frame.""",
+)
 
 
 # CUSUM change-point detection (Page 1954) — the sequential test SPC
@@ -434,9 +304,9 @@ _CUSUM_CUM = (
 )
 
 
-@register(
+register_sql(
     "window_cusum_alerts",
-    oracle=f"""
+    f"""
     WITH v AS (
       SELECT event_id, user_id, event_type, CAST(ts AS TIMESTAMP) AS ts, value,
              CAST(round(value * 100) AS BIGINT) AS v100
@@ -457,9 +327,7 @@ _CUSUM_CUM = (
     FROM s
     """,
     tags=("bench",),  # round-9: change-point class promoted (ROUND9_NOTES #1)
-)
-def window_cusum_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM drift alarms per (machine, tag): the sequential
+    doc="""CUSUM drift alarms per (machine, tag): the sequential
     change-point detector that catches slow persistent upward drifts a
     per-reading Shewhart/z rule never flags (its one-sided positive
     form; the mirrored negative side is the same algebra on −v100).
@@ -473,42 +341,8 @@ def window_cusum_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative, nothing driver-side, embarrassingly parallel across
     series at 100 TB.  Integer/decimal exactness end to end — the only
     doubles are the final report division (floor-shifted) and none of
-    the ALERT algebra is float."""
-    ev = load_table(spark, sf_dir, "events")
-    v = ev.select(
-        "event_id",
-        "user_id",
-        "event_type",
-        "ts",
-        "value",
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("v100"),
-    )
-    m = v.select(
-        "*",
-        F.expr(f"CAST(count(*) OVER ({_CUSUM_P}) AS BIGINT)").alias("n"),
-        F.expr(f"CAST(sum(v100) OVER ({_CUSUM_P}) AS BIGINT)").alias("s1"),
-    )
-    c = m.select("*", F.expr(_CUSUM_CUM).alias("cum"))
-    runmin = (
-        f"MIN(cum) OVER ({_CUSUM_O} ROWS BETWEEN UNBOUNDED PRECEDING"
-        " AND CURRENT ROW)"
-    )
-    s = c.select(
-        "*",
-        F.expr(
-            f"cum - LEAST(CAST(0 AS DECIMAL(18,0)), {runmin})"
-        ).alias("sc"),
-    )
-    return s.select(
-        "event_id",
-        "user_id",
-        "event_type",
-        "value",
-        F.expr(
-            _fshift_expr("CAST(sc AS DOUBLE) / (CAST(n AS DOUBLE) * 100.0)")
-        ).alias("cusum"),
-        F.expr(f"(sc > CAST(n AS DECIMAL(19,0)) * {_CUSUM_H100})").alias("is_alert"),
-    )
+    the ALERT algebra is float.""",
+)
 
 
 # Hampel identifier (Pearson 2002 survey of Hampel 1974) — the robust

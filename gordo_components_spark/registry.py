@@ -9,18 +9,30 @@ marks rows-only checks (non-SQL-expressible ops).
 Two registration forms:
 
 - :func:`register_sql` — a SQL-expressible query is ONE text.  Its Spark
-  fn runs the exact string DuckDB runs as the oracle, over the declared
-  tables' ``load_table`` frames, so the replica checks Spark's engine
-  and loader against DuckDB on one declared text; nothing can drift
-  between two copies.  Plan hints travel in the text
-  (``/*+ BROADCAST(nation) */`` is a comment to DuckDB).
+  fn runs the exact string DuckDB runs as the oracle, over the
+  ``load_table`` frames of the fixture tables the text names, so the
+  replica checks Spark's engine and loader against DuckDB on one
+  declared text; nothing can drift between two copies.  Plan hints
+  travel in the text (``/*+ BROADCAST(nation) */`` is a comment to
+  DuckDB).  Types are spelled so both engines parse them: write
+  ``STRING`` and ``DECIMAL(38,0)`` (DuckDB reads both as aliases).
 - :func:`register` — a decorated Spark body, for rows-only queries and
   for SQL-expressible queries that keep two bodies.  A query keeps two
-  bodies only when its Spark body is a stated physical rewrite of the
-  oracle's plan (salting, ``stack``, a different join/aggregate plan),
+  bodies only when its Spark body is the point of the face, and says
+  which in a ``# Two bodies:`` comment at its registration:
+
+  1. it reads a source or artifact the oracle does not read (a CSV,
+     JSON-lines, ORC, partitioned or bucketed copy, the dedup index,
+     a manifest table);
+  2. it needs the time pushdown of ``load_events_in_range``;
+  3. it is a Spark operator (a pandas UDF, ``session_window``,
+     ``dropDuplicates``);
+  4. it is a stated different plan (salting, ``stack``, a blocked pair
+     join, a different join/aggregate plan);
+
   or when its oracle text does not parse on Spark (DuckDB-only
-  functions or types such as ``epoch``, ``HUGEINT``, unsized ``VARCHAR``);
-  each such query says which in a comment at its registration.
+  functions such as ``epoch``, ``strpos``, ``time_bucket``, ``//``,
+  1-based ``[…]`` indexing).
 
 Oracle-parity rules (learned from the driver contract, SURVEY §5 ring 2):
 - alias every computed column identically on both sides;
@@ -37,6 +49,7 @@ Oracle-parity rules (learned from the driver contract, SURVEY §5 ring 2):
 
 from __future__ import annotations
 
+import re
 import sys
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -44,7 +57,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from gordo_components_spark.functions.timeseries import sql_over
-from gordo_components_spark.sources.tables import load_table
+from gordo_components_spark.sources.tables import TABLES, load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -80,16 +93,20 @@ def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     return deco
 
 
-def register_sql(name: str, text: str, tables: tuple[str, ...], tags: tuple[str, ...] = (),
-                 doc: str = "") -> None:
+def register_sql(name: str, text: str, tags: tuple[str, ...] = (), doc: str = "") -> None:
     """Register ``text`` as both the oracle and the Spark query.
 
-    The Spark fn binds each declared table to its ``load_table`` frame
-    through a uniquely named temp view (:func:`sql_over`) and runs
-    ``WITH lineitem AS (SELECT * FROM <view>), … SELECT * FROM (text)``,
-    so the text's table names resolve to the loader's frames and two
-    threads running the query against different scale factors never
-    share a view."""
+    The query reads every fixture table (``sources.tables.TABLES``) whose
+    name appears in ``text`` as a whole word.  The Spark fn binds each to
+    its ``load_table`` frame through a uniquely named temp view
+    (:func:`sql_over`) and runs ``WITH lineitem AS (SELECT * FROM <view>),
+    … SELECT * FROM (text)``, so the text's table names resolve to the
+    loader's frames and two threads running the query against different
+    scale factors never share a view.  A text that names no fixture table
+    raises here, not at its first run."""
+    tables = tuple(t for t in TABLES if re.search(rf"\b{t}\b", text))
+    if not tables:
+        raise ValueError(f"register_sql {name!r}: the text names no fixture table")
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         frames = {t: load_table(spark, sf_dir, t) for t in tables}

@@ -100,10 +100,10 @@ def test_dedup_index_rebuilds_after_partial_deletion(spark):
 
 
 def test_snapshot_diff_classes_are_exhaustive(spark):
-    from gordo_components_spark.operators.extensions_corpus import pipe_snapshot_diff
+    from gordo_components_spark.registry import load_all
     from gordo_components_spark.sources.tables import load_table
 
-    diff = pipe_snapshot_diff(spark, SF_SMALL)
+    diff = load_all()["pipe_snapshot_diff"].fn(spark, SF_SMALL)
     rows = diff.collect()
     classes = {r["change_type"] for r in rows}
     assert classes == {"added", "removed", "changed"}
